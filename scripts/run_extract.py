@@ -95,7 +95,7 @@ def main(argv=None) -> int:
     # Plain repartition(n) is ROUND-ROBIN (exactly one per task);
     # repartition(n, "doc_id") would hash and clump ~ln n / ln ln n docs
     # into one task (measured 3.4 s -> 1.8 s at 12 giants merely from the
-    # clumping, BENCH/run_skew_experiment.py)
+    # clumping; BENCH/run_skew_experiment.py at commit 97d7ad8)
     n_strag = stragglers.count()
     if n_strag:
         strag_out = extract_spans_df(stragglers.repartition(max(n_strag, 1)))

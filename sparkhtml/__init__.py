@@ -20,7 +20,7 @@ Re-realizes the capabilities of nolanw/HTMLReader (reference at
   (reference parity: Sources/NSString+HTMLEntities.m).
 - :mod:`sparkhtml.extract`     — main-content (boilerplate) classifier and
   interleaved span re-emission (north-rule layer; no reference analogue).
-- :mod:`sparkhtml.spark`       — the Spark layer: schemas, mapInPandas
+- :mod:`sparkhtml.spark`       — the Spark layer: schemas, mapInArrow
   pipeline, partitioning/skew, checkpoint manifest, selector-as-DataFrame
   plans, dedup / similarity / text-stats operators.
 

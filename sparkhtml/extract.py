@@ -156,21 +156,8 @@ def classify_block(block: Block) -> bool:
     return block.tag in CONTENT_TAGS and block.words >= 1
 
 
-def extract_blocks(dom: FlatDOM) -> list[Block]:
-    return [b for b in segment_blocks(dom) if classify_block(b)]
-
-
 def _normalize(text: str) -> str:
     return _WS_NORM.sub(" ", text).strip()
-
-
-def extract_main_text_dom(dom: FlatDOM) -> str:
-    parts = []
-    for b in extract_blocks(dom):
-        t = _normalize("".join(b.text))
-        if t:
-            parts.append(t)
-    return "\n".join(parts)
 
 
 def _is_boiler_node(node) -> bool:
@@ -186,9 +173,8 @@ def segment_blocks_tree(root) -> list[Block]:
     """Same segmentation as :func:`segment_blocks`, walking the parse tree
     directly — the extraction hot path skips flat-DOM construction (~15%
     of extract time). One DFS carrying (pruned, boiler, in_link, block)
-    state down the stack; identical Block output (golden-tested)."""
-    from .treebuilder import Node  # local to avoid cycle at import time
-
+    state down the stack; identical Block output apart from ``node_id``
+    (differential-tested in tests/test_units.py)."""
     root_block = Block(0, None)
     blocks = [root_block]
     # stack entries: (node, pruned, boiler, in_link, block)

@@ -26,16 +26,12 @@ SALT_N = 64
 # measurements (after the small-shuffle-file fixes in session.py, which
 # obsolete the round-6 "repartition loses at sf0.1" result): 0.25-0.65 MB
 # inputs (sf0.1) win 1.4-1.6x, 2.5-6 MB inputs (sf1.0) win 4-8x; the
-# ~65 KB sf0.001 frames are where the fixed cost still loses. Tune per
-# call site only with a measurement.
+# ~65 KB sf0.001 frames are where the fixed cost still loses. Change it
+# only with a measurement.
 FAN_OUT_MIN_BYTES = 128 << 10
 
 
-def fan_out(
-    df: DataFrame,
-    min_bytes: int = FAN_OUT_MIN_BYTES,
-    key: str | None = None,
-) -> DataFrame:
+def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
     """Round-robin repartition to the session's core count when the input
     is an underpartitioned scan worth spreading.
 
@@ -49,9 +45,9 @@ def fan_out(
     Guards (all must pass, otherwise the frame is returned untouched):
 
     - not a streaming frame (repartition-by-number is unsupported there);
-    - Catalyst's optimized-plan size estimate ≥ ``min_bytes`` — tiny
-      inputs lose more to the exchange + task scheduling than they gain
-      (measured: see FAN_OUT_MIN_BYTES);
+    - Catalyst's optimized-plan size estimate ≥ ``FAN_OUT_MIN_BYTES`` —
+      tiny inputs lose more to the exchange + task scheduling than they
+      gain (measured: see its note);
     - physical partition count < half the session's default parallelism —
       well-partitioned inputs (every real 100 TB table) make this a
       no-op, so the exchange only appears in the degenerate local shapes.
@@ -67,7 +63,7 @@ def fan_out(
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-        if size < min_bytes:
+        if size < FAN_OUT_MIN_BYTES:
             return df
         nparts = df.rdd.getNumPartitions()
     except Exception:  # pragma: no cover - conservative: never fail a plan

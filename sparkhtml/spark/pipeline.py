@@ -4,22 +4,24 @@ This is the Spark realization of the reference's entry points
 (HTMLDocument.m:12-44 → HTMLParser.m:3331-3347), at the reference's own
 granularity — one parser per document — amortized over Arrow batches
 (SURVEY.md §3.2 "Spark mapping"). No per-row Python UDFs anywhere; every
-stage is ``mapInArrow`` / ``mapInPandas`` or a Series→Series ``pandas_udf``.
+stage is ``mapInArrow`` or a Series→Series ``pandas_udf``.
 
-The heavy nested-struct stages (``extract_spans_df``, ``parse_nodes_df``,
-``extract_metrics_df``) run RecordBatch-native (``mapInArrow``): the
-``array<struct>`` span/attr columns are read straight off the Arrow child
-buffers and rebuilt with ``ListArray.from_arrays`` — no pandas
+Each nested-struct stage (``extract_spans_df``, ``parse_nodes_df``,
+``extract_metrics_df``) has exactly one worker and runs RecordBatch-native:
+the ``array<struct>`` span/attr columns are read straight off the Arrow
+child buffers and rebuilt with ``ListArray.from_arrays`` — no pandas
 materialization of list-of-dict rows in either direction, which the round-4
 doc-scale measurement identified as the dominant proportional overhead
-(~20% of bytes-pumped cost at realistic doc sizes). The pandas workers are
-kept as the differential oracle (``tests/test_spark.py`` parity).
+(~20% of bytes-pumped cost at realistic doc sizes). The differential oracle
+is the pure-Python core (``extract_spans``, ``FlatDOM.from_html``,
+``doc_metrics``), which ``tests/test_spark.py`` compares row for row.
 
 Stages:
 
     documents_interleaved --extract_spans_df--> spans_out (north rule)
+    documents_interleaved --extract_metrics_df-> per-document metrics
     documents_interleaved --parse_nodes_df----> nodes (flattened DOM table)
-    any string column     --css_select_udf----> matched node ids / texts
+    any string column     --css_*_udf---------> matched texts / counts
     any string column     --escape/unescape---> X8/X9 scalar functions
 """
 
@@ -35,10 +37,10 @@ from pyspark.sql.types import ArrayType, IntegerType, StringType
 
 from ..dom import FlatDOM
 from ..escape import escape_series, unescape_series
-from ..extract import doc_metrics, extract_main_text, extract_spans
+from ..extract import doc_metrics, extract_main_text
 from ..selector import CompiledSelector
 from . import schemas
-from .partitioning import fan_out, with_size_salt
+from .partitioning import fan_out
 
 # Arrow field layouts for the hand-built output batches. Kept in lockstep
 # with schemas.py via to_arrow_schema (tests/test_spark.py asserts this).
@@ -114,29 +116,6 @@ def _span_list_array(out_kind, out_text, out_ref, out_off, list_offsets):
 # ------------------------------------------------------------------ spans
 
 
-def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (doc_id, spans) → (doc_id, spans) main content.
-
-    ``spans`` arrives as a numpy array of dict rows (Arrow struct list).
-    """
-    for pdf in batches:
-        out_spans = []
-        for spans in pdf["spans"]:
-            if spans is None:
-                spans = []
-            rows = [
-                {
-                    "kind": s["kind"],
-                    "text": s["text"],
-                    "media_ref": s["media_ref"],
-                    "offset": int(s["offset"]) if s["offset"] is not None else None,
-                }
-                for s in spans
-            ]
-            out_spans.append(extract_spans(rows))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "spans": out_spans})
-
-
 def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """mapInArrow worker: RecordBatch-native ``extract_spans``.
 
@@ -185,127 +164,18 @@ def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
         )
 
 
-def extract_spans_df(documents: DataFrame, *, arrow: bool = True) -> DataFrame:
+def extract_spans_df(documents: DataFrame) -> DataFrame:
     """The north-rule pipeline: interleaved docs → main-content spans.
 
     Column pruning: only (doc_id, spans) enter the exchange; callers can
     carry extra columns by joining back on doc_id (cheaper than shipping
     them through Python).
-
-    ``arrow=True`` (default) runs the RecordBatch-native worker; the
-    pandas worker (``arrow=False``) is kept as the differential oracle.
     """
     src = fan_out(documents.select("doc_id", "spans"))
-    if arrow:
-        return src.mapInArrow(_extract_arrow, schema=schemas.SPANS_OUT)
-    return src.mapInPandas(_extract_batch, schema=schemas.SPANS_OUT)
-
-
-def _extract_arrow_packed(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
-    """mapInArrow worker for the PACKED payload encoding: each row's
-    spans arrive as one JSON string (JVM-side ``to_json``), and leave
-    the same way (rebuilt JVM-side with ``from_json``). Same extraction
-    semantics as :func:`_extract_arrow` (parity-tested).
-
-    Round-6 pump probe (VERDICT r5 #5): the InternalRow↔Arrow crossing
-    was measured bytes-bound and non-scaling past ~8 threads; this
-    variant trades the nested list<struct> column (4 child arrays +
-    offsets on both directions of the crossing) for a single flat
-    string column, to measure whether payload SHAPE (not size) is part
-    of the ceiling. See BENCH/run_pump_probe.py + SCALE.md §3.
-    """
-    import json
-
-    for batch in batches:
-        payloads = batch.column("spans_json").to_pylist()
-        out: list = []
-        for payload in payloads:
-            spans = json.loads(payload) if payload else []
-            rows = sorted(
-                spans, key=lambda s: s.get("offset") or 0
-            )
-            acc = []
-            for s in rows:
-                k = s.get("kind")
-                if k == "media":
-                    acc.append(
-                        {"kind": "media", "text": None,
-                         "media_ref": s.get("media_ref"),
-                         "offset": s.get("offset")}
-                    )
-                elif k == "text":
-                    extracted = extract_main_text(s.get("text") or "")
-                    if extracted:
-                        acc.append(
-                            {"kind": "text", "text": extracted,
-                             "media_ref": None, "offset": s.get("offset")}
-                        )
-            out.append(json.dumps(acc, ensure_ascii=False))
-        yield pa.RecordBatch.from_arrays(
-            [batch.column("doc_id"), pa.array(out, pa.string())],
-            names=["doc_id", "spans_json"],
-        )
-
-
-def extract_spans_df_packed(documents: DataFrame) -> DataFrame:
-    """North-rule pipeline over the packed (single-JSON-string) payload
-    encoding: ``to_json`` / ``from_json`` stay JVM-side (Catalyst
-    expressions inside WholeStageCodegen), so the Python crossing
-    carries exactly one flat string column each way. Output is
-    value-identical to :func:`extract_spans_df` (parity-tested); kept
-    behind this separate entry point until the probe shows ≥1.15× at
-    32 cores (BENCH/run_pump_probe.py)."""
-    src = documents.select(
-        "doc_id", F.to_json(F.col("spans")).alias("spans_json")
-    )
-    out = src.mapInArrow(
-        _extract_arrow_packed, schema="doc_id string, spans_json string"
-    )
-    return out.select(
-        "doc_id",
-        F.from_json(
-            F.col("spans_json"), schemas.T.ArrayType(schemas.SPAN)
-        ).alias("spans"),
-    )
-
-
-def extract_spans_balanced(documents: DataFrame, partitions: int) -> DataFrame:
-    """Same, but repartitioned by (size_bucket, salt) first so heavy
-    documents spread evenly — the skew plan of SURVEY.md §4.3."""
-    salted = with_size_salt(documents)
-    balanced = salted.repartition(partitions, "size_bucket", "salt")
-    return extract_spans_df(balanced)
+    return src.mapInArrow(_extract_arrow, schema=schemas.SPANS_OUT)
 
 
 # ------------------------------------------------------------------ nodes
-
-
-def _parse_nodes_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [
-        "doc_id", "node_id", "parent", "depth", "order", "kind", "tag",
-        "ns", "attrs", "text", "subtree",
-    ]
-    for pdf in batches:
-        rows = {c: [] for c in cols}
-        for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-            dom = FlatDOM.from_html(html or "")
-            n = len(dom)
-            rows["doc_id"].extend([doc_id] * n)
-            rows["node_id"].extend(range(n))
-            rows["parent"].extend(dom.parent)
-            rows["depth"].extend(dom.depth)
-            rows["order"].extend(dom.order)
-            rows["kind"].extend(dom.kind)
-            rows["tag"].extend(dom.tag)
-            rows["ns"].extend(dom.ns)
-            rows["attrs"].extend(
-                [{"name": k, "value": v} for k, v in a] for a in dom.attrs
-            )
-            rows["text"].extend(dom.text)
-            rows["subtree"].extend(dom.subtree)
-        yield pd.DataFrame(rows)
 
 
 def _parse_nodes_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -377,12 +247,11 @@ def _parse_nodes_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordB
 
 
 def parse_nodes_df(df: DataFrame, html_col: str = "html",
-                   id_col: str = "doc_id", *, arrow: bool = True) -> DataFrame:
+                   id_col: str = "doc_id") -> DataFrame:
     """html string column → exploded ``nodes`` table (one row per DOM node).
 
     This is the flattened-DOM table of SURVEY.md §1.1; selector plans from
     :mod:`sparkhtml.spark.queries` run over it with joins/windows.
-    ``arrow=False`` selects the pandas differential-oracle worker.
     """
     # keyed fan_out: hash-partitioning by doc_id spreads as evenly as
     # round-robin (unique key) without round-robin's local
@@ -391,9 +260,7 @@ def parse_nodes_df(df: DataFrame, html_col: str = "html",
     # plan does not propagate the partitioning — see fan_out's note.)
     src = fan_out(df.select(F.col(id_col).cast("string").alias("doc_id"),
                             F.col(html_col).alias("html")), key="doc_id")
-    if arrow:
-        return src.mapInArrow(_parse_nodes_arrow, schema=schemas.NODES)
-    return src.mapInPandas(_parse_nodes_batch, schema=schemas.NODES)
+    return src.mapInArrow(_parse_nodes_arrow, schema=schemas.NODES)
 
 
 # ------------------------------------------------------------ scalar UDFs
@@ -496,39 +363,6 @@ def register_udfs(spark) -> None:
 # ------------------------------------------------------------- metrics
 
 
-def _metrics_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k.name: [] for k in schemas.EXTRACT_METRICS.fields}
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            if spans is None:
-                spans = []
-            n_media = sum(1 for s in spans if s["kind"] == "media")
-            n_nodes = n_kept = n_words = n_err = depth = 0
-            n_out = n_media
-            for s in spans:
-                if s["kind"] != "text":
-                    continue
-                dom = FlatDOM.from_html(s["text"] or "", collect_errors=True)
-                m = doc_metrics(dom)
-                n_nodes += m["n_nodes"]
-                n_kept += m["n_kept_words"]
-                n_words += m["n_words"]
-                n_err += m["n_errors"]
-                depth = max(depth, max(dom.depth) if len(dom) else 0)
-                if m["n_kept_words"]:
-                    n_out += 1
-            out["doc_id"].append(doc_id)
-            out["n_spans_in"].append(len(spans))
-            out["n_spans_out"].append(n_out)
-            out["n_media"].append(n_media)
-            out["n_nodes"].append(n_nodes)
-            out["n_kept_words"].append(n_kept)
-            out["n_words"].append(n_words)
-            out["n_errors"].append(n_err)
-            out["max_depth"].append(depth)
-        yield pd.DataFrame(out)
-
-
 _METRICS_SCHEMA = pa.schema(
     [pa.field("doc_id", pa.string(), nullable=False)]
     + [pa.field(f.name, pa.int32())
@@ -578,9 +412,7 @@ def _metrics_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
         )
 
 
-def extract_metrics_df(documents: DataFrame, *, arrow: bool = True) -> DataFrame:
+def extract_metrics_df(documents: DataFrame) -> DataFrame:
     """Per-document metrics table (lineage layer, SURVEY.md §4.3)."""
     src = fan_out(documents.select("doc_id", "spans"))
-    if arrow:
-        return src.mapInArrow(_metrics_arrow, schema=schemas.EXTRACT_METRICS)
-    return src.mapInPandas(_metrics_batch, schema=schemas.EXTRACT_METRICS)
+    return src.mapInArrow(_metrics_arrow, schema=schemas.EXTRACT_METRICS)

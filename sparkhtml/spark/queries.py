@@ -89,11 +89,6 @@ def _simple_col(s: Simple, df: DataFrame) -> Column:
     raise UnsupportedSelector(s.kind)
 
 
-def _sibling_window(of_type_tag: Column | None = None) -> Window:
-    w = Window.partitionBy("doc_id", "parent").orderBy("node_id")
-    return w
-
-
 def _pseudo_col(s: Simple, df: DataFrame) -> Column:
     """Structural pseudos as window expressions (Q10/Q11). The window runs
     over element rows only; we emulate with conditional rank arithmetic."""

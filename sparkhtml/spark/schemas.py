@@ -65,22 +65,3 @@ EXTRACT_METRICS = T.StructType(
         T.StructField("max_depth", T.IntegerType()),
     ]
 )
-
-SPANS_OUT_WITH_METRICS = T.StructType(
-    list(SPANS_OUT.fields)
-    + [
-        T.StructField("n_nodes", T.IntegerType()),
-        T.StructField("n_errors", T.IntegerType()),
-    ]
-)
-
-LINEAGE = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("n_docs", T.LongType()),
-        T.StructField("n_spans_out", T.LongType()),
-        T.StructField("n_errors", T.LongType()),
-        T.StructField("wall_ms", T.LongType()),
-        T.StructField("status", T.StringType()),
-    ]
-)

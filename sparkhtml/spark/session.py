@@ -90,8 +90,9 @@ def get_spark(
         builder = builder.config("spark.local.dir", local_dir)
     # High-core single-JVM regime (local[16+]): ParallelGC beat the Java 17
     # default G1 on 8→32 scaling efficiency pairwise in every interleaved
-    # round of BENCH/run_gc_experiment.py (~5-8%; the Arrow pump allocates
-    # on all threads at once and G1's concurrent phases compete for them).
+    # round of the GC experiment (~5-8%; BENCH/run_gc_experiment.py at
+    # commit 97d7ad8). The Arrow pump allocates on all threads at once and
+    # G1's concurrent phases compete for them.
     # A real cluster at SCALE.md's 4-8 cores/executor should keep G1 —
     # this only triggers for the sandbox-shaped fat JVM.
     if cpus >= 16 and not (extra_conf or {}).get("spark.driver.extraJavaOptions"):

@@ -41,7 +41,7 @@ def stream_extract(
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """Continuous (or drain-and-stop) extraction: same mapInPandas stage as
+    """Continuous (or drain-and-stop) extraction: same mapInArrow stage as
     batch; the streaming checkpoint gives exactly-once file-level resume."""
     stream = read_document_stream(spark, in_dir)
     out = extract_spans_df(stream)

@@ -46,6 +46,28 @@ def test_extract_pipeline_prunes_columns(spark):
     assert "lang" not in read_schema and "source" not in read_schema
 
 
+def test_fan_out_guards(spark):
+    """fan_out adds one exchange only to an underpartitioned batch input of
+    at least FAN_OUT_MIN_BYTES: an input already at default parallelism
+    keeps its plan (the 100 TB no-op) and a streaming frame is untouched."""
+    from sparkhtml.spark.partitioning import FAN_OUT_MIN_BYTES, fan_out
+
+    target = spark.sparkContext.defaultParallelism
+    assert target > 2  # so a single partition is under half of it
+    wide = spark.range(0, FAN_OUT_MIN_BYTES, numPartitions=target)
+    size = wide._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(size) >= FAN_OUT_MIN_BYTES
+    assert fan_out(wide) is wide
+    assert "Exchange" not in plan(wide)
+
+    narrow = wide.coalesce(1)
+    assert plan(fan_out(narrow)).count("Exchange") == \
+        plan(narrow).count("Exchange") + 1
+
+    stream = spark.readStream.format("rate").load()
+    assert fan_out(stream) is stream
+
+
 def test_broadcast_join_for_small_dims(spark):
     import __spark_entry__ as entry
 

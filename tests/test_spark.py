@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from datagen.interleaved import make_corpus
 from sparkhtml.dom import FlatDOM
-from sparkhtml.extract import extract_spans
+from sparkhtml.extract import doc_metrics, extract_spans
 from sparkhtml.selector import select as py_select
 from sparkhtml.spark import schemas
 from sparkhtml.spark.pipeline import (
@@ -31,16 +31,27 @@ def docs_df(spark):
     return df
 
 
+def _pure_spans(df):
+    """``extract_spans`` over the collected input, sorted by doc_id."""
+    return sorted(
+        (r["doc_id"], extract_spans([s.asDict() for s in r["spans"] or []]))
+        for r in df.collect()
+    )
+
+
+def _spark_spans(df):
+    return sorted(
+        (r["doc_id"], [s.asDict() for s in r["spans"]])
+        for r in extract_spans_df(df).collect()
+    )
+
+
 def test_extract_matches_pure_python(spark, docs_df):
     """The Spark pipeline and the pure-Python core produce identical span
-    sequences — the north-rule (kind, text, media_ref, order) invariant."""
-    got = {
-        r["doc_id"]: [s.asDict() for s in r["spans"]]
-        for r in extract_spans_df(docs_df).collect()
-    }
-    for doc in make_corpus(60):
-        expected = extract_spans(doc["spans"])
-        assert got[doc["doc_id"]] == expected, doc["doc_id"]
+    sequences on every row — the north-rule (kind, text, media_ref, order)
+    invariant."""
+    got = _spark_spans(docs_df)
+    assert got == _pure_spans(docs_df) and len(got) == 60
 
 
 def test_extract_metrics(spark, docs_df):
@@ -51,10 +62,42 @@ def test_extract_metrics(spark, docs_df):
     assert row[0] > 0 and 0 < row[1] <= row[0] and row[2] >= 0
 
 
-def test_arrow_and_pandas_workers_agree(spark, docs_df):
-    """Round-5 mapInArrow port: the RecordBatch-native workers must be
-    row-for-row identical to the retained pandas differential oracles, and
-    the hand-built Arrow schemas must stay in lockstep with schemas.py."""
+def _pure_metrics(doc_id, spans):
+    """Test-side fold of the per-span core metrics into one metrics row."""
+    spans = spans or []
+    n_media = sum(s["kind"] == "media" for s in spans)
+    row = {"doc_id": doc_id, "n_spans_in": len(spans), "n_spans_out": n_media,
+           "n_media": n_media, "n_nodes": 0, "n_kept_words": 0, "n_words": 0,
+           "n_errors": 0, "max_depth": 0}
+    for s in spans:
+        if s["kind"] == "text":
+            dom = FlatDOM.from_html(s["text"] or "", collect_errors=True)
+            m = doc_metrics(dom)
+            for k in ("n_nodes", "n_kept_words", "n_words", "n_errors"):
+                row[k] += m[k]
+            row["max_depth"] = max(row["max_depth"], max(dom.depth, default=0))
+            row["n_spans_out"] += m["n_kept_words"] > 0
+    return row
+
+
+def _pure_nodes(doc_id, html):
+    """The nodes-table rows of one document, straight off ``FlatDOM``."""
+    dom = FlatDOM.from_html(html or "")
+    return [
+        {"doc_id": doc_id, "node_id": i, "parent": dom.parent[i],
+         "depth": dom.depth[i], "order": dom.order[i], "kind": dom.kind[i],
+         "tag": dom.tag[i], "ns": dom.ns[i],
+         "attrs": [{"name": k, "value": v} for k, v in dom.attrs[i]],
+         "text": dom.text[i], "subtree": dom.subtree[i]}
+        for i in range(len(dom))
+    ]
+
+
+def test_arrow_workers_match_pure_python(spark, docs_df):
+    """The metrics and nodes workers are row-for-row identical to the
+    pure-Python core applied to the collected input (spans: see
+    test_extract_matches_pure_python), and the hand-built Arrow schemas
+    stay in lockstep with schemas.py."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -67,13 +110,11 @@ def test_arrow_and_pandas_workers_agree(spark, docs_df):
         [f.remove_metadata() for f in to_arrow_schema(schemas.NODES)]
     )
 
-    a = extract_spans_df(docs_df, arrow=True).sort("doc_id").collect()
-    b = extract_spans_df(docs_df, arrow=False).sort("doc_id").collect()
-    assert a == b and len(a) == 60
-
-    ma = extract_metrics_df(docs_df, arrow=True).sort("doc_id").collect()
-    mb = extract_metrics_df(docs_df, arrow=False).sort("doc_id").collect()
-    assert ma == mb
+    got = sorted((r.asDict() for r in extract_metrics_df(docs_df).collect()),
+                 key=lambda r: r["doc_id"])
+    expected = sorted((_pure_metrics(r["doc_id"], r["spans"])
+                       for r in docs_df.collect()), key=lambda r: r["doc_id"])
+    assert got == expected and len(got) == 60
 
     edge = spark.createDataFrame(
         [("d0", "<div class='x' id=a><p>hi <b>w</b></p><!--c--></div>"),
@@ -81,37 +122,11 @@ def test_arrow_and_pandas_workers_agree(spark, docs_df):
          ("d4", "<svg><foreignObject><p>f</p></foreignObject></svg>")],
         ["doc_id", "html"],
     )
-    na = parse_nodes_df(edge, arrow=True).sort("doc_id", "node_id").collect()
-    nb = parse_nodes_df(edge, arrow=False).sort("doc_id", "node_id").collect()
-    assert na == nb and len(na) > 0
-
-
-def test_packed_payload_encoding_agrees(spark, docs_df):
-    """Round-6 pump probe: the packed (single-JSON-string crossing)
-    realization of the north-rule stage must be value-identical to the
-    struct-schema realization, including null/empty/no-offset rows."""
-    from sparkhtml.spark.pipeline import extract_spans_df_packed
-
-    a = extract_spans_df(docs_df, arrow=True).sort("doc_id").collect()
-    p = extract_spans_df_packed(docs_df).sort("doc_id").collect()
-    assert [r.asDict(recursive=True) for r in a] == [
-        r.asDict(recursive=True) for r in p
-    ]
-
-    edge = spark.createDataFrame(
-        [("e0", None),
-         ("e1", []),
-         ("e2", [{"kind": "media", "text": None, "media_ref": "m-1",
-                  "offset": None},
-                 {"kind": "text", "text": "<p>enough words to be main "
-                  "content here ok</p>", "media_ref": None, "offset": 0}])],
-        schema=schemas.DOCUMENTS_INTERLEAVED,
-    )
-    a = extract_spans_df(edge, arrow=True).sort("doc_id").collect()
-    p = extract_spans_df_packed(edge).sort("doc_id").collect()
-    assert [r.asDict(recursive=True) for r in a] == [
-        r.asDict(recursive=True) for r in p
-    ]
+    got = [r.asDict(recursive=True) for r in
+           parse_nodes_df(edge).sort("doc_id", "node_id").collect()]
+    expected = [row for r in edge.sort("doc_id").collect()
+                for row in _pure_nodes(r["doc_id"], r["html"])]
+    assert got == expected and len(got) > 0
 
 
 def test_arrow_extract_null_and_empty_span_rows(spark):
@@ -128,11 +143,10 @@ def test_arrow_extract_null_and_empty_span_rows(spark):
                   "offset": 1}])],
         schema=schemas.DOCUMENTS_INTERLEAVED,
     )
-    a = extract_spans_df(df, arrow=True).sort("doc_id").collect()
-    b = extract_spans_df(df, arrow=False).sort("doc_id").collect()
-    assert [r["doc_id"] for r in a] == ["d0", "d1", "d2", "d3"]
-    assert [len(r["spans"]) for r in a] == [0, 0, 0, 1]
-    assert a == b
+    got = _spark_spans(df)
+    assert [d for d, _ in got] == ["d0", "d1", "d2", "d3"]
+    assert [len(spans) for _, spans in got] == [0, 0, 0, 1]
+    assert got == _pure_spans(df)
 
 
 def test_nodes_table_and_selector_plan_parity(spark):

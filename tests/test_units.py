@@ -218,22 +218,72 @@ def test_datagen_shape():
 def test_metrics_batch_counts_parse_errors():
     """extract_metrics must report real parse-error counts (regression:
     collect_errors=False silently zeroed n_errors for every document)."""
-    import pandas as pd
-    from sparkhtml.spark.pipeline import _metrics_batch
+    import pyarrow as pa
+    from sparkhtml.spark.pipeline import _SPANS_OUT_SCHEMA, _metrics_arrow
 
     bad = "<b><i>x</b></i><p><table><div></div>"  # misnesting + foster
     good = "<!DOCTYPE html><p>hello world</p>"
-    pdf = pd.DataFrame({
-        "doc_id": ["bad", "good"],
-        "spans": [
-            [{"kind": "text", "text": bad, "media_ref": None, "offset": 0}],
-            [{"kind": "text", "text": good, "media_ref": None, "offset": 0}],
-        ],
-    })
-    out = pd.concat(list(_metrics_batch(iter([pdf]))))
-    by_id = out.set_index("doc_id")
-    assert by_id.loc["bad", "n_errors"] > 0
-    assert by_id.loc["good", "n_errors"] == 0
+    batch = pa.RecordBatch.from_pylist(
+        [{"doc_id": doc_id,
+          "spans": [{"kind": "text", "text": html, "media_ref": None,
+                     "offset": 0}]}
+         for doc_id, html in (("bad", bad), ("good", good))],
+        schema=_SPANS_OUT_SCHEMA,
+    )
+    out = pa.Table.from_batches(list(_metrics_arrow(iter([batch]))))
+    by_id = {r["doc_id"]: r for r in out.to_pylist()}
+    assert by_id["bad"]["n_errors"] > 0
+    assert by_id["good"]["n_errors"] == 0
+
+
+def _segment_inputs():
+    """A bounded, seeded sample: generator text spans, every tree-construction
+    fixture document, and random tag soup over the segmentation-relevant
+    tags (blocks, links, pruned, boilerplate, foreign content)."""
+    import glob
+    import os
+    import random
+
+    from datagen.interleaved import make_corpus
+
+    for doc in make_corpus(40):
+        for s in doc["spans"]:
+            if s["kind"] == "text":
+                yield s["text"]
+    fixtures = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "fixtures", "tree-construction", "*.dat")
+    for path in sorted(glob.glob(fixtures)):
+        with open(path) as f:
+            cases = f.read().split("#data\n")[1:]
+        for case in cases:
+            yield case.split("\n#errors")[0]
+    rng = random.Random(7)
+    vocab = ("<p>|</p>|<div class=nav>|<div id=content>|</div>|<a href=x>|</a>|"
+             "<li>|<ul>|</ul>|<table><tr><td>|<td>|</table>|<script>x y</script>|"
+             "<nav>|</nav>|<footer>|<h2>|</h2>|<svg><desc>|</svg>|<b>|</b>|<br>|"
+             "<!-- c -->|<pre>|</pre>|<form>|<span class=share>|</span>|"
+             "<em id=menu>|</em>|one two|three four five | six|&amp; seven"
+             ).split("|")
+    for _ in range(1000):
+        yield "".join(rng.choice(vocab) for _ in range(rng.randint(1, 40)))
+
+
+def test_segment_blocks_flat_and_tree_agree():
+    """Metrics segment the flat DOM, extraction segments the parse tree
+    directly: both must yield the same blocks (ids aside) in the same
+    order."""
+    from sparkhtml.extract import segment_blocks, segment_blocks_tree
+
+    def key(blocks):
+        return [(b.tag, b.words, b.link_words, b.boiler, b.text) for b in blocks]
+
+    n = 0
+    for html in _segment_inputs():
+        doc = parse(html, collect_errors=False).document
+        assert key(segment_blocks(FlatDOM.from_tree(doc))) == \
+            key(segment_blocks_tree(doc)), html
+        n += 1
+    assert n > 500
 
 
 def test_whatwg_label_table_complete():
