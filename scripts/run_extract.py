@@ -95,13 +95,19 @@ def main(argv=None) -> int:
     # Plain repartition(n) is ROUND-ROBIN (exactly one per task);
     # repartition(n, "doc_id") would hash and clump ~ln n / ln ln n docs
     # into one task (measured 3.4 s -> 1.8 s at 12 giants merely from the
-    # clumping; BENCH/run_skew_experiment.py at commit 97d7ad8)
-    n_strag = stragglers.count()
-    if n_strag:
-        strag_out = extract_spans_df(stragglers.repartition(max(n_strag, 1)))
-        strag_out.write.mode("overwrite").parquet(
-            args.output.rstrip("/") + "/stragglers"
-        )
+    # clumping; BENCH/run_skew_experiment.py at commit 97d7ad8). The
+    # written pass is a manifest entry, so a resumed run skips it.
+    done = run.entry("stragglers")
+    if done is None:
+        n_strag = stragglers.count()
+        if n_strag:
+            strag_out = extract_spans_df(stragglers.repartition(n_strag))
+            strag_out.write.mode("overwrite").parquet(
+                args.output.rstrip("/") + "/stragglers"
+            )
+        run.record("stragglers", status="ok", n_stragglers=n_strag)
+    else:
+        n_strag = done["n_stragglers"]
     if args.metrics_output:
         extract_metrics_df(docs).write.mode("overwrite").parquet(
             args.metrics_output

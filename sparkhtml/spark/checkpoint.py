@@ -3,26 +3,53 @@
 The reference has no cross-document layer; this is pure Spark design per
 the north rule: partition-level idempotent writes + a completed-partitions
 manifest. The corpus is split into deterministic ``chunk`` ranges by
-doc_id hash; each chunk writes to its own output subdirectory and appends
-a manifest row on success. Resume = anti-join the chunk list against the
-manifest and process only the remainder.
+doc_id hash; each chunk lands in its own ``chunk=<c>/`` output directory
+and gets a manifest entry on success. Resume = anti-join the chunk list
+against the manifest and process only the remainder.
+
+Chunks are written in **waves**. A wave is one Spark action: one scan of
+the input filtered to the wave's chunks (no filter when the wave holds
+every chunk), one transform, one ``partitionBy("chunk")`` write with
+dynamic partition overwrite. Its chunks commit together, and only then
+get their manifest entries; a crash re-runs the whole wave, and the
+dynamic overwrite makes the re-run idempotent. Per-chunk row counts come
+from the committed files' parquet footers, not from reading them back.
+A wave holds at least ``WAVE_MIN_BYTES`` of input by Catalyst's size
+estimate (see its note): small inputs run as one wave, while at cluster
+scale every chunk exceeds it and each wave is a single chunk.
 
 Sink format: Iceberg when a catalog is configured (``iceberg_table``:
-``chunk``-partitioned table, per-chunk ``overwritePartitions`` snapshot
-commits), else partitioned parquet with an identical layout — the manifest
-logic is format-agnostic. (This sandbox has no Iceberg jars; the parquet
-path runs live in tests and the Iceberg path is exercised through a mock
-writer, test_spark.)
+``chunk``-partitioned table, one ``overwritePartitions`` snapshot commit
+per wave), else partitioned parquet with an identical layout — the
+manifest logic is format-agnostic. (The tests run without Iceberg jars:
+the parquet path runs live and the Iceberg path is exercised through a
+mock writer, test_spark.)
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from sparkhtml.spark.partitioning import plan_size_bytes
+
+# Smallest input (Catalyst's plan size estimate) worth its own Spark job.
+# Each job pays a fixed cost — job and stage scheduling, an input scan,
+# the salted shuffle, a commit, and the Python workers idling between the
+# jobs of a serial chain (which Spark books as "time to initialize Python
+# workers", SCALE.md §6). Measured with `python BENCH/run_waves.py`
+# (3,000 generator docs, 16 chunks, local[4] on a 4-core VM): a wave
+# costs 0.87 s on top of its share of a one-wave pass, and the job
+# streams 0.84 MB/s of estimated input, so a 32 MB wave spends ~2% on
+# that fixed cost and a crash loses under a minute of work.
+# Change it only with a rerun of that script.
+WAVE_MIN_BYTES = 32 << 20
 
 
 class ChunkedRun:
@@ -53,14 +80,29 @@ class ChunkedRun:
                     done.add(rec["chunk"])
         return done
 
-    def _record(self, chunk: int, **fields) -> None:
-        path = os.path.join(self.manifest_path, f"chunk-{chunk:05d}.json")
+    def entry(self, name: str) -> dict | None:
+        """The manifest entry ``<name>.json``, or None if not recorded."""
+        path = os.path.join(self.manifest_path, f"{name}.json")
+        if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            return json.load(f)
+
+    def record(self, name: str, **fields) -> None:
+        """Write the manifest entry ``<name>.json``."""
+        path = os.path.join(self.manifest_path, f"{name}.json")
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"chunk": chunk, **fields}, f)
+            json.dump(fields, f)
         os.replace(tmp, path)  # atomic → a crash never leaves a half manifest
 
     # ----------------------------------------------------------------- run
+
+    def chunks_per_wave(self, documents: DataFrame) -> int:
+        """``ceil(WAVE_MIN_BYTES × n_chunks ÷ plan size)``, at least 1; an
+        unknown (huge sentinel) size estimate gives one chunk per wave."""
+        size = max(plan_size_bytes(documents), 1)
+        return max(1, math.ceil(WAVE_MIN_BYTES * self.n_chunks / size))
 
     def run(
         self,
@@ -68,51 +110,71 @@ class ChunkedRun:
         transform: Callable[[DataFrame], DataFrame],
         id_col: str = "doc_id",
     ) -> dict:
-        """Process all incomplete chunks; returns a summary dict.
+        """Process all incomplete chunks, a wave at a time; returns a
+        summary dict.
 
         Chunking key is ``pmod(xxhash64(doc_id), n_chunks)`` — deterministic
         across runs, independent of input order, so resume is exact.
+        ``transform`` must keep ``id_col``: the write recomputes each output
+        row's chunk from it.
         """
-        chunked = documents.withColumn(
-            "_chunk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(self.n_chunks))
-        )
         done = self.completed_chunks()
         todo = [c for c in range(self.n_chunks) if c not in done]
         summary = {"resumed": len(done), "processed": 0, "rows": 0}
-        for chunk in todo:
+        per_wave = self.chunks_per_wave(documents)
+        for i in range(0, len(todo), per_wave):
+            wave = todo[i:i + per_wave]
             t0 = time.time()
-            part = chunked.filter(F.col("_chunk") == chunk).drop("_chunk")
-            out = transform(part)
-            n = self._write_chunk(out, chunk)
-            self._record(
-                chunk,
-                status="ok",
-                n_rows=n,
-                wall_ms=int((time.time() - t0) * 1000),
-            )
-            summary["processed"] += 1
-            summary["rows"] += n
+            part = documents
+            if len(wave) < self.n_chunks:
+                part = documents.filter(self._chunk_col(id_col).isin(wave))
+            counts = self._write_chunk(transform(part), wave, id_col)
+            wall_ms = int((time.time() - t0) * 1000)
+            for chunk in wave:
+                self.record(f"chunk-{chunk:05d}", chunk=chunk, status="ok",
+                            n_rows=counts[chunk], wall_ms=wall_ms)
+            summary["processed"] += len(wave)
+            summary["rows"] += sum(counts.values())
         return summary
 
-    def _write_chunk(self, out: DataFrame, chunk: int) -> int:
-        """Idempotent per-chunk overwrite; returns the row count written.
+    def _chunk_col(self, id_col: str):
+        chunk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(self.n_chunks))
+        return chunk.cast("int")
+
+    def _write_chunk(self, out: DataFrame, chunks: list[int],
+                     id_col: str) -> dict[int, int]:
+        """Idempotent overwrite of one wave's chunks; returns the row count
+        written per chunk (0 for a chunk with no rows).
 
         Iceberg path: ``chunk`` is the table's partition column, so
-        ``overwritePartitions`` replaces exactly this chunk's prior attempt
+        ``overwritePartitions`` replaces exactly these chunks' prior attempt
         (crash-safe retry) in one atomic snapshot commit. The parquet path
-        is the identical layout via directory overwrite.
+        is the identical layout via dynamic partition overwrite.
         """
+        tagged = out.withColumn("chunk", self._chunk_col(id_col))
         if self.iceberg_table is not None:
-            tagged = out.withColumn("chunk", F.lit(chunk))
             tagged.writeTo(self.iceberg_table).overwritePartitions()
-            return (
+            rows = (
                 self.spark.table(self.iceberg_table)
-                .filter(F.col("chunk") == chunk)
-                .count()
+                .filter(F.col("chunk").isin(chunks))
+                .groupBy("chunk").count().collect()
             )
-        dest = os.path.join(self.out_dir, f"chunk={chunk}")
-        out.write.mode("overwrite").parquet(dest)
-        return self.spark.read.parquet(dest).count()
+            counts = {r["chunk"]: r["count"] for r in rows}
+        else:
+            tagged.write.partitionBy("chunk") \
+                .option("partitionOverwriteMode", "dynamic") \
+                .mode("overwrite").parquet(self.out_dir)
+            counts = {c: self._footer_rows(c) for c in chunks}
+        return {c: counts.get(c, 0) for c in chunks}
+
+    def _footer_rows(self, chunk: int) -> int:
+        """Rows in ``chunk=<c>/`` by its files' parquet footers."""
+        d = os.path.join(self.out_dir, f"chunk={chunk}")
+        if not os.path.isdir(d):
+            return 0
+        return sum(pq.read_metadata(os.path.join(d, name)).num_rows
+                   for name in os.listdir(d)
+                   if name.endswith(".parquet") and name[0] not in "._")
 
     def lineage_df(self) -> DataFrame:
         rows = []

@@ -31,6 +31,32 @@ SALT_N = 64
 FAN_OUT_MIN_BYTES = 128 << 10
 
 
+def plan_size_bytes(df: DataFrame) -> int:
+    """Catalyst's optimized-plan size estimate, in bytes (a huge sentinel
+    when the size is unknown)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _planned_partitions(df: DataFrame) -> int:
+    """The frame's partition count without running it (0 when unknown).
+
+    Under AQE, ``df.rdd`` materializes every shuffle below the frame: one
+    extra job and a duplicate shuffle. So a plan AQE wraps (it has an
+    exchange or a subquery) gives its count from the planned output
+    partitioning — the static count, before AQE coalescing. Only a narrow
+    plan is asked for ``df.rdd``, which lists its input splits and runs no
+    job.
+    """
+    plan = df._jdf.queryExecution().executedPlan()
+    adaptive = plan.nodeName() == "AdaptiveSparkPlan"
+    if adaptive:
+        plan = plan.executedPlan()
+    n = plan.outputPartitioning().numPartitions()
+    if n == 0 and not adaptive:
+        n = df.rdd.getNumPartitions()
+    return n
+
+
 def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
     """Round-robin repartition to the session's core count when the input
     is an underpartitioned scan worth spreading.
@@ -51,6 +77,8 @@ def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
     - physical partition count < half the session's default parallelism —
       well-partitioned inputs (every real 100 TB table) make this a
       no-op, so the exchange only appears in the degenerate local shapes.
+      The count is read from the plan without running it; a wide plan
+      whose count the planner does not know is left untouched.
 
     Value-neutral: a round-robin exchange permutes row order only, and
     every declared query is order-insensitive (the correctness gate
@@ -60,15 +88,12 @@ def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
         return df
     try:
         target = df.sparkSession.sparkContext.defaultParallelism
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        if size < FAN_OUT_MIN_BYTES:
+        if plan_size_bytes(df) < FAN_OUT_MIN_BYTES:
             return df
-        nparts = df.rdd.getNumPartitions()
+        nparts = _planned_partitions(df)
     except Exception:  # pragma: no cover - conservative: never fail a plan
         return df
-    if nparts * 2 >= target:
+    if nparts == 0 or nparts * 2 >= target:
         return df
     if key is not None:
         # Hash-partitioning on a high-cardinality key (doc_id) spreads as

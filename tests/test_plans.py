@@ -68,6 +68,21 @@ def test_fan_out_guards(spark):
     assert fan_out(stream) is stream
 
 
+def test_fan_out_runs_no_job(spark):
+    """fan_out reads a shuffled frame's partition count from the plan: under
+    AQE, ``df.rdd`` would run the shuffle below it as a job."""
+    from sparkhtml.spark.partitioning import FAN_OUT_MIN_BYTES, fan_out
+
+    sc = spark.sparkContext
+    df = spark.range(0, FAN_OUT_MIN_BYTES, numPartitions=1).repartition(8, "id")
+    sc.setJobGroup("fan-out-plan", "fan-out-plan")
+    try:
+        assert fan_out(df) is df
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("fan-out-plan") == []
+
+
 def test_broadcast_join_for_small_dims(spark):
     import __spark_entry__ as entry
 

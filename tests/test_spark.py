@@ -580,9 +580,11 @@ def test_textstats(spark):
     assert vals[1] == vals[4] != vals[3]
 
 
-def test_checkpoint_resume(spark, docs_df, tmp_path):
+def test_checkpoint_resume(spark, docs_df, tmp_path, monkeypatch):
+    from sparkhtml.spark import checkpoint
     from sparkhtml.spark.checkpoint import ChunkedRun
 
+    monkeypatch.setattr(checkpoint, "WAVE_MIN_BYTES", 0)  # one chunk per wave
     out = str(tmp_path / "ckpt")
     calls = {"n": 0}
 
@@ -1137,9 +1139,11 @@ def test_checkpoint_iceberg_sink_path(spark, docs_df, tmp_path, monkeypatch):
     """Exercise the Iceberg sink plumbing without jars: mock writeTo to a
     recorder that materializes to parquet with the same chunk-partition
     layout, and verify per-chunk overwritePartitions calls + resume."""
+    from sparkhtml.spark import checkpoint
     from sparkhtml.spark.checkpoint import ChunkedRun
     from sparkhtml.spark.pipeline import extract_spans_df
 
+    monkeypatch.setattr(checkpoint, "WAVE_MIN_BYTES", 0)  # one chunk per wave
     out = str(tmp_path / "ice")
     calls = []
 
@@ -1150,7 +1154,9 @@ def test_checkpoint_iceberg_sink_path(spark, docs_df, tmp_path, monkeypatch):
         def overwritePartitions(self):
             chunk = self.df.select("chunk").first()[0]
             calls.append((self.table, chunk))
-            self.df.write.mode("overwrite").parquet(f"{out}/t/chunk={chunk}")
+            self.df.write.partitionBy("chunk") \
+                .option("partitionOverwriteMode", "dynamic") \
+                .mode("overwrite").parquet(f"{out}/t")
 
     # patch the CONCRETE DataFrame class (Spark 4 splits classic/connect;
     # pyspark.sql.DataFrame is the abstract facade)
@@ -1159,7 +1165,7 @@ def test_checkpoint_iceberg_sink_path(spark, docs_df, tmp_path, monkeypatch):
     )
     monkeypatch.setattr(
         type(spark), "table",
-        lambda self, t: self.read.parquet(f"{out}/t/chunk=*"),
+        lambda self, t: self.read.parquet(f"{out}/t"),
         raising=True,
     )
     run = ChunkedRun(spark, out, n_chunks=2, iceberg_table="cat.db.docs")
