@@ -10,7 +10,10 @@ against the manifest and process only the remainder.
 Chunks are written in **waves**. A wave is one Spark action: one scan of
 the input filtered to the wave's chunks (no filter when the wave holds
 every chunk), one transform, one ``partitionBy("chunk")`` write with
-dynamic partition overwrite. Its chunks commit together, and only then
+dynamic partition overwrite. A wave of several chunks first hash-
+repartitions its output on ``chunk`` into one partition per chunk, so
+each chunk has one writer and one file; a one-chunk wave writes from its
+upstream tasks as they are. Its chunks commit together, and only then
 get their manifest entries; a crash re-runs the whole wave, and the
 dynamic overwrite makes the re-run idempotent. Per-chunk row counts come
 from the committed files' parquet footers, not from reading them back.
@@ -45,8 +48,8 @@ from sparkhtml.spark.partitioning import plan_size_bytes
 # jobs of a serial chain (which Spark books as "time to initialize Python
 # workers", SCALE.md §6). Measured with `python BENCH/run_waves.py`
 # (3,000 generator docs, 16 chunks, local[4] on a 4-core VM): a wave
-# costs 0.87 s on top of its share of a one-wave pass, and the job
-# streams 0.84 MB/s of estimated input, so a 32 MB wave spends ~2% on
+# costs 0.59 s on top of its share of a one-wave pass, and the job
+# streams 1.06 MB/s of estimated input, so a 32 MB wave spends ~2% on
 # that fixed cost and a crash loses under a minute of work.
 # Change it only with a rerun of that script.
 WAVE_MIN_BYTES = 32 << 20
@@ -152,6 +155,12 @@ class ChunkedRun:
         is the identical layout via dynamic partition overwrite.
         """
         tagged = out.withColumn("chunk", self._chunk_col(id_col))
+        if len(chunks) > 1:
+            # One writer per chunk: each chunk's rows meet in one task, so
+            # chunk=<c>/ gets one file instead of one per upstream task.
+            # A wave has several chunks only when each is under
+            # WAVE_MIN_BYTES of input, so that task stays small.
+            tagged = tagged.repartition(len(chunks), "chunk")
         if self.iceberg_table is not None:
             tagged.writeTo(self.iceberg_table).overwritePartitions()
             rows = (

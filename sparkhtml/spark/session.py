@@ -79,13 +79,12 @@ def get_spark(
             "64m",
         )
     )
-    # Shuffle scratch on tmpfs when available (same measurement): shuffle
-    # blocks land on spark.local.dir, and a RAM-backed dir removes the
-    # file-create latency entirely. A real cluster provisions NVMe scratch
-    # for exactly this; the env override is the cluster knob.
+    # Shuffle scratch dir, opt-in: shuffle blocks land on spark.local.dir,
+    # and a RAM-backed dir (e.g. /dev/shm) removes a slow root FS's
+    # file-create latency (same measurement). Not a default: tmpfs scratch
+    # spends memory the executors need at scale, and a real cluster
+    # provisions NVMe scratch. SPARK_LOCAL_DIRS, when set, outranks it.
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/spark-local"
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     # High-core single-JVM regime (local[16+]): ParallelGC beat the Java 17

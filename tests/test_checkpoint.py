@@ -60,9 +60,23 @@ def _doc_ids(out):
         .column("doc_id").to_pylist())
 
 
+def _written_plans(monkeypatch):
+    """Physical plans of every DataFrame written through parquet()."""
+    plans = []
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *a, **k):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    return plans
+
+
 def test_one_wave_few_jobs_and_chunk_layout(spark, docs, tmp_path):
     """A small input is one wave: at most 3 jobs for 16 chunks, and the
-    files sit under chunk=<c>/ without a chunk column."""
+    files sit under chunk=<c>/ without a chunk column, one file per chunk
+    (each chunk has one writer)."""
     out = str(tmp_path / "out")
     summary, n_jobs = _jobs(spark, "one-wave", lambda: ChunkedRun(
         spark, out, n_chunks=16).run(docs, extract_spans_df))
@@ -74,10 +88,29 @@ def test_one_wave_few_jobs_and_chunk_layout(spark, docs, tmp_path):
     for c, rec in recs.items():
         d = os.path.join(out, f"chunk={c}")
         if rec["n_rows"]:
+            files = [n for n in os.listdir(d) if n.endswith(".parquet")]
+            assert len(files) == 1, (c, files)
             table = pq.read_table(d)
             assert "chunk" not in table.column_names
             assert table.num_rows == rec["n_rows"]
     assert sorted(_doc_ids(out).values()) == [1] * 60
+
+
+def test_one_chunk_wave_adds_no_chunk_exchange(spark, docs, tmp_path,
+                                              monkeypatch):
+    """Waves of one chunk (the cluster-scale regime) write from their
+    upstream tasks: no exchange on chunk. A several-chunk wave has one."""
+    plans = _written_plans(monkeypatch)
+    monkeypatch.setattr(checkpoint, "WAVE_MIN_BYTES", 0)
+    ChunkedRun(spark, str(tmp_path / "per-chunk"), n_chunks=2).run(
+        docs, extract_spans_df)
+    assert len(plans) == 2
+    assert not any("hashpartitioning(chunk" in p for p in plans), plans
+    monkeypatch.setattr(checkpoint, "WAVE_MIN_BYTES", plan_size_bytes(docs))
+    ChunkedRun(spark, str(tmp_path / "one-wave"), n_chunks=2).run(
+        docs, extract_spans_df)
+    assert len(plans) == 3
+    assert "hashpartitioning(chunk" in plans[2], plans[2]
 
 
 def test_crashed_wave_leaves_no_manifest_entry(spark, docs, tmp_path,
@@ -154,14 +187,7 @@ def test_resumed_job_skips_straggler_write(spark, tmp_path, monkeypatch,
     assert first["n_stragglers"] > 0
     with open(os.path.join(out, "_manifest", "stragglers.json")) as f:
         assert json.load(f)["n_stragglers"] == first["n_stragglers"]
-    written = []
-    parquet = DataFrameWriter.parquet
-
-    def recording(self, path, *a, **k):
-        written.append(path)
-        return parquet(self, path, *a, **k)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    written = _written_plans(monkeypatch)
     assert main(argv) == 0
     second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert written == []
