@@ -12,8 +12,10 @@
 
 Reads the interleaved documents table (parquet path, or an Iceberg table
 name when a catalog is configured), runs the main-content extraction with
-size-salted partitioning, writes spans_out chunk-by-chunk with the
-resumable manifest, and emits lineage + per-document metrics tables.
+size-salted partitioning, and writes spans_out chunk-by-chunk with one
+``_manifest/`` entry per committed chunk (and one for the straggler pass),
+so a re-run resumes where the last one stopped. ``--metrics-output`` adds
+the per-document metrics table.
 """
 
 from __future__ import annotations
@@ -58,7 +60,7 @@ def main(argv=None) -> int:
 
     # format-agnostic ingest: a (doc_id, payload binary) corpus is a PDF
     # table — parse it into the SAME interleaved spans schema first, so
-    # the rest of the job (salting, extraction, checkpointing, lineage)
+    # the rest of the job (salting, extraction, checkpointing, metrics)
     # is identical for HTML-span and PDF inputs
     if "payload" in docs.columns and "spans" not in docs.columns:
         from sparkhtml.spark.pdf import pdf_spans_df

@@ -35,22 +35,13 @@ from typing import Iterator, Optional
 
 from .encoding import decode_html_bytes
 from .escape import escape_html, unescape_html  # noqa: F401 (re-export)
-from .selector import CompiledSelector, _CACHE
+from .selector import compiled
 from .serializer import inner_html as _inner_html
 from .serializer import serialize as _serialize
 from .treebuilder import (
     COMMENT, DOCTYPE, DOCUMENT, ELEMENT, NS_HTML, TEXT, Node, parse,
     parse_fragment,
 )
-
-
-def _compiled(selector: str) -> CompiledSelector:
-    cs = _CACHE.get(selector)
-    if cs is None:
-        cs = CompiledSelector(selector)
-        if len(_CACHE) < 4096:
-            _CACHE[selector] = cs
-    return cs
 
 
 class Element:
@@ -210,7 +201,7 @@ class Element:
 
         dom = FlatDOM.from_tree(self.node)
         nodes = _tree_order_nodes(self.node)
-        return [Element(nodes[i]) for i in _compiled(selector).match_ids(dom)]
+        return [Element(nodes[i]) for i in compiled(selector).match_ids(dom)]
 
     def query_selector(self, selector: str) -> Optional["Element"]:
         all_ = self.query_selector_all(selector)

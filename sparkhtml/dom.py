@@ -29,10 +29,7 @@ from __future__ import annotations
 
 from typing import Iterator, Optional
 
-from .treebuilder import (
-    COMMENT, DOCTYPE, DOCUMENT, ELEMENT, NS_HTML, TEXT, Node, parse,
-    parse_fragment,
-)
+from .treebuilder import DOCTYPE, ELEMENT, TEXT, Node, parse
 
 
 class FlatDOM:
@@ -114,16 +111,6 @@ class FlatDOM:
         dom.n_errors = len(tb.errors) + len(tb.tokenizer.errors)
         return dom
 
-    @classmethod
-    def from_fragment(cls, text: str, context: str = "body") -> "FlatDOM":
-        """Parse a fragment; the flat DOM's root (id 0) is a synthetic
-        document whose children are the fragment nodes."""
-        children = parse_fragment(text, context)
-        root = Node(DOCUMENT)
-        for c in children:
-            root.append(c)
-        return cls.from_tree(root)
-
     # ------------------------------------------------------------ queries
 
     def children_of(self, nid: int) -> list[int]:
@@ -196,21 +183,3 @@ class FlatDOM:
         """hasClass (HTMLElement.m:57-66): whitespace-split membership."""
         v = self.get_attr(nid, "class")
         return v is not None and cls in v.split()
-
-    # ------------------------------------------------------- arrow rows
-
-    def to_row(self) -> dict:
-        """One document → one Spark ``nodes``-array row (SURVEY.md §1.1)."""
-        return {
-            "parent": self.parent,
-            "depth": self.depth,
-            "order": self.order,
-            "kind": self.kind,
-            "tag": self.tag,
-            "ns": self.ns,
-            "attrs": [
-                [{"name": k, "value": v} for k, v in a] for a in self.attrs
-            ],
-            "text": self.text,
-            "subtree": self.subtree,
-        }

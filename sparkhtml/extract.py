@@ -74,10 +74,9 @@ _WS_NORM = re.compile(r"\s+")
 class Block:
     """One segmented text block with its densitometry features."""
 
-    __slots__ = ("node_id", "tag", "text", "words", "link_words", "boiler")
+    __slots__ = ("tag", "text", "words", "link_words", "boiler")
 
-    def __init__(self, node_id: int, tag: Optional[str]) -> None:
-        self.node_id = node_id
+    def __init__(self, tag: Optional[str]) -> None:
         self.tag = tag
         self.text: list[str] = []
         self.words = 0
@@ -113,7 +112,7 @@ def segment_blocks(dom: FlatDOM) -> list[Block]:
     block_of = [0] * n  # node_id of the owning block's element
     blocks: dict[int, Block] = {}
 
-    root_block = Block(0, None)
+    root_block = Block(None)
     blocks[0] = root_block
 
     for i in range(1, n):
@@ -129,7 +128,7 @@ def segment_blocks(dom: FlatDOM) -> list[Block]:
         )
         if kind[i] == ELEMENT and ns[i] == NS_HTML and tag[i] in BLOCK_TAGS:
             block_of[i] = i
-            blocks[i] = Block(i, tag[i])
+            blocks[i] = Block(tag[i])
             blocks[i].boiler = boiler[i]
         else:
             block_of[i] = block_of[p]
@@ -173,9 +172,9 @@ def segment_blocks_tree(root) -> list[Block]:
     """Same segmentation as :func:`segment_blocks`, walking the parse tree
     directly — the extraction hot path skips flat-DOM construction (~15%
     of extract time). One DFS carrying (pruned, boiler, in_link, block)
-    state down the stack; identical Block output apart from ``node_id``
-    (differential-tested in tests/test_units.py)."""
-    root_block = Block(0, None)
+    state down the stack; identical Block output (differential-tested in
+    tests/test_units.py)."""
+    root_block = Block(None)
     blocks = [root_block]
     # stack entries: (node, pruned, boiler, in_link, block)
     stack = [(c, False, False, False, root_block)
@@ -202,7 +201,7 @@ def segment_blocks_tree(root) -> list[Block]:
         if not in_link and node.ns == NS_HTML and node.tag == "a":
             in_link = True
         if node.ns == NS_HTML and node.tag in BLOCK_TAGS:
-            block = Block(len(blocks), node.tag)
+            block = Block(node.tag)
             block.boiler = boiler
             blocks.append(block)
         for c in reversed(node.children):

@@ -672,11 +672,16 @@ def _disabled_mask(dom: FlatDOM) -> list[bool]:
 _CACHE: dict[str, CompiledSelector] = {}
 
 
-def select(dom: FlatDOM, selector: str) -> list[int]:
-    """nodesMatchingSelector with a per-process compiled-selector cache."""
+def compiled(selector: str) -> CompiledSelector:
+    """``CompiledSelector(selector)`` through a per-process cache."""
     cs = _CACHE.get(selector)
     if cs is None:
         cs = CompiledSelector(selector)
         if len(_CACHE) < 4096:
             _CACHE[selector] = cs
-    return cs.match_ids(dom)
+    return cs
+
+
+def select(dom: FlatDOM, selector: str) -> list[int]:
+    """nodesMatchingSelector with a per-process compiled-selector cache."""
+    return compiled(selector).match_ids(dom)

@@ -937,70 +937,8 @@ class Font:
             yield from raw
 
 
-_UNFREEZABLE = object()
-
-
-def _freeze_inline(obj, depth: int = 0, budget: list | None = None):
-    """Canonical hashable form of a fully-INLINE object tree; returns
-    ``_UNFREEZABLE`` when the tree contains indirect refs / streams (or
-    is adversarially deep/large), in which case memoization is unsafe
-    because the same dict bytes could resolve differently per document."""
-    if budget is None:
-        budget = [2048]
-    budget[0] -= 1
-    if depth > 8 or budget[0] < 0:
-        return _UNFREEZABLE
-    if obj is None or isinstance(obj, (bool, int, float, str, bytes)):
-        return obj  # Name is a str subclass; equal names behave equally
-    if isinstance(obj, list):
-        # numeric fast path: /Widths and /W arrays dominate font dicts
-        if all(type(v) is float or type(v) is int for v in obj):
-            budget[0] -= len(obj)
-            return ("L", tuple(obj))
-        out = []
-        for v in obj:
-            fv = _freeze_inline(v, depth + 1, budget)
-            if fv is _UNFREEZABLE:
-                return _UNFREEZABLE
-            out.append(fv)
-        return ("L", tuple(out))
-    if isinstance(obj, dict):
-        out = []
-        for k in sorted(obj):
-            fv = _freeze_inline(obj[k], depth + 1, budget)
-            if fv is _UNFREEZABLE:
-                return _UNFREEZABLE
-            out.append((k, fv))
-        return ("D", tuple(out))
-    return _UNFREEZABLE  # Ref, Stream, anything exotic
-
-
-# Cross-document font memo (process-wide, bounded). Real corpora repeat a
-# handful of standard fonts across millions of documents; re-deriving the
-# widths/encoding tables per document was ~18% of PDF parse time. Only
-# fully-inline font dicts participate (see _freeze_inline); Font objects
-# are immutable after load (tables() memoizes idempotently), so sharing
-# across PDFs is safe.
-_FONT_MEMO: dict = {}
-_FONT_MEMO_CAP = 512
-
-
 def load_font(pdf: PDF, fd: dict) -> Font:
     fd = pdf.resolve(fd) or {}
-    key = _freeze_inline(fd)
-    if key is not _UNFREEZABLE:
-        cached = _FONT_MEMO.get(key)
-        if cached is not None:
-            return cached
-    f = _load_font_impl(pdf, fd)
-    if key is not _UNFREEZABLE:
-        if len(_FONT_MEMO) >= _FONT_MEMO_CAP:
-            _FONT_MEMO.clear()
-        _FONT_MEMO[key] = f
-    return f
-
-
-def _load_font_impl(pdf: PDF, fd: dict) -> Font:
     f = Font()
     f.name = str(pdf.resolve(fd.get("BaseFont", "")))
     subtype = str(pdf.resolve(fd.get("Subtype", "")))
@@ -1634,9 +1572,9 @@ def pdf_extract_spans(data: bytes) -> list[dict]:
 def pdf_doc_spans(data: bytes) -> tuple[list[dict], int]:
     """Single-parse ``(interleaved spans, page count)``.
 
-    The unit of work of the Spark ingest operator
-    (:func:`sparkhtml.spark.pipeline.pdf_to_spans_df`) — one xref load
-    and one content-stream interpretation serve both outputs.
+    The unit of work of the Spark operators (:func:`pdf_spans_df`,
+    :func:`pdf_extract_df`) — one xref load and one content-stream
+    interpretation serve both outputs.
     """
     pages = pdf_page_lines(data)
     return _assemble_spans(pages), len(pages)
@@ -1985,98 +1923,86 @@ def build_pdf(pages: list[list[tuple]], *, header: str | None = None,
 # Spark operators — Arrow-batched, per-row error channel, zero shuffle
 
 
-def pdf_extract_df(df, payload_col: str = "payload", id_col: str = "doc_id"):
-    """(id, pdf bytes) → (id, n_pages, n_media, n_chars, text, err).
+def _parse_arrow(batches, schema):
+    """mapInArrow worker: (id, pdf bytes) → (id, spans, n_pages, err).
 
-    ``mapInArrow`` over binary payloads: scan-local, zero shuffle — the
-    same 100 TB posture as the HTML extraction stages (pipeline.py).
-    Malformed / encrypted / unsupported-filter PDFs land in ``err``,
-    never fail the task (multimodal.py's error-channel contract).
+    One :func:`pdf_doc_spans` call per document. A blob that fails to
+    parse yields empty spans, a null ``n_pages`` and the error text in
+    ``err`` — never a task failure (multimodal.py's error-channel
+    contract).
     """
     import pyarrow as pa
 
-    out_schema = (f"{id_col} string, n_pages int, n_media int, "
-                  f"n_chars int, text string, err string")
+    spans_t = schema.field("spans").type
+    for batch in batches:
+        all_spans, pages, errs = [], [], []
+        for blob in batch.column(1).to_pylist():
+            try:
+                if blob is None:
+                    raise PDFError("null payload")
+                spans, n_pg = pdf_doc_spans(blob)
+                all_spans.append(spans)
+                pages.append(n_pg)
+                errs.append(None)
+            except Exception as e:  # noqa: BLE001 — error channel
+                all_spans.append([])
+                pages.append(None)
+                errs.append(f"{type(e).__name__}: {e}"[:500])
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0), pa.array(all_spans, spans_t),
+             pa.array(pages, pa.int32()), pa.array(errs, pa.string())],
+            schema=schema)
 
-    def work(batches):
-        for batch in batches:
-            ids = batch.column(id_col)
-            payloads = batch.column(payload_col)
-            pages, media, chars, texts, errs = [], [], [], [], []
-            for i in range(batch.num_rows):
-                blob = payloads[i].as_py()
-                try:
-                    if blob is None:
-                        raise PDFError("null payload")
-                    spans, n_pg = pdf_doc_spans(bytes(blob))
-                    text = "\n".join(
-                        s["text"] for s in spans if s["kind"] == "text")
-                    n_med = sum(1 for s in spans if s["kind"] == "media")
-                    pages.append(n_pg)
-                    media.append(n_med)
-                    chars.append(len(text))
-                    texts.append(text)
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — error channel
-                    pages.append(None)
-                    media.append(None)
-                    chars.append(None)
-                    texts.append(None)
-                    errs.append(f"{type(e).__name__}: {e}"[:500])
-            yield pa.RecordBatch.from_arrays(
-                [ids,
-                 pa.array(pages, pa.int32()),
-                 pa.array(media, pa.int32()),
-                 pa.array(chars, pa.int32()),
-                 pa.array(texts, pa.string()),
-                 pa.array(errs, pa.string())],
-                names=[id_col, "n_pages", "n_media", "n_chars",
-                       "text", "err"])
 
+def _parsed_df(df, payload_col: str, id_col: str):
+    """(id, pdf bytes) → (id, spans, n_pages, err): scan-local
+    ``mapInArrow`` over binary payloads, zero shuffle — the same 100 TB
+    posture as the HTML extraction stages (pipeline.py)."""
+    from functools import partial
+
+    from pyspark.sql import types as T
+
+    from . import schemas
     from .partitioning import fan_out
 
-    return fan_out(
-        df.select(id_col, payload_col)
-    ).mapInArrow(work, out_schema)
+    schema = T.StructType([
+        T.StructField(id_col, T.StringType()),
+        T.StructField("spans", T.ArrayType(schemas.SPAN)),
+        T.StructField("n_pages", T.IntegerType()),
+        T.StructField("err", T.StringType()),
+    ])
+    worker = partial(_parse_arrow, schema=schemas.to_arrow(schema))
+    return fan_out(df.select(id_col, payload_col)).mapInArrow(worker, schema)
+
+
+def pdf_extract_df(df, payload_col: str = "payload", id_col: str = "doc_id"):
+    """(id, pdf bytes) → (id, n_pages, n_media, n_chars, text, err).
+
+    A JVM projection over the parsed spans: ``text`` joins the text spans
+    with newlines, ``n_media`` counts the media spans. Malformed /
+    encrypted / unsupported-filter PDFs land in ``err`` with the other
+    columns null.
+    """
+    from pyspark.sql import functions as F
+
+    ok = F.col("err").isNull()
+    text = F.array_join(
+        F.transform(F.filter("spans", lambda s: s.kind == "text"),
+                    lambda s: s.text), "\n")
+    n_media = F.size(F.filter("spans", lambda s: s.kind == "media"))
+    return _parsed_df(df, payload_col, id_col).select(
+        id_col, "n_pages",
+        F.when(ok, n_media).alias("n_media"),
+        F.when(ok, F.length(text)).alias("n_chars"),
+        F.when(ok, text).alias("text"),
+        "err")
 
 
 def pdf_spans_df(df, payload_col: str = "payload", id_col: str = "doc_id"):
-    """(id, pdf bytes) → (id, spans array<struct>) in the interleaved
+    """(id, pdf bytes) → (id, spans array<struct>, err) in the interleaved
     document schema (schemas.DOCUMENTS_INTERLEAVED) — PDFs become rows
     of the SAME spans table as parsed HTML, so every downstream
     operator (dedup, quality, curation, span re-emission) is
     format-agnostic.  Failed parses yield an empty span list plus an
     ``err`` column."""
-    import pyarrow as pa
-
-    span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                        ("media_ref", pa.string()), ("offset", pa.int32())])
-    out_schema = (f"{id_col} string, "
-                  "spans array<struct<kind:string,text:string,"
-                  "media_ref:string,offset:int>>, err string")
-
-    def work(batches):
-        for batch in batches:
-            ids = batch.column(id_col)
-            payloads = batch.column(payload_col)
-            all_spans, errs = [], []
-            for i in range(batch.num_rows):
-                blob = payloads[i].as_py()
-                try:
-                    if blob is None:
-                        raise PDFError("null payload")
-                    all_spans.append(pdf_extract_spans(bytes(blob)))
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001
-                    all_spans.append([])
-                    errs.append(f"{type(e).__name__}: {e}"[:500])
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(all_spans, pa.list_(span_t)),
-                 pa.array(errs, pa.string())],
-                names=[id_col, "spans", "err"])
-
-    from .partitioning import fan_out
-
-    return fan_out(
-        df.select(id_col, payload_col)
-    ).mapInArrow(work, out_schema)
+    return _parsed_df(df, payload_col, id_col).select(id_col, "spans", "err")

@@ -42,36 +42,11 @@ from ..selector import CompiledSelector
 from . import schemas
 from .partitioning import fan_out
 
-# Arrow field layouts for the hand-built output batches. Kept in lockstep
-# with schemas.py via to_arrow_schema (tests/test_spark.py asserts this).
-_SPAN_FIELDS = [
-    pa.field("kind", pa.string()),
-    pa.field("text", pa.string()),
-    pa.field("media_ref", pa.string()),
-    pa.field("offset", pa.int32()),
-]
-_SPANS_OUT_SCHEMA = pa.schema(
-    [
-        pa.field("doc_id", pa.string(), nullable=False),
-        pa.field("spans", pa.list_(pa.struct(_SPAN_FIELDS))),
-    ]
-)
-_ATTR_FIELDS = [pa.field("name", pa.string()), pa.field("value", pa.string())]
-_NODES_SCHEMA = pa.schema(
-    [
-        pa.field("doc_id", pa.string(), nullable=False),
-        pa.field("node_id", pa.int32(), nullable=False),
-        pa.field("parent", pa.int32()),
-        pa.field("depth", pa.int32()),
-        pa.field("order", pa.int32()),
-        pa.field("kind", pa.int8()),
-        pa.field("tag", pa.string()),
-        pa.field("ns", pa.int8()),
-        pa.field("attrs", pa.list_(pa.struct(_ATTR_FIELDS))),
-        pa.field("text", pa.string()),
-        pa.field("subtree", pa.int32()),
-    ]
-)
+# Arrow layouts of the hand-built output batches, derived from schemas.py.
+_SPANS_OUT_SCHEMA = schemas.to_arrow(schemas.SPANS_OUT)
+_SPAN_FIELDS = list(_SPANS_OUT_SCHEMA.field("spans").type.value_type)
+_NODES_SCHEMA = schemas.to_arrow(schemas.NODES)
+_ATTR_FIELDS = list(_NODES_SCHEMA.field("attrs").type.value_type)
 
 
 def _flat_spans(batch: pa.RecordBatch):
@@ -363,11 +338,7 @@ def register_udfs(spark) -> None:
 # ------------------------------------------------------------- metrics
 
 
-_METRICS_SCHEMA = pa.schema(
-    [pa.field("doc_id", pa.string(), nullable=False)]
-    + [pa.field(f.name, pa.int32())
-       for f in schemas.EXTRACT_METRICS.fields[1:]]
-)
+_METRICS_SCHEMA = schemas.to_arrow(schemas.EXTRACT_METRICS)
 
 
 def _metrics_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

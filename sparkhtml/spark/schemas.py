@@ -65,3 +65,12 @@ EXTRACT_METRICS = T.StructType(
         T.StructField("max_depth", T.IntegerType()),
     ]
 )
+
+
+def to_arrow(schema: T.StructType):
+    """The Arrow form of ``schema`` (field metadata stripped), for the
+    workers that assemble their output RecordBatches by hand."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.schema([f.remove_metadata() for f in to_arrow_schema(schema)])

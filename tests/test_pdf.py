@@ -29,7 +29,9 @@ from sparkhtml.spark.pdf import (
     build_pdf,
     decode_stream,
     glyph_to_unicode,
+    load_font,
     parse_object,
+    pdf_doc_spans,
     pdf_extract_spans,
     pdf_extract_text,
     pdf_metadata,
@@ -312,6 +314,19 @@ def test_external_pdf_spans_structure():
         (s["kind"] == "text") == (s["media_ref"] is None) for s in spans)
 
 
+def test_load_font_reads_each_inline_dict_afresh():
+    """Widths load only for an integer /FirstChar, so a font dict that
+    differs from the previous one only in 32 vs 32.0 must come back with
+    no widths, not as the earlier dict's Font."""
+    pdf = PDF(build_pdf([[("text", "font")]]))
+    base = {"Type": Name("Font"), "Subtype": Name("Type1"),
+            "BaseFont": Name("Helvetica"), "Widths": [500, 600]}
+    first = load_font(pdf, {**base, "FirstChar": 32})
+    second = load_font(pdf, {**base, "FirstChar": 32.0})
+    assert first.widths == {32: 500.0, 33: 600.0}
+    assert second is not first and second.widths == {}
+
+
 # ---------------------------------------------------------------------------
 # Spark operators
 
@@ -331,13 +346,20 @@ def test_pdf_extract_df_and_error_channel(spark):
     df = spark.createDataFrame(rows, "doc_id string, payload binary")
     out = {r.doc_id: r for r in pdf_extract_df(df).collect()}
     assert len(out) == 14
-    assert out["bad"].err and out["nul"].err
+    for doc_id in ("bad", "nul"):
+        r = out[doc_id]
+        assert r.err
+        assert (r.n_pages, r.n_media, r.n_chars, r.text) == (None,) * 4
     for i in range(12):
         r = out[f"d{i}"]
+        spans, n_pages = pdf_doc_spans(bytes(rows[i][1]))
+        text = "\n".join(s["text"] for s in spans if s["kind"] == "text")
         assert r.err is None
-        assert r.n_pages == 1
+        assert r.n_pages == n_pages == 1
+        assert r.n_media == sum(s["kind"] == "media" for s in spans)
         assert r.n_media == (1 if i % 3 == 0 else 0)
-        assert f"t{i}x24" in r.text
+        assert r.text == text and f"t{i}x24" in text
+        assert r.n_chars == len(text)
 
 
 def test_pdf_spans_df_matches_pure(spark):
@@ -356,13 +378,14 @@ def test_pdf_spans_df_matches_pure(spark):
 
 
 def test_pdf_extract_df_plan_zero_shuffle(spark):
-    from sparkhtml.spark.pdf import pdf_extract_df
+    from sparkhtml.spark.pdf import pdf_extract_df, pdf_spans_df
 
     df = spark.createDataFrame(
         [("d0", bytearray(build_pdf([[("text", "plan check")]])))],
         "doc_id string, payload binary")
-    plan = pdf_extract_df(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    for op in (pdf_extract_df, pdf_spans_df):
+        plan = op(df)._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, op.__name__
 
 
 def test_mutation_fuzz_error_channel_never_hangs():

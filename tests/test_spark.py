@@ -96,20 +96,7 @@ def _pure_nodes(doc_id, html):
 def test_arrow_workers_match_pure_python(spark, docs_df):
     """The metrics and nodes workers are row-for-row identical to the
     pure-Python core applied to the collected input (spans: see
-    test_extract_matches_pure_python), and the hand-built Arrow schemas
-    stay in lockstep with schemas.py."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from sparkhtml.spark import pipeline as P
-
-    assert P._SPANS_OUT_SCHEMA == pa.schema(
-        [f.remove_metadata() for f in to_arrow_schema(schemas.SPANS_OUT)]
-    )
-    assert P._NODES_SCHEMA == pa.schema(
-        [f.remove_metadata() for f in to_arrow_schema(schemas.NODES)]
-    )
-
+    test_extract_matches_pure_python)."""
     got = sorted((r.asDict() for r in extract_metrics_df(docs_df).collect()),
                  key=lambda r: r["doc_id"])
     expected = sorted((_pure_metrics(r["doc_id"], r["spans"])

@@ -270,8 +270,7 @@ def _segment_inputs():
 
 def test_segment_blocks_flat_and_tree_agree():
     """Metrics segment the flat DOM, extraction segments the parse tree
-    directly: both must yield the same blocks (ids aside) in the same
-    order."""
+    directly: both must yield the same blocks in the same order."""
     from sparkhtml.extract import segment_blocks, segment_blocks_tree
 
     def key(blocks):
