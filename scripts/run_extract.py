@@ -6,16 +6,27 @@
     # local or cluster run (the north rule's submission shape)
     spark-submit --py-files dist/sparkhtml.zip scripts/run_extract.py \
         --input  <path or iceberg table of (doc_id, spans)> \
-        --output <output dir / table> \
-        --checkpoint <manifest dir> \
-        --chunks 256 --partitions 2048
+        --output <output dir> \
+        --chunks 256 --partitions 2048 [--metrics-output <dir>]
 
 Reads the interleaved documents table (parquet path, or an Iceberg table
-name when a catalog is configured), runs the main-content extraction with
-size-salted partitioning, and writes spans_out chunk-by-chunk with one
-``_manifest/`` entry per committed chunk (and one for the straggler pass),
-so a re-run resumes where the last one stopped. ``--metrics-output`` adds
-the per-document metrics table.
+name when a catalog is configured; a ``(doc_id, payload binary)`` PDF
+corpus is parsed into spans first, bad blobs to ``<output>_pdf_errors``)
+and extracts main content with size-salted partitioning, parsing each
+text span once. It writes, under ``--output``:
+
+    chunk=<c>/                 docs hashing into chunk c, one wave at a time
+    stragglers/                docs over --straggler-chars
+    _manifest/chunk-<c>.json   one entry per committed chunk
+    _manifest/stragglers.json  the straggler pass's entry
+
+Chunk and straggler files share the ``schemas.EXTRACTED`` schema: doc_id,
+spans and the ``schemas.EXTRACT_METRICS`` columns (no ``chunk`` column).
+Read them with ``ChunkedRun(spark, <output>).output_df()``;
+``spark.read.parquet(<output>)`` fails once ``stragglers/`` exists. A
+re-run resumes from the manifest and parses nothing already written.
+``--metrics-output`` is a projection of the metric columns, no parse.
+``--checkpoint`` is ignored: the manifest is always ``<output>/_manifest``.
 """
 
 from __future__ import annotations
@@ -30,8 +41,8 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--checkpoint", required=True,
-                    help="manifest dir for resumable chunked writes")
+    ap.add_argument("--checkpoint",
+                    help="ignored; the manifest is always <output>/_manifest")
     ap.add_argument("--chunks", type=int, default=64)
     ap.add_argument("--partitions", type=int, default=None,
                     help="shuffle parallelism for the balanced repartition")
@@ -44,9 +55,10 @@ def main(argv=None) -> int:
 
     from pyspark.sql import SparkSession
 
+    from sparkhtml.spark import schemas
     from sparkhtml.spark.checkpoint import ChunkedRun
     from sparkhtml.spark.partitioning import straggler_split, with_size_salt
-    from sparkhtml.spark.pipeline import extract_metrics_df, extract_spans_df
+    from sparkhtml.spark.pipeline import extract_with_metrics_df
 
     # under spark-submit the session/master/executors come from the submit
     # conf; we only set analysis-level options here
@@ -67,19 +79,15 @@ def main(argv=None) -> int:
 
         # persist: ChunkedRun's per-chunk filters sit ABOVE this Python
         # stage in the plan, so without materialization every chunk job
-        # (plus the straggler and metrics passes) would re-parse the
-        # whole PDF corpus (~ms/doc) from scratch
+        # (plus the straggler pass) would re-parse the whole PDF corpus
+        # (~ms/doc) from scratch
         parsed = pdf_spans_df(docs).persist()
-        # error channel stays VISIBLE: malformed/encrypted blobs land in
-        # <output>_pdf_errors instead of masquerading as empty documents
-        # (a SIBLING path — a subdir would break reading <output> as one
-        # parquet table, since the error schema differs from spans)
+        # error channel stays VISIBLE: malformed/encrypted blobs land only
+        # in <output>_pdf_errors, not as empty documents in the output (a
+        # SIBLING path: output_df reads <output>'s files as one table)
         parsed.filter(parsed.err.isNotNull()).select("doc_id", "err") \
             .write.mode("overwrite").parquet(
                 args.output.rstrip("/") + "_pdf_errors")
-        # err rows live ONLY in the sibling error table — filter them out
-        # of the main pipeline (round-6 ADVICE: they previously continued
-        # as empty-span documents, appearing in both outputs)
         docs = parsed.filter(parsed.err.isNull()).select("doc_id", "spans")
 
     partitions = args.partitions or spark.sparkContext.defaultParallelism * 2
@@ -88,7 +96,7 @@ def main(argv=None) -> int:
     def transform(df):
         salted = with_size_salt(df)
         balanced = salted.repartition(partitions, "size_bucket", "salt")
-        return extract_spans_df(balanced)
+        return extract_with_metrics_df(balanced)
 
     t0 = time.time()
     run = ChunkedRun(spark, args.output, n_chunks=args.chunks)
@@ -103,17 +111,15 @@ def main(argv=None) -> int:
     if done is None:
         n_strag = stragglers.count()
         if n_strag:
-            strag_out = extract_spans_df(stragglers.repartition(n_strag))
-            strag_out.write.mode("overwrite").parquet(
-                args.output.rstrip("/") + "/stragglers"
-            )
+            strag_out = extract_with_metrics_df(
+                stragglers.repartition(n_strag))
+            strag_out.write.mode("overwrite").parquet(run.stragglers_dir)
         run.record("stragglers", status="ok", n_stragglers=n_strag)
     else:
         n_strag = done["n_stragglers"]
     if args.metrics_output:
-        extract_metrics_df(docs).write.mode("overwrite").parquet(
-            args.metrics_output
-        )
+        run.output_df(schemas.EXTRACT_METRICS).write.mode("overwrite") \
+            .parquet(args.metrics_output)
     summary["n_stragglers"] = n_strag
     summary["wall_s"] = round(time.time() - t0, 1)
     print(json.dumps(summary))

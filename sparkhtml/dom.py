@@ -35,7 +35,7 @@ from .treebuilder import DOCTYPE, ELEMENT, TEXT, Node, parse
 class FlatDOM:
     __slots__ = (
         "parent", "depth", "order", "kind", "tag", "ns", "attrs", "text",
-        "subtree", "quirks", "n_errors",
+        "subtree", "n_errors",
     )
 
     def __init__(self) -> None:
@@ -48,7 +48,6 @@ class FlatDOM:
         self.attrs: list[list[tuple[str, str]]] = []
         self.text: list[Optional[str]] = []
         self.subtree: list[int] = []
-        self.quirks = 0
         self.n_errors = 0
 
     def __len__(self) -> int:
@@ -107,7 +106,6 @@ class FlatDOM:
     def from_html(cls, text: str, collect_errors: bool = False) -> "FlatDOM":
         tb = parse(text, collect_errors=collect_errors)
         dom = cls.from_tree(tb.document)
-        dom.quirks = tb.quirks
         dom.n_errors = len(tb.errors) + len(tb.tokenizer.errors)
         return dom
 

@@ -168,19 +168,34 @@ def _is_boiler_node(node) -> bool:
     return False
 
 
-def segment_blocks_tree(root) -> list[Block]:
+class ParseCounts:
+    """Per-document metrics accumulator for :func:`extract_main_text`:
+    each parse it is passed to adds its nodes (root included, as in
+    ``FlatDOM``), words, kept words and parse errors, and raises
+    ``max_depth``. The extracted text is the same with or without it."""
+
+    n_nodes = n_words = n_kept_words = n_errors = max_depth = 0
+
+
+def segment_blocks_tree(root, counts: Optional[ParseCounts] = None
+                        ) -> list[Block]:
     """Same segmentation as :func:`segment_blocks`, walking the parse tree
     directly — the extraction hot path skips flat-DOM construction (~15%
-    of extract time). One DFS carrying (pruned, boiler, in_link, block)
-    state down the stack; identical Block output (differential-tested in
-    tests/test_units.py)."""
+    of extract time). One DFS carrying (pruned, boiler, in_link, block,
+    depth) state down the stack; identical Block output (differential-
+    tested in tests/test_units.py). The walk visits every node, so it
+    also adds the node count and depth to ``counts``."""
     root_block = Block(None)
     blocks = [root_block]
-    # stack entries: (node, pruned, boiler, in_link, block)
-    stack = [(c, False, False, False, root_block)
+    n_nodes = max_depth = 0
+    # stack entries: (node, pruned, boiler, in_link, block, depth)
+    stack = [(c, False, False, False, root_block, 1)
              for c in reversed(root.children)]
     while stack:
-        node, pruned, boiler, in_link, block = stack.pop()
+        node, pruned, boiler, in_link, block, depth = stack.pop()
+        n_nodes += 1
+        if depth > max_depth:
+            max_depth = depth
         kind = node.kind
         if kind == TEXT:
             if not pruned:
@@ -204,28 +219,42 @@ def segment_blocks_tree(root) -> list[Block]:
             block = Block(node.tag)
             block.boiler = boiler
             blocks.append(block)
+        depth += 1
         for c in reversed(node.children):
-            stack.append((c, pruned, boiler, in_link, block))
+            stack.append((c, pruned, boiler, in_link, block, depth))
+    if counts is not None:
+        counts.n_nodes += n_nodes + 1
+        counts.max_depth = max(counts.max_depth, max_depth)
     return [b for b in blocks if b.text]
 
 
-def extract_main_text(html: str, fragment: bool = True) -> str:
-    """HTML (fragment by default) → extracted main-content text."""
+def extract_main_text(html: str, fragment: bool = True,
+                      counts: Optional[ParseCounts] = None) -> str:
+    """HTML (fragment by default) → extracted main-content text; a
+    ``counts`` accumulator also collects this parse's metrics."""
     from .treebuilder import Node, parse, parse_fragment
 
     if fragment:
-        children = parse_fragment(html, "body", collect_errors=False)
-        root = Node(0)
-        for c in children:
-            root.children.append(c)  # parents not needed for segmentation
+        errors = None if counts is None else []
+        root = Node(0)  # parents are not needed for segmentation
+        root.children = parse_fragment(html, "body", collect_errors=False,
+                                       errors=errors)
     else:
-        root = parse(html, collect_errors=False).document
+        tb = parse(html, collect_errors=counts is not None)
+        root, errors = tb.document, tb.errors + tb.tokenizer.errors
+    blocks = segment_blocks_tree(root, counts)
     parts = []
-    for b in segment_blocks_tree(root):
+    kept_words = 0
+    for b in blocks:
         if classify_block(b):
+            kept_words += b.words
             t = _normalize("".join(b.text))
             if t:
                 parts.append(t)
+    if counts is not None:
+        counts.n_words += sum(b.words for b in blocks)
+        counts.n_kept_words += kept_words
+        counts.n_errors += len(errors)
     return "\n".join(parts)
 
 
@@ -263,15 +292,13 @@ def extract_spans(spans: list[dict]) -> list[dict]:
 
 
 def doc_metrics(dom: FlatDOM) -> dict:
-    """Per-document metrics row (lineage/metrics table, SURVEY.md §4.3)."""
+    """The parse-derived metric columns of one parsed span, over the flat
+    DOM: the oracle of :class:`ParseCounts`."""
     blocks = segment_blocks(dom)
-    kept = [b for b in blocks if classify_block(b)]
     return {
         "n_nodes": len(dom),
-        "n_blocks": len(blocks),
-        "n_kept_blocks": len(kept),
         "n_words": sum(b.words for b in blocks),
-        "n_kept_words": sum(b.words for b in kept),
+        "n_kept_words": sum(b.words for b in blocks if classify_block(b)),
         "n_errors": dom.n_errors,
-        "quirks": dom.quirks,
+        "max_depth": max(dom.depth),
     }

@@ -5,7 +5,9 @@ the north rule: partition-level idempotent writes + a completed-partitions
 manifest. The corpus is split into deterministic ``chunk`` ranges by
 doc_id hash; each chunk lands in its own ``chunk=<c>/`` output directory
 and gets a manifest entry on success. Resume = anti-join the chunk list
-against the manifest and process only the remainder.
+against the manifest and process only the remainder. ``output_df`` is
+the one reader of the committed rows: the chunks plus the separate
+straggler pass's ``stragglers/`` (``scripts/run_extract.py``).
 
 Chunks are written in **waves**. A wave is one Spark action: one scan of
 the input filtered to the wave's chunks (no filter when the wave holds
@@ -39,6 +41,7 @@ from typing import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from sparkhtml.spark.partitioning import plan_size_bytes
 
@@ -70,6 +73,8 @@ class ChunkedRun:
         self.n_chunks = n_chunks
         self.iceberg_table = iceberg_table
         self.manifest_path = os.path.join(out_dir, "_manifest")
+        # scripts/run_extract.py's straggler pass (manifest entry too)
+        self.stragglers_dir = os.path.join(out_dir, "stragglers")
         os.makedirs(self.manifest_path, exist_ok=True)
 
     # ------------------------------------------------------------ manifest
@@ -185,14 +190,16 @@ class ChunkedRun:
                    for name in os.listdir(d)
                    if name.endswith(".parquet") and name[0] not in "._")
 
-    def lineage_df(self) -> DataFrame:
-        rows = []
-        for name in sorted(os.listdir(self.manifest_path)):
-            if name.startswith("chunk-") and name.endswith(".json"):
-                rows.append(json.load(open(os.path.join(self.manifest_path, name))))
-        return self.spark.createDataFrame(
-            rows or [{"chunk": -1, "status": "empty", "n_rows": 0, "wall_ms": 0}]
-        )
-
-    def output_df(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.out_dir, "chunk=*"))
+    def output_df(self, schema: StructType | None = None) -> DataFrame:
+        """Every committed row: ``chunk=<c>/`` plus a straggler pass's
+        ``stragglers/`` (reading the output directory as one table fails
+        once both exist). A ``schema`` — all or some of the written
+        columns — skips footer inference, and reads no files as empty."""
+        paths = [os.path.join(self.out_dir, name)
+                 for name in sorted(os.listdir(self.out_dir))
+                 if name.startswith("chunk=")]
+        if os.path.isdir(self.stragglers_dir):
+            paths.append(self.stragglers_dir)
+        reader = self.spark.read if schema is None else \
+            self.spark.read.schema(schema)
+        return reader.parquet(*paths)

@@ -6,20 +6,20 @@ granularity — one parser per document — amortized over Arrow batches
 (SURVEY.md §3.2 "Spark mapping"). No per-row Python UDFs anywhere; every
 stage is ``mapInArrow`` or a Series→Series ``pandas_udf``.
 
-Each nested-struct stage (``extract_spans_df``, ``parse_nodes_df``,
-``extract_metrics_df``) has exactly one worker and runs RecordBatch-native:
-the ``array<struct>`` span/attr columns are read straight off the Arrow
-child buffers and rebuilt with ``ListArray.from_arrays`` — no pandas
+Each nested-struct stage has exactly one worker and runs RecordBatch-
+native: the ``array<struct>`` span/attr columns are read straight off the
+Arrow child buffers and rebuilt with ``ListArray.from_arrays`` — no pandas
 materialization of list-of-dict rows in either direction, which the round-4
 doc-scale measurement identified as the dominant proportional overhead
-(~20% of bytes-pumped cost at realistic doc sizes). The differential oracle
-is the pure-Python core (``extract_spans``, ``FlatDOM.from_html``,
-``doc_metrics``), which ``tests/test_spark.py`` compares row for row.
+(~20% of bytes-pumped cost at realistic doc sizes). The differential
+oracle is the pure-Python core (``extract_spans``, ``doc_metrics``,
+``FlatDOM``), which ``tests/test_spark.py`` compares row for row.
 
 Stages:
 
-    documents_interleaved --extract_spans_df--> spans_out (north rule)
-    documents_interleaved --extract_metrics_df-> per-document metrics
+    documents_interleaved --extract_with_metrics_df--> spans + metrics,
+        one parse per text span; two column projections of it:
+        extract_spans_df (spans_out, north rule), extract_metrics_df
     documents_interleaved --parse_nodes_df----> nodes (flattened DOM table)
     any string column     --css_*_udf---------> matched texts / counts
     any string column     --escape/unescape---> X8/X9 scalar functions
@@ -37,14 +37,15 @@ from pyspark.sql.types import ArrayType, IntegerType, StringType
 
 from ..dom import FlatDOM
 from ..escape import escape_series, unescape_series
-from ..extract import doc_metrics, extract_main_text
+from ..extract import ParseCounts, extract_main_text
 from ..selector import CompiledSelector
 from . import schemas
 from .partitioning import fan_out
 
 # Arrow layouts of the hand-built output batches, derived from schemas.py.
-_SPANS_OUT_SCHEMA = schemas.to_arrow(schemas.SPANS_OUT)
-_SPAN_FIELDS = list(_SPANS_OUT_SCHEMA.field("spans").type.value_type)
+_EXTRACTED_SCHEMA = schemas.to_arrow(schemas.EXTRACTED)
+_SPAN_FIELDS = list(_EXTRACTED_SCHEMA.field("spans").type.value_type)
+_METRIC_NAMES = schemas.EXTRACT_METRICS.fieldNames()[1:]  # after doc_id
 _NODES_SCHEMA = schemas.to_arrow(schemas.NODES)
 _ATTR_FIELDS = list(_NODES_SCHEMA.field("attrs").type.value_type)
 
@@ -58,16 +59,9 @@ def _flat_spans(batch: pa.RecordBatch):
     parent-array slice offset, unlike ``.values``).
     """
     spans = batch.column("spans")
-    lengths = [
-        (n if v else 0)
-        for n, v in zip(
-            pc.list_value_length(spans).fill_null(0).to_pylist(),
-            pc.is_valid(spans).to_pylist(),
-        )
-    ]
-    flat = spans.flatten()
+    flat = spans.flatten()  # drops any values behind null rows
     return (
-        lengths,
+        pc.list_value_length(spans).fill_null(0).to_pylist(),
         flat.field("kind").to_pylist(),
         flat.field("text").to_pylist(),
         flat.field("media_ref").to_pylist(),
@@ -92,9 +86,10 @@ def _span_list_array(out_kind, out_text, out_ref, out_off, list_offsets):
 
 
 def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow worker: RecordBatch-native ``extract_spans``.
+    """mapInArrow worker: RecordBatch-native ``extract_spans`` plus the
+    per-document metrics, which a ``ParseCounts`` takes from the same parses.
 
-    Same semantics as :func:`sparkhtml.extract.extract_spans` (the pure
+    Same spans as :func:`sparkhtml.extract.extract_spans` (the pure
     oracle, parity-tested), but evaluated over the flattened Arrow child
     columns — no list-of-dict rows are ever built, and the output
     list<struct> is assembled directly from flat arrays.
@@ -106,6 +101,7 @@ def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
         out_ref: list = []
         out_off: list = []
         list_offsets = [0]
+        metrics: list = [[] for _ in _METRIC_NAMES]
         lo = 0
         for n in lengths:
             hi = lo + n
@@ -113,20 +109,29 @@ def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
                 range(lo, hi),
                 key=lambda j: offs[j] if offs[j] is not None else 0,
             )
+            counts = ParseCounts()
+            n_media = 0
             for j in order:
                 k = kinds[j]
                 if k == "media":
+                    n_media += 1
                     out_kind.append("media")
                     out_text.append(None)
                     out_ref.append(refs[j])
                     out_off.append(offs[j])
                 elif k == "text":
-                    extracted = extract_main_text(texts[j] or "")
+                    extracted = extract_main_text(texts[j] or "",
+                                                  counts=counts)
                     if extracted:
                         out_kind.append("text")
                         out_text.append(extracted)
                         out_ref.append(None)
                         out_off.append(offs[j])
+            row = (n, len(out_kind) - list_offsets[-1], n_media,  # as named
+                   counts.n_nodes, counts.n_kept_words, counts.n_words,
+                   counts.n_errors, counts.max_depth)
+            for col, v in zip(metrics, row):
+                col.append(v)
             list_offsets.append(len(out_kind))
             lo = hi
         yield pa.RecordBatch.from_arrays(
@@ -134,20 +139,35 @@ def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
                 batch.column("doc_id"),
                 _span_list_array(out_kind, out_text, out_ref, out_off,
                                  list_offsets),
-            ],
-            schema=_SPANS_OUT_SCHEMA,
+            ]
+            + [pa.array(col, pa.int32()) for col in metrics],
+            schema=_EXTRACTED_SCHEMA,
         )
 
 
-def extract_spans_df(documents: DataFrame) -> DataFrame:
-    """The north-rule pipeline: interleaved docs → main-content spans.
+def extract_with_metrics_df(documents: DataFrame) -> DataFrame:
+    """Interleaved docs → each document's spans and metrics (``EXTRACTED``).
 
     Column pruning: only (doc_id, spans) enter the exchange; callers can
     carry extra columns by joining back on doc_id (cheaper than shipping
     them through Python).
     """
     src = fan_out(documents.select("doc_id", "spans"))
-    return src.mapInArrow(_extract_arrow, schema=schemas.SPANS_OUT)
+    return src.mapInArrow(_extract_arrow, schema=schemas.EXTRACTED)
+
+
+def extract_spans_df(documents: DataFrame) -> DataFrame:
+    """The north-rule pipeline: interleaved docs → main-content spans
+    (``spans_out``), a projection of :func:`extract_with_metrics_df`."""
+    return extract_with_metrics_df(documents).select(
+        *schemas.SPANS_OUT.fieldNames())
+
+
+def extract_metrics_df(documents: DataFrame) -> DataFrame:
+    """Per-document metrics table (lineage layer, SURVEY.md §4.3), a
+    projection of :func:`extract_with_metrics_df`."""
+    return extract_with_metrics_df(documents).select(
+        *schemas.EXTRACT_METRICS.fieldNames())
 
 
 # ------------------------------------------------------------------ nodes
@@ -333,57 +353,3 @@ def css_count_udf(selector: str):
 def register_udfs(spark) -> None:
     for name, udf in make_udfs().items():
         spark.udf.register(name, udf)
-
-
-# ------------------------------------------------------------- metrics
-
-
-_METRICS_SCHEMA = schemas.to_arrow(schemas.EXTRACT_METRICS)
-
-
-def _metrics_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow worker for the metrics table — reads the nested spans
-    column off the flattened Arrow children (same shape as
-    :func:`_extract_arrow`); output is flat ints."""
-    for batch in batches:
-        lengths, kinds, texts, _refs, _offs = _flat_spans(batch)
-        cols = {f.name: [] for f in _METRICS_SCHEMA}
-        lo = 0
-        for n in lengths:
-            hi = lo + n
-            n_media = sum(1 for j in range(lo, hi) if kinds[j] == "media")
-            n_nodes = n_kept = n_words = n_err = depth = 0
-            n_out = n_media
-            for j in range(lo, hi):
-                if kinds[j] != "text":
-                    continue
-                dom = FlatDOM.from_html(texts[j] or "", collect_errors=True)
-                m = doc_metrics(dom)
-                n_nodes += m["n_nodes"]
-                n_kept += m["n_kept_words"]
-                n_words += m["n_words"]
-                n_err += m["n_errors"]
-                depth = max(depth, max(dom.depth) if len(dom) else 0)
-                if m["n_kept_words"]:
-                    n_out += 1
-            cols["n_spans_in"].append(n)
-            cols["n_spans_out"].append(n_out)
-            cols["n_media"].append(n_media)
-            cols["n_nodes"].append(n_nodes)
-            cols["n_kept_words"].append(n_kept)
-            cols["n_words"].append(n_words)
-            cols["n_errors"].append(n_err)
-            cols["max_depth"].append(depth)
-            lo = hi
-        yield pa.RecordBatch.from_arrays(
-            [batch.column("doc_id")]
-            + [pa.array(cols[f.name], pa.int32())
-               for f in _METRICS_SCHEMA if f.name != "doc_id"],
-            schema=_METRICS_SCHEMA,
-        )
-
-
-def extract_metrics_df(documents: DataFrame) -> DataFrame:
-    """Per-document metrics table (lineage layer, SURVEY.md §4.3)."""
-    src = fan_out(documents.select("doc_id", "spans"))
-    return src.mapInArrow(_metrics_arrow, schema=schemas.EXTRACT_METRICS)

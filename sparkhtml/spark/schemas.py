@@ -66,6 +66,9 @@ EXTRACT_METRICS = T.StructType(
     ]
 )
 
+# The HTML extraction worker's output; spans_out and metrics project it.
+EXTRACTED = T.StructType(SPANS_OUT.fields + EXTRACT_METRICS.fields[1:])
+
 
 def to_arrow(schema: T.StructType):
     """The Arrow form of ``schema`` (field metadata stripped), for the

@@ -65,7 +65,7 @@ def cosine_topk_vs(
 ) -> DataFrame:
     """Exact cosine top-k against a 1-row query *DataFrame*.
 
-    The query vector stays inside the plan (broadcast cross join with the
+    The query vector stays inside the plan (a scalar subquery over the
     single query row) — no driver-side ``.first()`` job at query-build
     time, which matters when query construction itself is a hot path
     (this module's rule; see ``cosine_near_dup_pairs`` requiring ``dim=``
@@ -73,34 +73,26 @@ def cosine_topk_vs(
     """
     qv = query_vec_col or vec_col
     df = fan_out(df)
-    if hasattr(query_df, "scalar"):
-        # Spark 4 scalar-subquery shape (round 6): the query vector and
-        # norm are evaluated once as subqueries and flow into the scan
-        # as runtime values — no BroadcastExchange +
-        # BroadcastNestedLoopJoin per run. Measured interleaved at
-        # local[32] on sf0.1: join-shape 1.36x the literal baseline,
-        # this shape 1.18x (BENCH/BASELINE.md round-6 q5 attribution).
-        # Subquery columns can't appear INSIDE higher-order functions,
-        # so they're materialized to plain columns first; ONE struct
-        # subquery carries both vector and norm (two separate scalar()
-        # calls would execute the query frame twice per action).
-        q = query_df.select(
-            F.struct(
-                F.col(qv).alias("v"),
-                F.greatest(_norm_col(qv), F.lit(1e-12)).alias("n"),
-            ).alias("_q")
-        ).scalar()
-        joined = (
-            df.withColumn("_q", q)
-            .withColumn("_qv", F.col("_q.v"))
-            .withColumn("_qnorm", F.col("_q.n"))
-        )
-    else:  # pre-4.0 fallback: broadcast the 1-row frame
-        q = query_df.select(
-            F.col(qv).alias("_qv"),
-            F.greatest(_norm_col(qv), F.lit(1e-12)).alias("_qnorm"),
-        )
-        joined = df.crossJoin(F.broadcast(q))
+    # The query vector and norm are evaluated once as a subquery and flow
+    # into the scan as runtime values — no BroadcastExchange +
+    # BroadcastNestedLoopJoin per run. Measured interleaved at local[32]
+    # on sf0.1: join-shape 1.36x the literal baseline, this shape 1.18x
+    # (BENCH/BASELINE.md round-6 q5 attribution). Subquery columns can't
+    # appear INSIDE higher-order functions, so they're materialized to
+    # plain columns first; ONE struct subquery carries both vector and
+    # norm (two separate scalar() calls would execute the query frame
+    # twice per action).
+    q = query_df.select(
+        F.struct(
+            F.col(qv).alias("v"),
+            F.greatest(_norm_col(qv), F.lit(1e-12)).alias("n"),
+        ).alias("_q")
+    ).scalar()
+    joined = (
+        df.withColumn("_q", q)
+        .withColumn("_qv", F.col("_q.v"))
+        .withColumn("_qnorm", F.col("_q.n"))
+    )
     cos = dot_col(F.col(vec_col), F.col("_qv")) / (
         F.greatest(_norm_col(vec_col), F.lit(1e-12)) * F.col("_qnorm")
     )

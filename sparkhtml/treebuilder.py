@@ -99,9 +99,6 @@ class Node:
                 return v
         return None
 
-    def has_attr(self, name: str) -> bool:
-        return self.get_attr(name) is not None
-
     def __repr__(self) -> str:  # pragma: no cover
         if self.kind == ELEMENT:
             return f"<{self.tag} ns={self.ns}>"
@@ -310,11 +307,6 @@ def _is_ws(s: str) -> bool:
     return not s.strip("\t\n\x0c\r ")
 
 
-class _NullErrors(list):
-    def append(self, item) -> None:
-        pass
-
-
 class _ActiveFormattingMarker:
     pass
 
@@ -342,7 +334,7 @@ class TreeBuilder:
         # (HTMLParser.m:71-107).
         self.document = Node(DOCUMENT)
         self.quirks = NO_QUIRKS
-        self.errors: list[str] = [] if collect_errors else _NullErrors()
+        self.errors: list[str] = [] if collect_errors else tz._NullList()
         self.open_elements: list[Node] = []
         self.active_formatting: list = []  # Node | MARKER
         self.head: Optional[Node] = None
@@ -3034,12 +3026,13 @@ _FRAGMENT_NS = {"svg": NS_SVG, "math": NS_MATHML}
 
 def parse_fragment(
     text: str, context: str = "body", collect_errors: bool = True,
-    use_turbo: bool = True,
+    use_turbo: bool = True, errors: Optional[list] = None,
 ) -> list[Node]:
     """Fragment parsing algorithm (HTMLParser.m:71-150).
 
     ``context`` may be "tag" or "svg tag" / "math tag" (html5lib format).
-    Returns the list of parsed child nodes (parents detached).
+    Returns the list of parsed child nodes (parents detached). An
+    ``errors`` list receives the parse-error codes; the tree is the same.
     """
     ns = NS_HTML
     tag = context
@@ -3047,8 +3040,12 @@ def parse_fragment(
         prefix, tag = context.split(" ", 1)
         ns = _FRAGMENT_NS.get(prefix, NS_HTML)
     tb = TreeBuilder(text, fragment_context=(ns, tag),
-                     collect_errors=collect_errors, use_turbo=use_turbo)
+                     collect_errors=collect_errors or errors is not None,
+                     use_turbo=use_turbo)
     tb.run()
+    if errors is not None:
+        errors += tb.errors
+        errors += tb.tokenizer.errors
     children = tb.fragment_children()
     for child in children:
         child.parent = None

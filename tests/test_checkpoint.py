@@ -1,6 +1,6 @@
 """ChunkedRun waves and run_extract resume: job counts, on-disk layout,
-crash atomicity of a multi-chunk wave, empty chunks, and the straggler
-manifest entry."""
+crash atomicity of a multi-chunk wave, empty chunks, the straggler
+manifest entry, and the metrics output as a projection of the files."""
 
 import importlib.util
 import json
@@ -147,7 +147,8 @@ def test_crashed_wave_leaves_no_manifest_entry(spark, docs, tmp_path,
 
 
 def test_empty_chunk_recorded_ok(spark, docs, tmp_path):
-    """Chunks no document hashes into are recorded ok with n_rows 0."""
+    """Chunks no document hashes into are recorded ok with n_rows 0; an
+    output with no files reads as empty under a given schema."""
     out = str(tmp_path / "out")
     summary = ChunkedRun(spark, out, n_chunks=128).run(docs, extract_spans_df)
     recs = _manifest(out)
@@ -158,6 +159,8 @@ def test_empty_chunk_recorded_ok(spark, docs, tmp_path):
     assert not any(os.path.exists(os.path.join(out, f"chunk={c}"))
                    for c in empty)
     assert summary["rows"] == 60
+    no_files = ChunkedRun(spark, str(tmp_path / "no-files"), n_chunks=2)
+    assert no_files.output_df(schemas.EXTRACT_METRICS).count() == 0
 
 
 def _run_extract():
@@ -194,3 +197,41 @@ def test_resumed_job_skips_straggler_write(spark, tmp_path, monkeypatch,
     assert second["n_stragglers"] == first["n_stragglers"]
     assert {k: second[k] for k in ("resumed", "processed", "rows")} == \
         {"resumed": 4, "processed": 0, "rows": 0}
+
+
+def test_job_metrics_are_a_projection_of_the_output(spark, tmp_path,
+                                                    monkeypatch, capsys):
+    """Chunk and straggler files carry the metric columns, output_df
+    reads both, and --metrics-output holds one row per input doc. A
+    resumed run rewrites the metrics from the files, running no Python
+    worker."""
+    inp = str(tmp_path / "in")
+    corpus = list(make_corpus(40, seed=3, pathological_rate=0.1))
+    spark.createDataFrame(corpus, schema=schemas.DOCUMENTS_INTERLEAVED) \
+        .write.parquet(inp)
+    out, metrics = str(tmp_path / "out"), str(tmp_path / "metrics")
+    argv = ["--input", inp, "--output", out, "--chunks", "4",
+            "--straggler-chars", "12000", "--metrics-output", metrics]
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    main = _run_extract().main
+    ids = sorted(d["doc_id"] for d in corpus)
+
+    assert main(argv) == 0
+    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert first["n_stragglers"] > 0
+    strag = pq.read_table(os.path.join(out, "stragglers"))
+    assert strag.schema.names == schemas.EXTRACTED.fieldNames()
+    assert strag.num_rows == first["n_stragglers"]
+    assert pq.read_table(os.path.join(out, "chunk=0")).schema.names == \
+        schemas.EXTRACTED.fieldNames()
+    rows = ChunkedRun(spark, out, n_chunks=4).output_df().collect()
+    assert sorted(r["doc_id"] for r in rows) == ids
+    assert all(r["n_spans_out"] == len(r["spans"]) for r in rows)
+    table = pq.read_table(metrics)
+    assert table.schema.names == schemas.EXTRACT_METRICS.fieldNames()
+    assert sorted(table.column("doc_id").to_pylist()) == ids
+
+    plans = _written_plans(monkeypatch)
+    assert main(argv) == 0
+    assert len(plans) == 1 and "MapInArrow" not in plans[0], plans
+    assert sorted(pq.read_table(metrics).column("doc_id").to_pylist()) == ids

@@ -84,3 +84,72 @@ def test_repo_imports_resolve():
                         f"{path}:{node.lineno}: from {module} import {a.name}")
     assert not failures, "\n".join(failures)
     assert n_checked > 100, n_checked
+
+
+def _import(module: str, name: str | None):
+    """``module`` itself, or its attribute/submodule ``name``."""
+    import importlib
+
+    if name is None:
+        return importlib.import_module(module)
+    try:
+        return importlib.import_module(f"{module}.{name}")
+    except ModuleNotFoundError:
+        return getattr(importlib.import_module(module), name)
+
+
+def test_perfbench_tracing_targets_exist():
+    """A traced benchmark run wraps program functions by name
+    (``_patched``/``_timing`` in perfbench/tracing.py) and calls others
+    through module attributes. Each such name, resolved through the
+    imports of the function that uses it, must exist: a rename would
+    otherwise surface only in the minutes-long perfbench tests."""
+    path = os.path.join(ROOT, "perfbench", "tracing.py")
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    checked, failures = [], []
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        imports = {}  # local name → (module, name or None)
+        for node in ast.walk(fn):
+            if isinstance(node, ast.ImportFrom):
+                for a in node.names:
+                    imports[a.asname or a.name] = (node.module, a.name)
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    imports[a.asname or a.name] = (a.name, None)
+        loops = {}  # (owner var, attr var) → literal (owner, attr) pairs
+        for node in ast.walk(fn):
+            if (isinstance(node, ast.For) and isinstance(node.target, ast.Tuple)
+                    and isinstance(node.iter, ast.Tuple)):
+                loops[tuple(e.id for e in node.target.elts)] = \
+                    [tuple(e.elts) for e in node.iter.elts]
+        params = {a.arg for a in fn.args.args}
+        targets = []
+        for node in ast.walk(fn):
+            if (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+                    and node.func.id in ("_patched", "_timing")):
+                owner, attr = node.args[:2]
+                if isinstance(attr, ast.Constant):
+                    targets.append((owner.id, attr.value))
+                elif (owner.id, attr.id) in loops:
+                    targets += [(o.id, a.value)
+                                for o, a in loops[(owner.id, attr.id)]]
+                elif not {owner.id, attr.id} <= params:
+                    failures.append(f"{fn.name}:{node.lineno}: unresolved")
+            elif (isinstance(node, ast.Attribute)
+                  and isinstance(node.value, ast.Name)
+                  and imports.get(node.value.id, ("",))[0].startswith("sparkhtml")):
+                targets.append((node.value.id, node.attr))
+        for owner, attr in targets:
+            if owner not in imports:
+                failures.append(f"{fn.name}: {owner} is not imported there")
+            elif not hasattr(_import(*imports[owner]), attr):
+                failures.append(f"{fn.name}: {owner}.{attr} does not exist")
+            checked.append(f"{owner}.{attr}")
+    assert not failures, "\n".join(failures)
+    for name in ("pipeline.extract_main_text", "extract.extract_main_text",
+                 "treebuilder.parse_fragment", "pipeline._extract_arrow",
+                 "pipeline.extract_metrics_df", "FlatDOM.from_html"):
+        assert name in checked, name

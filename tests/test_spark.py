@@ -14,10 +14,11 @@ from sparkhtml.extract import doc_metrics, extract_spans
 from sparkhtml.selector import select as py_select
 from sparkhtml.spark import schemas
 from sparkhtml.spark.pipeline import (
-    css_count_udf, extract_metrics_df, extract_spans_df, make_udfs,
-    parse_nodes_df,
+    css_count_udf, extract_metrics_df, extract_spans_df,
+    extract_with_metrics_df, make_udfs, parse_nodes_df,
 )
 from sparkhtml.spark.queries import css_select_df
+from test_units import _fragment_dom, _segment_inputs
 
 SF = "/root/testdata/sf0.001"
 
@@ -63,7 +64,8 @@ def test_extract_metrics(spark, docs_df):
 
 
 def _pure_metrics(doc_id, spans):
-    """Test-side fold of the per-span core metrics into one metrics row."""
+    """Test-side fold of ``doc_metrics`` over each text span's flattened
+    body-context fragment into one metrics row."""
     spans = spans or []
     n_media = sum(s["kind"] == "media" for s in spans)
     row = {"doc_id": doc_id, "n_spans_in": len(spans), "n_spans_out": n_media,
@@ -71,13 +73,43 @@ def _pure_metrics(doc_id, spans):
            "n_errors": 0, "max_depth": 0}
     for s in spans:
         if s["kind"] == "text":
-            dom = FlatDOM.from_html(s["text"] or "", collect_errors=True)
-            m = doc_metrics(dom)
+            m = doc_metrics(_fragment_dom(s["text"] or ""))
             for k in ("n_nodes", "n_kept_words", "n_words", "n_errors"):
                 row[k] += m[k]
-            row["max_depth"] = max(row["max_depth"], max(dom.depth, default=0))
+            row["max_depth"] = max(row["max_depth"], m["max_depth"])
             row["n_spans_out"] += m["n_kept_words"] > 0
     return row
+
+
+def _text_doc(doc_id, html):
+    return {"doc_id": doc_id, "spans": [
+        {"kind": "text", "text": html, "media_ref": None, "offset": 0}]}
+
+
+def test_metrics_describe_the_emitted_spans(spark, docs_df):
+    """Metrics and spans come from the same parse: on every row
+    n_spans_out is the number of spans emitted, and every row matches the
+    fragment oracle. The frameset span is kept by the extraction, which
+    a document-parse metrics pass used to count as 0 spans and 0 words."""
+    frameset = "<frameset> six\n<tr><p>three four five <html>"
+    m = extract_metrics_df(spark.createDataFrame(
+        [_text_doc("f", frameset)], schema=schemas.DOCUMENTS_INTERLEAVED)
+    ).collect()[0]
+    assert (m["n_spans_out"], m["n_kept_words"], m["n_words"]) == (1, 3, 4)
+
+    strings = [h for _, h in zip(range(300), _segment_inputs())]
+    df = docs_df.unionByName(spark.createDataFrame(
+        [_text_doc(f"s{i:03d}", h) for i, h in enumerate(strings)],
+        schema=schemas.DOCUMENTS_INTERLEAVED))
+    got = extract_with_metrics_df(df).collect()
+    assert len(got) == 60 + 300
+    assert [r["doc_id"] for r in got
+            if r["n_spans_out"] != len(r["spans"])] == []
+    inputs = {r["doc_id"]: r["spans"] for r in df.collect()}
+    metric_names = schemas.EXTRACT_METRICS.fieldNames()
+    assert [r["doc_id"] for r in got
+            if {k: r[k] for k in metric_names}
+            != _pure_metrics(r["doc_id"], inputs[r["doc_id"]])] == []
 
 
 def _pure_nodes(doc_id, html):
@@ -94,9 +126,9 @@ def _pure_nodes(doc_id, html):
 
 
 def test_arrow_workers_match_pure_python(spark, docs_df):
-    """The metrics and nodes workers are row-for-row identical to the
-    pure-Python core applied to the collected input (spans: see
-    test_extract_matches_pure_python)."""
+    """The metrics projection and the nodes worker are row-for-row
+    identical to the pure-Python core applied to the collected input
+    (spans: see test_extract_matches_pure_python)."""
     got = sorted((r.asDict() for r in extract_metrics_df(docs_df).collect()),
                  key=lambda r: r["doc_id"])
     expected = sorted((_pure_metrics(r["doc_id"], r["spans"])

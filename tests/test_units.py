@@ -219,21 +219,36 @@ def test_metrics_batch_counts_parse_errors():
     """extract_metrics must report real parse-error counts (regression:
     collect_errors=False silently zeroed n_errors for every document)."""
     import pyarrow as pa
-    from sparkhtml.spark.pipeline import _SPANS_OUT_SCHEMA, _metrics_arrow
+    from sparkhtml.spark import schemas
+    from sparkhtml.spark.pipeline import _extract_arrow
 
     bad = "<b><i>x</b></i><p><table><div></div>"  # misnesting + foster
-    good = "<!DOCTYPE html><p>hello world</p>"
+    good = "<p>hello world</p>"
     batch = pa.RecordBatch.from_pylist(
         [{"doc_id": doc_id,
           "spans": [{"kind": "text", "text": html, "media_ref": None,
                      "offset": 0}]}
          for doc_id, html in (("bad", bad), ("good", good))],
-        schema=_SPANS_OUT_SCHEMA,
+        schema=schemas.to_arrow(schemas.SPANS_OUT),
     )
-    out = pa.Table.from_batches(list(_metrics_arrow(iter([batch]))))
+    out = pa.Table.from_batches(list(_extract_arrow(iter([batch]))))
     by_id = {r["doc_id"]: r for r in out.to_pylist()}
     assert by_id["bad"]["n_errors"] > 0
     assert by_id["good"]["n_errors"] == 0
+
+
+def _fragment_dom(html):
+    """``html`` parsed as a body-context fragment under a document root,
+    flattened, with the fragment parse's error count: the metrics oracle
+    (``doc_metrics`` segments it with the flat ``segment_blocks``)."""
+    from sparkhtml.treebuilder import DOCUMENT, Node, parse_fragment
+
+    errors = []
+    root = Node(DOCUMENT)
+    root.children = parse_fragment(html, "body", errors=errors)
+    dom = FlatDOM.from_tree(root)
+    dom.n_errors = len(errors)
+    return dom
 
 
 def _segment_inputs():
@@ -269,8 +284,9 @@ def _segment_inputs():
 
 
 def test_segment_blocks_flat_and_tree_agree():
-    """Metrics segment the flat DOM, extraction segments the parse tree
-    directly: both must yield the same blocks in the same order."""
+    """The metrics oracle segments the flat DOM, extraction segments the
+    parse tree directly: both must yield the same blocks in the same
+    order."""
     from sparkhtml.extract import segment_blocks, segment_blocks_tree
 
     def key(blocks):
@@ -283,6 +299,28 @@ def test_segment_blocks_flat_and_tree_agree():
             key(segment_blocks_tree(doc)), html
         n += 1
     assert n > 500
+
+
+def test_parse_counts_match_flat_oracle():
+    """A ParseCounts accumulator leaves the extracted text unchanged, and
+    its counts equal doc_metrics over the flattened fragment; summed over
+    two calls, it adds the counts and keeps the larger depth."""
+    from sparkhtml.extract import ParseCounts, doc_metrics
+
+    n = 0
+    for html in _segment_inputs():
+        counts = ParseCounts()
+        assert extract_main_text(html, counts=counts) == \
+            extract_main_text(html), html
+        m = doc_metrics(_fragment_dom(html))
+        assert {k: getattr(counts, k) for k in m} == m, html
+        n += 1
+    assert n > 500
+    counts = ParseCounts()
+    extract_main_text("<p>one two</p>", counts=counts)
+    extract_main_text("<div><p><b>three</b></p></div><x>", counts=counts)
+    assert (counts.n_nodes, counts.n_words, counts.max_depth) == \
+        (3 + 6, 3, 4)
 
 
 def test_whatwg_label_table_complete():
