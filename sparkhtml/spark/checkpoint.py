@@ -58,6 +58,15 @@ from sparkhtml.spark.partitioning import plan_size_bytes
 WAVE_MIN_BYTES = 32 << 20
 
 
+def footer_rows(directory: str) -> int:
+    """Rows in a parquet directory by its files' footers (0 if absent)."""
+    if not os.path.isdir(directory):
+        return 0
+    return sum(pq.read_metadata(os.path.join(directory, name)).num_rows
+               for name in os.listdir(directory)
+               if name.endswith(".parquet") and name[0] not in "._")
+
+
 class ChunkedRun:
     """Drives a chunked, resumable pass over a documents table."""
 
@@ -83,7 +92,7 @@ class ChunkedRun:
         done = set()
         for name in os.listdir(self.manifest_path):
             if name.startswith("chunk-") and name.endswith(".json"):
-                rec = json.load(open(os.path.join(self.manifest_path, name)))
+                rec = self.entry(name[:-len(".json")])
                 if rec.get("status") == "ok":
                     done.add(rec["chunk"])
         return done
@@ -178,17 +187,9 @@ class ChunkedRun:
             tagged.write.partitionBy("chunk") \
                 .option("partitionOverwriteMode", "dynamic") \
                 .mode("overwrite").parquet(self.out_dir)
-            counts = {c: self._footer_rows(c) for c in chunks}
+            counts = {c: footer_rows(f"{self.out_dir}/chunk={c}")
+                      for c in chunks}
         return {c: counts.get(c, 0) for c in chunks}
-
-    def _footer_rows(self, chunk: int) -> int:
-        """Rows in ``chunk=<c>/`` by its files' parquet footers."""
-        d = os.path.join(self.out_dir, f"chunk={chunk}")
-        if not os.path.isdir(d):
-            return 0
-        return sum(pq.read_metadata(os.path.join(d, name)).num_rows
-                   for name in os.listdir(d)
-                   if name.endswith(".parquet") and name[0] not in "._")
 
     def output_df(self, schema: StructType | None = None) -> DataFrame:
         """Every committed row: ``chunk=<c>/`` plus a straggler pass's

@@ -4,8 +4,8 @@ The document-size distribution of a web corpus is heavy-tailed; hash
 partitioning by doc_id alone gives even *counts* but uneven *bytes* —
 one straggler task holds the 99.9th-percentile giants. Plan:
 
-- ``size_bucket = floor(log2(n_chars))`` — cheap, data-independent, no
-  extra pass over the corpus (vs. exact percentiles, which would need one);
+- ``size_bucket = floor(log2(size))``, size in text chars (or PDF payload
+  bytes) — cheap, data-independent, no extra pass over the corpus;
 - ``salt = pmod(hash(doc_id), SALT_N)`` spreads each bucket;
 - repartition on (size_bucket, salt): giants scatter across SALT_N tasks
   instead of hashing into one; AQE skew-join/coalesce handles the rest.
@@ -117,24 +117,27 @@ def doc_size_col() -> "F.Column":
     )
 
 
-def with_size_salt(documents: DataFrame, salt_n: int = SALT_N) -> DataFrame:
-    """Add (size_bucket, salt) columns; JVM-side expressions only."""
-    n_chars = doc_size_col()
+def with_size_salt(documents: DataFrame, salt_n: int = SALT_N,
+                   size=None) -> DataFrame:
+    """Add (size_bucket, salt) columns of the ``size`` Column (default
+    :func:`doc_size_col`); JVM-side expressions only."""
+    size = doc_size_col() if size is None else size
     return documents.withColumn(
         "size_bucket",
-        F.floor(F.log2(F.greatest(n_chars, F.lit(1)) + F.lit(1))).cast("int"),
+        F.floor(F.log2(F.greatest(size, F.lit(1)) + F.lit(1))).cast("int"),
     ).withColumn(
         "salt", F.pmod(F.xxhash64("doc_id"), F.lit(salt_n)).cast("int")
     )
 
 
-def straggler_split(
-    documents: DataFrame, char_threshold: int = 1_000_000
-) -> tuple[DataFrame, DataFrame]:
-    """Route pathological giants (> threshold chars) to a dedicated set of
-    tasks (SURVEY.md §4.3 'straggler partition set'). Returns
-    (normal, stragglers)."""
-    sized = documents.withColumn("_n_chars", doc_size_col())
-    normal = sized.filter(F.col("_n_chars") <= char_threshold).drop("_n_chars")
-    stragglers = sized.filter(F.col("_n_chars") > char_threshold).drop("_n_chars")
+def straggler_split(documents: DataFrame, char_threshold: int = 1_000_000,
+                    size=None) -> tuple[DataFrame, DataFrame]:
+    """Route pathological giants (``size`` Column > threshold, default
+    :func:`doc_size_col`) to a dedicated set of tasks (SURVEY.md §4.3
+    'straggler partition set'). Returns (normal, stragglers); a null size
+    counts as 0, so every row lands in exactly one of them."""
+    size = doc_size_col() if size is None else size
+    sized = documents.withColumn("_size", F.coalesce(size, F.lit(0)))
+    normal = sized.filter(F.col("_size") <= char_threshold).drop("_size")
+    stragglers = sized.filter(F.col("_size") > char_threshold).drop("_size")
     return normal, stragglers

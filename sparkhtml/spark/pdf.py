@@ -1572,9 +1572,8 @@ def pdf_extract_spans(data: bytes) -> list[dict]:
 def pdf_doc_spans(data: bytes) -> tuple[list[dict], int]:
     """Single-parse ``(interleaved spans, page count)``.
 
-    The unit of work of the Spark operators (:func:`pdf_spans_df`,
-    :func:`pdf_extract_df`) — one xref load and one content-stream
-    interpretation serve both outputs.
+    The unit of work of the Spark worker (:func:`pdf_parsed_df`) — one
+    xref load and one content-stream interpretation serve both outputs.
     """
     pages = pdf_page_lines(data)
     return _assemble_spans(pages), len(pages)
@@ -1954,10 +1953,11 @@ def _parse_arrow(batches, schema):
             schema=schema)
 
 
-def _parsed_df(df, payload_col: str, id_col: str):
-    """(id, pdf bytes) → (id, spans, n_pages, err): scan-local
-    ``mapInArrow`` over binary payloads, zero shuffle — the same 100 TB
-    posture as the HTML extraction stages (pipeline.py)."""
+def pdf_parsed_df(df, payload_col: str = "payload", id_col: str = "doc_id"):
+    """(id, pdf bytes) → (id, spans, n_pages, err) (``schemas.PDF_PARSED``),
+    the PDF tier's one worker: a scan-local ``mapInArrow``, zero shuffle,
+    as in pipeline.py. :func:`pdf_spans_df` and :func:`pdf_extract_df`
+    project it."""
     from functools import partial
 
     from pyspark.sql import types as T
@@ -1965,12 +1965,8 @@ def _parsed_df(df, payload_col: str, id_col: str):
     from . import schemas
     from .partitioning import fan_out
 
-    schema = T.StructType([
-        T.StructField(id_col, T.StringType()),
-        T.StructField("spans", T.ArrayType(schemas.SPAN)),
-        T.StructField("n_pages", T.IntegerType()),
-        T.StructField("err", T.StringType()),
-    ])
+    schema = T.StructType([T.StructField(id_col, T.StringType()),
+                           *schemas.PDF_PARSED.fields[1:]])
     worker = partial(_parse_arrow, schema=schemas.to_arrow(schema))
     return fan_out(df.select(id_col, payload_col)).mapInArrow(worker, schema)
 
@@ -1990,7 +1986,7 @@ def pdf_extract_df(df, payload_col: str = "payload", id_col: str = "doc_id"):
         F.transform(F.filter("spans", lambda s: s.kind == "text"),
                     lambda s: s.text), "\n")
     n_media = F.size(F.filter("spans", lambda s: s.kind == "media"))
-    return _parsed_df(df, payload_col, id_col).select(
+    return pdf_parsed_df(df, payload_col, id_col).select(
         id_col, "n_pages",
         F.when(ok, n_media).alias("n_media"),
         F.when(ok, F.length(text)).alias("n_chars"),
@@ -1999,10 +1995,8 @@ def pdf_extract_df(df, payload_col: str = "payload", id_col: str = "doc_id"):
 
 
 def pdf_spans_df(df, payload_col: str = "payload", id_col: str = "doc_id"):
-    """(id, pdf bytes) → (id, spans array<struct>, err) in the interleaved
-    document schema (schemas.DOCUMENTS_INTERLEAVED) — PDFs become rows
-    of the SAME spans table as parsed HTML, so every downstream
-    operator (dedup, quality, curation, span re-emission) is
-    format-agnostic.  Failed parses yield an empty span list plus an
-    ``err`` column."""
-    return _parsed_df(df, payload_col, id_col).select(id_col, "spans", "err")
+    """(id, pdf bytes) → (id, spans, err): PDFs become rows of the SAME
+    spans table as parsed HTML (schemas.DOCUMENTS_INTERLEAVED), so every
+    downstream operator (dedup, quality, curation, span re-emission) is
+    format-agnostic."""
+    return pdf_parsed_df(df, payload_col, id_col).select(id_col, "spans", "err")

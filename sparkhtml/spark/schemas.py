@@ -69,6 +69,13 @@ EXTRACT_METRICS = T.StructType(
 # The HTML extraction worker's output; spans_out and metrics project it.
 EXTRACTED = T.StructType(SPANS_OUT.fields + EXTRACT_METRICS.fields[1:])
 
+# The PDF worker's output (pdf.pdf_parsed_df); err is set on failed parses.
+PDF_PARSED = T.StructType(
+    [T.StructField("doc_id", T.StringType()), DOCUMENTS_INTERLEAVED["spans"],
+     T.StructField("n_pages", T.IntegerType()),
+     T.StructField("err", T.StringType())]
+)
+
 
 def to_arrow(schema: T.StructType):
     """The Arrow form of ``schema`` (field metadata stripped), for the

@@ -1,6 +1,7 @@
 """ChunkedRun waves and run_extract resume: job counts, on-disk layout,
 crash atomicity of a multi-chunk wave, empty chunks, the straggler
-manifest entry, and the metrics output as a projection of the files."""
+manifest entry, the metrics output as a projection of the files, null
+rows, and the job over a PDF corpus."""
 
 import importlib.util
 import json
@@ -15,7 +16,8 @@ from pyspark.sql.readwriter import DataFrameWriter
 from datagen.interleaved import make_corpus
 from sparkhtml.spark import checkpoint, schemas
 from sparkhtml.spark.checkpoint import ChunkedRun
-from sparkhtml.spark.partitioning import plan_size_bytes
+from sparkhtml.spark.partitioning import plan_size_bytes, straggler_split
+from sparkhtml.spark.pdf import build_pdf, pdf_extract_spans
 from sparkhtml.spark.pipeline import extract_spans_df
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -235,3 +237,137 @@ def test_job_metrics_are_a_projection_of_the_output(spark, tmp_path,
     assert main(argv) == 0
     assert len(plans) == 1 and "MapInArrow" not in plans[0], plans
     assert sorted(pq.read_table(metrics).column("doc_id").to_pylist()) == ids
+
+
+def _corpus_input(spark, tmp_path, rows, schema):
+    inp = str(tmp_path / "in")
+    spark.createDataFrame(rows, schema=schema).write.parquet(inp)
+    return inp
+
+
+def _summary(capsys):
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_straggler_pass_is_one_write(spark, tmp_path, monkeypatch, capsys):
+    """The straggler pass runs no count(): it is one round-robin write
+    (a shuffle-map job plus the write job), its row count read from the
+    footers. With no stragglers it still writes one schema-only file."""
+    sc = spark.sparkContext
+    chunked_run = ChunkedRun.run
+
+    def run_then_tag(self, *a, **k):
+        out = chunked_run(self, *a, **k)
+        sc.setJobGroup("straggler-pass", "straggler-pass")
+        return out
+
+    monkeypatch.setattr(ChunkedRun, "run", run_then_tag)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    corpus = list(make_corpus(40, seed=3, pathological_rate=0.1))
+    inp = _corpus_input(spark, tmp_path, corpus,
+                        schemas.DOCUMENTS_INTERLEAVED)
+    main = _run_extract().main
+    for chars in ("12000", "100000000"):
+        out = str(tmp_path / chars)
+        try:
+            assert main(["--input", inp, "--output", out, "--chunks", "4",
+                         "--straggler-chars", chars]) == 0
+            jobs = sc.statusTracker().getJobIdsForGroup("straggler-pass")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        summary = _summary(capsys)
+        if chars == "12000":
+            assert summary["n_stragglers"] > 0
+            assert len(jobs) <= 2
+        strag = pq.read_table(os.path.join(out, "stragglers"))
+        assert strag.num_rows == summary["n_stragglers"]
+        assert summary["rows"] + summary["n_stragglers"] == len(corpus)
+    assert summary["n_stragglers"] == 0
+    assert strag.schema.names == schemas.EXTRACTED.fieldNames()
+
+
+def test_null_size_rows_come_out_once(spark, tmp_path, monkeypatch, capsys):
+    """A null-spans row (and a null payload) has size 0: straggler_split
+    keeps it, and the job writes it once with empty spans and metrics."""
+    from pyspark.sql import functions as F
+
+    rows = [("a", [{"kind": "text", "text": "<p>alpha beta gamma delta "
+                    "epsilon</p>", "media_ref": None, "offset": 0}]),
+            ("b", None), ("c", [])]
+    df = spark.createDataFrame(rows, schema=schemas.DOCUMENTS_INTERLEAVED)
+    normal, strag = straggler_split(df, 0)
+    assert sorted(r.doc_id for r in normal.collect()) == ["b", "c"]
+    assert [r.doc_id for r in strag.collect()] == ["a"]
+    blobs = spark.createDataFrame([("x", None)], "doc_id string, payload binary")
+    normal, _ = straggler_split(blobs, 10, F.length("payload"))
+    assert [r.doc_id for r in normal.collect()] == ["x"]
+
+    inp = _corpus_input(spark, tmp_path, rows, schemas.DOCUMENTS_INTERLEAVED)
+    out, metrics = str(tmp_path / "out"), str(tmp_path / "metrics")
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    assert _run_extract().main(["--input", inp, "--output", out, "--chunks",
+                                "2", "--metrics-output", metrics]) == 0
+    assert _summary(capsys)["rows"] == 3
+    got = ChunkedRun(spark, out, n_chunks=2).output_df().collect()
+    assert sorted(r.doc_id for r in got) == ["a", "b", "c"]
+    assert {r.doc_id: r.spans for r in got}["b"] == []
+    assert sorted(pq.read_table(metrics).column("doc_id").to_pylist()) == \
+        ["a", "b", "c"]
+
+
+def _span_key(spans):
+    return [(s["kind"], s["text"], s["media_ref"]) for s in spans or []]
+
+
+def test_pdf_job_commits_the_parsed_spans(spark, tmp_path, monkeypatch,
+                                          capsys):
+    """A (doc_id, payload) corpus runs the PDF worker in the wave and the
+    straggler pass: every doc's spans are pdf_extract_spans' (short runs,
+    literal "&amp;" and "<" kept as they are), bad blobs are rows with err
+    set, and the error and metrics tables are projections of the files,
+    so a resumed run executes no Python worker."""
+    blobs = {}
+    for i in range(20):
+        blobs[f"p{i:02d}"] = build_pdf([[
+            ("text", f"Short {i}."),
+            ("image",),
+            ("text", f"Fish &amp; chips for {i} < {i + 1} guests."),
+        ]] * (1 + i % 3))
+    blobs["big"] = build_pdf([[("text", " ".join(
+        f"word{j}" for j in range(400))), ("image",)]] * 6)
+    bad = {"junk": b"%PDF-1.4 not really", "null": None}
+    rows = [(k, bytearray(v) if v is not None else None)
+            for k, v in {**blobs, **bad}.items()]
+    inp = _corpus_input(spark, tmp_path, rows, "doc_id string, payload binary")
+    out, metrics = str(tmp_path / "out"), str(tmp_path / "metrics")
+    size = max(len(v) for k, v in blobs.items() if k != "big")
+    assert len(blobs["big"]) > size
+    argv = ["--input", inp, "--output", out, "--chunks", "4",
+            "--straggler-chars", str(size), "--metrics-output", metrics]
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    main = _run_extract().main
+
+    assert main(argv) == 0
+    summary = _summary(capsys)
+    assert summary["n_stragglers"] >= 1
+    assert summary["rows"] + summary["n_stragglers"] == len(rows)
+    got = ChunkedRun(spark, out, n_chunks=4).output_df().collect()
+    assert sorted(r.doc_id for r in got) == sorted(k for k, _ in rows)
+    by_id = {r.doc_id: r for r in got}
+    for doc_id, blob in blobs.items():
+        assert _span_key(by_id[doc_id].spans) == \
+            _span_key(pdf_extract_spans(blob)), doc_id
+    assert all(by_id[k].spans == [] and by_id[k].err for k in bad)
+    errors = pq.read_table(out + "_pdf_errors")
+    assert errors.schema.names == ["doc_id", "err"]
+    assert sorted(errors.column("doc_id").to_pylist()) == sorted(bad)
+    table = pq.read_table(metrics)
+    assert table.schema.names == ["doc_id", "n_pages", "err"]
+    assert sorted(table.column("doc_id").to_pylist()) == \
+        sorted(k for k, _ in rows)
+
+    plans = _written_plans(monkeypatch)
+    assert main(argv) == 0
+    assert _summary(capsys)["resumed"] == 4
+    assert len(plans) == 2, plans
+    assert not any("MapInArrow" in p for p in plans), plans
