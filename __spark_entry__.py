@@ -95,9 +95,8 @@ def entry(spark: SparkSession) -> DataFrame:
 def _q_textcontent_roundtrip(spark, sf_dir):
     """Full parse path: wrap text in markup+entities, assert textContent
     inverts it (S2+T*+P*+X2 end-to-end)."""
-    from sparkhtml.spark.pipeline import make_udfs
+    from sparkhtml.spark.pipeline import html_text_content
 
-    udfs = make_udfs()
     docs = _docs(spark, sf_dir)
     html = F.concat(
         F.lit("<!DOCTYPE html><html><head><title>t</title></head><body><div><p>"),
@@ -106,7 +105,7 @@ def _q_textcontent_roundtrip(spark, sf_dir):
     )
     return docs.select(
         "doc_id",
-        udfs["html_text_content"](html).alias("text_content"),
+        html_text_content(html).alias("text_content"),
     )
 
 
@@ -151,21 +150,19 @@ def _q_extract_metrics(spark, sf_dir):
 
 
 def _q_escape(spark, sf_dir):
-    from sparkhtml.spark.pipeline import make_udfs
+    from sparkhtml.spark.pipeline import html_escape
 
-    udfs = make_udfs()
     docs = _docs(spark, sf_dir)
     payload = F.concat(F.lit('<x> & "q" '), F.col("text"))
-    return docs.select("doc_id", udfs["html_escape"](payload).alias("escaped"))
+    return docs.select("doc_id", html_escape(payload).alias("escaped"))
 
 
 def _q_unescape(spark, sf_dir):
-    from sparkhtml.spark.pipeline import make_udfs
+    from sparkhtml.spark.pipeline import html_unescape
 
-    udfs = make_udfs()
     docs = _docs(spark, sf_dir)
     payload = F.concat(F.lit("&lt;p&gt; &#65;&amp; "), F.col("text"))
-    return docs.select("doc_id", udfs["html_unescape"](payload).alias("unescaped"))
+    return docs.select("doc_id", html_unescape(payload).alias("unescaped"))
 
 
 def _built_nodes(spark, sf_dir):

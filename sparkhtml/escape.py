@@ -5,8 +5,8 @@ Reference parity: /root/reference/Sources/NSString+HTMLEntities.m —
 ``-html_stringByUnescapingHTML`` (:27-118: numeric & named entities,
 missing-semicolon tolerance via longest-prefix match).
 
-Both have vectorized variants for pandas Series (the Spark layer calls
-those from Series→Series pandas UDFs; X8/X9 in SURVEY.md §2.5).
+Both have vectorized variants over a pyarrow string Array (the Spark
+layer's ``arrow_udf``s call those; X8/X9 in SURVEY.md §2.5).
 """
 
 from __future__ import annotations
@@ -82,24 +82,31 @@ def unescape_html(s: str) -> str:
     return _CHARREF_RE.sub(_replace_charref, s)
 
 
-# ---------------------------------------------------------------- pandas
+# ----------------------------------------------------------------- arrow
 
-def escape_series(series):
-    """Vectorized X8 over a pandas Series (chained str.replace, all C-level)."""
-    s = series.fillna("")
+def escape_array(arr):
+    """Vectorized X8 over a pyarrow string Array (a ``replace_substring``
+    chain in ``_ESCAPES`` order, all C-level). A null row escapes as ``""``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    s = pc.fill_null(arr.cast(pa.string()), "")  # a bare SQL NULL is null-typed
     for ch, rep in _ESCAPES:
-        s = s.str.replace(ch, rep, regex=False)
+        s = pc.replace_substring(s, ch, rep)
     return s
 
 
-_AMP_RE = re.compile(r"&[#a-zA-Z]")
-
-
-def unescape_series(series):
+def unescape_array(arr):
     """Vectorized X9: only rows containing a candidate reference take the
-    Python path; entity-free rows (the common case) pass through untouched."""
-    s = series.fillna("")
-    mask = s.str.contains(_AMP_RE, regex=True)
-    if mask.any():
-        s = s.where(~mask, s[mask].map(unescape_html))
-    return s
+    Python path; entity-free rows (the common case) pass through untouched.
+    A null row unescapes as ``""``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    s = pc.fill_null(arr.cast(pa.string()), "")
+    mask = pc.match_substring_regex(s, r"&[#a-zA-Z]")
+    hits = pc.filter(s, mask).to_pylist()
+    if not hits:
+        return s
+    return pc.replace_with_mask(
+        s, mask, pa.array([unescape_html(v) for v in hits], s.type))

@@ -10,7 +10,7 @@ embedding-cosine near-dup. Scale posture per operator:
   turns the O(n²) pair space into an equi-join on (band, bucket) keys,
   which Spark executes as a shuffled hash join; candidate verification
   re-checks full signature agreement before declaring a pair.
-- **simhash**: 64-bit signatures in a vectorized Arrow pandas UDF (numpy
+- **simhash**: 64-bit signatures in a vectorized ``arrow_udf`` (numpy
   bit-twiddling is the honest fast path here); near-dup = identical
   signature or Hamming ≤ k via band-rotation join (k/4-bit blocks).
 - **ngram jaccard**: exact Jaccard verification on LSH candidates only.
@@ -22,11 +22,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import LongType
 
 from . import _register_cached
 from .partitioning import fan_out
-from pyspark.sql.types import LongType
 
 
 def normalized_text(col: str = "text"):
@@ -273,7 +275,7 @@ def minhash_lsh_pairs(
 
 def simhash_df(df: DataFrame, col: str = "text", id_col: str = "doc_id",
                hash_mode: str = "stable") -> DataFrame:
-    """(doc_id, simhash) via an Arrow-batched pandas UDF.
+    """(doc_id, simhash) via an Arrow-batched ``arrow_udf``.
 
     ``hash_mode``:
 
@@ -285,98 +287,67 @@ def simhash_df(df: DataFrame, col: str = "text", id_col: str = "doc_id",
       >> b) & 1`` in DuckDB, so the whole signature is reproducible in
       ANSI SQL for the driver's correctness gate. Same vote/banding
       machinery either way.
+
+    A null or token-free text has signature 0.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    batch_fn = (
-        _simhash_md5_batch if hash_mode == "md5" else _simhash_stable_batch
-    )
-
-    @pandas_udf(LongType())
-    def simhash(s: pd.Series) -> pd.Series:
-        return batch_fn(s)
-
+    simhash = _simhash_md5 if hash_mode == "md5" else _simhash_stable
     return fan_out(df.select(F.col(id_col).alias("doc_id"), F.col(col))).select(
         "doc_id", simhash(F.col(col)).alias("simhash")
     )
 
 
-def _simhash_stable_batch(texts: pd.Series) -> pd.Series:
-    """Whole-batch vectorized simhash.
-
-    Token hashing is ``pd.util.hash_array`` (SipHash with a fixed key —
-    deterministic across processes, C speed); the per-bit votes for ALL
+def _simhash_batch(texts: pa.Array, token_hashes) -> pa.Array:
+    """Whole-batch vectorized simhash: ``token_hashes`` maps the batch's
+    flat token list to one uint64 per token, and the per-bit votes for ALL
     documents in the Arrow batch are computed with one ``unpackbits`` +
     ``add.reduceat`` pass instead of per-document Python loops."""
-    token_lists = [(t or "").lower().split() for t in texts]
+    token_lists = [(t or "").lower().split() for t in texts.to_pylist()]
     counts = np.array([len(ts) for ts in token_lists], dtype=np.int64)
-    out = np.zeros(len(texts), dtype=np.int64)
+    out = np.zeros(len(token_lists), dtype=np.int64)
     nz = counts > 0
-    if not nz.any():
-        return pd.Series(out)
-    all_tokens = np.array(
-        [tok for ts in token_lists for tok in ts], dtype=object
-    )
-    hs = pd.util.hash_array(all_tokens)  # uint64 per token
-    # N×64 bit matrix via byte view (little-endian: bit b of the value is
-    # column b after per-byte unpack with bitorder='little')
-    bits = np.unpackbits(
-        hs.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-    )
-    nz_counts = counts[nz]
-    offsets = np.zeros(len(nz_counts), dtype=np.int64)
-    np.cumsum(nz_counts[:-1], out=offsets[1:])
-    sums = np.add.reduceat(bits.astype(np.int32), offsets, axis=0)
-    votes = 2 * sums - nz_counts[:, None]
-    sig_bits = (votes > 0).astype(np.uint8)
-    packed = np.packbits(sig_bits, axis=1, bitorder="little")
-    sigs = packed.copy().view(np.int64).reshape(-1)
-    out[nz] = sigs
-    return pd.Series(out)
+    if nz.any():
+        hs = token_hashes([tok for ts in token_lists for tok in ts])
+        # N×64 bit matrix via byte view (little-endian: bit b of the value
+        # is column b after per-byte unpack with bitorder='little')
+        bits = np.unpackbits(
+            hs.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
+        )
+        nz_counts = counts[nz]
+        offsets = np.zeros(len(nz_counts), dtype=np.int64)
+        np.cumsum(nz_counts[:-1], out=offsets[1:])
+        sums = np.add.reduceat(bits.astype(np.int32), offsets, axis=0)
+        votes = 2 * sums - nz_counts[:, None]
+        sig_bits = (votes > 0).astype(np.uint8)
+        packed = np.packbits(sig_bits, axis=1, bitorder="little")
+        out[nz] = packed.view(np.int64).reshape(-1)
+    return pa.array(out)
 
 
-def _simhash_md5_batch(texts: pd.Series) -> pd.Series:
-    """Whole-batch simhash with md5-derived token hashes (oracle mode).
+def _siphash_tokens(tokens: list) -> np.ndarray:
+    """``pd.util.hash_array`` (SipHash with a fixed key — deterministic
+    across processes, C speed)."""
+    return pd.util.hash_array(np.array(tokens, dtype=object))
 
-    Per-UNIQUE-token md5 (memoized dict), then the same vectorized
-    unpackbits/reduceat vote pass as the stable path. Bit b of a token
-    hash is ``(h >> b) & 1`` where ``h`` is the big-endian uint64 of the
-    first 8 digest bytes — matching DuckDB's hex-prefix cast exactly.
-    """
+
+def _md5_tokens(tokens: list) -> np.ndarray:
+    """First 8 md5 digest bytes, big-endian, once per UNIQUE token — so bit
+    b of a token hash is ``(h >> b) & 1``, matching DuckDB's hex-prefix
+    cast exactly."""
     import hashlib
 
-    token_lists = [(t or "").lower().split() for t in texts]
-    counts = np.array([len(ts) for ts in token_lists], dtype=np.int64)
-    out = np.zeros(len(texts), dtype=np.int64)
-    nz = counts > 0
-    if not nz.any():
-        return pd.Series(out)
-    cache: dict[str, int] = {}
-    flat = np.empty(int(counts.sum()), dtype=np.uint64)
-    i = 0
-    for ts in token_lists:
-        for tok in ts:
-            h = cache.get(tok)
-            if h is None:
-                h = int.from_bytes(
-                    hashlib.md5(tok.encode("utf-8")).digest()[:8], "big"
-                )
-                cache[tok] = h
-            flat[i] = h
-            i += 1
-    bits = np.unpackbits(
-        flat.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-    )
-    nz_counts = counts[nz]
-    offsets = np.zeros(len(nz_counts), dtype=np.int64)
-    np.cumsum(nz_counts[:-1], out=offsets[1:])
-    sums = np.add.reduceat(bits.astype(np.int32), offsets, axis=0)
-    votes = 2 * sums - nz_counts[:, None]
-    sig_bits = (votes > 0).astype(np.uint8)
-    packed = np.packbits(sig_bits, axis=1, bitorder="little")
-    sigs = packed.copy().view(np.int64).reshape(-1)
-    out[nz] = sigs
-    return pd.Series(out)
+    h = {t: int.from_bytes(hashlib.md5(t.encode("utf-8")).digest()[:8], "big")
+         for t in set(tokens)}
+    return np.fromiter((h[t] for t in tokens), np.uint64, len(tokens))
+
+
+@arrow_udf(LongType())
+def _simhash_stable(texts: pa.Array) -> pa.Array:
+    return _simhash_batch(texts, _siphash_tokens)
+
+
+@arrow_udf(LongType())
+def _simhash_md5(texts: pa.Array) -> pa.Array:
+    return _simhash_batch(texts, _md5_tokens)
 
 
 def simhash_near_dups(df: DataFrame, col: str = "text", id_col: str = "doc_id",

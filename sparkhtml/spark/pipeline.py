@@ -4,7 +4,7 @@ This is the Spark realization of the reference's entry points
 (HTMLDocument.m:12-44 → HTMLParser.m:3331-3347), at the reference's own
 granularity — one parser per document — amortized over Arrow batches
 (SURVEY.md §3.2 "Spark mapping"). No per-row Python UDFs anywhere; every
-stage is ``mapInArrow`` or a Series→Series ``pandas_udf``.
+stage is ``mapInArrow`` or an Array→Array ``arrow_udf``.
 
 Each nested-struct stage has exactly one worker and runs RecordBatch-
 native: the ``array<struct>`` span/attr columns are read straight off the
@@ -21,22 +21,23 @@ Stages:
         one parse per text span; two column projections of it:
         extract_spans_df (spans_out, north rule), extract_metrics_df
     documents_interleaved --parse_nodes_df----> nodes (flattened DOM table)
-    any string column     --css_*_udf---------> matched texts / counts
-    any string column     --escape/unescape---> X8/X9 scalar functions
+    any html column       --html_text_content-> textContent (X2)
+    any html column       --css_multi_count_udf-> match count per selector
+    any string column     --html_escape, html_unescape-> X8/X9
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, IntegerType, StringType
 
 from ..dom import FlatDOM
-from ..escape import escape_series, unescape_series
+from ..escape import escape_array, unescape_array
 from ..extract import ParseCounts, extract_main_text
 from ..selector import CompiledSelector
 from . import schemas
@@ -259,97 +260,41 @@ def parse_nodes_df(df: DataFrame, html_col: str = "html",
 
 
 # ------------------------------------------------------------ scalar UDFs
+# Arrow-batched column functions (ArrowEvalPython, never per-row Python).
+# A null input row maps to the result for "".
 
 
-def make_udfs():
-    """Register-able Series→Series pandas UDFs (Arrow path, never per-row).
-
-    Returns a dict name → pandas_udf, and can be attached to a session via
-    ``register_udfs(spark)``.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(StringType())
-    def html_escape(s: pd.Series) -> pd.Series:
-        return escape_series(s)
-
-    @pandas_udf(StringType())
-    def html_unescape(s: pd.Series) -> pd.Series:
-        return unescape_series(s)
-
-    @pandas_udf(StringType())
-    def html_text_content(s: pd.Series) -> pd.Series:
-        # textContent of the whole document (X2 at document level)
-        return s.fillna("").map(
-            lambda h: FlatDOM.from_html(h).text_content(0)
-        )
-
-    @pandas_udf(StringType())
-    def html_extract_main(s: pd.Series) -> pd.Series:
-        return s.fillna("").map(extract_main_text)
-
-    return {
-        "html_escape": html_escape,
-        "html_unescape": html_unescape,
-        "html_text_content": html_text_content,
-        "html_extract_main": html_extract_main,
-    }
+@arrow_udf(StringType())
+def html_escape(s: pa.Array) -> pa.Array:
+    return escape_array(s)
 
 
-def css_select_text_udf(selector: str):
-    """css_select_text('<sel>'): per document, tree-order textContent list of
-    matching elements. Selector compiled once per executor process
-    (HTMLSelector.m:871-882 parity via module-level cache)."""
-    from pyspark.sql.functions import pandas_udf
+@arrow_udf(StringType())
+def html_unescape(s: pa.Array) -> pa.Array:
+    return unescape_array(s)
 
-    @pandas_udf(ArrayType(StringType()))
-    def _select(s: pd.Series) -> pd.Series:
-        cs = CompiledSelector(selector)
 
-        def run(html: str):
-            dom = FlatDOM.from_html(html or "")
-            return [dom.text_content(i) for i in cs.match_ids(dom)]
-
-        return s.fillna("").map(run)
-
-    return _select
+@arrow_udf(StringType())
+def html_text_content(s: pa.Array) -> pa.Array:
+    """textContent of the whole document (X2 at document level)."""
+    return pa.array([FlatDOM.from_html(h or "").text_content(0)
+                     for h in s.to_pylist()], pa.string())
 
 
 def css_multi_count_udf(selectors: list[str]):
     """Parse each document ONCE, evaluate k selectors over the same flat
     DOM — operator fusion for multi-selector workloads (vs k parses with
     k single-selector UDFs). Returns array<int> aligned with ``selectors``."""
-    from pyspark.sql.functions import pandas_udf
-
     for sel in selectors:  # fail fast at definition, not on executors
         CompiledSelector(sel)
 
-    @pandas_udf(ArrayType(IntegerType()))
-    def _multi(s: pd.Series) -> pd.Series:
+    @arrow_udf(ArrayType(IntegerType()))
+    def _multi(s: pa.Array) -> pa.Array:
         compiled = [CompiledSelector(sel) for sel in selectors]
-
-        def run(html: str):
+        counts = []
+        for html in s.to_pylist():
             dom = FlatDOM.from_html(html or "")
-            return [len(cs.match_ids(dom)) for cs in compiled]
-
-        return s.fillna("").map(run)
+            counts.append([len(cs.match_ids(dom)) for cs in compiled])
+        return pa.array(counts, pa.list_(pa.int32()))
 
     return _multi
-
-
-def css_count_udf(selector: str):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(IntegerType())
-    def _count(s: pd.Series) -> pd.Series:
-        cs = CompiledSelector(selector)
-        return s.fillna("").map(
-            lambda h: len(cs.match_ids(FlatDOM.from_html(h)))
-        )
-
-    return _count
-
-
-def register_udfs(spark) -> None:
-    for name, udf in make_udfs().items():
-        spark.udf.register(name, udf)

@@ -30,8 +30,10 @@ TEXT = 2
 
 
 class UnsupportedSelector(ValueError):
-    """Raised when a selector needs the in-UDF matcher instead (callers
-    fall back to :func:`sparkhtml.spark.pipeline.css_select_text_udf`)."""
+    """Raised when a selector has no DataFrame plan. There is no UDF
+    fallback: every selector the matcher supports compiles, which
+    ``tests/test_plans.py::test_selector_plan_compiles_entire_feature_space``
+    pins for the WebKit suite plus one probe per feature class."""
 
 
 def _attr_value(name: str) -> Column:
@@ -333,10 +335,9 @@ def css_select_df(
 ) -> DataFrame:
     """Compile ``selector`` and return matching node rows in tree order.
 
-    Supports the DataFrame-expressible subset (see module docstring);
-    raises :class:`UnsupportedSelector` otherwise so callers fall back to
-    the in-UDF matcher, mirroring the reference's single code path with a
-    faster plan where available.
+    Every selector the matcher supports compiles (see module docstring);
+    anything else raises :class:`UnsupportedSelector` — there is no UDF
+    fallback.
 
     ``sort``: ``"local"`` (default) orders within partitions — free of the
     global sort exchange; ``"global"`` is total tree order across the whole
@@ -346,7 +347,7 @@ def css_select_df(
     compound (the reference scans its tree once per query,
     HTMLSelector.m:925-952 — here each reference re-executes the input
     plan). When the input is NOT a cheap re-scan (e.g. a live
-    ``parse_nodes_df`` MapInPandas re-parses the corpus per reference),
+    ``parse_nodes_df`` MapInArrow re-parses the corpus per reference),
     ``"auto"`` persists it for the duration of the query; the cache is
     released when the caller's DataFrame is garbage collected.
     ``"never"``/``"always"`` override.
@@ -380,14 +381,14 @@ def css_select_df(
 
 def _is_expensive_scan(nodes: DataFrame) -> bool:
     """True when re-executing the input plan repeats Python-side work
-    (MapInArrow / MapInPandas / ArrowEvalPython), as a live
+    (any MapIn* node or ArrowEvalPython), as a live
     parse_nodes_df does."""
     try:
         plan = nodes._jdf.queryExecution().analyzed().toString()
     except Exception:  # pragma: no cover — be conservative off-JVM
         return True
-    return ("MapInArrow" in plan or "MapInPandas" in plan
-            or "ArrowEvalPython" in plan or "PythonUDF" in plan)
+    return ("MapIn" in plan or "ArrowEvalPython" in plan
+            or "PythonUDF" in plan)
 
 
 def _filter_mask(nodes: DataFrame, col: Column) -> DataFrame:

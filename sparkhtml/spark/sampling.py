@@ -6,12 +6,16 @@ are reproducible across runs, executors, and engines (the DuckDB oracle
 recomputes the identical buckets with ``('0x' || substr(md5(..),1,6))``).
 At 10^12 rows this matters twice over: a resumed or re-run job must not
 re-deal the split, and a held-out set must stay held out when the corpus
-is re-partitioned. Everything here is a per-row JVM expression — zero
-shuffle, zero Python, scan-local at any scale.
+is re-partitioned. The split and sample decisions are per-row JVM
+expressions — zero shuffle, zero Python, scan-local at any scale; the
+curation operators (``domain_quota``, ``mix_to_budget``, ``pack_greedy``)
+shuffle once on their group key, and ``pack_greedy`` folds each group in
+one Arrow crossing (``applyInArrow``).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
 
@@ -178,7 +182,8 @@ def pack_greedy(
     DuckDB oracle reproduces the identical bins via a recursive CTE.
 
     Returns (id, group, tokens, bin_id, bin_tokens) where ``bin_tokens``
-    is the running bin total after placing the row.
+    is the running bin total after placing the row. A null ``text_col``
+    counts as 0 tokens, as a null size does in ``straggler_split``.
 
     Scale posture: packing is sequential WITHIN a group by definition,
     so parallelism = number of groups. ``buckets=N`` subdivides each
@@ -194,7 +199,8 @@ def pack_greedy(
     toks = df.select(
         F.col(id_col),
         F.col(group_col).alias("group"),
-        _ts.token_count(text_col).cast("bigint").alias("tokens"),
+        F.coalesce(_ts.token_count(text_col).cast("bigint"), F.lit(0))
+        .alias("tokens"),
     )
     keys = ["group"]
     if buckets is not None:
@@ -203,9 +209,9 @@ def pack_greedy(
         )
         keys.append("bucket")
 
-    # id keeps its input type: pandas sort_values on a string id is
-    # lexicographic, same as DuckDB ORDER BY on VARCHAR, so the fold
-    # order stays engine-identical for both numeric and string ids.
+    # id keeps its input type: Arrow sorts a string id bytewise, same as
+    # DuckDB ORDER BY on VARCHAR, so the fold order stays engine-identical
+    # for both numeric and string ids.
     id_type = df.schema[id_col].dataType.simpleString()
     out_schema = (
         f"{id_col} {id_type}, group string, tokens bigint, "
@@ -213,23 +219,22 @@ def pack_greedy(
         + (", bucket bigint" if buckets is not None else "")
     )
 
-    def pack(pdf):
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
+    def pack(table: pa.Table) -> pa.Table:
+        table = table.sort_by(id_col)
         bins, totals = [], []
         bin_id, cur = 0, 0
-        for t in pdf["tokens"]:
-            t = int(t)
+        for t in table.column("tokens").to_pylist():
             if cur > 0 and cur + t > budget:
                 bin_id += 1
                 cur = 0
             cur += t
             bins.append(bin_id)
             totals.append(cur)
-        pdf["bin_id"] = bins
-        pdf["bin_tokens"] = totals
-        cols = [id_col, "group", "tokens", "bin_id", "bin_tokens"]
-        if "bucket" in pdf.columns:
-            cols.append("bucket")
-        return pdf[cols]
+        out = table.select([id_col, "group", "tokens"]).append_column(
+            "bin_id", pa.array(bins, pa.int64())
+        ).append_column("bin_tokens", pa.array(totals, pa.int64()))
+        if "bucket" in table.column_names:
+            out = out.append_column("bucket", table.column("bucket"))
+        return out
 
-    return toks.groupBy(*keys).applyInPandas(pack, schema=out_schema)
+    return toks.groupBy(*keys).applyInArrow(pack, schema=out_schema)

@@ -20,11 +20,21 @@ import math
 import random
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from . import _register_cached
 from .partitioning import fan_out
+
+
+def _centroid_scores(v: pa.Array, C: np.ndarray) -> np.ndarray:
+    """(batch, k) scores ``‖c‖² − 2·x·c`` of each vector in the list
+    column ``v`` against the centroid matrix ``C`` (k, d). ‖x‖² is
+    row-constant, so a row's argmin/argsort is its nearest-centroid order.
+    The (batch, d) matrix is the flat list values reshaped, in their
+    column's own float type."""
+    M = v.flatten().to_numpy(zero_copy_only=False).reshape(len(v), C.shape[1])
+    return (C * C).sum(axis=1) - 2.0 * (M @ C.T)
 
 
 def _norm_col(vec: str):
@@ -180,14 +190,10 @@ def knn_join_ivf(
         np.asarray(index.centroids, dtype=np.float64)
     )
 
-    @F.pandas_udf("array<int>")
-    def _probes(v: pd.Series) -> pd.Series:
-        C = bc.value  # (k, d)
-        cn = (C * C).sum(axis=1)
-        M = np.stack(v.to_numpy())
-        scores = cn - 2.0 * (M @ C.T)  # ‖x‖² row-constant ⇒ argmin-safe
-        idxs = np.argsort(scores, axis=1)[:, :n_probe]
-        return pd.Series(list(idxs.astype("int32")))
+    @F.arrow_udf("array<int>")
+    def _probes(v: pa.Array) -> pa.Array:
+        idxs = np.argsort(_centroid_scores(v, bc.value), axis=1)[:, :n_probe]
+        return pa.array(list(idxs.astype(np.int32)), pa.list_(pa.int32()))
 
     q = (
         queries.select(
@@ -328,19 +334,14 @@ class IVFIndex:
         vectorized UDF is O(batch × k × d) BLAS instead.
         """
         assert self.centroids is not None, "fit() first"
-        from pyspark.sql.functions import pandas_udf
-
         bc = df.sparkSession.sparkContext.broadcast(
             np.asarray(self.centroids, dtype=np.float64)
         )
 
-        @pandas_udf("int")
-        def _assign(v: pd.Series) -> pd.Series:
-            C = bc.value  # (k, d)
-            cn = (C * C).sum(axis=1)  # ‖c‖²
-            M = np.stack(v.to_numpy())  # (batch, d)
-            scores = cn - 2.0 * (M @ C.T)  # (batch, k)
-            return pd.Series(scores.argmin(axis=1).astype("int32"))
+        @F.arrow_udf("int")
+        def _assign(v: pa.Array) -> pa.Array:
+            scores = _centroid_scores(v, bc.value)
+            return pa.array(scores.argmin(axis=1).astype(np.int32))
 
         return df.withColumn("ivf_cluster", _assign(F.col(self.vec_col)))
 

@@ -78,68 +78,6 @@ def stream_quality_metrics(
     )
 
 
-def stateful_source_stats(
-    docs_with_ts: DataFrame, state_timeout_ms: int = 3_600_000
-) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-source
-    running totals (docs seen, words seen, duplicates seen by fingerprint)
-    maintained in group state across micro-batches.
-
-    Input: streaming (ts timestamp, source string, doc_id long, text string).
-    Emits one row per (source, micro-batch) with the updated totals —
-    the streaming face of the lineage/metrics layer. State per group is a
-    triple + a bounded fingerprint set; the timeout reaps idle sources.
-    """
-    import hashlib
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "source string, n_docs long, n_words long, n_dups long"
-    state_schema = "n_docs long, n_words long, n_dups long, fps array<long>"
-
-    def update(key, pdfs, state: GroupState):
-        (source,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n_docs, n_words, n_dups, fps = (
-            state.get if state.exists else (0, 0, 0, [])
-        )
-        seen = set(fps)
-        for pdf in pdfs:
-            for text in pdf["text"]:
-                toks = (text or "").lower().split()
-                n_docs += 1
-                n_words += len(toks)
-                # stable across executors (builtin hash() is salted)
-                fp = int.from_bytes(
-                    hashlib.blake2b(" ".join(toks).encode(),
-                                    digest_size=8).digest(), "big"
-                ) >> 1
-                if fp in seen:
-                    n_dups += 1
-                elif len(seen) < 100_000:  # bound state size
-                    seen.add(fp)
-        state.update((n_docs, n_words, n_dups, list(seen)))
-        state.setTimeoutDuration(state_timeout_ms)
-        yield pd.DataFrame(
-            {"source": [source], "n_docs": [n_docs],
-             "n_words": [n_words], "n_dups": [n_dups]}
-        )
-
-    return (
-        docs_with_ts.groupBy("source")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
-
-
 def stream_dedup_exact(
     docs_with_ts: DataFrame, watermark: str = "10 minutes"
 ) -> DataFrame:

@@ -153,3 +153,30 @@ def test_perfbench_tracing_targets_exist():
                  "treebuilder.parse_fragment", "pipeline._extract_arrow",
                  "pipeline.extract_metrics_df", "FlatDOM.from_html"):
         assert name in checked, name
+
+
+def test_spark_layer_crosses_into_python_through_arrow_only():
+    """sparkhtml/ has one way into Python: Arrow (``arrow_udf``,
+    ``mapInArrow``, ``applyInArrow``). A pandas crossing is a second idiom
+    with its own null and dtype rules, so no module there may name one."""
+    banned = {"pandas_udf", "mapInPandas", "applyInPandas",
+              "applyInPandasWithState"}
+    out = subprocess.run(["git", "ls-files", "sparkhtml/*.py"], cwd=ROOT,
+                         check=True, capture_output=True, text=True).stdout
+    hits = []
+    for path in out.splitlines():
+        with open(os.path.join(ROOT, path)) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                name = next((a.name for a in node.names
+                             if a.name.split(".")[-1] in banned), None)
+            else:
+                continue
+            if name is not None and name.split(".")[-1] in banned:
+                hits.append(f"{path}:{node.lineno}: {name}")
+    assert not hits, "\n".join(hits)

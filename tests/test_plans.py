@@ -101,10 +101,10 @@ def test_partial_aggregation(spark):
 
 
 def test_udfs_are_arrow_not_batch_python(spark):
-    from sparkhtml.spark.pipeline import make_udfs
+    from sparkhtml.spark.pipeline import html_escape
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    q = docs.select(make_udfs()["html_escape"]("text"))
+    q = docs.select(html_escape("text"))
     p = plan(q)
     assert "ArrowEvalPython" in p
     assert "BatchEvalPython" not in p  # row-at-a-time python would be this
@@ -283,12 +283,12 @@ def test_cosine_neardup_norms_precomputed(spark):
 
 def test_media_real_decode_plan_zero_shuffle(spark):
     """media_features_real is scan → generate-payloads (mapInPandas) →
-    decode (mapInPandas): two Python crossings, no shuffle — the shape
+    decode (mapInArrow): two Python crossings, no shuffle — the shape
     that stays scan-local on 1000 executors."""
     import __spark_entry__ as entry
 
     p = plan(entry._q_media_features_real(spark, SF))
-    assert p.lower().count("mapinpandas") >= 2
+    assert p.lower().count("mapinpandas") + p.lower().count("mapinarrow") >= 2
     assert "Exchange" not in p
 
 

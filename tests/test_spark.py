@@ -14,8 +14,8 @@ from sparkhtml.extract import doc_metrics, extract_spans
 from sparkhtml.selector import select as py_select
 from sparkhtml.spark import schemas
 from sparkhtml.spark.pipeline import (
-    css_count_udf, extract_metrics_df, extract_spans_df,
-    extract_with_metrics_df, make_udfs, parse_nodes_df,
+    extract_metrics_df, extract_spans_df, extract_with_metrics_df,
+    parse_nodes_df,
 )
 from sparkhtml.spark.queries import css_select_df
 from test_units import _fragment_dom, _segment_inputs
@@ -187,25 +187,33 @@ def test_nodes_table_and_selector_plan_parity(spark):
 
 
 def test_udfs(spark):
-    from sparkhtml.spark.pipeline import register_udfs
+    """The scalar arrow_udfs, registered for SQL; a null input row maps to
+    the result for ""."""
+    from sparkhtml.spark.pipeline import (
+        css_multi_count_udf, html_escape, html_text_content, html_unescape,
+    )
 
-    register_udfs(spark)
+    for udf in (html_escape, html_unescape, html_text_content):
+        spark.udf.register(udf.__name__, udf)
     row = spark.sql(
         "select html_escape('a<b&c') e, html_unescape('x&amp;&#65;') u, "
         "html_text_content('<p>a<b>b</b></p>') t, "
-        "html_extract_main('<p>enough words to keep here ok</p>') m"
+        "html_escape(string(null)) en, html_unescape(null) un, "
+        "html_text_content(string(null)) tn"
     ).collect()[0]
     assert row.e == "a&lt;b&amp;c"
     assert row.u == "x&A"
     assert row.t == "ab"
-    assert row.m == "enough words to keep here ok"
+    assert (row.en, row.un, row.tn) == ("", "", "")
 
-
-def test_css_count_udf(spark):
     df = spark.createDataFrame(
-        [("1", "<div><p>a</p><p>b</p></div>")], ["doc_id", "html"]
+        [("1", "<div><p>a</p><p>b</p></div><a href=x>l</a>"), ("2", None)],
+        "doc_id string, html string",
     )
-    assert df.select(css_count_udf("div > p")("html").alias("n")).first().n == 2
+    multi = css_multi_count_udf(["div > p", "a[href]"])
+    got = {r.doc_id: r.n for r in
+           df.select("doc_id", multi("html").alias("n")).collect()}
+    assert got == {"1": [2, 1], "2": [0, 0]}
 
 
 def test_exact_dedup(spark):
@@ -651,7 +659,9 @@ def test_multimodal(spark):
 
 def test_multimodal_real_decode(spark):
     """fake=False decodes PPM/BMP/WAV for real (pure numpy) and matches the
-    closed-form features; junk payloads hit the error channel per-row."""
+    closed-form features; junk payloads hit the error channel per-row —
+    truncated ones too, whatever the decoder raises (struct.error for a
+    20-byte WAV, IndexError for a JPEG missing its last 3 bytes)."""
     from sparkhtml.spark.multimodal import (
         MEDIA_SCHEMA, make_real_payload, media_features_df,
     )
@@ -660,9 +670,16 @@ def test_multimodal_real_decode(spark):
     for i in range(16):
         kind, mime, payload, dur = make_real_payload(i)
         rows.append((f"m-{i}", kind, mime, bytearray(payload), None, None, dur))
+    for i, cut in ((9, 20), (8, 611)):
+        kind, mime, payload, dur = make_real_payload(i)
+        rows.append((f"cut-{i}", kind, mime, bytearray(payload[:cut]), None,
+                     None, dur))
     media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
     out = {r.media_ref: r for r in media_features_df(media, fake=False).collect()}
-    assert len(out) == 16
+    assert len(out) == 18
+    for ref in ("cut-9", "cut-8"):
+        assert out[ref].error and out[ref].n_frames == 1
+        assert out[ref].feature == [0.0] * 16
     for i in range(16):
         r = out[f"m-{i}"]
         m = i % 4
@@ -1422,17 +1439,20 @@ def test_domain_quota_and_pack_greedy(spark):
         (6, "en", "tail"),                     # bin 3 (prev bin full)
         (7, "de", " ".join(["w"] * 10)),       # exact fit bin 0
         (8, "de", "x"),                        # 10+1 > 10 → bin 1
+        (9, "de", None),                       # null text: 0 tokens, bin 1
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "lang", "text"])
-    got = {r.doc_id: (r.bin_id, r.bin_tokens)
+    df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
+    got = {r.doc_id: (r.bin_id, r.bin_tokens, r.tokens)
            for r in pack_greedy(df, budget=10, group_col="lang").collect()}
-    assert got == {1: (0, 3), 2: (0, 8), 3: (1, 4), 4: (1, 4),
-                   5: (2, 25), 6: (3, 1), 7: (0, 10), 8: (1, 1)}
+    assert {d: v[:2] for d, v in got.items()} == {
+        1: (0, 3), 2: (0, 8), 3: (1, 4), 4: (1, 4), 5: (2, 25), 6: (3, 1),
+        7: (0, 10), 8: (1, 1), 9: (1, 1)}
+    assert got[9][2] == 0
 
     # bucketed mode: same bins within each (group, bucket) sub-sequence
     bucketed = pack_greedy(df, budget=10, group_col="lang", buckets=4)
     rows_b = bucketed.collect()
-    assert {r.doc_id for r in rows_b} == set(range(1, 9))
+    assert {r.doc_id for r in rows_b} == set(range(1, 10))
     import itertools
 
     for (_, _), grp in itertools.groupby(

@@ -7,7 +7,7 @@ encoding of HTMLEncodingTests.m / HTMLDocumentTests.m:14-48; DOM of
 HTMLNodeTests.m / HTMLTreeEnumeratorTests.m:14-50.
 """
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from sparkhtml.dom import FlatDOM
@@ -16,7 +16,7 @@ from sparkhtml.encoding import (
     sniff_encoding,
 )
 from sparkhtml.escape import (
-    escape_html, escape_series, unescape_html, unescape_series,
+    escape_array, escape_html, unescape_array, unescape_html,
 )
 from sparkhtml.extract import extract_main_text, extract_spans
 from sparkhtml.serializer import inner_html, serialize
@@ -83,10 +83,14 @@ def test_unescape_html(src, expected):
 
 
 def test_escape_series_matches_scalar():
-    vals = ['a<b>"c"&d\xa0e', "", "plain", "&amp; &x"]
-    s = pd.Series(vals)
-    assert list(escape_series(s)) == [escape_html(v) for v in vals]
-    assert list(unescape_series(s)) == [unescape_html(v) for v in vals]
+    """The Arrow column helpers match the scalars row for row; a null row
+    maps to the result for ""."""
+    vals = ['a<b>"c"&d\xa0e', "", "plain", "&amp; &x", None,
+            "caf\xe9 \xa0&nbsp;\u00a0&eacute;&#x1F600; \u2603<"]
+    arr = pa.array(vals, pa.string())
+    assert escape_array(arr).to_pylist() == [escape_html(v or "") for v in vals]
+    assert unescape_array(arr).to_pylist() == [unescape_html(v or "")
+                                               for v in vals]
 
 
 def test_escape_unescape_roundtrip():
