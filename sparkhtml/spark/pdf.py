@@ -43,8 +43,10 @@ and DocBook/FO) serve as external fixtures in the tests.
 
 from __future__ import annotations
 
+import math
 import re
 import zlib
+from operator import itemgetter
 
 
 class PDFError(ValueError):
@@ -53,8 +55,9 @@ class PDFError(ValueError):
 
 class PDFBudgetError(PDFError):
     """Adversarial-work budget exceeded (page-tree / form-XObject
-    traversal). A distinct subclass so the interpreter's per-op
-    malformed-operand recovery (which swallows ValueError) can re-raise
+    traversal, decoded stream bytes). A distinct subclass so the
+    interpreter's per-op malformed-operand recovery (which swallows
+    ValueError) and the font loader's ToUnicode recovery can re-raise
     it: budget exhaustion must abort the document, not be retried
     op-by-op."""
 
@@ -218,19 +221,29 @@ def _parse_hex_string(data: bytes, i: int):
         raise PDFError(f"bad hex string: {e}") from None
 
 
-_NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
+_NUM = rb"[+-]?(?:\d+\.?\d*|\.\d+)"
+_NUM_RE = re.compile(_NUM)
 _INT_RE = re.compile(rb"\d+")
+
+# Whitespace and comments before a token. Each byte has exactly one way
+# to match and the quantifiers are possessive, so a failing branch after
+# the prefix costs linear time (an ambiguous ``(?:ws+|%...)*`` backtracks
+# exponentially over a run of blanks) and a comment never gives back
+# characters to be read as a token (ISO 32000-1 §7.2.3: comments are
+# ignored).
+_SEP = rb"[\x00\t\n\x0c\r ]*+(?:%[^\r\n]*+[\x00\t\n\x0c\r ]*+)*+"
+# the same, non-empty: separates the two integers and the R of a reference
+_SEP1 = rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)++"
 
 # Array-element fast path: one combined match for leading whitespace plus
 # either an indirect reference ("n g R") or a plain number. Numeric arrays
 # (/Widths with ~100 entries, /W, matrices, Kids) otherwise cost 4-5
 # separate regex calls per element through the generic dispatch.
 _ARR_ITEM_RE = re.compile(
-    rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
-    rb"(?:(?P<rnum>\d+)(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+"
-    rb"(?P<rgen>\d+)(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+R"
+    _SEP
+    + rb"(?:(?P<rnum>\d+)" + _SEP1 + rb"(?P<rgen>\d+)" + _SEP1 + rb"R"
     rb"(?=[\x00\t\n\x0c\r ()<>\[\]{}/%]|$)"
-    rb"|(?P<num>[+-]?(?:\d+\.?\d*|\.\d+)))"
+    rb"|(?P<num>" + _NUM + rb"))"
 )
 
 
@@ -311,10 +324,20 @@ def parse_object(data: bytes, i: int):
 # ---------------------------------------------------------------------------
 # stream filters
 
+# Decoded bytes per document, over all its streams and filters. FlateDecode
+# inflates up to ~1000x (a 64 KB stream decodes to 64 MB), LZW and
+# RunLength expand too, and a worker that runs out of memory fails its
+# task rather than returning an error row. The external fixtures decode
+# to at most 333 KB in total, generated documents to under 30 KB.
+DECODE_BUDGET = 64 << 20
 
-def _png_unpredict(data: bytes, columns: int, colors: int, bpc: int) -> bytes:
+
+def _png_unpredict(data: bytes, columns: int, colors: int, bpc: int,
+                   limit: int = DECODE_BUDGET) -> bytes:
     bpp = max(1, (colors * bpc + 7) // 8)
     row_len = (columns * colors * bpc + 7) // 8
+    if -(-len(data) // (row_len + 1)) * row_len > limit:
+        raise PDFBudgetError("decoded stream budget exceeded")
     out = bytearray()
     prev = bytearray(row_len)
     i = 0
@@ -378,11 +401,13 @@ def _ascii85_decode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _runlength_decode(data: bytes) -> bytes:
+def _runlength_decode(data: bytes, limit: int = DECODE_BUDGET) -> bytes:
     out = bytearray()
     i = 0
     n = len(data)
     while i < n:
+        if len(out) > limit:
+            raise PDFBudgetError("decoded stream budget exceeded")
         l = data[i]
         i += 1
         if l == 128:
@@ -396,10 +421,12 @@ def _runlength_decode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _lzw_decode(data: bytes, early: int = 1) -> bytes:
+def _lzw_decode(data: bytes, early: int = 1,
+                limit: int = DECODE_BUDGET) -> bytes:
     """PDF LZWDecode (ISO 32000-1 §7.4.4): variable 9-12 bit codes,
     MSB-first, clear=256, EOD=257; ``early`` is /EarlyChange (default 1:
-    the code width bumps one code early, as TIFF does)."""
+    the code width bumps one code early, as TIFF does). Raises
+    PDFBudgetError once the output passes ``limit`` bytes."""
     out = bytearray()
     table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     width = 9
@@ -432,6 +459,8 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
             else:
                 raise PDFError("LZW: code out of range")
             out += entry
+            if len(out) > limit:
+                raise PDFBudgetError("decoded stream budget exceeded")
             prev = entry
             if len(table) + early >= (1 << width) and width < 12:
                 width += 1
@@ -439,6 +468,10 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
 
 
 def decode_stream(pdf: "PDF", st: Stream) -> bytes:
+    """Apply the stream's filter chain. Every filter's output counts
+    against the document's ``decode_left`` budget (``DECODE_BUDGET`` on
+    first use); decoding stops with PDFBudgetError as soon as it would
+    overrun, before the output is held in memory."""
     d = st.dict
     filt = pdf.resolve(d.get("Filter"))
     parms = pdf.resolve(d.get("DecodeParms") or d.get("DP"))
@@ -450,15 +483,16 @@ def decode_stream(pdf: "PDF", st: Stream) -> bytes:
     for f, p in zip(filters, parms_list):
         f = str(pdf.resolve(f))
         p = pdf.resolve(p) or {}
+        left = getattr(pdf, "decode_left", DECODE_BUDGET)
+        if left < 0:  # a budget error was raised and swallowed before
+            raise PDFBudgetError("decoded stream budget exceeded")
         if f in ("FlateDecode", "Fl"):
             try:
-                data = zlib.decompress(data)
-            except zlib.error:
-                # tolerate trailing garbage
-                try:
-                    data = zlib.decompressobj().decompress(data)
-                except zlib.error as e:
-                    raise PDFError(f"FlateDecode failed: {e}") from None
+                # a decompressobj tolerates a truncated stream and
+                # trailing garbage; one byte over ``left`` tells overrun
+                data = zlib.decompressobj().decompress(data, left + 1)
+            except zlib.error as e:
+                raise PDFError(f"FlateDecode failed: {e}") from None
         elif f in ("ASCIIHexDecode", "AHx"):
             body = data.split(b">")[0]
             digits = re.sub(rb"\s", b"", body)
@@ -468,7 +502,7 @@ def decode_stream(pdf: "PDF", st: Stream) -> bytes:
         elif f in ("ASCII85Decode", "A85"):
             data = _ascii85_decode(data)
         elif f in ("RunLengthDecode", "RL"):
-            data = _runlength_decode(data)
+            data = _runlength_decode(data, left)
         elif f in ("LZWDecode", "LZW"):
             early = 1
             if isinstance(p, dict):
@@ -476,7 +510,7 @@ def decode_stream(pdf: "PDF", st: Stream) -> bytes:
                     early = int(pdf.resolve(p.get("EarlyChange", 1)))
                 except (TypeError, ValueError):
                     early = 1
-            data = _lzw_decode(data, early)
+            data = _lzw_decode(data, early, left)
         else:
             raise PDFError(f"unsupported stream filter {f}")
         pred = pdf.resolve(p.get("Predictor", 1)) if isinstance(p, dict) else 1
@@ -486,9 +520,13 @@ def decode_stream(pdf: "PDF", st: Stream) -> bytes:
                 int(pdf.resolve(p.get("Columns", 1))),
                 int(pdf.resolve(p.get("Colors", 1))),
                 int(pdf.resolve(p.get("BitsPerComponent", 8))),
+                left,
             )
         elif pred == 2:
             raise PDFError("TIFF predictor unsupported")
+        pdf.decode_left = left - len(data)
+        if pdf.decode_left < 0:
+            raise PDFBudgetError("decoded stream budget exceeded")
     return data
 
 
@@ -946,6 +984,8 @@ def load_font(pdf: PDF, fd: dict) -> Font:
     if isinstance(tu, Stream):
         try:
             f.to_unicode = _parse_tounicode(decode_stream(pdf, tu))
+        except PDFBudgetError:
+            raise
         except PDFError:
             pass
     if subtype == "Type0":
@@ -1058,29 +1098,111 @@ class Frag:
         self.size, self.text, self.ref = size, text, ref
 
 
-# One-pass content-stream scanner: a single alternation visits each byte
-# once (vs the generic object parser's per-token _skip_ws + dispatch).
+# Content-stream tokens. Both regexes start with the same prefix and end
+# in ``\Z``, so a match exists at every offset: trailing whitespace or
+# an end-of-stream comment is one empty token, never a skipped byte.
 # Branch order matters — numbers before generic operators.
+_REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
+_NAME = rb"/" + _REGULAR + rb"*"
+_OP = _REGULAR + rb"+"
+
+# general loop: one ``match`` per token, delimiters dispatched in Python
 _CTOK_RE = re.compile(
-    rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
-    rb"(?:(?P<num>[+-]?(?:\d+\.?\d*|\.\d+))"
-    rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<op>[^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"
-    rb"|(?P<delim>[()<>{}\[\]]))"
+    _SEP
+    + rb"(?:(?P<num>" + _NUM + rb")"
+    rb"|(?P<name>" + _NAME + rb")"
+    rb"|(?P<op>" + _OP + rb")"
+    rb"|(?P<delim>[()<>{}\[\]])|\Z)"
+)
+
+# fast path: one ``findall`` per stream, groups (num, name, op, literal
+# string without unescaped nested parentheses, hex string, bracket,
+# other delimiter); the last group sends the stream to the general loop
+_CTOK_FAST_RE = re.compile(
+    _SEP
+    + rb"(?:(" + _NUM + rb")|(" + _NAME + rb")|(" + _OP + rb")"
+    rb"|(\([^()\\]*+(?:\\.[^()\\]*+)*+\))"
+    rb"|(<[0-9A-Fa-f\x00\t\n\x0c\r ]*+>)"
+    rb"|([\[\]])|([()<>{}])|\Z)",
+    re.S,
 )
 
 
 def _content_tokens(data: bytes) -> list:
-    """Return [(kind, value, pos), ...]: ('obj', o, p) for operands,
-    ('op', b, p) for operators.
+    """Return the content stream's tokens, ``[(kind, value), ...]``:
+    ``('obj', o)`` for an operand, ``('op', b)`` for an operator. An
+    inline image is its ``('op', b'BI')`` alone: its parameters and data
+    through ``EI`` are skipped.
 
-    Arrays (TJ) are assembled inline via a stack; dicts (inline-image BI
-    parameters) and strings fall back to the generic parsers. No indirect
-    references exist inside content streams (ISO 32000-1 §7.8.2), so all
-    numbers are plain floats. Returns a prebuilt list rather than a
-    generator: content streams are small and the ~2 tokens/op generator
-    frame switches were a measured ~15% of interpret_page.
+    Arrays (TJ) are assembled inline; no indirect references exist
+    inside content streams (ISO 32000-1 §7.8.2), so all numbers are
+    plain floats. One ``findall`` tokenizes the stream
+    (:func:`_fast_tokens`); a stream it does not cover — a dict, a
+    string with unescaped nested parentheses, a stray delimiter, a
+    malformed token, an inline image — goes through the general loop
+    (:func:`_scan_tokens`) instead, which yields the same tokens where
+    both apply. Returns a prebuilt list rather than a generator: the
+    ~2 tokens/op generator frame switches were a measured ~15% of
+    interpret_page.
     """
+    toks = _fast_tokens(data)
+    return _scan_tokens(data) if toks is None else toks
+
+
+def _fast_tokens(data: bytes) -> list | None:
+    """:func:`_content_tokens` from one ``findall``, or None where the
+    stream needs the general loop. The regex builds every token in C;
+    Python only converts and dispatches."""
+    out: list = []
+    emit = out.append
+    stack: list[list] = []
+    for num, name, op, lit, hx, br, other in _CTOK_FAST_RE.findall(data):
+        if num:
+            obj = float(num)
+        elif op:
+            if op == b"BI":
+                return None
+            if stack:
+                stack.clear()  # op inside an unterminated array: recover
+            emit(("op", op))
+            continue
+        elif name:
+            if b"#" in name:
+                obj = _parse_name(name, 0)[0]
+            else:
+                obj = Name(name[1:].decode("latin-1"))
+        elif lit:
+            if b"\\" in lit:
+                obj = _parse_literal_string(lit, 0)[0]
+            else:
+                obj = lit[1:-1]
+        elif br:
+            if br == b"[":
+                stack.append([])
+                continue
+            if not stack:
+                continue  # stray
+            obj = stack.pop()
+        elif hx:
+            digits = hx[1:-1].translate(None, WS)
+            if len(digits) % 2:
+                digits += b"0"
+            obj = bytes.fromhex(digits.decode("ascii"))
+        elif other:
+            return None
+        else:
+            continue  # trailing whitespace / comment
+        if stack:
+            stack[-1].append(obj)
+        else:
+            emit(("obj", obj))
+    return out
+
+
+def _scan_tokens(data: bytes) -> list:
+    """:func:`_content_tokens` one ``match`` at a time: the general loop,
+    which parses dicts and nested strings with the object parser, skips
+    stray delimiters and malformed strings, and skips inline images."""
     out: list = []
     emit = out.append
     i = 0
@@ -1088,23 +1210,20 @@ def _content_tokens(data: bytes) -> list:
     stack: list[list] = []
     ctok_match = _CTOK_RE.match
     while i < n:
-        m = ctok_match(data, i)
-        if m is None:
-            # trailing whitespace / lone EOF comment: no token follows
-            if data[i] == 0x25:  # '%' — skip the whole comment
-                j = data.find(b"\n", i)
-                i = n if j < 0 else j + 1
-            else:
-                i += 1
-            continue
+        m = ctok_match(data, i)  # never None: the regex ends in ``|\Z``
         i = m.end()
         kind = m.lastgroup
+        if kind is None:
+            break  # trailing whitespace / comment
         # NOTE group(kind), not group(): the match includes the leading
         # whitespace/comment prefix; the token is the named group
         if kind == "op":
             if stack:
                 stack.clear()  # op inside an unterminated array: recover
-            emit(("op", m.group("op"), i))
+            op = m.group("op")
+            emit(("op", op))
+            if op == b"BI":  # inline image: resume after its EI
+                i = _find_inline_image_end(data, i)
             continue
         obj = None
         if kind == "num":
@@ -1140,7 +1259,7 @@ def _content_tokens(data: bytes) -> list:
         if stack:
             stack[-1].append(obj)
         else:
-            emit(("obj", obj, i))
+            emit(("obj", obj))
     return out
 
 
@@ -1172,6 +1291,11 @@ def interpret_page(pdf: PDF, page: dict, *, _depth: int = 0,
     doc_cache = getattr(pdf, "_font_cache", None)
     if doc_cache is None:
         doc_cache = pdf._font_cache = {}
+    # decoded Form XObject content, once per document: a form painted on
+    # every page spends the decode budget once, not once per ``Do``
+    form_cache = getattr(pdf, "_form_cache", None)
+    if form_cache is None:
+        form_cache = pdf._form_cache = {}
 
     def get_font(name: str) -> Font:
         fd = fonts_d.get(name)
@@ -1222,31 +1346,23 @@ def interpret_page(pdf: PDF, page: dict, *, _depth: int = 0,
                 tx += adv * tz / 100.0
             text = "".join(chars)
         x1 = x0 + m[0] * tx  # mat_apply x-component, y dropped
-        if text.strip("\ufffd "):
+        if text.strip("\ufffd "):  # pure spaces / unknowns only advance
             frags.append(Frag("text", x0, y0, x1, dev_size(m), text))
-        elif text:
-            # pure spaces / unknowns still advance
-            pass
         # translation-only advance: inline mat_mul((1,0,0,1,tx,0), tm)
         tm = (tm[0], tm[1], tm[2], tm[3],
               tm[4] + tx * tm[0], tm[5] + tx * tm[1])
 
-    tokens = _content_tokens(content)
-    ti = 0
-    n_tok = len(tokens)
-    data = content
-    while ti < n_tok:
-        kind, val, pos = tokens[ti]
-        ti += 1
+    for kind, op in _content_tokens(content):
         if kind == "obj":
-            operands.append(val)
+            operands.append(op)
             continue
-        op = val
         try:
-            if op == b"Td" and len(operands) >= 2:
-                lm = mat_mul((1, 0, 0, 1,
-                              float(operands[-2]), float(operands[-1])), lm)
-                tm = lm
+            # branches in order of operator frequency (Tm and Tj lead
+            # in generated PDFs, TJ and Td in pdfTeX output)
+            if op == b"Tm" and len(operands) >= 6:
+                lm = tm = tuple(map(float, operands[-6:]))
+            elif op == b"Tj" and operands:
+                show(operands[-1])
             elif op == b"TJ" and operands and isinstance(operands[-1], list):
                 for item in operands[-1]:
                     if isinstance(item, bytes):
@@ -1265,8 +1381,18 @@ def interpret_page(pdf: PDF, page: dict, *, _depth: int = 0,
                         tm = (tm[0], tm[1], tm[2], tm[3],
                               tm[4] + shift * tm[0],
                               tm[5] + shift * tm[1])
-            elif op == b"Tj" and operands:
-                show(operands[-1])
+            elif op == b"Td" and len(operands) >= 2:
+                lm = mat_mul((1, 0, 0, 1,
+                              float(operands[-2]), float(operands[-1])), lm)
+                tm = lm
+            elif op == b"Tf" and len(operands) >= 2:
+                font = get_font(str(operands[-2]))
+                tfs = float(operands[-1])
+            elif op == b"BT":
+                in_text = True
+                tm = lm = IDENTITY
+            elif op == b"ET":
+                in_text = False
             elif op == b"q":
                 # §8.4.2: the graphics state includes the TEXT-state
                 # params (font, size, Tc/Tw/Tz/TL/Ts), not just the CTM
@@ -1275,23 +1401,12 @@ def interpret_page(pdf: PDF, page: dict, *, _depth: int = 0,
                 if stack:
                     ctm, font, tfs, tc, tw, tz, tl, ts = stack.pop()
             elif op == b"cm" and len(operands) >= 6:
-                m = tuple(float(v) for v in operands[-6:])
-                ctm = mat_mul(m, ctm)
-            elif op == b"BT":
-                in_text = True
-                tm = lm = IDENTITY
-            elif op == b"ET":
-                in_text = False
-            elif op == b"Tf" and len(operands) >= 2:
-                font = get_font(str(operands[-2]))
-                tfs = float(operands[-1])
+                ctm = mat_mul(tuple(map(float, operands[-6:])), ctm)
             elif op == b"TD" and len(operands) >= 2:
                 tl = -float(operands[-1])
                 lm = mat_mul((1, 0, 0, 1,
                               float(operands[-2]), float(operands[-1])), lm)
                 tm = lm
-            elif op == b"Tm" and len(operands) >= 6:
-                lm = tm = tuple(float(v) for v in operands[-6:])
             elif op == b"T*":
                 lm = mat_mul((1, 0, 0, 1, 0.0, -tl), lm)
                 tm = lm
@@ -1333,21 +1448,21 @@ def interpret_page(pdf: PDF, page: dict, *, _depth: int = 0,
                         m = (tuple(float(pdf.resolve(v)) for v in fm)
                              if isinstance(fm, list) and len(fm) == 6
                              else IDENTITY)
+                        # Streams live in pdf._cache: id(xo) is stable
+                        body = form_cache.get(id(xo))
+                        if body is None:
+                            body = form_cache[id(xo)] = \
+                                decode_stream(pdf, xo)
                         frags.extend(interpret_page(
                             pdf, page, _depth=_depth + 1,
-                            _content=decode_stream(pdf, xo),
+                            _content=body,
                             _resources=pdf.resolve(
                                 xo.dict.get("Resources")) or resources,
                             _ctm=mat_mul(m, ctm), _budget=_budget))
             elif op == b"BI":
-                # inline image: skip operands to EI, emit placeholder
+                # inline image (the tokenizer skipped it): placeholder
                 x, y = mat_apply(ctm, 0.5, 0.5)
                 frags.append(Frag("media", x, y, x, 0.0, None, "pdfimg:inline"))
-                end = _find_inline_image_end(data, pos)
-                data = data[end:]
-                tokens = _content_tokens(data)
-                ti = 0
-                n_tok = len(tokens)
         except PDFBudgetError:
             raise
         except (TypeError, ValueError, KeyError, IndexError):
@@ -1369,30 +1484,54 @@ class Line:
 
 
 _MULTISPACE_RE = re.compile(r"  +")
+_first = itemgetter(0)
 
 
 def _frags_to_lines(frags: list[Frag]) -> list[Line]:
+    """Cluster a page's text fragments into lines by baseline y, join each
+    line's parts left to right with inferred word spaces, and return the
+    text and media lines top to bottom.
+
+    Fragments are visited in ``(-y, x0)`` order, and each joins the
+    earliest-created line within ``tol`` of its y (first fit), else starts
+    a new one. Lines are created in non-increasing y and keep their y, so
+    the lines within ``tol`` of a fragment are a suffix of the line list
+    whose start never moves back: one pointer sweep finds the first fit.
+    That holds for finite y only (``inf - inf`` is NaN), so a page with a
+    non-finite y scans the list for each fragment instead.
+    """
     text_frags = [f for f in frags if f.kind == "text"]
     media_frags = [f for f in frags if f.kind == "media"]
     sizes = sorted(f.size for f in text_frags if f.size > 0)
     med = sizes[len(sizes) // 2] if sizes else 10.0
     tol = max(1.0, 0.45 * med)
     lines: list[Line] = []
-    for f in sorted(text_frags, key=lambda f: (-f.y, f.x0)):
-        placed = None
-        for ln in lines:
-            if abs(ln.y - f.y) <= tol:
-                placed = ln
-                break
-        if placed is None:
-            lines.append(Line("text", f.y, f.x0, f.x1, [(f.x0, f.x1, f.text, f.size)], f.size))
+    order = sorted(text_frags, key=lambda f: (-f.y, f.x0))
+    # a sum is finite only if every term is (an overflow just scans)
+    sweep = math.isfinite(sum([f.y for f in order]))
+    k = 0  # sweep: index of the first line within tol of the fragment
+    for f in order:
+        y = f.y
+        if sweep:
+            n = len(lines)
+            while k < n and not lines[k].y - y <= tol:
+                k += 1
+            placed = lines[k] if k < n else None
         else:
-            placed.text.append((f.x0, f.x1, f.text, f.size))
-            placed.x0 = min(placed.x0, f.x0)
-            placed.x1 = max(placed.x1, f.x1)
+            placed = next((ln for ln in lines if abs(ln.y - y) <= tol), None)
+        x0, x1 = f.x0, f.x1
+        if placed is None:
+            lines.append(Line("text", y, x0, x1, [(x0, x1, f.text, f.size)],
+                              f.size))
+        else:
+            placed.text.append((x0, x1, f.text, f.size))
+            if x0 < placed.x0:
+                placed.x0 = x0
+            if x1 > placed.x1:
+                placed.x1 = x1
     out: list[Line] = []
     for ln in lines:
-        parts = sorted(ln.text, key=lambda t: t[0])
+        parts = sorted(ln.text, key=_first)
         buf: list[str] = []
         prev_x1 = None
         for x0, x1, text, size in parts:

@@ -106,6 +106,39 @@ def get_spark(
 _PYFILES_SENT: set[int] = set()
 
 
+def pyfiles_zip(repo_root: str) -> str:
+    """A zip of ``<repo_root>/sparkhtml``'s ``.py`` sources in the temp
+    dir, named by a digest of their paths and contents and built on
+    first use. Two checkouts on one machine each ship their own code,
+    whatever their file times."""
+    import hashlib
+    import tempfile
+    import zipfile
+
+    sources = []
+    for dirpath, _dirs, names in os.walk(os.path.join(repo_root, "sparkhtml")):
+        for name in names:
+            if name.endswith(".py"):
+                full = os.path.join(dirpath, name)
+                with open(full, "rb") as f:
+                    sources.append((os.path.relpath(full, repo_root), f.read()))
+    sources.sort()
+    digest = hashlib.sha256()
+    for rel, body in sources:
+        digest.update(b"%s\0%d\0" % (rel.encode(), len(body)))
+        digest.update(body)
+    zip_path = os.path.join(
+        tempfile.gettempdir(),
+        f"sparkhtml_pyfiles-{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
+            for rel, body in sources:
+                z.writestr(rel, body)
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
 def ensure_executor_imports(spark: SparkSession) -> None:
     """Make ``sparkhtml`` importable on executors of an EXTERNALLY created
     session (one that didn't go through :func:`get_spark`, so the
@@ -114,7 +147,8 @@ def ensure_executor_imports(spark: SparkSession) -> None:
     after JVM start; this is the programmatic twin of
     ``spark-submit --py-files dist/sparkhtml.zip``.
 
-    Idempotent per SparkContext; rebuilds the zip when sources are newer.
+    Idempotent per SparkContext; ships :func:`pyfiles_zip` of this
+    checkout.
     """
     sc = spark.sparkContext
     key = id(sc)
@@ -123,24 +157,6 @@ def ensure_executor_imports(spark: SparkSession) -> None:
     repo_root = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
-    import tempfile
-    import zipfile
-
-    pkg_root = os.path.join(repo_root, "sparkhtml")
-    newest = 0.0
-    entries = []
-    for dirpath, _dirs, names in os.walk(pkg_root):
-        for name in names:
-            if name.endswith(".py"):
-                full = os.path.join(dirpath, name)
-                entries.append(full)
-                newest = max(newest, os.path.getmtime(full))
-    zip_path = os.path.join(tempfile.gettempdir(), "sparkhtml_pyfiles.zip")
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < newest:
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-            for full in sorted(entries):
-                z.write(full, os.path.relpath(full, repo_root))
-        os.replace(tmp, zip_path)
+    zip_path = pyfiles_zip(repo_root)
     sc.addPyFile(zip_path)
     _PYFILES_SENT.add(key)

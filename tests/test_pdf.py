@@ -899,3 +899,158 @@ def test_xref_stream_w_zero_offset_width_is_pdferror():
     out += (b"startxref\n" + str(off1).encode() + b"\n%%EOF\n")
     with pytest.raises(PDFError):
         PDF(bytes(out)).pages()
+
+
+def _flate_bomb_pdf() -> bytes:
+    """One page whose FlateDecode content inflates ~1000x, to 65 MB (1 MB
+    past the per-document decode budget) from ~66 KB on disk. The content
+    is one comment, so a parser without the budget reads it cheaply."""
+    import zlib
+
+    co = zlib.compressobj(9)
+    parts = [co.compress(b"%")]
+    parts += [co.compress(b"A" * (1 << 20)) for _ in range(65)]
+    data = b"".join(parts + [co.flush()])
+    return _raw_pdf([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        b"/Contents 4 0 R >>",
+        b"<< /Length " + str(len(data)).encode()
+        + b" /Filter /FlateDecode >>\nstream\n" + data + b"\nendstream",
+    ])
+
+
+def test_decode_budget_stops_expanding_filters():
+    """Decoded bytes per document are bounded: a FlateDecode bomb, and
+    LZW / RunLength / PNG-predictor output past the limit, raise
+    PDFBudgetError instead of growing the worker without bound."""
+    from sparkhtml.spark.pdf import PDFBudgetError, _lzw_decode
+
+    pdf = PDF(_flate_bomb_pdf())
+    page = pdf.pages()[0]
+    with pytest.raises(PDFBudgetError):
+        pdf.page_content(page)
+    with pytest.raises(PDFBudgetError):  # the budget stays spent
+        pdf.page_content(page)
+    with pytest.raises(PDFBudgetError):
+        pdf_doc_spans(_flate_bomb_pdf())
+    with pytest.raises(PDFBudgetError):
+        _runlength_decode(bytes([129, 0x41]) * 100, 1000)
+    assert _runlength_decode(bytes([129, 0x41]) * 7, 1000) == b"A" * 896
+    with pytest.raises(PDFBudgetError):
+        _lzw_decode(_lzw_encode(b"abcd" * 3000), 1, 1000)
+    assert _lzw_decode(_lzw_encode(b"abcd" * 200), 1, 1000) == b"abcd" * 200
+    with pytest.raises(PDFBudgetError):  # /Columns 1e9 on a 2-byte stream
+        _png_unpredict(b"\x00\x00", 10 ** 9, 1, 8, 1 << 20)
+
+
+def test_decode_budget_bomb_is_an_error_row(spark):
+    """Through the Spark worker the bomb is one ``err`` row; the
+    documents around it in the same batch still extract."""
+    from sparkhtml.spark.pdf import pdf_parsed_df
+
+    rows = [(f"d{i}", bytearray(build_pdf(
+        [[("text", f"neighbour {i} " + "word " * 20)]]))) for i in range(4)]
+    rows.insert(2, ("bomb", bytearray(_flate_bomb_pdf())))
+    df = spark.createDataFrame(rows, "doc_id string, payload binary")
+    out = {r.doc_id: r for r in pdf_parsed_df(df).collect()}
+    assert len(out) == 5
+    bomb = out["bomb"]
+    assert "PDFBudgetError" in bomb.err and bomb.n_pages is None
+    assert bomb.spans == []
+    for doc_id, blob in rows:
+        if doc_id == "bomb":
+            continue
+        spans, n_pages = pdf_doc_spans(bytes(blob))
+        r = out[doc_id]
+        assert r.err is None and r.n_pages == n_pages == 1
+        assert [s.asDict() for s in r.spans] == spans
+
+
+# ---------------------------------------------------------------------------
+# lexer: linear time, comments never read as tokens
+
+
+def _kinds_values(toks):
+    return [t[:2] for t in toks]
+
+
+def test_lexer_is_linear_on_blank_runs():
+    """A run of blanks before a failing branch used to backtrack
+    exponentially (n=24 took seconds): one crafted stream or array would
+    hang its task with no per-document time limit. The small probes run
+    first, so a regression fails in seconds instead of hanging."""
+    import time
+
+    from sparkhtml.spark.pdf import _content_tokens
+
+    for n in (24, 4096):
+        t0 = time.perf_counter()
+        toks = _content_tokens(b"BT" + b" " * n)
+        assert time.perf_counter() - t0 < 0.5, n
+        assert _kinds_values(toks) == [("op", b"BT")]
+        for probe, want in ((b"[1 2" + b" " * n + b"/Name]", [1, 2, "Name"]),
+                            (b"[1" + b" " * n + b"2]", [1, 2])):
+            t0 = time.perf_counter()
+            assert parse_object(probe, 0)[0] == want
+            assert time.perf_counter() - t0 < 0.5, n
+
+
+def test_trailing_comment_is_not_an_operator():
+    """ISO 32000-1 §7.2.3: a comment is ignored, so a stream that ends in
+    one runs no operator out of it (a trailing %' used to show the
+    pending string)."""
+    from sparkhtml.spark.pdf import _content_tokens
+
+    hidden = [("op", b"BT"), ("obj", b"hidden")]
+    assert _kinds_values(_content_tokens(b"BT (hidden) % Tj")) == hidden
+    assert _kinds_values(_content_tokens(b"BT (hidden) %'")) == hidden
+    assert _kinds_values(_content_tokens(b"BT " + b"%" * 40 + b" x")) == \
+        [("op", b"BT")]
+    spans = pdf_extract_spans(_mini_pdf(
+        b"BT /F1 10 Tf 1 0 0 1 54 700 Tm (shown) Tj (hidden) %'"))
+    assert [s["text"] for s in spans] == ["shown"]
+    # an array element is not read out of a comment either
+    assert parse_object(b"[1 % 5 R\n]", 0)[0] == [1]
+    assert parse_object(b"[1 %c\n 2 %d\n R]", 0)[0] == [Ref(1, 2)]
+
+
+def test_decode_budget_counts_a_repainted_form_once():
+    """A Flate form painted 700 times decodes once per document: 700 x
+    100 KB would pass the 64 MB decode budget if every ``Do`` decoded it
+    again, failing a legitimate document."""
+    import zlib
+
+    form = zlib.compress(b"%" + b"A" * 100_000 + b"\nBT /F1 10 Tf 72 700 Td "
+                         b"(form text) Tj ET")
+    content = b"q " + b"/F0 Do " * 700 + b"Q"
+    blob = _raw_pdf([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        b"/Resources << /XObject << /F0 4 0 R >> >> /Contents 5 0 R >>",
+        b"<< /Subtype /Form /Filter /FlateDecode /Length "
+        + str(len(form)).encode() + b" >>\nstream\n" + form + b"\nendstream",
+        b"<< /Length " + str(len(content)).encode() + b" >>\nstream\n"
+        + content + b"\nendstream",
+    ])
+    spans, n_pages = pdf_doc_spans(blob)
+    assert n_pages == 1 and "form text" in spans[0]["text"]
+
+
+def test_many_inline_images_parse_in_linear_time():
+    """The tokenizer skips each inline image in place; re-tokenizing the
+    rest of the stream after every EI made a page of k inline images
+    O(k x stream) (300 images took seconds)."""
+    import time
+
+    img = (b"q 10 0 0 10 72 700 cm BI /W 4 /H 4 /BPC 8 /CS /G ID "
+           + bytes(range(16)) + b" EI Q\n")
+    text = b"BT /F1 10 Tf 1 0 0 1 72 650 Tm (word) Tj ET\n"
+    blob = _mini_pdf((img + text * 3) * 300)
+    t0 = time.perf_counter()
+    spans = pdf_extract_spans(blob)
+    assert time.perf_counter() - t0 < 1.0
+    assert sum(s["kind"] == "media" for s in spans) == 300
+    assert "word" in " ".join(s["text"] for s in spans if s["kind"] == "text")
