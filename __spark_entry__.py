@@ -329,7 +329,7 @@ def _q_minhash_pairs(spark, sf_dir):
     full-signature equality, and signature-equal docs always share every
     band bucket, so the oracle needs no bucket-hash reproduction: any
     banding-join bug that drops or fabricates pairs mismatches. The
-    production xxhash64 path shares all machinery but the hash call and
+    default xxhash64 signature shares all machinery but the hash call and
     is recall-pinned in tests/test_spark.py.
     """
     from sparkhtml.spark.dedup import minhash_lsh_pairs
@@ -359,12 +359,10 @@ def _q_ngram_jaccard(spark, sf_dir):
 def _q_simhash_dups(spark, sf_dir):
     """SimHash near-dups at Hamming 0.
 
-    hash_mode="md5": token hash = big-endian uint64 of md5's first 8
-    bytes, which DuckDB reproduces as ('0x' || substr(md5(t),1,16))::
-    UBIGINT — the oracle recomputes every per-bit vote and asserts the
-    exact pair set (tokenization, votes, tie rule, banding join,
-    bit_count verify). The production SipHash path shares all machinery
-    but the token hash and is pinned separately in tests/test_spark.py.
+    The token hash is the big-endian uint64 of md5's first 8 bytes, which
+    DuckDB reproduces as ('0x' || substr(md5(t),1,16))::UBIGINT — the
+    oracle recomputes every per-bit vote and asserts the exact pair set
+    (tokenization, votes, tie rule, bucket pairs, bit_count verify).
     """
     from sparkhtml.spark.dedup import simhash_near_dups
 
@@ -372,9 +370,9 @@ def _q_simhash_dups(spark, sf_dir):
     dups = docs.filter(F.col("doc_id") % 10 == 0).withColumn(
         "doc_id", F.col("doc_id") + 1000000
     )
-    return simhash_near_dups(
-        docs.unionByName(dups), max_hamming=0, hash_mode="md5"
-    ).select("a", "b")
+    return simhash_near_dups(docs.unionByName(dups), max_hamming=0).select(
+        "a", "b"
+    )
 
 
 def _q_cosine_topk(spark, sf_dir):

@@ -7,21 +7,24 @@ embedding-cosine near-dup. Scale posture per operator:
   shuffle on a 64-bit key; AQE coalesces the tail.
 - **minhash**: signatures are computed with JVM expressions
   (``transform``/``array_min`` over shingle hashes — no UDF); LSH banding
-  turns the O(n²) pair space into an equi-join on (band, bucket) keys,
-  which Spark executes as a shuffled hash join; candidate verification
-  re-checks full signature agreement before declaring a pair.
-- **simhash**: 64-bit signatures in a vectorized ``arrow_udf`` (numpy
-  bit-twiddling is the honest fast path here); near-dup = identical
-  signature or Hamming ≤ k via band-rotation join (k/4-bit blocks).
+  turns the O(n²) pair space into buckets keyed by (band, bucket), and
+  candidate verification re-checks full signature agreement before
+  declaring a pair.
+- **simhash**: 64-bit signatures from md5 token hashes in a vectorized
+  ``arrow_udf`` (numpy bit-twiddling); near-dup = Hamming ≤ k via
+  pigeonhole blocks of the signature.
 - **ngram jaccard**: exact Jaccard verification on LSH candidates only.
 - **embedding cosine**: random-hyperplane LSH bucket join + exact cosine
   check inside buckets (see :mod:`sparkhtml.spark.similarity`).
+
+Every LSH operator drops buckets wider than :data:`MAX_BUCKET`
+(:func:`_capped`); the two signature operators turn buckets into pairs
+with :func:`_bucket_pairs`.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import arrow_udf
@@ -31,8 +34,49 @@ from . import _register_cached
 from .partitioning import fan_out
 
 
+# Widest LSH bucket a near-dup operator pairs up. One true mega-cluster
+# (10^6 copies of one boilerplate page) would otherwise put a quadratic
+# pair burst on one task; such buckets are dropped whole. Identical
+# documents are the exact-dedup pass's job, which runs first in the
+# documented pipeline (SCALE.md §5).
+MAX_BUCKET = 10_000
+
+
 def normalized_text(col: str = "text"):
     return F.trim(F.regexp_replace(F.lower(F.col(col)), r"\s+", " "))
+
+
+def _capped(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """``rows`` without the buckets (rows sharing ``keys``) wider than
+    :data:`MAX_BUCKET`. A count aggregate joined back, so an oversized
+    bucket is dropped from its count alone and its member list is never
+    collected."""
+    widths = rows.groupBy(*keys).agg(F.count("*").alias("_w"))
+    return rows.join(widths, keys).filter(F.col("_w") <= MAX_BUCKET).drop("_w")
+
+
+def _bucket_pairs(rows: DataFrame, keys: list[str], *member: str) -> DataFrame:
+    """Distinct (a, b) pairs of members that share a bucket (``keys``) of
+    at most :data:`MAX_BUCKET` rows. ``a`` and ``b`` are structs of the
+    ``member`` columns, led by the id; a pair is ordered a.id < b.id.
+
+    One aggregation collects each bucket's members sorted by id; a
+    ``posexplode`` then an ``explode`` of the members after each one
+    stream the pairs, so no row holds more than one bucket's member list
+    (never the w²/2 pair list)."""
+    i, m, id_ = F.col("_i"), F.col("_m"), member[0]
+    return (
+        _capped(rows, keys)
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(F.struct(*member))).alias("_m"))
+        .filter(F.size(m) >= 2)
+        .select(m, F.posexplode(m).alias("_i", "a"))
+        .select("a", F.explode(F.slice(
+            m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))
+        )).alias("b"))
+        .filter(F.col(f"a.{id_}") < F.col(f"b.{id_}"))  # dup-id guard
+        .distinct()
+    )
 
 
 # ------------------------------------------------------------------ exact
@@ -168,14 +212,14 @@ def minhash_signatures(
 def minhash_lsh_pairs(
     df: DataFrame, col: str = "text", id_col: str = "doc_id",
     n_hashes: int = 32, bands: int = 8, shingle_n: int = 3,
-    min_agree: float = 0.5, max_bucket: int | None = 10_000,
-    hash_mode: str = "xxhash64",
+    min_agree: float = 0.5, hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate candidate pairs via LSH banding + signature check.
 
     Returns (a, b, sig_agreement) with a < b and agreement ≥ min_agree.
-    The band explode produces ``bands`` rows per doc; the self-join is an
-    equi-join on (band, band_hash) — never a cross join.
+    The band explode produces ``bands`` rows per doc; candidates are the
+    pairs sharing a (band, band_hash) bucket — never a cross join.
+    Buckets wider than :data:`MAX_BUCKET` are dropped.
 
     ``hash_mode="md5"`` makes the signature DuckDB-reproducible (see
     :func:`minhash_signatures`); the band bucket key stays ``xxhash64``
@@ -184,12 +228,6 @@ def minhash_lsh_pairs(
     demand full-signature equality the output is exactly the set of
     signature-equal pairs, which an oracle can compute WITHOUT
     reproducing the bucket hash.
-
-    ``max_bucket`` caps bucket width: a true mega-cluster (10⁶ copies of
-    one boilerplate page) would otherwise produce a quadratic pair burst
-    inside its bucket. Buckets wider than the cap are dropped here —
-    identical documents are the exact-dedup pass's job, which runs first
-    in the documented pipeline (SCALE.md §5).
     """
     rows_per_band = n_hashes // bands
     sigs = minhash_signatures(
@@ -210,45 +248,11 @@ def minhash_lsh_pairs(
             "band", "band_hash"
         ),
     )
-    if max_bucket is not None:
-        # the cap stays a COUNT pre-filter (never materializes an
-        # oversized bucket's member list — a 10^6-copy boilerplate
-        # bucket is dropped from counts alone)
-        widths = banded.groupBy("band", "band_hash").agg(
-            F.count("*").alias("_w")
-        )
-        banded = (
-            banded.join(widths, ["band", "band_hash"])
-            .filter(F.col("_w") <= max_bucket)
-            .drop("_w")
-        )
-    # Pair generation as ONE aggregation + in-place pair explode instead
-    # of the former self-join (round-7 restructure, value-identical:
-    # same (a, b), a < b, same-bucket candidate set — oracle-verified).
-    # The self-join evaluated the banded subplan once per side (plus once
-    # per side under the widths join — 4 evaluations of the band-hash
-    # projection, measured as the two dominant warm stages at sf1.0),
-    # and its SMJ sorted both copies. Realized plan now
-    # (plans/r07/q4_minhash_dedup_after.txt): banded evaluated TWICE
-    # (widths + main side), the widths pre-filter joins as a broadcast,
-    # and the collect_list aggregate pays the single (band, band_hash)
-    # exchange that replaces the self-join's two sorted ones. Bucket
-    # width is already capped, so the collected id list is bounded
-    # (<= max_bucket) and the explode is the same candidate volume the
-    # join produced.
-    pair_structs = F.expr(
-        "flatten(transform(_ids, (x, i) -> "
-        "transform(slice(_ids, i + 2, greatest(size(_ids) - i - 1, 0)), "
-        "y -> struct(x AS a, y AS b))))"
-    )
-    cands = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("_ids"))
-        .filter(F.size("_ids") >= 2)
-        .select(F.explode(pair_structs).alias("_p"))
-        .select(F.col("_p.a").alias("a"), F.col("_p.b").alias("b"))
-        .filter(F.col("a") < F.col("b"))  # dup-id pathology guard
-        .distinct()
+    # Plan: banded is evaluated twice (the width count and the main
+    # side); the collect_list aggregate pays the one (band, band_hash)
+    # exchange, and the signatures join back for verification.
+    cands = _bucket_pairs(banded, ["band", "band_hash"], "doc_id").select(
+        F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b")
     )
     sa = sigs.select(F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"))
@@ -273,40 +277,44 @@ def minhash_lsh_pairs(
 # ----------------------------------------------------------------- simhash
 
 
-def simhash_df(df: DataFrame, col: str = "text", id_col: str = "doc_id",
-               hash_mode: str = "stable") -> DataFrame:
+def simhash_df(df: DataFrame, col: str = "text",
+               id_col: str = "doc_id") -> DataFrame:
     """(doc_id, simhash) via an Arrow-batched ``arrow_udf``.
 
-    ``hash_mode``:
-
-    - ``"stable"`` (default, production): ``pd.util.hash_array`` token
-      hashes (SipHash, fixed key — deterministic across executor
-      processes, C speed).
-    - ``"md5"`` (oracle): token hash = first 8 bytes of ``md5(token)``,
-      big-endian — bit b equals ``(('0x' || substr(md5(t),1,16))::UBIGINT
-      >> b) & 1`` in DuckDB, so the whole signature is reproducible in
-      ANSI SQL for the driver's correctness gate. Same vote/banding
-      machinery either way.
+    Token hash = first 8 bytes of ``md5(token)``, big-endian — bit b
+    equals ``(('0x' || substr(md5(t),1,16))::UBIGINT >> b) & 1`` in
+    DuckDB, so the whole signature is reproducible in ANSI SQL for the
+    driver's correctness gate.
 
     A null or token-free text has signature 0.
     """
-    simhash = _simhash_md5 if hash_mode == "md5" else _simhash_stable
     return fan_out(df.select(F.col(id_col).alias("doc_id"), F.col(col))).select(
-        "doc_id", simhash(F.col(col)).alias("simhash")
+        "doc_id", _simhash(F.col(col)).alias("simhash")
     )
 
 
-def _simhash_batch(texts: pa.Array, token_hashes) -> pa.Array:
-    """Whole-batch vectorized simhash: ``token_hashes`` maps the batch's
-    flat token list to one uint64 per token, and the per-bit votes for ALL
-    documents in the Arrow batch are computed with one ``unpackbits`` +
+def _md5_tokens(tokens: list) -> np.ndarray:
+    """First 8 md5 digest bytes, big-endian, once per UNIQUE token — so bit
+    b of a token hash is ``(h >> b) & 1``, matching DuckDB's hex-prefix
+    cast exactly."""
+    import hashlib
+
+    h = {t: int.from_bytes(hashlib.md5(t.encode("utf-8")).digest()[:8], "big")
+         for t in set(tokens)}
+    return np.fromiter((h[t] for t in tokens), np.uint64, len(tokens))
+
+
+@arrow_udf(LongType())
+def _simhash(texts: pa.Array) -> pa.Array:
+    """Whole-batch vectorized simhash: the per-bit votes for ALL documents
+    in the Arrow batch are computed with one ``unpackbits`` +
     ``add.reduceat`` pass instead of per-document Python loops."""
     token_lists = [(t or "").lower().split() for t in texts.to_pylist()]
     counts = np.array([len(ts) for ts in token_lists], dtype=np.int64)
     out = np.zeros(len(token_lists), dtype=np.int64)
     nz = counts > 0
     if nz.any():
-        hs = token_hashes([tok for ts in token_lists for tok in ts])
+        hs = _md5_tokens([tok for ts in token_lists for tok in ts])
         # N×64 bit matrix via byte view (little-endian: bit b of the value
         # is column b after per-byte unpack with bitorder='little')
         bits = np.unpackbits(
@@ -323,44 +331,20 @@ def _simhash_batch(texts: pa.Array, token_hashes) -> pa.Array:
     return pa.array(out)
 
 
-def _siphash_tokens(tokens: list) -> np.ndarray:
-    """``pd.util.hash_array`` (SipHash with a fixed key — deterministic
-    across processes, C speed)."""
-    return pd.util.hash_array(np.array(tokens, dtype=object))
-
-
-def _md5_tokens(tokens: list) -> np.ndarray:
-    """First 8 md5 digest bytes, big-endian, once per UNIQUE token — so bit
-    b of a token hash is ``(h >> b) & 1``, matching DuckDB's hex-prefix
-    cast exactly."""
-    import hashlib
-
-    h = {t: int.from_bytes(hashlib.md5(t.encode("utf-8")).digest()[:8], "big")
-         for t in set(tokens)}
-    return np.fromiter((h[t] for t in tokens), np.uint64, len(tokens))
-
-
-@arrow_udf(LongType())
-def _simhash_stable(texts: pa.Array) -> pa.Array:
-    return _simhash_batch(texts, _siphash_tokens)
-
-
-@arrow_udf(LongType())
-def _simhash_md5(texts: pa.Array) -> pa.Array:
-    return _simhash_batch(texts, _md5_tokens)
-
-
 def simhash_near_dups(df: DataFrame, col: str = "text", id_col: str = "doc_id",
-                      max_hamming: int = 3, hash_mode: str = "stable") -> DataFrame:
+                      max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ max_hamming.
 
     Pigeonhole banding: split 64 bits into (max_hamming+1) blocks; any pair
-    within distance k agrees exactly on ≥1 block → equi-join per block,
-    then exact Hamming verification via bit_count(xor).
+    within distance k agrees exactly on ≥1 block → candidates share a
+    (block, block_val) bucket (buckets wider than :data:`MAX_BUCKET` are
+    dropped), then exact Hamming verification via bit_count(xor). The
+    simhash travels with the id in each bucket member, so verification
+    needs no join back.
     """
     n_blocks = max_hamming + 1
     width = 64 // n_blocks
-    sh = simhash_df(df, col, id_col, hash_mode=hash_mode).cache()
+    sh = simhash_df(df, col, id_col).cache()
 
     def block_val(b: int):
         shifted = F.shiftrightunsigned(F.col("simhash"), b * width)
@@ -374,36 +358,13 @@ def simhash_near_dups(df: DataFrame, col: str = "text", id_col: str = "doc_id",
             F.array(*[block_val(b) for b in range(n_blocks)])
         ).alias("block", "block_val"),
     )
-    # Same round-7 restructure as minhash_lsh_pairs: one aggregation +
-    # in-place pair explode instead of a banded self-join (which
-    # evaluated the banded subplan once per side). The simhash travels
-    # WITH the id inside the collected struct — signatures are one
-    # bigint, so Hamming verification needs no join back at all. Pairs
-    # are ordered by doc_id (struct sort_array orders by leading field),
-    # matching the former l.doc_id < r.doc_id.
-    pair_structs = F.expr(
-        "flatten(transform(_ids, (x, i) -> "
-        "transform(slice(_ids, i + 2, greatest(size(_ids) - i - 1, 0)), "
-        "y -> struct(x.doc_id AS a, y.doc_id AS b, "
-        "x.simhash AS ha, y.simhash AS hb))))"
-    )
-    cands = (
-        banded.groupBy("block", "block_val")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "simhash"))
-            ).alias("_ids")
-        )
-        .filter(F.size("_ids") >= 2)
-        .select(F.explode(pair_structs).alias("_p"))
-        .select("_p.a", "_p.b", "_p.ha", "_p.hb")
-        .filter(F.col("a") < F.col("b"))  # dup-id pathology guard
-        .distinct()
-    )
+    pairs = _bucket_pairs(banded, ["block", "block_val"], "doc_id", "simhash")
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return _register_cached(
-        cands.withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming"),
+        pairs.select(
+            F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"),
+            hamming.alias("hamming"),
+        ).filter(F.col("hamming") <= max_hamming),
         sh,
     )
 
@@ -454,7 +415,6 @@ def drop_repeated_spans(
     min_df: int = 2,
     spans_col: str = "spans",
     id_col: str = "doc_id",
-    how: str = "broadcast",
     max_blocklist: int = 1_000_000,
 ) -> DataFrame:
     """Corpus-frequency boilerplate removal over interleaved documents.
@@ -463,27 +423,23 @@ def drop_repeated_spans(
     least ``min_df`` DISTINCT documents (repeated nav bars, footers,
     cookie banners — the classic web-pipeline "repeated line removal"
     pattern, applied at the span granularity of the north-rule table).
-    Media spans always pass through; surviving spans keep their original
-    ``offset`` values and array order; docs whose spans all drop remain
-    as rows with an empty array. Output schema == input schema.
+    Media spans and null-text spans always pass through; surviving spans
+    keep their original ``offset`` values and array order; docs whose
+    spans all drop, or whose spans array is NULL, come out as rows with
+    an empty array. Output schema == input schema.
 
     Beyond-reference training-pipeline op (no HTMLReader analog).
 
-    Scale posture (``how="broadcast"``, default): the frequency count is
-    one explode + hash-aggregate on (key) — the unavoidable global
-    aggregation — but the REASSEMBLY shuffle is avoided entirely: the
-    blocklist (keys with df >= min_df, capped at ``max_blocklist`` most
-    frequent) is collapsed to a single array row and broadcast, and the
-    big table is filtered in place with a higher-order ``filter`` lambda
-    (scan -> BroadcastNestedLoopJoin(1 row) -> project; zero exchanges
-    on the wide side). Boilerplate blocklists are small by nature — keys
-    must clear min_df — so the array fits comfortably in an executor.
-    ``how="shuffle"`` is the unbounded-blocklist fallback: posexplode ->
-    left-anti join on the key -> collect_list reassembly (two wide
-    shuffles; use only when the blocklist genuinely cannot be bounded).
+    Scale posture: the frequency count is one explode + hash-aggregate on
+    (key) — the unavoidable global aggregation — but there is no
+    reassembly shuffle: the blocklist (keys with df >= min_df, capped at
+    the ``max_blocklist`` most frequent) is collapsed to a single array
+    row and broadcast, and the big table is filtered in place with a
+    higher-order ``filter`` lambda (scan -> BroadcastNestedLoopJoin(1 row)
+    -> project; zero exchanges on the wide side). Boilerplate blocklists
+    are small by nature — keys must clear min_df — and ``max_blocklist``
+    bounds the broadcast array.
     """
-    if how not in ("broadcast", "shuffle"):
-        raise ValueError(f"how must be 'broadcast' or 'shuffle', got {how!r}")
     s = F.col("s")
     keys = (
         df.select(F.col(id_col).alias("_id"), F.explode(spans_col).alias("s"))
@@ -492,44 +448,16 @@ def drop_repeated_spans(
         .groupBy("k")
         .agg(F.count_distinct("_id").alias("df"))
         .filter(F.col("df") >= min_df)
-        # null-text spans are never blocklist keys: broadcast mode's
-        # collect_list silently dropped the null key while shuffle mode's
-        # eqNullSafe anti-join matched it — filter here so BOTH modes
-        # keep null-text spans (round-6 ADVICE value-parity fix)
+        # null-text spans are never blocklist keys (array_contains with a
+        # null never matches) and take no max_blocklist slot
         .filter(F.col("k").isNotNull())
     )
-    if how == "shuffle":
-        ex = df.select(
-            F.col(id_col), F.posexplode(spans_col).alias("_pos", "s")
-        )
-        kept = ex.join(
-            keys.select("k"),
-            _norm_expr(s["text"]).eqNullSafe(F.col("k"))
-            & (s["kind"] == "text"),
-            "left_anti",
-        )
-        packed = kept.groupBy(id_col).agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "s"))),
-                lambda x: x["s"],
-            ).alias(spans_col)
-        )
-        # docs whose spans all dropped (or were empty) must survive with []
-        empty = F.array().cast(df.schema[spans_col].dataType)
-        return (
-            df.select(id_col)
-            .join(packed, id_col, "left")
-            .select(
-                id_col, F.coalesce(spans_col, empty).alias(spans_col)
-            )
-        )
     block = (
         keys.orderBy(F.col("df").desc(), "k")
         .limit(max_blocklist)
         .agg(F.collect_list("k").alias("_block"))
     )
-    # coalesce: a NULL spans array must come out as [] like the shuffle
-    # mode's reassembly produces (round-6 ADVICE value-parity fix)
+    # coalesce: a NULL spans array comes out as []
     keep = F.coalesce(
         F.filter(
             F.col(spans_col),

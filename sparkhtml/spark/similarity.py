@@ -1,17 +1,18 @@
 """Similarity search over an embedding column (``array<float>``).
 
 Training-data-pipeline layer: brute-force cosine top-k as the exact
-baseline, random-hyperplane LSH bucketing as the scale path, and
-embedding-cosine near-duplicate pairs.
+baseline, :class:`IVFIndex` (k-means coarse quantizer) as the ANN path,
+and embedding-cosine near-duplicate pairs over random-hyperplane LSH
+buckets.
 
 Scale posture: the query vector broadcasts as a literal array (tiny);
 brute-force is a single scan + JVM `aggregate`/`zip_with` dot products +
 one top-k (`ORDER BY ... LIMIT k`, executed as TakeOrderedAndProject —
-no full sort). The LSH path buckets vectors by sign-bit signature so the
-near-dup self-join is an equi-join on the bucket key; at 10^12 rows the
-bucket key doubles as the Iceberg partition column so candidate pairs
-co-locate at rest. :class:`IVFIndex` is the k-means variant of the same
-shape: assign → filter/join on centroid id.
+no full sort). The near-dup path buckets vectors by sign-bit signature so
+its self-join is an equi-join on the bucket key; at 10^12 rows the bucket
+key doubles as the Iceberg partition column so candidate pairs co-locate
+at rest. :class:`IVFIndex` assigns each vector a centroid id and a query
+filters/joins on it.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from . import _register_cached
+from .dedup import _capped
 from .partitioning import fan_out
 
 
@@ -256,34 +258,6 @@ def hyperplane_signature(
     return sig
 
 
-def lsh_topk(
-    df: DataFrame, query: list[float], k: int = 10,
-    vec_col: str = "embedding", id_col: str = "vec_id",
-    n_planes: int = 12, seed: int = 42, probe_hamming: int = 1,
-) -> DataFrame:
-    """Approximate top-k: scan only buckets within ``probe_hamming`` bits
-    of the query's bucket (multi-probe), exact cosine inside.
-
-    Recall/latency trade: n_planes buckets the corpus 2^n ways; probing
-    Hamming≤1 reads (1 + n_planes)/2^n of the data in expectation.
-    """
-    dim = len(query)
-    sig = hyperplane_signature(vec_col, dim, n_planes, seed)
-    bucketed = df.withColumn("_bucket", sig)
-
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-    qsig = 0
-    for b, plane in enumerate(planes):
-        if sum(p * float(x) for p, x in zip(plane, query)) >= 0:
-            qsig |= 1 << b
-    probes = [qsig]
-    if probe_hamming >= 1:
-        probes += [qsig ^ (1 << b) for b in range(n_planes)]
-    cand = bucketed.filter(F.col("_bucket").isin(probes))
-    return cosine_topk(cand, query, k, vec_col, id_col)
-
-
 class IVFIndex:
     """IVF (inverted-file) ANN: a k-means coarse quantizer assigns every
     vector to a centroid; queries probe only the ``n_probe`` nearest
@@ -358,40 +332,33 @@ class IVFIndex:
 def cosine_near_dup_pairs(
     df: DataFrame, threshold: float = 0.95, *, dim: int,
     vec_col: str = "embedding", id_col: str = "vec_id",
-    n_planes: int = 12, seed: int = 42, max_bucket: int | None = 10_000,
+    n_planes: int = 12, seed: int = 42,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH bucket self-join.
 
     Same-bucket candidates only (sign-LSH collision probability rises with
-    cosine), exact cosine verification inside buckets.
+    cosine), exact cosine verification inside buckets. Buckets wider than
+    :data:`~sparkhtml.spark.dedup.MAX_BUCKET` are dropped, as in the other
+    LSH operators: one dense embedding cluster (near-identical boilerplate
+    pages) would make the self-join quadratic otherwise.
 
     ``dim`` is required (driver-side hyperplane constants need it; deriving
     it with ``.first()`` would run a job in the hot path).
-
-    ``max_bucket`` caps bucket width, mirroring ``minhash_lsh_pairs``: one
-    dense embedding cluster (near-identical boilerplate pages) makes the
-    self-join quadratic otherwise. Oversized buckets are dropped — exact
-    dedup runs first in the documented pipeline (SCALE.md §5) and mops up
-    identical payloads.
     """
     sig = hyperplane_signature(vec_col, dim, n_planes, seed)
     # Norm is projected ONCE per row here, before the self-join: computing
     # it inside the join output would re-run the O(dim) aggregate per
     # candidate PAIR — exactly the volume the bucket cap protects.
-    b = df.select(
+    cached = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         sig.alias("bucket"),
         F.greatest(_norm_col(vec_col), F.lit(1e-12)).alias("norm"),
     ).cache()
-    cached_b = b
-    if max_bucket is not None:
-        widths = b.groupBy("bucket").agg(F.count("*").alias("_w"))
-        b = (
-            b.join(widths, "bucket")
-            .filter(F.col("_w") <= max_bucket)
-            .drop("_w")
-        )
+    # A self-join, not dedup._bucket_pairs: members carry a dim-float
+    # vector, so a collected member list would copy O(w·dim) into every
+    # exploded pair row, while the join streams the same pairs.
+    b = _capped(cached, ["bucket"])
     l, r = b.alias("l"), b.alias("r")
     cos = dot_col(F.col("l.v"), F.col("r.v")) / (
         F.col("l.norm") * F.col("r.norm")
@@ -405,5 +372,5 @@ def cosine_near_dup_pairs(
         .withColumn("cosine", F.round(cos, 6))
         .filter(F.col("cosine") >= threshold)
         .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"), "cosine"),
-        cached_b,
+        cached,
     )

@@ -31,10 +31,6 @@ from . import tokenizer as tz
 from .entities import consume_char_ref
 from .tokenizer import Tokenizer
 
-# complete attr-less lowercase start/end tag, matched in one step by the
-# fused in-body loop (_turbo_in_body)
-_RE_TURBO_TAG = re.compile(r"(/?)([a-z][a-z0-9]*)>")
-
 DOCUMENT, ELEMENT, TEXT, COMMENT, DOCTYPE = 0, 1, 2, 3, 4
 NS_HTML, NS_MATHML, NS_SVG = 0, 1, 2
 
@@ -294,10 +290,6 @@ MATHML_ATTR_FIX = {"definitionurl": "definitionURL"}
 
 MATHML_TEXT_INTEGRATION = frozenset("mi mo mn ms mtext".split())
 HTML_INTEGRATION_SVG = frozenset("foreignObject desc title".split())
-
-RAWTEXT_ELEMENTS = frozenset(
-    "style script xmp iframe noembed noframes noscript".split()
-)
 
 _WS = "\t\n\x0c\r "
 _WS_SET = frozenset("\t\n\x0c\r ")

@@ -158,9 +158,14 @@ def test_perfbench_tracing_targets_exist():
 def test_spark_layer_crosses_into_python_through_arrow_only():
     """sparkhtml/ has one way into Python: Arrow (``arrow_udf``,
     ``mapInArrow``, ``applyInArrow``). A pandas crossing is a second idiom
-    with its own null and dtype rules, so no module there may name one."""
+    with its own null and dtype rules, so no module there may name one,
+    nor import pandas at all."""
     banned = {"pandas_udf", "mapInPandas", "applyInPandas",
               "applyInPandasWithState"}
+
+    def is_banned(name: str) -> bool:
+        return name.split(".")[-1] in banned or name.split(".")[0] == "pandas"
+
     out = subprocess.run(["git", "ls-files", "sparkhtml/*.py"], cwd=ROOT,
                          check=True, capture_output=True, text=True).stdout
     hits = []
@@ -173,10 +178,12 @@ def test_spark_layer_crosses_into_python_through_arrow_only():
             elif isinstance(node, ast.Attribute):
                 name = node.attr
             elif isinstance(node, (ast.Import, ast.ImportFrom)):
-                name = next((a.name for a in node.names
-                             if a.name.split(".")[-1] in banned), None)
+                names = [a.name for a in node.names]
+                if isinstance(node, ast.ImportFrom) and node.module:
+                    names.append(node.module)
+                name = next((n for n in names if is_banned(n)), None)
             else:
                 continue
-            if name is not None and name.split(".")[-1] in banned:
+            if name is not None and is_banned(name):
                 hits.append(f"{path}:{node.lineno}: {name}")
     assert not hits, "\n".join(hits)

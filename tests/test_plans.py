@@ -263,6 +263,27 @@ def test_drop_repeated_spans_broadcast_plan(spark):
     assert "posexplode" not in p.lower(), p
 
 
+def test_lsh_pairs_stream_from_bucket_members(spark):
+    """minhash and simhash pairs come from a posexplode of each bucket's
+    sorted member list followed by an explode of the members after each
+    one: no ``flatten(transform(...))`` array holds a bucket's whole pair
+    list in one row."""
+    import re
+
+    from sparkhtml.spark.dedup import minhash_lsh_pairs, simhash_near_dups
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    for q in (minhash_lsh_pairs(docs), simhash_near_dups(docs)):
+        p = plan(q)
+        assert "flatten(" not in p, p
+        # the tree string lists a consumer before its input: the pair
+        # explode sits directly over the member posexplode
+        gens = re.findall(r"Generate (posexplode|explode)\((\w+)", p)
+        assert gens[:2] == [("explode", "slice"), ("posexplode", "_m")], p
+
+
 def test_cosine_neardup_norms_precomputed(spark):
     """cosine_near_dup_pairs must evaluate the O(dim) norm aggregate once
     per ROW (projected before the bucket self-join), not once per candidate

@@ -253,10 +253,6 @@ def test_drop_repeated_spans(spark):
     assert [s.text for s in out["d2"]] == ["unique two"]
     # all-dropped and originally-empty docs both survive as empty arrays
     assert out["d3"] == [] and out["d4"] == []
-    # shuffle fallback path is semantics-identical
-    a = drop_repeated_spans(df, min_df=2).orderBy("doc_id").collect()
-    b = drop_repeated_spans(df, min_df=2, how="shuffle").orderBy("doc_id").collect()
-    assert a == b
     # min_df above any frequency: identity; min_df=1: only media survive
     ident = drop_repeated_spans(df, min_df=10).orderBy("doc_id").collect()
     assert [len(r.spans) for r in ident] == [3, 2, 1, 0]
@@ -265,10 +261,8 @@ def test_drop_repeated_spans(spark):
 
 
 def test_drop_repeated_spans_null_edges_mode_parity(spark):
-    """Round-7 value-parity fix (round-6 ADVICE): NULL spans arrays and
-    null-TEXT spans must come out identical from both strategies —
-    previously broadcast kept null-text spans while shuffle dropped
-    them, and a NULL array came back NULL vs []."""
+    """NULL spans arrays come out as [], and null-TEXT spans are never
+    blocklist keys, so they survive even when they repeat."""
     from sparkhtml.spark.dedup import drop_repeated_spans
 
     rows = [
@@ -282,13 +276,11 @@ def test_drop_repeated_spans_null_edges_mode_parity(spark):
     )
     df = spark.createDataFrame(rows, schema)
     a = drop_repeated_spans(df, min_df=2).orderBy("doc_id").collect()
-    b = drop_repeated_spans(df, min_df=2, how="shuffle").orderBy("doc_id").collect()
-    assert a == b
     out = {r.doc_id: r.spans for r in a}
     # null-text spans survive (never blocklist keys); repeated line drops
     assert [s.text for s in out["d1"]] == [None]
     assert [s.text for s in out["d2"]] == [None]
-    # NULL spans array comes back as [] in both modes
+    # NULL spans array comes back as []
     assert out["d3"] == []
 
 
@@ -429,6 +421,22 @@ def test_simhash(spark):
     assert pairs == [(1, 2, 0)]
 
 
+def test_simhash_bucket_cap(spark, monkeypatch):
+    """A simhash bucket wider than MAX_BUCKET is dropped whole: a 40-clone
+    identical-text cluster yields no clone pairs (780 uncapped), while a
+    separate two-doc dup pair still comes back."""
+    from sparkhtml.spark import dedup
+
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 10)
+    rows = [(i, "the same boilerplate page") for i in range(40)]
+    rows += [(100, "alpha beta gamma delta"), (101, "alpha beta gamma delta"),
+             (102, "epsilon zeta eta theta iota kappa")]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    pairs = [(r.a, r.b, r.hamming) for r in
+             dedup.simhash_near_dups(df, max_hamming=0).collect()]
+    assert pairs == [(100, 101, 0)]
+
+
 def test_minhash_hash_modes_agree(spark):
     """The md5 oracle mode and the xxhash64 production mode share all
     machinery but the hash call: on the sf0.001 corpus both produce the
@@ -473,13 +481,9 @@ def test_minhash_hash_modes_agree(spark):
 
 
 def test_simhash_hash_modes_agree(spark):
-    """md5 (oracle) and SipHash (production) simhash modes: identical
-    token multisets give identical signatures under ANY token hash, so
-    every identical-multiset pair (injected dups included) must appear in
-    BOTH modes' Hamming-0 output. The modes legitimately differ on
-    near-identical organic multisets (whether a one-token delta flips a
-    tied vote depends on the hash), so full pair-set equality is NOT the
-    invariant."""
+    """Identical token multisets give identical signatures under any token
+    hash, so every identical-multiset pair (injected dups included) must
+    appear in the md5 simhash's Hamming-0 output."""
     from sparkhtml.spark.dedup import simhash_near_dups
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
@@ -511,40 +515,36 @@ def test_simhash_hash_modes_agree(spark):
         for x in docs.filter(F.col("doc_id") % 10 == 0).collect()
     }
     assert injected <= same_multiset
-    for mode in ("stable", "md5"):
-        pairs = {
-            (x.a, x.b)
-            for x in simhash_near_dups(corpus, max_hamming=0, hash_mode=mode)
-            .select("a", "b")
-            .collect()
-        }
-        assert same_multiset <= pairs, mode
+    pairs = {
+        (x.a, x.b)
+        for x in simhash_near_dups(corpus, max_hamming=0)
+        .select("a", "b")
+        .collect()
+    }
+    assert same_multiset <= pairs
 
 
-def test_similarity(spark):
-    from sparkhtml.spark.similarity import (
-        cosine_near_dup_pairs, cosine_topk, lsh_topk,
-    )
+def test_similarity(spark, monkeypatch):
+    from sparkhtml.spark import dedup
+    from sparkhtml.spark.similarity import cosine_near_dup_pairs, cosine_topk
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     q = [float(x) for x in emb.filter("vec_id = 3").first()["embedding"]]
     top = cosine_topk(emb, q, 5).collect()
     assert top[0].vec_id == 3 and abs(top[0].cosine - 1.0) < 1e-6
     assert all(top[i].cosine >= top[i + 1].cosine for i in range(4))
-    # LSH recall: the self-match must survive bucketing
-    approx = lsh_topk(emb, q, 5).collect()
-    assert approx and approx[0].vec_id == 3
     dup = emb.filter("vec_id = 3").withColumn("vec_id", F.lit(999999))
     pairs = cosine_near_dup_pairs(emb.unionByName(dup), 0.9999, dim=64).collect()
     assert any({r.a, r.b} == {3, 999999} for r in pairs)
-    # mega-cluster guard: a bucket wider than max_bucket is dropped, so a
+    # mega-cluster guard: a bucket wider than MAX_BUCKET is dropped, so a
     # dense clone cluster cannot go quadratic
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 10)
     clones = emb.limit(1).crossJoin(spark.range(40)).select(
         (F.col("vec_id") + 5000 + F.col("id")).alias("vec_id"),
         *[c for c in emb.columns if c != "vec_id"],
     )
     capped = cosine_near_dup_pairs(
-        emb.unionByName(clones), 0.9999, dim=64, max_bucket=10
+        emb.unionByName(clones), 0.9999, dim=64
     ).collect()
     assert not any(r.a >= 5000 and r.b >= 5000 for r in capped)
 
