@@ -1,259 +1,224 @@
-"""Scaling-efficiency evidence: the same extraction job at local[N] and
-local[4N] on identical input (sandbox stand-in for N vs 4N executors,
-BASELINE.json north_rule: efficiency ≥ 0.8).
+"""N→4N scaling of the production job (BASELINE.json north_rule: ≥0.8).
 
-Each measurement runs in its own subprocess (a JVM can't change master);
-the corpus is the sf documents table replicated REPLICAS× with distinct
-doc_ids so the parse work is large enough that per-job scheduling overhead
-doesn't dominate the ratio. Writes BENCH/BASELINE.md.
+Times ``spark-submit --master local[K] --py-files dist/sparkhtml.zip
+scripts/run_extract.py`` at K = N and K = 4N, N = nproc // 4 (at least
+1), over two seeded perfbench inputs: HTML spans with the pathological
+stratum routed to the straggler pass (as in perfbench's ``html_job``),
+and PDF blobs. The job's own column switch picks the worker.
 
-Usage: python BENCH/run_scaling.py [--n 8] [--sf /root/testdata/sf0.1]
-                                   [--replicas 40]
+Beside each Spark leg runs a control: a spawn ``multiprocessing`` pool of
+K processes applying the job's Arrow worker (``pipeline._extract_arrow``
+or ``pdf._parse_arrow``) to the same parquet record batches, with no JVM.
+The control's efficiency is what the silicon allows; Spark's raw
+efficiency divided by it is what the framework keeps.
+
+Every leg runs in fresh processes; per round the four legs of a format
+(Spark N, Spark 4N, control N, control 4N) run back to back, in reversed
+order on odd rounds. A Spark leg's throughput is input docs ÷ the job's
+``wall_s``; its serial part is ``wall_s`` minus the waves' ``wall_ms``
+from ``_manifest/chunk-*.json`` (straggler pass, projections, planning).
+A leg whose ``rows + n_stragglers`` is not the input's doc count stops
+the run.
+
+Overwrites BENCH/SCALING.json.
+
+Usage: python BENCH/run_scaling.py [--rounds 5]
 """
 
 from __future__ import annotations
 
 import argparse
+import itertools
 import json
+import multiprocessing as mp
 import os
+import shutil
+import statistics
 import subprocess
 import sys
+import time
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-WORKER = r"""
-import json, os, sys, time
-sys.path.insert(0, %(repo)r)
-from pyspark.sql import functions as F
-from sparkhtml.spark.session import get_spark
-from sparkhtml.spark.pipeline import extract_spans_df
-import __spark_entry__ as entry
+from perfbench.inputs import (  # noqa: E402
+    FILES_PER_CORE, LONG_DOC_CHARS, prepare)
 
-cpus = int(sys.argv[1]); sf_dir = sys.argv[2]; replicas = int(sys.argv[3])
-doc_scale = int(sys.argv[4]) if len(sys.argv) > 4 else 1
-spark = get_spark(
-    app_name="scaling-%%d" %% cpus, cpus=cpus,
-    # wave-tail killers: no locality stall between tasks, and enough
-    # partitions that the last wave is narrow relative to the job
-    extra_conf={"spark.locality.wait": "0s"},
-)
-spark.sparkContext.setLogLevel("ERROR")
-docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-rep = spark.range(replicas).select(F.col("id").alias("rep"))
-# doc_scale > 1 repeats the body to web-page-sized documents: the sf
-# corpus averages ~360 chars/doc, ~20x below a real page, which makes
-# framework-per-row costs look 20x worse than they are at 100 TB
-body = F.concat(
-    F.lit('<h2>Sec</h2><p>'), F.col("text"),
-    F.lit('</p><ul><li>one item here<li>two items here</ul>'),
-)
-if doc_scale > 1:
-    body = F.concat_ws("", F.array_repeat(body, doc_scale))
-corpus = (
-    docs.crossJoin(rep)
-    .select(
-        F.concat(F.col("doc_id").cast("string"), F.lit("-"), F.col("rep")).alias("doc_id"),
-        F.concat(
-            F.lit('<nav><a href="/">home</a> <a href="/x">x</a></nav>'),
-            body,
-            F.lit('<footer>foot</footer>'),
-        ).alias("text"),
-    )
-)
-inter = corpus.select(
-    "doc_id",
-    F.array(
-        F.struct(F.lit("text").alias("kind"), F.col("text").alias("text"),
-                 F.lit(None).cast("string").alias("media_ref"), F.lit(0).alias("offset")),
-        F.struct(F.lit("media").alias("kind"), F.lit(None).cast("string").alias("text"),
-                 F.concat(F.lit("m-"), F.col("doc_id")).alias("media_ref"), F.lit(1).alias("offset")),
-    ).alias("spans"),
-).repartition(cpus * 4, "doc_id")
-inter.cache()
-n = inter.count()
-# warmup: one full pass spins up every Python worker (daemon fork + imports)
-# so the timed runs measure steady-state throughput — the regime a
-# long-running extraction job actually operates in
-extract_spans_df(inter).write.format("noop").mode("overwrite").save()
-dt = None
-for _ in range(2):
-    t0 = time.perf_counter()
-    extract_spans_df(inter).write.format("noop").mode("overwrite").save()
-    d = time.perf_counter() - t0
-    dt = d if dt is None else min(dt, d)
-print(json.dumps({"cpus": cpus, "n_docs": n, "secs": round(dt, 2),
-                  "docs_per_sec": round(n / dt, 1)}))
-spark.stop()
-""" % {"repo": REPO}
+BUILD = os.path.join(REPO, ".bench_build", "scaling")
+OUT = os.path.join(REPO, "BENCH", "SCALING.json")
+SEED = 1
+CHUNKS = 16
+# Docs per control task: small enough that a pool of 4N balances the
+# pathological docs dynamically, as the job's salted repartition does.
+CONTROL_BATCH = 64
+# (docs, pathological rate, extra job args) per input kind. A pass
+# carries fixed costs that more cores do not shrink (cold-JVM planning,
+# Python worker start, the straggler pass); on one core these sizes make
+# the pass ~1 min, so they are a minority of it.
+FORMATS = {
+    "html": (24000, 0.005, ["--straggler-chars", str(LONG_DOC_CHARS)]),
+    "pdf": (4000, 0.0, []),
+}
 
 
-CONTROL = r"""
-# Hardware control: the SAME extraction work via raw multiprocessing —
-# no JVM, no Arrow, no scheduler. On a single box, CPU frequency droop
-# under all-core load caps what ANY framework can scale to; this measures
-# that ceiling so the Spark number can be judged against silicon, not
-# against an unreachable 1.0.
-import json, sys, time
-import multiprocessing as mp
-sys.path.insert(0, %(repo)r)
-
-def _work(args):
-    texts, = args
-    from sparkhtml.extract import extract_spans
-    n = 0
-    for t in texts:
-        extract_spans([
-            {"kind": "text", "text": t, "media_ref": None, "offset": 0},
-            {"kind": "media", "text": None, "media_ref": "m", "offset": 1},
-        ])
-        n += 1
-    return n
-
-if __name__ == "__main__":
-    cpus = int(sys.argv[1]); sf_dir = sys.argv[2]; replicas = int(sys.argv[3])
-    doc_scale = int(sys.argv[4]) if len(sys.argv) > 4 else 1
-    import pyarrow.parquet as pq
-    base = pq.read_table(f"{sf_dir}/documents.parquet", columns=["text"])
-    texts = [
-        '<nav><a href="/">home</a> <a href="/x">x</a></nav>'
-        + ('<h2>Sec</h2><p>' + t
-           + '</p><ul><li>one item here<li>two items here</ul>') * doc_scale
-        + '<footer>foot</footer>'
-        for t in base.column("text").to_pylist()
-    ] * replicas
-    chunks = [(texts[i::cpus * 4],) for i in range(cpus * 4)]
-    with mp.Pool(cpus) as pool:
-        pool.map(_work, chunks[:cpus])  # warmup: import+fork every worker
-        dt = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            total = sum(pool.map(_work, chunks))
-            d = time.perf_counter() - t0
-            dt = d if dt is None else min(dt, d)
-    print(json.dumps({"cpus": cpus, "n_docs": total, "secs": round(dt, 2),
-                      "docs_per_sec": round(total / dt, 1)}))
-""" % {"repo": REPO}
+def efficiency(lo: float, hi: float) -> float:
+    """Throughput scaling efficiency from N to 4N: ``hi / (4 × lo)``."""
+    return hi / (4 * lo)
 
 
-def run(cpus: int, sf_dir: str, replicas: int, control: bool = False,
-        doc_scale: int = 1) -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", CONTROL if control else WORKER,
-         str(cpus), sf_dir, str(replicas), str(doc_scale)],
-        capture_output=True, text=True, cwd=REPO, timeout=3600,
-    )
-    lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
-    if not lines:
-        raise RuntimeError(f"worker failed: {out.stderr[-2000:]}")
-    return json.loads(lines[-1])
+def spread(values: list[float]) -> dict:
+    return {"median": round(statistics.median(values), 3),
+            "min": round(min(values), 3), "max": round(max(values), 3)}
+
+
+def _apply_worker(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """One input batch through the job's worker for its columns."""
+    if "payload" in batch.schema.names and "spans" not in batch.schema.names:
+        from sparkhtml.spark import pdf, schemas
+
+        out = pdf._parse_arrow([batch], schemas.to_arrow(schemas.PDF_PARSED))
+    else:
+        from sparkhtml.spark import pipeline
+
+        out = pipeline._extract_arrow([batch])
+    return next(out)
+
+
+def _ready(barrier) -> None:
+    # imported here, before the barrier, so the clock excludes it
+    from sparkhtml.spark import pdf, pipeline  # noqa: F401
+
+    barrier.wait()
+
+
+def control_leg(inp, procs: int) -> tuple[dict, pa.Table]:
+    """The input's batches through ``procs`` spawned workers; the clock
+    starts once every worker has imported the package."""
+    batches = pq.read_table(inp.path).to_batches(max_chunksize=CONTROL_BATCH)
+    ctx = mp.get_context("spawn")
+    barrier = ctx.Barrier(procs + 1)
+    with ctx.Pool(procs, initializer=_ready, initargs=(barrier,)) as pool:
+        barrier.wait()
+        t0 = time.perf_counter()
+        out = list(pool.imap_unordered(_apply_worker, batches))
+        secs = time.perf_counter() - t0
+    table = pa.Table.from_batches(out)
+    return {"docs": table.num_rows, "secs": round(secs, 3),
+            "docs_per_s": round(table.num_rows / secs, 1)}, table
+
+
+def waves_ms(manifest: str) -> int:
+    """Summed wall time of a fresh run's waves: chunks of one wave are
+    consecutive and share the wave's ``wall_ms``."""
+    entries = []
+    for name in sorted(os.listdir(manifest)):
+        if name.startswith("chunk-") and name.endswith(".json"):
+            with open(os.path.join(manifest, name)) as f:
+                entries.append(json.load(f)["wall_ms"])
+    return sum(ms for ms, _ in itertools.groupby(entries))
+
+
+def spark_leg(name: str, inp, cores: int, job_args: list[str],
+              pyfiles: str) -> dict:
+    """One fresh ``spark-submit`` of the job; checks it wrote every doc."""
+    work = os.path.join(BUILD, name)
+    shutil.rmtree(work, ignore_errors=True)
+    os.makedirs(work)
+    out = os.path.join(work, "out")
+    cmd = ["spark-submit", "--master", f"local[{cores}]",
+           "--py-files", pyfiles,
+           os.path.join(REPO, "scripts", "run_extract.py"),
+           "--input", inp.path, "--output", out, "--chunks", str(CHUNKS),
+           "--metrics-output", os.path.join(work, "metrics"), *job_args]
+    proc = subprocess.run(cmd, cwd=work, capture_output=True, text=True,
+                          timeout=3600)
+    lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
+    if proc.returncode != 0 or not lines:
+        raise RuntimeError(f"{name}: job failed (rc {proc.returncode}): "
+                           f"{proc.stderr[-2000:]}")
+    summary = json.loads(lines[-1])
+    written = summary["rows"] + summary["n_stragglers"]
+    if written != inp.n_docs:
+        raise RuntimeError(f"{name}: wrote {written} docs of {inp.n_docs} "
+                           f"({summary})")
+    wall = summary["wall_s"]
+    serial = wall - waves_ms(os.path.join(out, "_manifest")) / 1000
+    return {"docs_per_s": round(inp.n_docs / wall, 1), "wall_s": wall,
+            "serial_s": round(serial, 2)}
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=8)
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--replicas", type=int, default=40)
-    ap.add_argument("--rounds", type=int, default=1,
-                    help="alternate low/high measurements this many times "
-                         "and take the best of each (defends the ratio "
-                         "against box-level interference)")
-    ap.add_argument("--control", action="store_true",
-                    help="also measure the hardware control (same work, "
-                         "raw multiprocessing) at N and 4N")
-    ap.add_argument("--control-replicas", type=int, default=None)
-    ap.add_argument("--doc-scale", type=int, default=1,
-                    help="repeat each document body this many times — the "
-                         "sf corpus is ~360 chars/doc, ~20x below a real "
-                         "page, which inflates framework-per-row costs")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--rounds", type=int, default=5)
     args = ap.parse_args()
+    if args.rounds < 1:
+        ap.error("--rounds must be at least 1")
 
-    lows, highs, clows, chighs = [], [], [], []
-    crep = args.control_replicas or max(1, args.replicas // 4)
-    for _ in range(args.rounds):
-        lows.append(run(args.n, args.sf, args.replicas,
-                        doc_scale=args.doc_scale))
-        highs.append(run(args.n * 4, args.sf, args.replicas,
-                         doc_scale=args.doc_scale))
-        if args.control:
-            clows.append(run(args.n, args.sf, crep, control=True,
-                             doc_scale=args.doc_scale))
-            chighs.append(run(args.n * 4, args.sf, crep, control=True,
-                              doc_scale=args.doc_scale))
-    lo = max(lows, key=lambda r: r["docs_per_sec"])
-    hi = max(highs, key=lambda r: r["docs_per_sec"])
-    eff = hi["docs_per_sec"] / (4 * lo["docs_per_sec"])
-    result = {
-        "low": lo, "high": hi, "scaling_efficiency": round(eff, 3),
-        "low_runs": [r["docs_per_sec"] for r in lows],
-        "high_runs": [r["docs_per_sec"] for r in highs],
+    nproc = len(os.sched_getaffinity(0))
+    n = max(1, nproc // 4)
+    sizes = {"n": n, "4n": 4 * n}
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
+    from make_pyfiles import main as make_pyfiles
+
+    pyfiles = make_pyfiles()
+    inputs = {
+        fmt: prepare(os.path.join(REPO, ".bench_build", "inputs"), fmt,
+                     SEED, docs, FILES_PER_CORE * nproc, rate)
+        for fmt, (docs, rate, _) in FORMATS.items()
     }
-    if args.control:
-        clo = max(clows, key=lambda r: r["docs_per_sec"])
-        chi = max(chighs, key=lambda r: r["docs_per_sec"])
-        ceff = chi["docs_per_sec"] / (4 * clo["docs_per_sec"])
-        result.update({
-            "control_low": clo, "control_high": chi,
-            "control_efficiency": round(ceff, 3),
-            "efficiency_vs_control": round(eff / ceff, 3),
-        })
-    print(json.dumps(result))
+    legs = [(f"{side}_{k}", side, cores)
+            for side in ("spark", "control") for k, cores in sizes.items()]
+    rounds: dict[str, list] = {fmt: [] for fmt in FORMATS}
+    for r in range(args.rounds):
+        for fmt, inp in inputs.items():
+            rec = {}
+            for name, side, cores in legs[::-1] if r % 2 else legs:
+                if side == "spark":
+                    rec[name] = spark_leg(f"{fmt}-{name}", inp, cores,
+                                          FORMATS[fmt][2], pyfiles)
+                else:
+                    rec[name] = control_leg(inp, cores)[0]
+                print(fmt, r, name, rec[name], flush=True)
+            raw = efficiency(rec["spark_n"]["docs_per_s"],
+                             rec["spark_4n"]["docs_per_s"])
+            ctl = efficiency(rec["control_n"]["docs_per_s"],
+                             rec["control_4n"]["docs_per_s"])
+            rec.update(raw_efficiency=round(raw, 3),
+                       control_efficiency=round(ctl, 3),
+                       relative_efficiency=round(raw / ctl, 3))
+            rounds[fmt].append(rec)
 
-    md = f"""# BENCH/BASELINE.md — measured numbers
-
-## Scaling efficiency (north rule: ≥ 0.8 from N to 4N)
-
-Same extraction job (interleaved corpus, {lo['n_docs']:,} docs derived from
-{args.sf}, media spans interleaved) at two parallelism levels on identical
-input — the sandbox stand-in for N vs 4N executors:
-
-| config | docs | wall (s) | docs/sec |
-|---|---|---|---|
-| local[{lo['cpus']}] | {lo['n_docs']:,} | {lo['secs']} | {lo['docs_per_sec']:,} |
-| local[{hi['cpus']}] | {hi['n_docs']:,} | {hi['secs']} | {hi['docs_per_sec']:,} |
-
-**Scaling efficiency = {hi['docs_per_sec']:,} / (4 × {lo['docs_per_sec']:,}) =
-{result['scaling_efficiency']}**
-"""
-    if args.control:
-        md += f"""
-## Hardware control (same work, raw multiprocessing — no Spark)
-
-A single box cannot hold clock speed from {args.n} to {args.n * 4}
-all-core-loaded cores; the control measures that silicon ceiling with zero
-framework overhead (fork pool, no JVM, no Arrow):
-
-| config | docs/sec | efficiency {args.n}→{args.n * 4} |
-|---|---|---|
-| {args.n} procs | {result['control_low']['docs_per_sec']:,} | — |
-| {args.n * 4} procs | {result['control_high']['docs_per_sec']:,} | {result['control_efficiency']} |
-
-**Spark-vs-control: {result['scaling_efficiency']} / {result['control_efficiency']}
-= {result['efficiency_vs_control']} of what the hardware allows.**
-"""
-    md += f"""
-Reproduce: `python BENCH/run_scaling.py --n {args.n} --sf {args.sf}
---replicas {args.replicas} --rounds {args.rounds}\
-{' --control' if args.control else ''}\
-{f' --doc-scale {args.doc_scale}' if args.doc_scale != 1 else ''}`
-"""
-    # Append as a dated band section — BASELINE.md accumulates hand-written
-    # evidence (selector bench, spark-submit runs, robustness sweeps) that a
-    # whole-file overwrite would destroy.
-    path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    band_header = (
-        f"## Scaling band N={args.n} → 4N={args.n * 4}"
-        + (f", doc-scale {args.doc_scale}" if args.doc_scale != 1 else "")
-        + " (auto-appended)"
-    )
-    section = "\n\n" + band_header + "\n" + md.split("\n", 3)[3]
-    existing = ""
-    if os.path.exists(path):
-        with open(path) as f:
-            existing = f.read()
-    with open(path, "a") as f:
-        f.write(section)
-    print(f"appended '{band_header}' to BENCH/BASELINE.md "
-          f"(was {len(existing)} bytes)")
+    result = {
+        "command": "python BENCH/run_scaling.py"
+                   + (f" --rounds {args.rounds}" if args.rounds != 5 else ""),
+        "nproc": nproc, "cores": sizes, "chunks": CHUNKS,
+        "formats": {},
+    }
+    for fmt, recs in rounds.items():
+        inp = inputs[fmt]
+        result["formats"][fmt] = {
+            "input": {"kind": inp.kind, "seed": inp.seed, "docs": inp.n_docs,
+                      "mb": round(inp.mb, 1),
+                      "long_share": round(inp.long_share, 4),
+                      "job_args": FORMATS[fmt][2]},
+            **{key: spread([rec[key] for rec in recs])
+               for key in ("raw_efficiency", "control_efficiency",
+                           "relative_efficiency")},
+            "serial_share": {
+                k: spread([rec[f"spark_{k}"]["serial_s"]
+                           / rec[f"spark_{k}"]["wall_s"] for rec in recs])
+                for k in sizes},
+            "rounds": recs,
+        }
+    with open(OUT, "w") as f:
+        json.dump(result, f, indent=1)
+        f.write("\n")
+    print(json.dumps({fmt: {k: v for k, v in res.items()
+                            if k.endswith("efficiency")}
+                      for fmt, res in result["formats"].items()}))
 
 
 if __name__ == "__main__":

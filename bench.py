@@ -7,8 +7,8 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
      query timings, "queries": {...}, "sf": ...}
 
 The headline metric is the north rule's: extraction throughput (docs/sec)
-over the interleaved corpus. Scaling-efficiency evidence (local[N] vs
-local[4N]) lives in BENCH/run_scaling.py → BENCH/BASELINE.md.
+over the interleaved corpus. Scaling efficiency (local[N] vs local[4N],
+of the spark-submit job) lives in BENCH/run_scaling.py → BENCH/SCALING.json.
 """
 
 from __future__ import annotations
@@ -135,7 +135,7 @@ def main() -> None:
 
     # INTERLEAVED best-of-N (VERDICT r2 "wrong" #4): round-robin the whole
     # query set per rep so slow box drift hits every query equally, then
-    # take the per-query minimum — the BENCH/run_scaling.py protocol.
+    # take the per-query minimum.
     reps = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}

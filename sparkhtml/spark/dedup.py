@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import LongType
 
-from . import _register_cached
+from . import _CACHED_ATTR, _register_cached
 from .partitioning import fan_out
 
 
@@ -379,17 +379,18 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard on MinHash-LSH candidates (two-phase: cheap
     banding prunes the pair space, exact set intersection verifies)."""
-    cands = minhash_lsh_pairs(
+    lsh = minhash_lsh_pairs(
         df, col, id_col, n_hashes=n_hashes, bands=bands,
         shingle_n=shingle_n, min_agree=0.0,
-    ).select("a", "b")
+    )
+    cands = lsh.select("a", "b")
     sh = df.select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(shingles_col(col, shingle_n)).alias("sh"),
     )
     a = sh.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b"))
-    return (
+    verified = (
         cands.join(a, "a")
         .join(b, "b")
         .withColumn(
@@ -400,6 +401,9 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
     )
+    # the candidates' cached signature table backs this plan too: carry it
+    # so release_cached() on the result frees it
+    return _register_cached(verified, *getattr(lsh, _CACHED_ATTR))
 
 
 # --------------------------------------------------- repeated-span removal

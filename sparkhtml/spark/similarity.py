@@ -89,11 +89,11 @@ def cosine_topk_vs(
     # into the scan as runtime values — no BroadcastExchange +
     # BroadcastNestedLoopJoin per run. Measured interleaved at local[32]
     # on sf0.1: join-shape 1.36x the literal baseline, this shape 1.18x
-    # (BENCH/BASELINE.md round-6 q5 attribution). Subquery columns can't
-    # appear INSIDE higher-order functions, so they're materialized to
-    # plain columns first; ONE struct subquery carries both vector and
-    # norm (two separate scalar() calls would execute the query frame
-    # twice per action).
+    # (round-6 q5 attribution, BENCH/BASELINE.md at commit 0021fd4).
+    # Subquery columns can't appear INSIDE higher-order functions, so
+    # they're materialized to plain columns first; ONE struct subquery
+    # carries both vector and norm (two separate scalar() calls would
+    # execute the query frame twice per action).
     q = query_df.select(
         F.struct(
             F.col(qv).alias("v"),

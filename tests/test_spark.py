@@ -897,16 +897,17 @@ def test_release_cached_unpersists_intermediates(spark):
     release_cached must unpersist them so long-lived sessions don't leak
     cache entries (VERDICT r3 hygiene item)."""
     from sparkhtml.spark import release_cached
-    from sparkhtml.spark.dedup import minhash_lsh_pairs
+    from sparkhtml.spark.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = minhash_lsh_pairs(docs.limit(50))
-    out.count()
-    deps = getattr(out, "_sparkhtml_cached_deps")
-    assert deps and all(d.storageLevel.useMemory for d in deps)
-    assert release_cached(out) == len(deps)
-    assert all(not d.storageLevel.useMemory for d in deps)
-    assert release_cached(out) == 0  # idempotent
+    for op in (minhash_lsh_pairs, ngram_jaccard_pairs):
+        out = op(docs.limit(50))
+        out.count()
+        deps = getattr(out, "_sparkhtml_cached_deps")
+        assert deps and all(d.storageLevel.useMemory for d in deps), op
+        assert release_cached(out) == len(deps)
+        assert all(not d.storageLevel.useMemory for d in deps)
+        assert release_cached(out) == 0  # idempotent
 
 
 def test_png_decode_roundtrip():
