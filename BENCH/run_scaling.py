@@ -16,7 +16,8 @@ Every leg runs in fresh processes; per round the four legs of a format
 (Spark N, Spark 4N, control N, control 4N) run back to back, in reversed
 order on odd rounds. A Spark leg's throughput is input docs ÷ the job's
 ``wall_s``; its serial part is ``wall_s`` minus the waves' ``wall_ms``
-from ``_manifest/chunk-*.json`` (straggler pass, projections, planning).
+from ``_manifest/chunk-*.json`` (projections and planning; the straggler
+pass runs beside the waves and adds only where it outlasts them).
 A leg whose ``rows + n_stragglers`` is not the input's doc count stops
 the run.
 
@@ -52,7 +53,7 @@ OUT = os.path.join(REPO, "BENCH", "SCALING.json")
 SEED = 1
 CHUNKS = 16
 # Docs per control task: small enough that a pool of 4N balances the
-# pathological docs dynamically, as the job's salted repartition does.
+# pathological docs dynamically, as the job's straggler split does.
 CONTROL_BATCH = 64
 # (docs, pathological rate, extra job args) per input kind. A pass
 # carries fixed costs that more cores do not shrink (cold-JVM planning,

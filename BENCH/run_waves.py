@@ -2,8 +2,10 @@
 ``checkpoint.WAVE_MIN_BYTES``.
 
 Writes the same seeded corpus through ``ChunkedRun`` with the
-``run_extract`` transform (salted repartition + extraction), alternating
-one chunk per wave (``WAVE_MIN_BYTES = 0``) with one wave for all chunks.
+``run_extract`` worker, ``extract_with_metrics_df`` (each wave: one
+exchange, ``ChunkedRun.deal``, then the worker and the write),
+alternating one chunk per wave (``WAVE_MIN_BYTES = 0``) with one wave
+for all chunks.
 The difference, divided by the extra waves, is the fixed cost of a wave;
 the one-wave pass gives the throughput in plan-estimate bytes per second.
 Prints one JSON line with both and the share of a ``WAVE_MIN_BYTES`` wave
@@ -38,8 +40,8 @@ def main() -> None:
 
     from datagen.interleaved import make_corpus
     from sparkhtml.spark import checkpoint, schemas
-    from sparkhtml.spark.partitioning import plan_size_bytes, with_size_salt
-    from sparkhtml.spark.pipeline import extract_spans_df
+    from sparkhtml.spark.partitioning import plan_size_bytes
+    from sparkhtml.spark.pipeline import extract_with_metrics_df
     from sparkhtml.spark.session import get_spark
 
     spark = get_spark(app_name="run-waves", cpus=args.cpus,
@@ -53,13 +55,6 @@ def main() -> None:
             .repartition(2 * args.cpus).write.parquet(src)
         docs = spark.read.parquet(src)
         size = plan_size_bytes(docs)
-        partitions = spark.sparkContext.defaultParallelism * 2
-
-        def transform(df):
-            salted = with_size_salt(df).repartition(
-                partitions, "size_bucket", "salt")
-            return extract_spans_df(salted)
-
         default = checkpoint.WAVE_MIN_BYTES
         times: dict[str, list[float]] = {"per_chunk": [], "one_wave": []}
         for rep in range(args.reps + 1):  # rep 0 warms up, untimed
@@ -68,7 +63,7 @@ def main() -> None:
                 out = os.path.join(work, f"out-{mode}-{rep}")
                 t0 = time.perf_counter()
                 checkpoint.ChunkedRun(spark, out, args.chunks).run(
-                    docs, transform)
+                    docs, extract_with_metrics_df)
                 if rep:
                     times[mode].append(time.perf_counter() - t0)
                 shutil.rmtree(out)

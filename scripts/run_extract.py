@@ -10,8 +10,8 @@
         --chunks 256 --partitions 2048 [--metrics-output <dir>]
 
 Reads the documents table (parquet path, or an Iceberg table name when a
-catalog is configured) and parses each document once, with partitioning
-salted by size, by the worker its columns pick (output in ``schemas``):
+catalog is configured) and parses each document once, by the worker its
+columns pick (output in ``schemas``):
 
     input              worker                            output       size
     (doc_id, spans)    pipeline.extract_with_metrics_df  EXTRACTED    chars
@@ -23,6 +23,15 @@ It writes, under ``--output``:
     stragglers/                docs over --straggler-chars (always written)
     _manifest/chunk-<c>.json   one entry per committed chunk
     _manifest/stragglers.json  the straggler pass's entry
+
+Each wave deals its documents over ``--partitions`` tasks in one exchange
+(``ChunkedRun.deal``) and writes the worker's output from those tasks.
+The straggler pass runs on a second thread beside the waves, with the
+caller's Spark local properties (job group, scheduler pool): started
+first, its giants get cores first under the FIFO scheduler and the waves'
+tasks fill the rest. ``main`` returns or raises only once both sides
+have finished; a side that fails records no manifest entry, so a re-run
+redoes only the work that did not commit.
 
 The files hold the worker's output, no ``chunk`` column; a PDF that fails
 to parse is a row with empty spans and ``err`` set. Read them with
@@ -49,7 +58,8 @@ def main(argv=None) -> int:
                     help="ignored; the manifest is always <output>/_manifest")
     ap.add_argument("--chunks", type=int, default=64)
     ap.add_argument("--partitions", type=int, default=None,
-                    help="shuffle parallelism for the balanced repartition")
+                    help="tasks per wave and for the straggler pass "
+                    "(default: the session's cores)")
     ap.add_argument("--metrics-output", default=None)
     ap.add_argument("--straggler-chars", type=int, default=1_000_000,
                     help="docs above this size (text chars, or payload "
@@ -58,11 +68,12 @@ def main(argv=None) -> int:
                     choices=("parquet", "iceberg"))
     args = ap.parse_args(argv)
 
+    from pyspark import InheritableThread
     from pyspark.sql import SparkSession, functions as F
 
     from sparkhtml.spark import schemas
     from sparkhtml.spark.checkpoint import ChunkedRun, footer_rows
-    from sparkhtml.spark.partitioning import straggler_split, with_size_salt
+    from sparkhtml.spark.partitioning import straggler_split
 
     # under spark-submit the session/master/executors come from the submit
     # conf; we only set analysis-level options here
@@ -83,30 +94,43 @@ def main(argv=None) -> int:
         from sparkhtml.spark.pipeline import extract_with_metrics_df as worker
         size, schema = None, schemas.EXTRACTED
 
-    partitions = args.partitions or spark.sparkContext.defaultParallelism * 2
     normal, stragglers = straggler_split(docs, args.straggler_chars, size)
 
-    def transform(df):
-        salted = with_size_salt(df, size=size)
-        balanced = salted.repartition(partitions, "size_bucket", "salt")
-        return worker(balanced)
-
     t0 = time.time()
-    run = ChunkedRun(spark, args.output, n_chunks=args.chunks)
-    summary = run.run(normal, transform)
-    # stragglers: few docs, maximum spread. repartition(n) deals them out
-    # ROUND-ROBIN (docs from several input partitions can share a task);
-    # repartition(n, "doc_id") would hash and clump ~ln n / ln ln n docs
-    # into one (3.4 s -> 1.8 s at 12 giants; BENCH/run_skew_experiment.py
-    # at commit 97d7ad8). Always written (no stragglers: a schema-only
-    # file), counted by its footers, skipped on resume by its manifest.
+    run = ChunkedRun(spark, args.output, n_chunks=args.chunks,
+                     partitions=args.partitions)
     done = run.entry("stragglers")
+    side: dict = {}
+
+    def straggler_pass():
+        # stragglers: few docs, maximum spread. repartition(n) deals them
+        # out ROUND-ROBIN (docs from several input partitions can share a
+        # task); repartition(n, "doc_id") would hash and clump
+        # ~ln n / ln ln n docs into one (3.4 s -> 1.8 s at 12 giants;
+        # BENCH/run_skew_experiment.py at commit 97d7ad8). Always written
+        # (no stragglers: a schema-only file), counted by its footers,
+        # skipped on resume by its manifest entry.
+        try:
+            worker(stragglers.repartition(run.partitions)).write \
+                .mode("overwrite").parquet(run.stragglers_dir)
+            side["done"] = {"status": "ok",
+                            "n_stragglers": footer_rows(run.stragglers_dir)}
+            run.record("stragglers", **side["done"])
+        except BaseException as exc:  # re-raised by main after the waves
+            side["error"] = exc
+
+    thread = None
     if done is None:
-        worker(stragglers.repartition(partitions)).write.mode("overwrite") \
-            .parquet(run.stragglers_dir)
-        done = {"status": "ok",
-                "n_stragglers": footer_rows(run.stragglers_dir)}
-        run.record("stragglers", **done)
+        thread = InheritableThread(target=straggler_pass)
+        thread.start()
+    try:
+        summary = run.run(normal, worker)
+    finally:
+        if thread is not None:
+            thread.join()
+    if "error" in side:
+        raise side["error"]
+    done = done or side["done"]
     if is_pdf:
         run.output_df(schema).filter(F.col("err").isNotNull()) \
             .select("doc_id", "err").write.mode("overwrite") \

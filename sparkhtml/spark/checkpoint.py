@@ -11,14 +11,18 @@ straggler pass's ``stragglers/`` (``scripts/run_extract.py``).
 
 Chunks are written in **waves**. A wave is one Spark action: one scan of
 the input filtered to the wave's chunks (no filter when the wave holds
-every chunk), one transform, one ``partitionBy("chunk")`` write with
-dynamic partition overwrite. A wave of several chunks first hash-
-repartitions its output on ``chunk`` into one partition per chunk, so
-each chunk has one writer and one file; a one-chunk wave writes from its
-upstream tasks as they are. Its chunks commit together, and only then
-get their manifest entries; a crash re-runs the whole wave, and the
-dynamic overwrite makes the re-run idempotent. Per-chunk row counts come
-from the committed files' parquet footers, not from reading them back.
+every chunk), one exchange that deals the documents to the tasks, one
+transform, one ``partitionBy("chunk")`` write with dynamic partition
+overwrite. The exchange (``repartitionById``) sends every document of a
+chunk to tasks that hold only whole chunks: a wave of k ≥ P chunks (P
+the run's ``partitions``) gives each chunk one task and so one file, and
+a wave of k < P chunks spreads each chunk over ⌊P/k⌋ tasks by a second
+doc_id hash, so a one-chunk wave still fills every task. The transform's
+output is written from the task that computed it, with no second
+exchange. A wave's chunks commit together, and only then get their
+manifest entries; a crash re-runs the whole wave, and the dynamic
+overwrite makes the re-run idempotent. Per-chunk row counts come from
+the committed files' parquet footers, not from reading them back.
 A wave holds at least ``WAVE_MIN_BYTES`` of input by Catalyst's size
 estimate (see its note): small inputs run as one wave, while at cluster
 scale every chunk exceeds it and each wave is a single chunk.
@@ -47,13 +51,14 @@ from sparkhtml.spark.partitioning import plan_size_bytes
 
 # Smallest input (Catalyst's plan size estimate) worth its own Spark job.
 # Each job pays a fixed cost — job and stage scheduling, an input scan,
-# the salted shuffle, a commit, and the Python workers idling between the
+# the deal() shuffle, a commit, and the Python workers idling between the
 # jobs of a serial chain (which Spark books as "time to initialize Python
 # workers", SCALE.md §6). Measured with `python BENCH/run_waves.py`
-# (3,000 generator docs, 16 chunks, local[4] on a 4-core VM): a wave
-# costs 0.59 s on top of its share of a one-wave pass, and the job
-# streams 1.06 MB/s of estimated input, so a 32 MB wave spends ~2% on
-# that fixed cost and a crash loses under a minute of work.
+# (3,000 generator docs, 16 chunks, the job's worker, local[4] on a
+# 4-core VM): a wave costs 0.89 s on top of its share of a one-wave
+# pass, and the job streams 0.82 MB/s of estimated input, so a 32 MB
+# wave spends ~2% on that fixed cost and a crash loses under a minute of
+# work.
 # Change it only with a rerun of that script.
 WAVE_MIN_BYTES = 32 << 20
 
@@ -76,10 +81,16 @@ class ChunkedRun:
         out_dir: str,
         n_chunks: int = 16,
         iceberg_table: str | None = None,
+        partitions: int | None = None,
     ):
         self.spark = spark
         self.out_dir = out_dir
         self.n_chunks = n_chunks
+        # Tasks per wave. Default one per core: deal() already balances
+        # whole chunks, and each extra task costs a Python task start
+        # (perfbench html_job input run in one session on a 4-core VM:
+        # 2.06 s a pass at twice the cores, 1.76 s at the cores).
+        self.partitions = partitions or spark.sparkContext.defaultParallelism
         self.iceberg_table = iceberg_table
         self.manifest_path = os.path.join(out_dir, "_manifest")
         # scripts/run_extract.py's straggler pass (manifest entry too)
@@ -132,8 +143,9 @@ class ChunkedRun:
 
         Chunking key is ``pmod(xxhash64(doc_id), n_chunks)`` — deterministic
         across runs, independent of input order, so resume is exact.
-        ``transform`` must keep ``id_col``: the write recomputes each output
-        row's chunk from it.
+        ``transform`` gets the wave's documents already dealt to their
+        tasks (:meth:`deal`) and must keep ``id_col`` and add no exchange:
+        the write recomputes each output row's chunk from it.
         """
         done = self.completed_chunks()
         todo = [c for c in range(self.n_chunks) if c not in done]
@@ -142,10 +154,8 @@ class ChunkedRun:
         for i in range(0, len(todo), per_wave):
             wave = todo[i:i + per_wave]
             t0 = time.time()
-            part = documents
-            if len(wave) < self.n_chunks:
-                part = documents.filter(self._chunk_col(id_col).isin(wave))
-            counts = self._write_chunk(transform(part), wave, id_col)
+            counts = self._write_chunk(
+                transform(self.deal(documents, wave, id_col)), wave, id_col)
             wall_ms = int((time.time() - t0) * 1000)
             for chunk in wave:
                 self.record(f"chunk-{chunk:05d}", chunk=chunk, status="ok",
@@ -158,6 +168,31 @@ class ChunkedRun:
         chunk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(self.n_chunks))
         return chunk.cast("int")
 
+    def deal(self, documents: DataFrame, wave: list[int],
+             id_col: str = "doc_id") -> DataFrame:
+        """The wave's documents, filtered to its chunks and dealt by
+        ``repartitionById`` to ``partitions`` tasks that each hold only
+        whole chunks.
+
+        With k chunks in the wave and P partitions, a document of the
+        chunk at index i of ``wave`` goes to task ``i mod P`` when k ≥ P
+        (so each task holds ⌊k/P⌋ or ⌈k/P⌉ chunks), else to task
+        ``i + k × (spread hash mod ⌊P/k⌋)``. The spread hash is xxhash64
+        over a constant then the doc_id, i.e. another seed: the chunk
+        hash itself would fix its residue mod ⌊P/k⌋ within a chunk (one
+        chunk of 256 at P = 2048 would fill 8 of the 2048 tasks).
+        """
+        k = len(wave)
+        chunk = self._chunk_col(id_col)
+        if k < self.n_chunks:
+            documents = documents.filter(chunk.isin(wave))
+        # a k-step lookup per row, over a wave of ~WAVE_MIN_BYTES
+        index = F.array_position(F.array(*map(F.lit, wave)), chunk) - 1
+        spread = F.pmod(F.xxhash64(F.lit("spread"), F.col(id_col)),
+                        F.lit(max(1, self.partitions // k)))
+        return documents.repartitionById(
+            self.partitions, (index + k * spread).cast("int"))
+
     def _write_chunk(self, out: DataFrame, chunks: list[int],
                      id_col: str) -> dict[int, int]:
         """Idempotent overwrite of one wave's chunks; returns the row count
@@ -168,13 +203,10 @@ class ChunkedRun:
         (crash-safe retry) in one atomic snapshot commit. The parquet path
         is the identical layout via dynamic partition overwrite.
         """
+        # Each task writes its rows where deal() put them: chunk=<c>/
+        # gets one file per task that holds chunk c (one when the wave has
+        # at least ``partitions`` chunks).
         tagged = out.withColumn("chunk", self._chunk_col(id_col))
-        if len(chunks) > 1:
-            # One writer per chunk: each chunk's rows meet in one task, so
-            # chunk=<c>/ gets one file instead of one per upstream task.
-            # A wave has several chunks only when each is under
-            # WAVE_MIN_BYTES of input, so that task stays small.
-            tagged = tagged.repartition(len(chunks), "chunk")
         if self.iceberg_table is not None:
             tagged.writeTo(self.iceberg_table).overwritePartitions()
             rows = (

@@ -2,17 +2,21 @@
 
 The document-size distribution of a web corpus is heavy-tailed; hash
 partitioning by doc_id alone gives even *counts* but uneven *bytes* —
-one straggler task holds the 99.9th-percentile giants. Plan:
+one straggler task holds the 99.9th-percentile giants. The job handles
+the tail in two parts:
 
-- ``size_bucket = floor(log2(size))``, size in text chars (or PDF payload
-  bytes) — cheap, data-independent, no extra pass over the corpus;
-- ``salt = pmod(hash(doc_id), SALT_N)`` spreads each bucket;
-- repartition on (size_bucket, salt): giants scatter across SALT_N tasks
-  instead of hashing into one; AQE skew-join/coalesce handles the rest.
+- ``straggler_split`` routes the giants (size in text chars, or PDF
+  payload bytes) to their own pass, dealt round-robin over its tasks
+  (``scripts/run_extract.py``);
+- the rest is dealt by doc_id hash, whole chunks per task
+  (``checkpoint.ChunkedRun.deal``): with the giants gone, even counts are
+  close to even bytes.
 
-At 10^12 docs the same columns become the Iceberg table's bucket spec, so
-the layout is already balanced at rest and the pipeline's first stage
-reads without a shuffle.
+``with_size_salt`` adds ``size_bucket = floor(log2(size))`` and a doc_id
+``salt``; the ``size_buckets`` query and perfbench's ``html_job`` warm-up
+use it. The job no longer partitions on it: its keys are a few size
+buckets × ``SALT_N`` salts, and hashing them into P tasks skewed the
+counts (2× at P = 8 on a 6,000-doc input).
 """
 
 from __future__ import annotations

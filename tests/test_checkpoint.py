@@ -1,20 +1,25 @@
 """ChunkedRun waves and run_extract resume: job counts, on-disk layout,
-crash atomicity of a multi-chunk wave, empty chunks, the straggler
-manifest entry, the metrics output as a projection of the files, null
-rows, and the job over a PDF corpus."""
+the wave's one exchange and its spread, crash atomicity of a multi-chunk
+wave, empty chunks, the straggler pass beside the waves and its manifest
+entry, a failure on either side, the metrics output as a projection of
+the files, null rows, and the job over a PDF corpus."""
 
 import importlib.util
 import json
 import os
+import re
+import threading
+import time
 from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import SparkSession
+from pyspark import InheritableThread
+from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 from datagen.interleaved import make_corpus
-from sparkhtml.spark import checkpoint, schemas
+from sparkhtml.spark import checkpoint, pipeline, schemas
 from sparkhtml.spark.checkpoint import ChunkedRun
 from sparkhtml.spark.partitioning import plan_size_bytes, straggler_split
 from sparkhtml.spark.pdf import build_pdf, pdf_extract_spans
@@ -98,21 +103,58 @@ def test_one_wave_few_jobs_and_chunk_layout(spark, docs, tmp_path):
     assert sorted(_doc_ids(out).values()) == [1] * 60
 
 
-def test_one_chunk_wave_adds_no_chunk_exchange(spark, docs, tmp_path,
-                                              monkeypatch):
-    """Waves of one chunk (the cluster-scale regime) write from their
-    upstream tasks: no exchange on chunk. A several-chunk wave has one."""
+def _files_per_chunk(out):
+    return {d: sum(n.endswith(".parquet") for n in os.listdir(
+        os.path.join(out, d))) for d in os.listdir(out)
+        if d.startswith("chunk=")}
+
+
+def test_every_wave_writes_through_one_exchange(spark, docs, tmp_path,
+                                                monkeypatch):
+    """Each wave's written plan has one exchange, the deal below the
+    worker, and no regroup above it: one-chunk waves, a 2-chunk wave
+    (k < P: each chunk from up to P/k tasks) and a 16-chunk wave (k ≥ P:
+    one file per chunk)."""
     plans = _written_plans(monkeypatch)
     monkeypatch.setattr(checkpoint, "WAVE_MIN_BYTES", 0)
-    ChunkedRun(spark, str(tmp_path / "per-chunk"), n_chunks=2).run(
-        docs, extract_spans_df)
-    assert len(plans) == 2
-    assert not any("hashpartitioning(chunk" in p for p in plans), plans
+    ChunkedRun(spark, str(tmp_path / "per-chunk"), n_chunks=2,
+               partitions=8).run(docs, extract_spans_df)
     monkeypatch.setattr(checkpoint, "WAVE_MIN_BYTES", plan_size_bytes(docs))
-    ChunkedRun(spark, str(tmp_path / "one-wave"), n_chunks=2).run(
+    two = str(tmp_path / "two")
+    ChunkedRun(spark, two, n_chunks=2, partitions=8).run(
         docs, extract_spans_df)
-    assert len(plans) == 3
-    assert "hashpartitioning(chunk" in plans[2], plans[2]
+    sixteen = str(tmp_path / "sixteen")
+    ChunkedRun(spark, sixteen, n_chunks=16, partitions=8).run(
+        docs, extract_spans_df)
+    assert len(plans) == 4
+    for plan in plans:
+        exchanges = re.findall(r"\bExchange (\w+)", plan)
+        assert exchanges == ["shufflepartitionidpassthrough"], plan
+        assert plan.index("MapInArrow") < plan.index("Exchange"), plan
+    assert 1 <= max(_files_per_chunk(two).values()) <= 4
+    per_chunk = _files_per_chunk(sixteen)
+    assert per_chunk and set(per_chunk.values()) == {1}, per_chunk
+
+
+def test_deal_spreads_a_wave_over_every_task(spark, tmp_path):
+    """On 2,000 docs at P = 8: a 16-chunk wave gives no task over 1.2×
+    the mean docs, and a one-chunk wave of 4 chunks fills all 8 tasks
+    (a spread by the chunk hash itself would fill 2)."""
+    docs = spark.range(2000).select(F.col("id").cast("string")
+                                    .alias("doc_id"))
+
+    def per_task(run, wave):
+        rows = run.deal(docs, wave).groupBy(
+            F.spark_partition_id().alias("p")).count().collect()
+        return [r["count"] for r in rows]
+
+    counts = per_task(ChunkedRun(spark, str(tmp_path / "a"), n_chunks=16,
+                                 partitions=8), list(range(16)))
+    assert len(counts) == 8 and sum(counts) == 2000
+    assert max(counts) <= 1.2 * 2000 / 8, counts
+    one = ChunkedRun(spark, str(tmp_path / "b"), n_chunks=4, partitions=8)
+    for chunk in range(4):
+        assert len(per_task(one, [chunk])) == 8, chunk
 
 
 def test_crashed_wave_leaves_no_manifest_entry(spark, docs, tmp_path,
@@ -249,41 +291,164 @@ def _summary(capsys):
     return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
 
+def _group_jobs(sc, group):
+    """{description: [(submitted, completed or None) ms]} of a job
+    group's jobs, read once the listener bus has recorded every event."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs: dict = {}
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        job = sc._jsc.sc().statusStore().job(jid)
+        desc = job.description().get() if job.description().isDefined() \
+            else None
+        done = job.completionTime()
+        jobs.setdefault(desc, []).append(
+            (job.submissionTime().get().getTime(),
+             done.get().getTime() if done.isDefined() else None))
+    return jobs
+
+
 def test_straggler_pass_is_one_write(spark, tmp_path, monkeypatch, capsys):
-    """The straggler pass runs no count(): it is one round-robin write
-    (a shuffle-map job plus the write job), its row count read from the
-    footers. With no stragglers it still writes one schema-only file."""
+    """The straggler pass runs beside the wave, on a thread that keeps
+    the caller's job group: at most 2 jobs (a shuffle-map job plus the
+    write job, no count(): its row count is read from the footers), and
+    they start before the wave's last job ends. With no stragglers it
+    still writes one schema-only file."""
     sc = spark.sparkContext
-    chunked_run = ChunkedRun.run
+    parquet, chunked_run = DataFrameWriter.parquet, ChunkedRun.run
+    group = [None]
 
-    def run_then_tag(self, *a, **k):
-        out = chunked_run(self, *a, **k)
-        sc.setJobGroup("straggler-pass", "straggler-pass")
-        return out
+    def described(self, path, *a, **k):
+        # tags the jobs of each write, in the thread that writes
+        sc.setJobDescription(
+            "stragglers" if path.endswith("stragglers") else "wave")
+        try:
+            return parquet(self, path, *a, **k)
+        finally:
+            sc.setJobDescription(None)
 
-    monkeypatch.setattr(ChunkedRun, "run", run_then_tag)
+    def run_once_stragglers_start(self, *a, **k):
+        # the pass's first job must be submitted, in the caller's group,
+        # before the wave is planned: a pass that ran after the waves, or
+        # outside the group, would time out here
+        deadline = time.time() + 60
+        while "stragglers" not in _group_jobs(sc, group[0]):
+            assert time.time() < deadline, "no straggler job in the group"
+            time.sleep(0.05)
+        return chunked_run(self, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", described)
+    monkeypatch.setattr(ChunkedRun, "run", run_once_stragglers_start)
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)
     corpus = list(make_corpus(40, seed=3, pathological_rate=0.1))
     inp = _corpus_input(spark, tmp_path, corpus,
                         schemas.DOCUMENTS_INTERLEAVED)
     main = _run_extract().main
     for chars in ("12000", "100000000"):
-        out = str(tmp_path / chars)
+        out, group[0] = str(tmp_path / chars), f"job-{chars}"
+        sc.setJobGroup(group[0], group[0])
         try:
             assert main(["--input", inp, "--output", out, "--chunks", "4",
                          "--straggler-chars", chars]) == 0
-            jobs = sc.statusTracker().getJobIdsForGroup("straggler-pass")
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = _group_jobs(sc, group[0])
         summary = _summary(capsys)
+        assert 1 <= len(jobs.get("stragglers", [])) <= 2, jobs
+        assert min(t0 for t0, _ in jobs["stragglers"]) < \
+            max(t1 for _, t1 in jobs["wave"]), jobs
         if chars == "12000":
             assert summary["n_stragglers"] > 0
-            assert len(jobs) <= 2
         strag = pq.read_table(os.path.join(out, "stragglers"))
         assert strag.num_rows == summary["n_stragglers"]
         assert summary["rows"] + summary["n_stragglers"] == len(corpus)
     assert summary["n_stragglers"] == 0
     assert strag.schema.names == schemas.EXTRACTED.fieldNames()
+
+
+@pytest.mark.parametrize("poisoned", ["stragglers", "wave"])
+def test_a_failed_side_commits_nothing_and_reruns_alone(
+        spark, tmp_path, monkeypatch, capsys, poisoned):
+    """The worker fails inside its Spark job on one side: the straggler
+    thread or the wave on the main thread. main waits for the other side,
+    then raises; no job is left running, the failed side has no manifest
+    entry, the other side committed, and a re-run writes only the failed
+    side's output."""
+    sc = spark.sparkContext
+    real = pipeline.extract_with_metrics_df
+
+    def boom(batches):
+        raise RuntimeError("poisoned")
+        yield  # pragma: no cover - makes this a generator
+
+    def worker(df):
+        out = real(df)
+        in_thread = threading.current_thread() is not threading.main_thread()
+        if in_thread == (poisoned == "stragglers"):
+            return out.mapInArrow(boom, out.schema)
+        return out
+
+    monkeypatch.setattr(pipeline, "extract_with_metrics_df", worker)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    if poisoned == "wave":
+        # the straggler pass ends 2 s after the wave has failed, so its
+        # thread is gone and its entry written only if main waited for it
+        chunked_run, footers = ChunkedRun.run, checkpoint.footer_rows
+        wave_over = threading.Event()
+
+        def run_then_signal(self, *a, **k):
+            try:
+                return chunked_run(self, *a, **k)
+            finally:
+                wave_over.set()
+
+        def footers_after_the_wave(directory):
+            assert wave_over.wait(60)
+            time.sleep(2)
+            return footers(directory)
+
+        monkeypatch.setattr(ChunkedRun, "run", run_then_signal)
+        monkeypatch.setattr(checkpoint, "footer_rows", footers_after_the_wave)
+    corpus = list(make_corpus(40, seed=3, pathological_rate=0.1))
+    inp = _corpus_input(spark, tmp_path, corpus,
+                        schemas.DOCUMENTS_INTERLEAVED)
+    out = str(tmp_path / "out")
+    argv = ["--input", inp, "--output", out, "--chunks", "4",
+            "--straggler-chars", "12000"]
+    main = _run_extract().main
+
+    with pytest.raises(Exception, match="poisoned"):
+        main(argv)
+    assert not any(isinstance(t, InheritableThread)
+                   for t in threading.enumerate())
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getActiveJobsIds() == []
+    run = ChunkedRun(spark, out, n_chunks=4)
+    if poisoned == "stragglers":
+        assert run.entry("stragglers") is None
+        assert run.completed_chunks() == {0, 1, 2, 3}
+    else:
+        assert run.entry("stragglers")["n_stragglers"] > 0
+        assert run.completed_chunks() == set()
+
+    monkeypatch.setattr(pipeline, "extract_with_metrics_df", real)
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *a, **k):
+        written.append(os.path.basename(path.rstrip("/")))
+        return parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    capsys.readouterr()
+    assert main(argv) == 0
+    summary = _summary(capsys)
+    assert written == (["stragglers"] if poisoned == "stragglers"
+                       else ["out"])
+    assert summary["processed"] == (0 if poisoned == "stragglers" else 4)
+    assert summary["n_stragglers"] == \
+        run.entry("stragglers")["n_stragglers"] > 0
+    ids = [r.doc_id for r in run.output_df().select("doc_id").collect()]
+    assert sorted(ids) == sorted(d["doc_id"] for d in corpus)
 
 
 def test_null_size_rows_come_out_once(spark, tmp_path, monkeypatch, capsys):
