@@ -10,7 +10,12 @@ The semantics below are THE contract the Spark pipeline and the span-
 equality tests both implement — deterministic, documented, versioned:
 
 1. Parse (fragment in ``body`` context for span text; full document parse
-   for whole-page HTML).
+   for whole-page HTML). Steps 2-5 run inside the parse, as the tree
+   builder inserts each node (:class:`_Fold`); a parse that rearranges
+   already-inserted nodes (foster parenting, the adoption agency's
+   furthest-block branch, ``<html>``/``<body>`` attribute merges, …) is
+   segmented afterwards by :func:`segment_blocks` over its flat DOM,
+   which is also the oracle both ways are tested against.
 2. Prune: ``script style noscript template iframe object embed applet``
    subtrees, comments, doctypes, and display-none-ish inputs are never text.
 3. Boilerplate containers: any block inside ``nav footer header aside
@@ -20,9 +25,9 @@ equality tests both implement — deterministic, documented, versioned:
 4. Block segmentation: a text node belongs to its nearest ancestor with a
    block-level tag (``BLOCK_TAGS``); fragments without one form an
    implicit root block.
-5. Densitometry per block: ``words`` (whitespace tokens), ``link_words``
-   (words under an ``<a>`` descendant), ``link_density =
-   link_words/words``.
+5. Densitometry per block: ``words`` (whitespace tokens of each text
+   node, summed), ``link_words`` (words under an ``<a>`` descendant),
+   ``link_density = link_words/words``.
 6. Keep a block iff it is not boilerplate, ``link_density ≤ 1/3``, and
    (``words ≥ 5`` or (tag ∈ CONTENT_TAGS and ``words ≥ 1``)).
 7. Output text = kept blocks' ``textContent`` in tree order, joined by
@@ -38,8 +43,9 @@ from __future__ import annotations
 import re
 from typing import Optional
 
+from . import treebuilder
 from .dom import FlatDOM
-from .treebuilder import COMMENT, DOCTYPE, ELEMENT, NS_HTML, TEXT
+from .treebuilder import DOCUMENT, ELEMENT, NS_HTML, TEXT, Node
 
 BLOCK_TAGS = frozenset(
     """address article aside blockquote body caption center dd details dialog
@@ -68,8 +74,6 @@ _BOILER_CLASS_RE = re.compile(
 MAX_LINK_DENSITY = 1.0 / 3.0
 MIN_WORDS = 5
 
-_WS_NORM = re.compile(r"\s+")
-
 
 class Block:
     """One segmented text block with its densitometry features."""
@@ -82,10 +86,6 @@ class Block:
         self.words = 0
         self.link_words = 0
         self.boiler = False
-
-    @property
-    def link_density(self) -> float:
-        return self.link_words / self.words if self.words else 0.0
 
 
 def _is_boiler_container(dom: FlatDOM, nid: int) -> bool:
@@ -144,115 +144,229 @@ def segment_blocks(dom: FlatDOM) -> list[Block]:
     return [b for b in blocks.values() if b.text]
 
 
-def classify_block(block: Block) -> bool:
+def _keep(tag: Optional[str], words: int, link_words: int,
+          boiler: bool) -> bool:
     """Step 6 keep-rule (threshold densitometry, SURVEY.md §2.7)."""
-    if block.boiler:
+    if boiler:
         return False
-    if block.link_density > MAX_LINK_DENSITY:
+    if words and link_words / words > MAX_LINK_DENSITY:
         return False
-    if block.words >= MIN_WORDS:
+    if words >= MIN_WORDS:
         return True
-    return block.tag in CONTENT_TAGS and block.words >= 1
+    return tag in CONTENT_TAGS and words >= 1
+
+
+def classify_block(block: Block) -> bool:
+    """Step 6 for a :class:`Block` of :func:`segment_blocks`."""
+    return _keep(block.tag, block.words, block.link_words, block.boiler)
 
 
 def _normalize(text: str) -> str:
-    return _WS_NORM.sub(" ", text).strip()
-
-
-def _is_boiler_node(node) -> bool:
-    if node.tag in BOILER_TAGS:
-        return True
-    for k, v in node.attrs:
-        if k in ("id", "class") and v and _BOILER_CLASS_RE.search(v):
-            return True
-    return False
+    # str.split() splits on exactly the code points re's \s matches, so
+    # this is re.sub(r"\s+", " ", text).strip() (pinned in test_units.py)
+    return " ".join(text.split())
 
 
 class ParseCounts:
     """Per-document metrics accumulator for :func:`extract_main_text`:
     each parse it is passed to adds its nodes (root included, as in
     ``FlatDOM``), words, kept words and parse errors, and raises
-    ``max_depth``. The extracted text is the same with or without it."""
+    ``max_depth``. The fold counts nodes and depth as the tree builder
+    inserts them; a rearranged parse takes them from its ``FlatDOM``.
+    The extracted text is the same with or without it."""
 
     n_nodes = n_words = n_kept_words = n_errors = max_depth = 0
 
 
-def segment_blocks_tree(root, counts: Optional[ParseCounts] = None
-                        ) -> list[Block]:
-    """Same segmentation as :func:`segment_blocks`, walking the parse tree
-    directly — the extraction hot path skips flat-DOM construction (~15%
-    of extract time). One DFS carrying (pruned, boiler, in_link, block,
-    depth) state down the stack; identical Block output (differential-
-    tested in tests/test_units.py). The walk visits every node, so it
-    also adds the node count and depth to ``counts``."""
-    root_block = Block(None)
-    blocks = [root_block]
-    n_nodes = max_depth = 0
-    # stack entries: (node, pruned, boiler, in_link, block, depth)
-    stack = [(c, False, False, False, root_block, 1)
-             for c in reversed(root.children)]
-    while stack:
-        node, pruned, boiler, in_link, block, depth = stack.pop()
-        n_nodes += 1
-        if depth > max_depth:
-            max_depth = depth
-        kind = node.kind
-        if kind == TEXT:
-            if not pruned:
-                t = node.text or ""
-                block.boiler = block.boiler or boiler
-                block.text.append(t)
-                w = len(t.split())
-                block.words += w
-                if in_link:
-                    block.link_words += w
-            continue
-        if kind != ELEMENT:
-            continue
-        if node.ns != NS_HTML or node.tag in PRUNE_TAGS:
-            pruned = True
-        elif not boiler and _is_boiler_node(node):
+_PRUNED = (None, False, False)
+
+
+def _boiler_attrs(attrs: list) -> bool:
+    for k, v in attrs:
+        if (k == "class" or k == "id") and v and _BOILER_CLASS_RE.search(v):
+            return True
+    return False
+
+
+class _Fold:
+    """Steps 2-5 folded into tree construction: the extraction mode of
+    ``treebuilder.TreeBuilder`` (see its docstring) calls these hooks as it
+    inserts each node, so no pass walks the finished tree.
+
+    Each inserted element gets its ``depth`` and ``seg = (block, in_link,
+    boiler)`` from its parent's; ``seg`` is shared down the tree until one
+    of them changes, and ``block`` is None inside a pruned subtree. Each
+    new text node is credited to its block then. Insertion order is tree
+    order unless the builder sets ``rearranged``, so blocks come out in
+    the order :func:`segment_blocks` gives them. Until :meth:`finish` a
+    block is ``[tag, boiler, link text nodes or None, text node, ...]``;
+    words are counted there, over the coalesced text nodes. A parent
+    without ``seg`` is one the fold never saw: that is a rearrangement.
+
+    Text nodes, comments and doctypes are leaves, so the deepest node is
+    one level below the deepest element if any of those has a child.
+
+    The hooks also keep every node they see, so that :meth:`finish` can
+    drop the parent pointers: the span's tree is then acyclic and freed
+    by reference counting, not left to the cyclic collector."""
+
+    __slots__ = ("blocks", "n_nodes", "max_depth", "deepest", "rearranged",
+                 "nodes")
+
+    def __init__(self) -> None:
+        self.blocks: list = []
+        self.n_nodes = 1  # the root; finish adds the credited text nodes
+        self.max_depth = 0  # of elements
+        self.deepest: list = []  # the elements at max_depth
+        self.rearranged = False
+        self.nodes: list = []
+
+    def root(self, node: Node) -> None:
+        self.nodes.append(node)
+        block = [None, False, None]
+        self.blocks.append(block)
+        node.seg = (block, False, False)
+        node.depth = 0
+        self.deepest.append(node)
+
+    def element(self, el: Node, parent: Node) -> None:
+        try:
+            block, in_link, boiler = seg = parent.seg
+        except AttributeError:
+            self.rearranged = True
+            return
+        self.nodes.append(el)
+        depth = el.depth = parent.depth + 1
+        self.n_nodes += 1
+        if depth >= self.max_depth:
+            if depth > self.max_depth:
+                self.max_depth = depth
+                self.deepest = [el]
+            else:
+                self.deepest.append(el)
+        tag = el.tag
+        if block is None or el.ns != NS_HTML or tag in PRUNE_TAGS:
+            el.seg = _PRUNED
+            return
+        if not boiler and (tag in BOILER_TAGS
+                           or el.attrs and _boiler_attrs(el.attrs)):
             boiler = True
-        if not in_link and node.ns == NS_HTML and node.tag == "a":
-            in_link = True
-        if node.ns == NS_HTML and node.tag in BLOCK_TAGS:
-            block = Block(node.tag)
-            block.boiler = boiler
-            blocks.append(block)
-        depth += 1
-        for c in reversed(node.children):
-            stack.append((c, pruned, boiler, in_link, block, depth))
-    if counts is not None:
-        counts.n_nodes += n_nodes + 1
-        counts.max_depth = max(counts.max_depth, max_depth)
-    return [b for b in blocks if b.text]
+        if tag in BLOCK_TAGS:
+            block = [tag, boiler, None]
+            self.blocks.append(block)
+            el.seg = (block, in_link, boiler)
+        elif boiler is not seg[2] or (tag == "a" and not in_link):
+            el.seg = (block, in_link or tag == "a", boiler)
+        else:
+            el.seg = seg
+
+    def text(self, node: Node, parent: Node) -> None:
+        try:
+            block, in_link, boiler = parent.seg
+        except AttributeError:
+            self.rearranged = True
+            return
+        self.nodes.append(node)
+        if block is None:
+            self.n_nodes += 1  # finish counts the credited ones
+            return
+        block.append(node)
+        if in_link:
+            if block[2] is None:
+                block[2] = [node]
+            else:
+                block[2].append(node)
+        if boiler:
+            block[1] = True
+
+    def leaf(self, node: Node, parent: Node) -> None:
+        if not hasattr(parent, "seg"):
+            self.rearranged = True
+            return
+        self.nodes.append(node)
+        self.n_nodes += 1
+
+    def finish(self) -> tuple[list[tuple], int, int]:
+        """``(rows, n_nodes, max_depth)`` of the parse. A row is ``(tag,
+        texts, words, link_words, boiler, tokens)`` for each block with
+        text, in tree order, as :func:`segment_blocks` gives its blocks;
+        ``tokens`` is ``"".join(texts).split()`` when that split is
+        already at hand (one text node), else None. Clears the parent
+        pointers of the tree's nodes."""
+        rows = []
+        n_nodes, max_depth = self.n_nodes, self.max_depth
+        for block in self.blocks:
+            k = len(block)
+            if k == 3:
+                continue
+            n_nodes += k - 3
+            if k == 4:
+                texts = [block[3].text]
+                tokens = texts[0].split()
+                words = len(tokens)
+            else:
+                # len(" ".join(ts).split()) == sum(len(t.split()) for t in ts)
+                texts = [node.text for node in block[3:]]
+                tokens = None
+                words = len(" ".join(texts).split())
+            links = block[2]
+            link_words = 0 if links is None else len(
+                " ".join([node.text for node in links]).split())
+            rows.append((block[0], texts, words, link_words, block[1],
+                         tokens))
+        for el in self.deepest:
+            if el.children:
+                max_depth += 1
+                break
+        for node in self.nodes:
+            node.parent = None
+        return rows, n_nodes, max_depth
 
 
 def extract_main_text(html: str, fragment: bool = True,
                       counts: Optional[ParseCounts] = None) -> str:
     """HTML (fragment by default) → extracted main-content text; a
-    ``counts`` accumulator also collects this parse's metrics."""
-    from .treebuilder import Node, parse, parse_fragment
+    ``counts`` accumulator also collects this parse's metrics.
 
+    Segmentation is folded into the parse (:class:`_Fold`); a parse that
+    rearranged its tree is segmented with the flat :func:`segment_blocks`
+    instead."""
+    fold = _Fold()
     if fragment:
         errors = None if counts is None else []
-        root = Node(0)  # parents are not needed for segmentation
-        root.children = parse_fragment(html, "body", collect_errors=False,
-                                       errors=errors)
+        children = treebuilder.parse_fragment(
+            html, "body", collect_errors=False, errors=errors, _fold=fold)
     else:
-        tb = parse(html, collect_errors=counts is not None)
-        root, errors = tb.document, tb.errors + tb.tokenizer.errors
-    blocks = segment_blocks_tree(root, counts)
+        tb = treebuilder.parse(html, collect_errors=counts is not None,
+                               _fold=fold)
+        errors = tb.errors + tb.tokenizer.errors
+    if fold.rearranged:
+        if fragment:
+            root = Node(DOCUMENT)
+            root.children = children
+        else:
+            root = tb.document
+        dom = FlatDOM.from_tree(root)
+        rows = [(b.tag, b.text, b.words, b.link_words, b.boiler, None)
+                for b in segment_blocks(dom)]
+        n_nodes, max_depth = len(dom), max(dom.depth)
+    else:
+        rows, n_nodes, max_depth = fold.finish()
     parts = []
-    kept_words = 0
-    for b in blocks:
-        if classify_block(b):
-            kept_words += b.words
-            t = _normalize("".join(b.text))
+    n_words = kept_words = 0
+    for tag, texts, words, link_words, boiler, tokens in rows:
+        n_words += words
+        if _keep(tag, words, link_words, boiler):
+            kept_words += words
+            # step 7; " ".join(tokens) is _normalize of the one text
+            t = _normalize("".join(texts)) if tokens is None \
+                else " ".join(tokens)
             if t:
                 parts.append(t)
     if counts is not None:
-        counts.n_words += sum(b.words for b in blocks)
+        counts.n_nodes += n_nodes
+        counts.max_depth = max(counts.max_depth, max_depth)
+        counts.n_words += n_words
         counts.n_kept_words += kept_words
         counts.n_errors += len(errors)
     return "\n".join(parts)

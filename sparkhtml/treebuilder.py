@@ -38,7 +38,8 @@ NO_QUIRKS, QUIRKS, LIMITED_QUIRKS = 0, 1, 2
 
 
 class Node:
-    __slots__ = ("kind", "tag", "ns", "attrs", "_parts", "children", "parent")
+    __slots__ = ("kind", "tag", "ns", "attrs", "_parts", "children", "parent",
+                 "seg", "depth")
 
     def __init__(self, kind, tag=None, ns=NS_HTML, attrs=None, text=None):
         self.kind = kind
@@ -48,6 +49,8 @@ class Node:
         self._parts = None if text is None else [text]
         self.children: list[Node] = []
         self.parent: Optional[Node] = None
+        # ``seg`` and ``depth`` are set only in an extraction-mode parse,
+        # by the fold's hooks (see ``TreeBuilder``), and unset elsewhere
 
     # Text is stored as a parts list so coalescing appends are O(1);
     # `node.text += x` on a plain attribute re-copies the whole string
@@ -308,7 +311,21 @@ MARKER = _ActiveFormattingMarker()
 
 class TreeBuilder:
     """Fused tokenizer+builder loop (HTMLParser.m:119-150 'for token in
-    tokenizer'). Construct, then call :meth:`run`."""
+    tokenizer'). Construct, then call :meth:`run`.
+
+    ``_fold`` (internal to ``extract.extract_main_text``) turns on the
+    extraction mode: the builder reports each node it inserts to the fold
+    as it inserts it — ``fold.element(el, parent)``, ``fold.text(node,
+    parent)`` for a new text node (coalesced text is not reported),
+    ``fold.leaf(node, parent)`` for comments and doctypes — after
+    ``fold.root(root)`` at construction. Any step that can move an
+    inserted node, change its ancestors' attributes, or insert somewhere
+    other than the end of the current node's subtree (foster parenting,
+    the adoption agency's furthest-block branch, ``<html>``/``<body>``
+    attribute merges, the frameset body removal, the after-head head
+    re-push) sets ``fold.rearranged`` instead, and the caller segments
+    the finished tree another way. The tree is the same in both modes.
+    """
 
     max_depth = 512  # depth-bomb guard (SURVEY.md §7.3.5); spec has no limit
 
@@ -318,7 +335,9 @@ class TreeBuilder:
         fragment_context: Optional[tuple[int, str]] = None,
         collect_errors: bool = True,
         use_turbo: bool = True,
+        _fold=None,
     ) -> None:
+        self.fold = _fold
         # use_turbo=False forces the token-at-a-time pull path — used by the
         # fused-vs-pull differential property test (test_properties.py)
         self.use_turbo = use_turbo
@@ -380,6 +399,8 @@ class TreeBuilder:
             # the context element itself can be a form.
             if self.context_node.tag == "form" and self.context_node.ns == NS_HTML:
                 self.form = self.context_node
+        if _fold is not None:
+            _fold.root(self.document if fragment_context is None else root)
 
     # ------------------------------------------------------------------
 
@@ -445,6 +466,11 @@ class TreeBuilder:
                 body = Node(ELEMENT, "body", NS_HTML)
                 body.parent = html_el
                 html_el.children.append(body)
+                fold = self.fold
+                if fold is not None:
+                    fold.element(html_el, self.document)
+                    fold.element(head, html_el)
+                    fold.element(body, html_el)
                 self.open_elements.append(html_el)
                 self.open_elements.append(body)
                 self.frameset_ok = True
@@ -477,8 +503,11 @@ class TreeBuilder:
             ):
                 continue
             if tk._eof_emitted:
-                return self.document
+                break
             states[tk.state](tk)
+        # the tokenizer's callback is a bound method of this builder: drop
+        # it, so the builder and its tokenizer are no reference cycle
+        tk.cdata_allowed = None
         return self.document
 
     def _turbo_in_body(self) -> bool:
@@ -508,6 +537,7 @@ class TreeBuilder:
         oe = self.open_elements
         af = self.active_formatting
         md = self.max_depth
+        fold = self.fold
         end_match = tz._RE_SIMPLE_TAG.match
         fast_tag = tz.match_fast_tag
         stop_search = tz._STOP_DATA.search
@@ -575,6 +605,8 @@ class TreeBuilder:
                                 el.parent = cur
                                 cur.children.append(el)
                                 oe.append(el)
+                                if fold is not None:
+                                    fold.element(el, cur)
                             else:
                                 self.parse_error("depth-limit-exceeded")
                             af.append(MARKER)
@@ -648,6 +680,8 @@ class TreeBuilder:
                                 parent = oe[-1]
                                 node.parent = parent
                                 parent.children.append(node)
+                                if fold is not None:
+                                    fold.leaf(node, parent)
                                 i = j + 3
                                 continue
                         break  # not turbo-able: per-state machine
@@ -683,6 +717,8 @@ class TreeBuilder:
                                 el.parent = cur
                                 cur.children.append(el)
                                 oe.append(el)
+                                if fold is not None:
+                                    fold.element(el, cur)
                             else:
                                 self.parse_error("depth-limit-exceeded")
                             af.append(MARKER)
@@ -697,6 +733,8 @@ class TreeBuilder:
                             el.parent = parent
                             parent.children.append(el)
                             oe.append(el)
+                            if fold is not None:
+                                fold.element(el, parent)
                         else:
                             self.parse_error("depth-limit-exceeded")
                         continue
@@ -716,6 +754,8 @@ class TreeBuilder:
                             el.parent = parent
                             parent.children.append(el)
                             oe.append(el)
+                            if fold is not None:
+                                fold.element(el, parent)
                         else:
                             self.parse_error("depth-limit-exceeded")
                         self._push_formatting(
@@ -741,6 +781,8 @@ class TreeBuilder:
                             el.parent = parent
                             parent.children.append(el)
                             oe.append(el)
+                            if fold is not None:
+                                fold.element(el, parent)
                         else:
                             self.parse_error("depth-limit-exceeded")
                             if oe[-1].ns != NS_HTML:
@@ -765,6 +807,8 @@ class TreeBuilder:
                             el.parent = parent
                             parent.children.append(el)
                             oe.append(el)
+                            if fold is not None:
+                                fold.element(el, parent)
                         else:
                             self.parse_error("depth-limit-exceeded")
                             if oe[-1].ns != NS_HTML:
@@ -823,6 +867,8 @@ class TreeBuilder:
                 node = Node(TEXT, text=text)
                 node.parent = parent
                 children.append(node)
+                if fold is not None:
+                    fold.text(node, parent)
             if frameset_ok and text.strip("\t\n\x0c\r "):
                 frameset_ok = False
         tk.i = i
@@ -897,6 +943,8 @@ class TreeBuilder:
             node = Node(TEXT, text=content)
             node.parent = el
             el.children.append(node)
+            if self.fold is not None:
+                self.fold.text(node, el)
         oe.pop()
         self.mode = self.original_mode
         tk.state = "data"
@@ -1062,12 +1110,19 @@ class TreeBuilder:
 
     # ------------------------------------------------- insertion
 
+    def _rearranged(self) -> None:
+        """An extraction-mode parse can no longer fold segmentation into
+        insertion (see the class docstring)."""
+        if self.fold is not None:
+            self.fold.rearranged = True
+
     def _appropriate_place(self, override: Optional[Node] = None):
         """Foster parenting (HTMLParser.m:3014-3048). Returns (parent, index|None)."""
         target = override if override is not None else self.current_node()
         if self.foster_parenting and target.ns == NS_HTML and target.tag in (
             "table", "tbody", "tfoot", "thead", "tr"
         ):
+            self._rearranged()
             last_table = None
             last_table_i = -1
             last_template_i = -1
@@ -1098,13 +1153,20 @@ class TreeBuilder:
 
     def _insert_node(self, node: Node, override: Optional[Node] = None) -> None:
         if not self.foster_parenting and override is None:
-            self.open_elements[-1].append(node)
-            return
-        parent, idx = self._appropriate_place(override)
+            parent = self.open_elements[-1]
+            idx = None
+        else:
+            parent, idx = self._appropriate_place(override)
         if idx is None:
             parent.append(node)
         else:
             parent.insert(idx, node)
+        fold = self.fold
+        if fold is not None:
+            if node.kind == ELEMENT:
+                fold.element(node, parent)
+            else:
+                fold.leaf(node, parent)
 
     def _insert_text(self, data: str, override: Optional[Node] = None) -> None:
         """Text insertion & coalescing (HTMLParser.m:3085-3092,
@@ -1131,6 +1193,8 @@ class TreeBuilder:
             parent.children.append(node)
         else:
             parent.insert(idx, node)
+        if self.fold is not None:
+            self.fold.text(node, parent)
 
     def _create_element(self, token: tuple, ns: int = NS_HTML) -> Node:
         # tokens are one-shot (the tokenizer builds a fresh attr list per
@@ -1146,6 +1210,8 @@ class TreeBuilder:
                 parent = stack[-1]
                 el.parent = parent
                 parent.children.append(el)
+                if self.fold is not None:
+                    self.fold.element(el, parent)
             else:
                 self._insert_node(el)
             stack.append(el)
@@ -1170,6 +1236,8 @@ class TreeBuilder:
         node = Node(COMMENT, text=token[1])
         if parent is not None:
             parent.append(node)
+            if self.fold is not None:
+                self.fold.leaf(node, parent)
         else:
             self._insert_node(node)
 
@@ -1280,6 +1348,7 @@ class TreeBuilder:
                 del stack[fmt_stack_idx:]
                 self.active_formatting.pop(fmt_idx)
                 return
+            self._rearranged()
             common_ancestor = stack[fmt_stack_idx - 1]
             bookmark = fmt_idx
             last_node = furthest
@@ -1452,10 +1521,12 @@ class TreeBuilder:
                 system is not None and system != "about:legacy-compat"
             ):
                 self.parse_error("unexpected-doctype")
-            self.document.append(
-                Node(DOCTYPE, tag=name, text=None,
-                     attrs=[("public", public or ""), ("system", system or "")])
-            )
+            node = Node(DOCTYPE, tag=name, text=None,
+                        attrs=[("public", public or ""),
+                               ("system", system or "")])
+            self.document.append(node)
+            if self.fold is not None:
+                self.fold.leaf(node, self.document)
             self.quirks = self._classify_quirks(name, public, system, force_quirks)
             self.mode = "before-html"
             return
@@ -1498,6 +1569,8 @@ class TreeBuilder:
             el = self._create_element(token)
             self.document.append(el)
             self.open_elements.append(el)
+            if self.fold is not None:
+                self.fold.element(el, self.document)
             self.root = el
             self.mode = "before-head"
             return
@@ -1507,6 +1580,8 @@ class TreeBuilder:
         el = Node(ELEMENT, "html", NS_HTML)
         self.document.append(el)
         self.open_elements.append(el)
+        if self.fold is not None:
+            self.fold.element(el, self.document)
         self.root = el
         self.reprocess(token, "before-head")
 
@@ -1763,6 +1838,10 @@ class TreeBuilder:
             if tag in ("base", "basefont", "bgsound", "link", "meta",
                        "noframes", "script", "style", "title"):
                 self.parse_error("unexpected-start-tag-out-of-head")
+                if self.head.parent.children[-1] is not self.head:
+                    # inserts into head now precede the later siblings
+                    # already in the tree: not tree order
+                    self._rearranged()
                 self.open_elements.append(self.head)
                 self._mode_dispatch(token, "in-head")
                 if self.head in self.open_elements:
@@ -1839,6 +1918,7 @@ class TreeBuilder:
             for k, v in token[2]:
                 if k not in existing:
                     root.attrs.append((k, v))
+                    self._rearranged()
             return
         if tag in ("base", "basefont", "bgsound", "link", "meta", "noframes",
                    "script", "style", "template", "title"):
@@ -1856,6 +1936,7 @@ class TreeBuilder:
                 for k, v in token[2]:
                     if k not in existing:
                         body.attrs.append((k, v))
+                        self._rearranged()
             return
         if tag == "frameset":
             self.parse_error("unexpected-frameset")
@@ -1866,6 +1947,7 @@ class TreeBuilder:
             body = self.open_elements[1]
             if body.parent is not None:
                 body.parent.remove(body)
+                self._rearranged()
             del self.open_elements[1:]
             self._insert_element(token)
             self.mode = "in-frameset"
@@ -3004,11 +3086,14 @@ _MODES = {
 
 
 def parse(
-    text: str, collect_errors: bool = True, use_turbo: bool = True
+    text: str, collect_errors: bool = True, use_turbo: bool = True,
+    _fold=None,
 ) -> TreeBuilder:
     """Parse a complete HTML document. Returns the TreeBuilder (document at
-    ``.document``, quirks at ``.quirks``, errors at ``.errors``)."""
-    tb = TreeBuilder(text, collect_errors=collect_errors, use_turbo=use_turbo)
+    ``.document``, quirks at ``.quirks``, errors at ``.errors``).
+    ``_fold`` is the extraction mode (see :class:`TreeBuilder`)."""
+    tb = TreeBuilder(text, collect_errors=collect_errors, use_turbo=use_turbo,
+                     _fold=_fold)
     tb.run()
     return tb
 
@@ -3018,13 +3103,14 @@ _FRAGMENT_NS = {"svg": NS_SVG, "math": NS_MATHML}
 
 def parse_fragment(
     text: str, context: str = "body", collect_errors: bool = True,
-    use_turbo: bool = True, errors: Optional[list] = None,
+    use_turbo: bool = True, errors: Optional[list] = None, _fold=None,
 ) -> list[Node]:
     """Fragment parsing algorithm (HTMLParser.m:71-150).
 
     ``context`` may be "tag" or "svg tag" / "math tag" (html5lib format).
     Returns the list of parsed child nodes (parents detached). An
     ``errors`` list receives the parse-error codes; the tree is the same.
+    ``_fold`` is the extraction mode (see :class:`TreeBuilder`).
     """
     ns = NS_HTML
     tag = context
@@ -3033,7 +3119,7 @@ def parse_fragment(
         ns = _FRAGMENT_NS.get(prefix, NS_HTML)
     tb = TreeBuilder(text, fragment_context=(ns, tag),
                      collect_errors=collect_errors or errors is not None,
-                     use_turbo=use_turbo)
+                     use_turbo=use_turbo, _fold=_fold)
     tb.run()
     if errors is not None:
         errors += tb.errors

@@ -319,6 +319,36 @@ def test_fused_loop_matches_pull_parser(html):
 
 
 @settings(max_examples=300, deadline=None)
+@given(st.lists(st.sampled_from([
+    "<p>", "</p>", "<b>", "</b>", "<a href=x>", "</a>", "<div>", "</div>",
+    "<div class=nav>", "<div id=content>", "<span class=share>", "</span>",
+    "<em id=menu>", "</em>", "<ul>", "<li>", "</ul>", "<h2>", "</h2>",
+    "<table>", "<tr>", "<td>", "</td>", "</table>", "<nav>", "</nav>",
+    "<footer>", "<form>", "</form>", "<pre>", "</pre>", "<svg>", "<desc>",
+    "</svg>", "<script>x y</script>", "<select>", "<option>", "<br>",
+    "<!--c-->", "<body class=ads>", "<html id=menu>", "</body>", "</html>",
+    "<head>", "</head>", "<title>t</title>", "<frameset>", "<textarea>",
+    "<template>", "</template>", "one two", " three four five ", "&amp; six",
+]), max_size=24).map("".join), st.booleans())
+def test_fold_segmentation_matches_flat_oracle(html, fragment):
+    """Extraction folds segmentation into tree construction. A parse
+    that moved a node must report a rearrangement; every other one must
+    give the flat segmentation's blocks, node count and depth."""
+    from test_units import _fold_parse
+
+    from sparkhtml.extract import segment_blocks
+
+    fold, dom, moved = _fold_parse(html, fragment)
+    assert fold.rearranged or not moved
+    if not fold.rearranged:
+        rows, n_nodes, max_depth = fold.finish()
+        assert [row[:5] for row in rows] == \
+            [(b.tag, b.text, b.words, b.link_words, b.boiler)
+             for b in segment_blocks(dom)]
+        assert (n_nodes, max_depth) == (len(dom), max(dom.depth))
+
+
+@settings(max_examples=300, deadline=None)
 @given(st.text(alphabet="<>/&;#abcdiv plsERT='\"!-0123456789\0\n", max_size=150))
 def test_fused_loop_matches_pull_parser_char_soup(html):
     """Same differential over raw character soup (malformed tags, NULs,

@@ -287,22 +287,235 @@ def _segment_inputs():
         yield "".join(rng.choice(vocab) for _ in range(rng.randint(1, 40)))
 
 
+def _fold_parse(html, fragment=True):
+    """An extraction-mode parse of ``html``: its fold, the flat DOM of the
+    finished tree (the fragment under a document root), and whether any
+    ``Node.append`` of an already-parented node, ``Node.insert`` or
+    ``Node.remove`` ran while it was built."""
+    from unittest import mock
+
+    from sparkhtml.extract import _Fold
+    from sparkhtml.treebuilder import DOCUMENT, Node, parse_fragment
+
+    moved = []
+    append, insert, remove = Node.append, Node.insert, Node.remove
+
+    def spy_append(self, child):
+        if child.parent is not None:
+            moved.append("append")
+        append(self, child)
+
+    def spy_insert(self, index, child):
+        moved.append("insert")
+        insert(self, index, child)
+
+    def spy_remove(self, child):
+        moved.append("remove")
+        remove(self, child)
+
+    fold = _Fold()
+    with mock.patch.object(Node, "append", spy_append), \
+            mock.patch.object(Node, "insert", spy_insert), \
+            mock.patch.object(Node, "remove", spy_remove):
+        if fragment:
+            root = Node(DOCUMENT)
+            root.children = parse_fragment(html, "body", _fold=fold)
+        else:
+            root = parse(html, _fold=fold).document
+    return fold, FlatDOM.from_tree(root), bool(moved)
+
+
+def _count_fallbacks(monkeypatch):
+    """Count the flat segmentations ``extract_main_text`` falls back to."""
+    from sparkhtml import extract
+
+    calls = [0]
+    flat = extract.segment_blocks
+
+    def counted(dom):
+        calls[0] += 1
+        return flat(dom)
+
+    monkeypatch.setattr(extract, "segment_blocks", counted)
+    return calls
+
+
 def test_segment_blocks_flat_and_tree_agree():
-    """The metrics oracle segments the flat DOM, extraction segments the
-    parse tree directly: both must yield the same blocks in the same
-    order."""
-    from sparkhtml.extract import segment_blocks, segment_blocks_tree
+    """The metrics oracle segments the flat DOM, extraction folds
+    segmentation into tree construction: on every document parse the
+    fold keeps (nothing rearranged), both must yield the same blocks in
+    the same order."""
+    from sparkhtml.extract import segment_blocks
 
     def key(blocks):
         return [(b.tag, b.words, b.link_words, b.boiler, b.text) for b in blocks]
 
     n = 0
     for html in _segment_inputs():
-        doc = parse(html, collect_errors=False).document
-        assert key(segment_blocks(FlatDOM.from_tree(doc))) == \
-            key(segment_blocks_tree(doc)), html
+        fold, dom, _ = _fold_parse(html, fragment=False)
+        if fold.rearranged:
+            continue
+        rows, _, _ = fold.finish()
+        assert key(segment_blocks(dom)) == \
+            [(tag, words, link_words, boiler, texts)
+             for tag, texts, words, link_words, boiler, _ in rows], html
         n += 1
     assert n > 500
+
+
+def test_fold_matches_flat_oracle(monkeypatch):
+    """Fragment parses, as extraction runs them. A parse that moved a
+    node must report a rearrangement, and extract_main_text falls back
+    to the flat segmentation exactly then; every other parse's fold
+    gives the flat oracle's blocks, node count and depth (the five
+    ParseCounts fields: test_parse_counts_match_flat_oracle)."""
+    from sparkhtml.extract import segment_blocks
+
+    calls = _count_fallbacks(monkeypatch)
+    n = n_fold = 0
+    for html in _segment_inputs():
+        fold, dom, moved = _fold_parse(html)
+        assert fold.rearranged or not moved, html
+        if not fold.rearranged:
+            rows, n_nodes, max_depth = fold.finish()
+            assert [row[:5] for row in rows] == \
+                [(b.tag, b.text, b.words, b.link_words, b.boiler)
+                 for b in segment_blocks(dom)], html
+            assert all(tokens is None or tokens == "".join(texts).split()
+                       for _, texts, _, _, _, tokens in rows), html
+            assert (n_nodes, max_depth) == (len(dom), max(dom.depth)), html
+            n_fold += 1
+        before = calls[0]
+        extract_main_text(html)
+        assert calls[0] - before == fold.rearranged, html
+        n += 1
+    assert n_fold > 0.75 * n and n > 1000
+
+
+def _flat_extract(dom):
+    """Steps 6-7 over the flat segmentation: the oracle text."""
+    from sparkhtml.extract import _normalize, classify_block, segment_blocks
+
+    texts = (_normalize("".join(b.text)) for b in segment_blocks(dom)
+             if classify_block(b))
+    return "\n".join(t for t in texts if t)
+
+
+@pytest.mark.parametrize("html,fragment", [
+    ("<b>x<p>y</b>z</p>", True),  # adoption agency, furthest block
+    ("<table>a<tr><td>b</table>", True),  # foster-parented text
+    ("<a href=x>one two<div>three<a href=y>four five</a> six</div></a>",
+     True),  # <a> inside <a>
+    ("<body><p>one two three four five</p><body class=nav>",
+     False),  # <body> attribute merge
+    ("<head></head> <title>x y</title><p>one two three four five",
+     False),  # head re-push after html got a later child
+])
+def test_rearranged_parse_matches_flat_oracle(html, fragment, monkeypatch):
+    from sparkhtml.extract import ParseCounts, doc_metrics
+
+    fold, dom, _ = _fold_parse(html, fragment)
+    assert fold.rearranged
+    expected = _flat_extract(dom)
+    calls = _count_fallbacks(monkeypatch)
+    counts = ParseCounts()
+    assert extract_main_text(html, fragment, counts) == expected
+    assert calls == [1]
+    m = doc_metrics(dom)
+    del m["n_errors"]
+    assert {k: getattr(counts, k) for k in m} == m
+
+
+def test_depth_bomb_stays_on_the_fold(monkeypatch):
+    """The depth guard drops elements, it does not move them: a 600-deep
+    bomb is no rearrangement."""
+    html = "<div>" * 600 + "<p>one two three four five</p>" + "</div>" * 600
+    fold, dom, _ = _fold_parse(html)
+    assert not fold.rearranged
+    assert _flat_extract(dom) == "one two three four five"
+    calls = _count_fallbacks(monkeypatch)
+    assert extract_main_text(html) == "one two three four five"
+    assert calls == [0]
+    _, n_nodes, max_depth = fold.finish()
+    assert (n_nodes, max_depth) == (len(dom), max(dom.depth))
+
+
+def test_generator_spans_take_the_fold(monkeypatch):
+    """Benchmark-shaped spans, pathological stratum included, never fall
+    back: a change that sends them to the flat path fails here."""
+    from datagen.interleaved import make_corpus
+    from sparkhtml.extract import ParseCounts
+
+    spans = (s["text"] for doc in make_corpus(400, 1, 0.005)
+             for s in doc["spans"] if s["kind"] == "text")
+    spans = [t for _, t in zip(range(2000), spans)]
+    assert len(spans) == 2000
+    assert any(len(t) > 12_000 for t in spans)  # a pathological span
+    calls = _count_fallbacks(monkeypatch)
+    counts = ParseCounts()
+    for t in spans:
+        extract_main_text(t, counts=counts)
+    assert calls == [0]
+
+
+def test_folded_tree_has_no_reference_cycles():
+    """After ``finish`` no node of a folded parse points to its parent,
+    and the builder's tokenizer no longer holds a method of the builder:
+    a span's tree is freed by reference counting, not by the cyclic
+    collector."""
+    from sparkhtml.extract import _Fold
+
+    html = ("<!DOCTYPE html><nav><a href=x>home</a></nav><!--c-->"
+            "<p>one <b>two</b> &amp; three<table><tr><td>four</table>")
+    fold = _Fold()
+    tb = parse(html, _fold=fold)
+    assert not fold.rearranged
+    assert tb.tokenizer.cdata_allowed is None
+    fold.finish()
+    todo, n = [tb.document], 0
+    while todo:
+        node = todo.pop()
+        assert node.parent is None, node
+        todo.extend(node.children)
+        n += 1
+    assert n == 19
+
+
+def test_extraction_parses_through_module_parse_fragment(monkeypatch):
+    """Span extraction calls ``treebuilder.parse_fragment`` as looked up
+    on the module at call time, so a wrapper there (perfbench's layer
+    timing) sees every extraction parse."""
+    from sparkhtml import treebuilder
+
+    calls = []
+    parse_fragment = treebuilder.parse_fragment
+
+    def counted(*args, **kwargs):
+        calls.append(args[0])
+        return parse_fragment(*args, **kwargs)
+
+    monkeypatch.setattr(treebuilder, "parse_fragment", counted)
+    assert extract_spans([{"kind": "text", "text": "<p>one</p>",
+                           "media_ref": None, "offset": 0}]) == \
+        [{"kind": "text", "text": "one", "media_ref": None, "offset": 0}]
+    assert calls == ["<p>one</p>"]
+
+
+def test_normalize_matches_regex_form():
+    """``_normalize`` splits on str whitespace; the regex form it
+    replaced is the oracle, over every code point alone and between two
+    letters."""
+    import re
+    import sys
+
+    from sparkhtml.extract import _normalize
+
+    ws = re.compile(r"\s+")
+    for cp in range(sys.maxunicode + 1):
+        c = chr(cp)
+        t = "a" + c + "b"
+        assert _normalize(c) == ws.sub(" ", c).strip(), cp
+        assert _normalize(t) == ws.sub(" ", t).strip(), cp
 
 
 def test_parse_counts_match_flat_oracle():
