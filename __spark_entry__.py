@@ -303,14 +303,15 @@ def _q_css_chain_plan(spark, sf_dir):
 def _q_exact_dup_groups(spark, sf_dir):
     """Exact dedup over a corpus with injected duplicates (doc_id%10==0
     duplicated at id+1000000)."""
+    from sparkhtml.spark.dedup import normalized_text
+
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     dups = docs.filter(F.col("doc_id") % 10 == 0).withColumn(
         "doc_id", F.col("doc_id") + 1000000
     )
     all_docs = docs.unionByName(dups)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     return (
-        all_docs.select("doc_id", norm.alias("k"))
+        all_docs.select("doc_id", normalized_text("text").alias("k"))
         .groupBy("k")
         .agg(F.count("*").cast("bigint").alias("n_dups"),
              F.min("doc_id").alias("keep_id"))
@@ -433,8 +434,7 @@ def _q_cosine_pairs_exact(spark, sf_dir):
     a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
     cos = dot_col(F.col("va"), F.col("vb")) / (
-        F.greatest(_norm_col("va"), F.lit(1e-12))
-        * F.greatest(_norm_col("vb"), F.lit(1e-12))
+        _norm_col("va") * _norm_col("vb")
     )
     return (
         a.join(b, F.col("a") < F.col("b"))
@@ -445,9 +445,12 @@ def _q_cosine_pairs_exact(spark, sf_dir):
 
 
 def _q_token_count(spark, sf_dir):
+    from sparkhtml.spark.textstats import token_count
+
     docs = _docs(spark, sf_dir)
-    words = F.filter(F.split(F.col("text"), r"\s+"), lambda t: F.length(t) > 0)
-    return docs.select("doc_id", F.size(words).cast("bigint").alias("n_tokens"))
+    return docs.select(
+        "doc_id", token_count("text").cast("bigint").alias("n_tokens")
+    )
 
 
 def _q_bpe_token_count(spark, sf_dir):
@@ -498,9 +501,12 @@ def _q_lang_id(spark, sf_dir):
 
 def _q_fingerprint(spark, sf_dir):
     """MD5 document fingerprint of whitespace-normalized text."""
+    from sparkhtml.spark.dedup import normalized_text
+
     docs = _docs(spark, sf_dir)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    return docs.select("doc_id", F.md5(norm).alias("fingerprint"))
+    return docs.select(
+        "doc_id", F.md5(normalized_text("text")).alias("fingerprint")
+    )
 
 
 def _q_pii_scrub(spark, sf_dir):
@@ -669,12 +675,12 @@ def _q_corpus_stats(spark, sf_dir):
     per-(lang) and bounded. The shape every curation run reports before
     and after filtering."""
     docs = _docs(spark, sf_dir)
-    from sparkhtml.spark.textstats import word_count
+    from sparkhtml.spark.textstats import token_count
 
     base = docs.select(
         "lang",
         F.length("text").alias("_len"),
-        word_count("text").alias("_words"),
+        token_count("text").alias("_words"),
     )
     out = base.groupBy("lang").agg(
         F.count("*").cast("bigint").alias("n_docs"),

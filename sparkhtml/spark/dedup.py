@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import LongType
 
@@ -42,8 +42,11 @@ from .partitioning import fan_out
 MAX_BUCKET = 10_000
 
 
-def normalized_text(col: str = "text"):
-    return F.trim(F.regexp_replace(F.lower(F.col(col)), r"\s+", " "))
+def normalized_text(col: str | Column = "text"):
+    """``col`` (a column name or Column) lowercased, whitespace runs
+    collapsed to one space, trimmed: the key every exact-match operator
+    compares."""
+    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
 def _capped(rows: DataFrame, keys: list[str]) -> DataFrame:
@@ -409,11 +412,6 @@ def ngram_jaccard_pairs(
 # --------------------------------------------------- repeated-span removal
 
 
-def _norm_expr(c):
-    """``normalized_text`` over a Column (lambda-arg friendly)."""
-    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
-
-
 def drop_repeated_spans(
     df: DataFrame,
     min_df: int = 2,
@@ -448,7 +446,7 @@ def drop_repeated_spans(
     keys = (
         df.select(F.col(id_col).alias("_id"), F.explode(spans_col).alias("s"))
         .filter(s["kind"] == "text")
-        .select("_id", _norm_expr(s["text"]).alias("k"))
+        .select("_id", normalized_text(s["text"]).alias("k"))
         .groupBy("k")
         .agg(F.count_distinct("_id").alias("df"))
         .filter(F.col("df") >= min_df)
@@ -467,7 +465,7 @@ def drop_repeated_spans(
             F.col(spans_col),
             lambda x: (x["kind"] != "text")
             | ~F.coalesce(
-                F.array_contains(F.col("_block"), _norm_expr(x["text"])),
+                F.array_contains(F.col("_block"), normalized_text(x["text"])),
                 F.lit(False),
             ),
         ),

@@ -15,10 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-# Node kind / namespace codes (treebuilder.py:38-39)
-_KIND_ELEMENT = 1
-_KIND_TEXT = 2
-_NS_HTML = 0
+from ..treebuilder import ELEMENT, NS_HTML, TEXT
 
 
 def extract_links_df(nodes: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -38,9 +35,9 @@ def extract_links_df(nodes: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )["value"]
     anchors = (
         nodes.filter(
-            (F.col("kind") == _KIND_ELEMENT)
+            (F.col("kind") == ELEMENT)
             & (F.col("tag") == "a")
-            & (F.col("ns") == _NS_HTML)
+            & (F.col("ns") == NS_HTML)
         )
         .select(
             F.col(id_col),
@@ -50,7 +47,7 @@ def extract_links_df(nodes: DataFrame, id_col: str = "doc_id") -> DataFrame:
         )
         .filter(F.col("href").isNotNull())
     )
-    texts = nodes.filter(F.col("kind") == _KIND_TEXT).select(
+    texts = nodes.filter(F.col("kind") == TEXT).select(
         F.col(id_col).alias("_t_doc"),
         F.col("node_id").alias("_tid"),
         F.col("text").alias("_ttext"),

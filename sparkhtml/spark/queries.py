@@ -24,9 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..selector import Complex, Compound, Simple, parse_selector
-
-ELEMENT = 1
-TEXT = 2
+from ..treebuilder import ELEMENT, TEXT
 
 
 class UnsupportedSelector(ValueError):

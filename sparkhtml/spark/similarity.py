@@ -1,28 +1,29 @@
 """Similarity search over an embedding column (``array<float>``).
 
-Training-data-pipeline layer: brute-force cosine top-k as the exact
-baseline, :class:`IVFIndex` (k-means coarse quantizer) as the ANN path,
-and embedding-cosine near-duplicate pairs over random-hyperplane LSH
-buckets.
+Training-data-pipeline layer: exact cosine top-k for one query
+(:func:`cosine_topk_vs`) and for a query set (:func:`knn_join`), the
+ANN-shaped batch join over an :class:`IVFIndex` (k-means coarse
+quantizer, :func:`knn_join_ivf`), and embedding-cosine near-duplicate
+pairs over random-hyperplane LSH buckets.
 
-Scale posture: the query vector broadcasts as a literal array (tiny);
-brute-force is a single scan + JVM `aggregate`/`zip_with` dot products +
-one top-k (`ORDER BY ... LIMIT k`, executed as TakeOrderedAndProject —
-no full sort). The near-dup path buckets vectors by sign-bit signature so
-its self-join is an equi-join on the bucket key; at 10^12 rows the bucket
-key doubles as the Iceberg partition column so candidate pairs co-locate
-at rest. :class:`IVFIndex` assigns each vector a centroid id and a query
-filters/joins on it.
+Scale posture: every operator is one corpus scan with JVM
+`aggregate`/`zip_with` dot products. The query side stays in the plan
+(a scalar subquery for one query, a broadcast for a set) with its norm
+projected once per query; the two joins share one per-query rank step.
+The near-dup path buckets vectors by sign-bit signature so its self-join
+is an equi-join on the bucket key; at 10^12 rows the bucket key doubles
+as the Iceberg partition column so candidate pairs co-locate at rest.
+:class:`IVFIndex` assigns each vector a centroid id that the ANN join
+equi-joins on.
 """
 
 from __future__ import annotations
 
-import math
 import random
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from . import _register_cached
 from .dedup import _capped
@@ -40,9 +41,10 @@ def _centroid_scores(v: pa.Array, C: np.ndarray) -> np.ndarray:
 
 
 def _norm_col(vec: str):
-    return F.sqrt(
-        F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x)
-    )
+    """L2 norm of ``vec``, floored at 1e-12 so a zero vector divides
+    safely."""
+    sq = F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x)
+    return F.greatest(F.sqrt(sq), F.lit(1e-12))
 
 
 def dot_col(a, b):
@@ -53,20 +55,47 @@ def dot_col(a, b):
     )
 
 
-def cosine_topk(
-    df: DataFrame, query: list[float], k: int = 10,
-    vec_col: str = "embedding", id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact brute-force cosine top-k against a constant query vector."""
-    q = F.array(*[F.lit(float(x)) for x in query])
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in query)) or 1.0
-    cos = dot_col(F.col(vec_col), q) / (
-        F.greatest(_norm_col(vec_col), F.lit(1e-12)) * F.lit(qnorm)
+def _queries(queries: DataFrame, vec_col: str, id_col: str | None = None):
+    """The query side as ``_qid`` (when ``id_col`` is given), ``_qv`` and
+    ``_qnorm``: each query's norm is projected once, never per scored
+    row."""
+    ids = [F.col(id_col).alias("_qid")] if id_col else []
+    return queries.select(*ids, F.col(vec_col).alias("_qv")).withColumn(
+        "_qnorm", _norm_col("_qv")
+    )
+
+
+def _cosine(vec_col: str):
+    """Cosine of ``vec_col`` against the ``_qv``/``_qnorm`` columns of
+    :func:`_queries`."""
+    return dot_col(F.col(vec_col), F.col("_qv")) / (
+        _norm_col(vec_col) * F.col("_qnorm")
+    )
+
+
+def _rank(joined: DataFrame, k: int, vec_col: str, id_col: str,
+          query_id_col: str) -> DataFrame:
+    """Per-query top-k of corpus rows joined to :func:`_queries` rows:
+    ``(query_id_col, id_col, cosine, rank)``.
+
+    Ranks by the cosine ROUNDED to the output precision (6 places)
+    before the corpus-id tie-break: near-equal neighbors whose raw dot
+    products differ only in the last float ulps (~1e-16 between engines)
+    would otherwise reorder nondeterministically across engines; rounded,
+    both engines resolve identically via the id. Spark plans the
+    ``row_number() <= k`` filter as a partial WindowGroupLimit before the
+    exchange on the query id, so the exchange carries O(queries × k)."""
+    scored = joined.select(
+        F.col("_qid").alias(query_id_col),
+        F.col(id_col),
+        F.round(_cosine(vec_col), 6).alias("cosine"),
+    )
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.desc("cosine"), F.col(id_col)
     )
     return (
-        fan_out(df).select(F.col(id_col), F.round(cos, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -83,8 +112,6 @@ def cosine_topk_vs(
     (this module's rule; see ``cosine_near_dup_pairs`` requiring ``dim=``
     for the same reason).
     """
-    qv = query_vec_col or vec_col
-    df = fan_out(df)
     # The query vector and norm are evaluated once as a subquery and flow
     # into the scan as runtime values — no BroadcastExchange +
     # BroadcastNestedLoopJoin per run. Measured interleaved at local[32]
@@ -94,22 +121,18 @@ def cosine_topk_vs(
     # they're materialized to plain columns first; ONE struct subquery
     # carries both vector and norm (two separate scalar() calls would
     # execute the query frame twice per action).
-    q = query_df.select(
-        F.struct(
-            F.col(qv).alias("v"),
-            F.greatest(_norm_col(qv), F.lit(1e-12)).alias("n"),
-        ).alias("_q")
-    ).scalar()
-    joined = (
-        df.withColumn("_q", q)
-        .withColumn("_qv", F.col("_q.v"))
-        .withColumn("_qnorm", F.col("_q.n"))
+    q = (
+        _queries(query_df, query_vec_col or vec_col)
+        .select(F.struct("_qv", "_qnorm").alias("_q"))
+        .scalar()
     )
-    cos = dot_col(F.col(vec_col), F.col("_qv")) / (
-        F.greatest(_norm_col(vec_col), F.lit(1e-12)) * F.col("_qnorm")
+    joined = (
+        fan_out(df).withColumn("_q", q)
+        .withColumn("_qv", F.col("_q._qv"))
+        .withColumn("_qnorm", F.col("_q._qnorm"))
     )
     return (
-        joined.select(F.col(id_col), F.round(cos, 6).alias("cosine"))
+        joined.select(F.col(id_col), F.round(_cosine(vec_col), 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.col(id_col))
         .limit(k)
     )
@@ -126,44 +149,12 @@ def knn_join(
 
     Plan: the query set broadcasts (real serving batches are O(10³)
     rows); corpus rows join against all queries in one scan-local
-    BroadcastNestedLoopJoin, then one window partitioned by query id
-    ranks per-query. The corpus is scanned ONCE regardless of the number
-    of queries — at 100 TB that dominates running N single-query jobs by
-    N×. Query norms are projected once pre-broadcast, not per pair.
-    Ranking orders by the cosine ROUNDED to the output precision (6
-    places) before the corpus-id tie-break: near-equal neighbors whose
-    raw dot products differ only in the last float ulps (~1e-16 between
-    engines) would otherwise reorder nondeterministically across
-    engines; at round-6 both engines resolve identically via the id.
+    BroadcastNestedLoopJoin, then :func:`_rank` ranks per query. The
+    corpus is scanned ONCE regardless of the number of queries — at
+    100 TB that dominates running N single-query jobs by N×.
     """
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(query_id_col).alias("_qid"),
-        F.col(query_vec_col or vec_col).alias("_qv"),
-    ).withColumn("_qnorm", F.greatest(_norm_col("_qv"), F.lit(1e-12)))
-    joined = df.crossJoin(F.broadcast(q))
-    cos = dot_col(F.col(vec_col), F.col("_qv")) / (
-        F.greatest(_norm_col(vec_col), F.lit(1e-12)) * F.col("_qnorm")
-    )
-    scored = joined.select(
-        F.col("_qid").alias(query_id_col),
-        F.col(id_col),
-        F.round(cos, 6).alias("_cos"),  # rank at output precision
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("_cos"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            F.round("_cos", 6).alias("cosine"),
-            F.col("_rk").alias("rank"),
-        )
-    )
+    q = _queries(queries, query_vec_col or vec_col, query_id_col)
+    return _rank(df.crossJoin(F.broadcast(q)), k, vec_col, id_col, query_id_col)
 
 
 def knn_join_ivf(
@@ -181,11 +172,8 @@ def knn_join_ivf(
     the dot-product count drops to ~corpus × N × n_probe / k. At full
     probe (``n_probe = index.k``) the result equals the exact join (the
     driver oracle pins that); at partial probe recall is pinned by test.
-    Ranking matches :func:`knn_join`: cosine rounded to output precision,
-    corpus-id tie-break.
+    Ranking is :func:`knn_join`'s :func:`_rank`.
     """
-    from pyspark.sql import Window
-
     assert index.centroids is not None, "fit() first"
     n_probe = min(n_probe, index.k)
     bc = df.sparkSession.sparkContext.broadcast(
@@ -197,13 +185,8 @@ def knn_join_ivf(
         idxs = np.argsort(_centroid_scores(v, bc.value), axis=1)[:, :n_probe]
         return pa.array(list(idxs.astype(np.int32)), pa.list_(pa.int32()))
 
-    q = (
-        queries.select(
-            F.col(query_id_col).alias("_qid"),
-            F.col(query_vec_col or vec_col).alias("_qv"),
-        )
-        .withColumn("_qnorm", F.greatest(_norm_col("_qv"), F.lit(1e-12)))
-        .withColumn("_probe", F.explode(_probes(F.col("_qv"))))
+    q = _queries(queries, query_vec_col or vec_col, query_id_col).withColumn(
+        "_probe", F.explode(_probes(F.col("_qv")))
     )
     # the coalesce makes the join key non-nullable, so Catalyst does not
     # generate an isnotnull pre-filter — which would otherwise evaluate
@@ -215,27 +198,7 @@ def knn_join_ivf(
     joined = corpus.join(
         F.broadcast(q), corpus["_ck"] == q["_probe"], "inner"
     )
-    cos = dot_col(F.col(vec_col), F.col("_qv")) / (
-        F.greatest(_norm_col(vec_col), F.lit(1e-12)) * F.col("_qnorm")
-    )
-    scored = joined.select(
-        F.col("_qid").alias(query_id_col),
-        F.col(id_col),
-        F.round(cos, 6).alias("_cos"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("_cos"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            F.col("_cos").alias("cosine"),
-            F.col("_rk").alias("rank"),
-        )
-    )
+    return _rank(joined, k, vec_col, id_col, query_id_col)
 
 
 def hyperplane_signature(
@@ -266,15 +229,15 @@ class IVFIndex:
     The scale path sketched in this module's docstring made concrete:
     ``fit`` is one ML job (sampled), ``assign`` adds the cluster id —
     which doubles as the Iceberg partition column at rest — and
-    ``topk`` reads ~n_probe/k of the corpus.
+    :func:`knn_join_ivf` scores each query against ~n_probe/k of the
+    corpus.
     """
 
     def __init__(self, k: int = 16, seed: int = 42,
-                 vec_col: str = "embedding", id_col: str = "vec_id") -> None:
+                 vec_col: str = "embedding") -> None:
         self.k = k
         self.seed = seed
         self.vec_col = vec_col
-        self.id_col = id_col
         self.centroids: list[list[float]] | None = None
 
     def fit(self, df: DataFrame, sample_fraction: float = 1.0) -> "IVFIndex":
@@ -290,13 +253,6 @@ class IVFIndex:
         model = KMeans(k=self.k, seed=self.seed).fit(vecs)
         self.centroids = [[float(x) for x in c] for c in model.clusterCenters()]
         return self
-
-    def _nearest_centroids(self, query: list[float], n_probe: int) -> list[int]:
-        def dist2(c):
-            return sum((a - float(b)) ** 2 for a, b in zip(c, query))
-
-        order = sorted(range(self.k), key=lambda i: dist2(self.centroids[i]))
-        return order[:n_probe]
 
     def assign(self, df: DataFrame) -> DataFrame:
         """Add the coarse cluster id (argmin centroid distance) as a column.
@@ -318,15 +274,6 @@ class IVFIndex:
             return pa.array(scores.argmin(axis=1).astype(np.int32))
 
         return df.withColumn("ivf_cluster", _assign(F.col(self.vec_col)))
-
-    def topk(self, df: DataFrame, query: list[float], k: int = 10,
-             n_probe: int = 3) -> DataFrame:
-        """Approximate top-k: exact cosine over the n_probe nearest
-        clusters only."""
-        assigned = self.assign(df)
-        probes = self._nearest_centroids(query, n_probe)
-        cand = assigned.filter(F.col("ivf_cluster").isin(probes))
-        return cosine_topk(cand, query, k, self.vec_col, self.id_col)
 
 
 def cosine_near_dup_pairs(
@@ -353,7 +300,7 @@ def cosine_near_dup_pairs(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         sig.alias("bucket"),
-        F.greatest(_norm_col(vec_col), F.lit(1e-12)).alias("norm"),
+        _norm_col(vec_col).alias("norm"),
     ).cache()
     # A self-join, not dedup._bucket_pairs: members carry a dim-float
     # vector, so a collected member list would copy O(w·dim) into every

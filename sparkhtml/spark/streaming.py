@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schemas
+from .dedup import normalized_text
 from .pipeline import extract_spans_df
 
 
@@ -84,8 +85,7 @@ def stream_dedup_exact(
     """Streaming exact dedup: fingerprint + dropDuplicatesWithinWatermark —
     state size bounded by the watermark horizon (at 10^12-doc scale the
     batch LSH pass handles history; the stream handles the live window)."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    fp = docs_with_ts.withColumn("fingerprint", F.xxhash64(norm))
+    fp = docs_with_ts.withColumn("fingerprint", F.xxhash64(normalized_text("text")))
     return fp.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["fingerprint"]
     )

@@ -1,8 +1,13 @@
 """Text-analysis operators over the ``documents`` table.
 
-Training-data-pipeline layer (per round brief): language-ID, quality
-scoring, token counting, document fingerprinting. Everything here is
-JVM-side ``pyspark.sql.functions`` expressions — whole-stage-codegen
+Training-data-pipeline layer: language-ID, quality and repetition
+scoring, token counting (:func:`token_count` words,
+:func:`bpe_token_count` BPE-ish), document fingerprinting, cleanup, and
+the word-shingle coverage signals (benchmark contamination, cross-doc
+duplicate coverage). Every word-level operator splits text with one
+word-array expression (:func:`_words`) and both shingle operators share
+one shingle explode and one per-document coverage tail. Everything here
+is JVM-side ``pyspark.sql.functions`` expressions — whole-stage-codegen
 friendly, no Python in the hot path — so each also has an exact ANSI-SQL
 oracle in ``__spark_entry__.oracle_sql``.
 """
@@ -11,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .dedup import normalized_text
 from .partitioning import fan_out
 
 # Tiny per-language stopword marker lists for the n-gram/stopword heuristic
@@ -29,23 +35,20 @@ _STOP_MARKERS = {
 TOKEN_RE = r"[a-zA-Z]+(?:'[a-z]+)?|[0-9]+|[^a-zA-Z0-9\s]"
 
 
+def _words(c: Column) -> Column:
+    """The non-empty whitespace-separated words of ``c``; callers that
+    lowercase pass ``F.lower(...)``."""
+    return F.filter(F.split(c, r"\s+"), lambda t: F.length(t) > 0)
+
+
 def token_count(col: str = "text") -> Column:
     """Whitespace token count (words)."""
-    return F.size(
-        F.filter(
-            F.split(F.col(col), r"\s+"),
-            lambda t: F.length(t) > 0,
-        )
-    )
+    return F.size(_words(F.col(col)))
 
 
 def bpe_token_count(col: str = "text") -> Column:
     """BPE-ish token count via regexp_extract_all (JVM, SQL-oracle-able)."""
     return F.size(F.regexp_extract_all(F.col(col), F.lit(TOKEN_RE), F.lit(0)))
-
-
-def word_count(col: str = "text") -> Column:
-    return F.size(F.filter(F.split(F.col(col), r"\s+"), lambda t: F.length(t) > 0))
 
 
 def quality_features(df: DataFrame, col: str = "text") -> DataFrame:
@@ -57,9 +60,7 @@ def quality_features(df: DataFrame, col: str = "text") -> DataFrame:
     four times per row (CollapseProject keeps a non-cheap multi-use alias
     materialized, so the bound column is evaluated once)."""
     c = F.col(col)
-    bound = fan_out(df).withColumn(
-        "_words", F.filter(F.split(c, r"\s+"), lambda t: F.length(t) > 0)
-    )
+    bound = fan_out(df).withColumn("_words", _words(c))
     words = F.col("_words")
     n_words = F.size(words)
     n_chars = F.length(c)
@@ -101,12 +102,9 @@ def lang_id(df: DataFrame, col: str = "text") -> DataFrame:
     Ties break by fixed language order (en, de, es, fr) then 'und'
     (undetermined) when no marker hits.
     """
-    c = F.lower(F.col(col))
     # bind the word array ONCE (no HOF-lambda CSE in Catalyst: a naive
     # per-language filter(split(...)) re-tokenizes the text 4×)
-    out = df.withColumn(
-        "_words", F.filter(F.split(c, r"\s+"), lambda t: F.length(t) > 0)
-    )
+    out = df.withColumn("_words", _words(F.lower(F.col(col))))
     for lang, markers in _STOP_MARKERS.items():
         arr = F.array(*[F.lit(m) for m in markers])
         out = out.withColumn(
@@ -126,8 +124,7 @@ def lang_id(df: DataFrame, col: str = "text") -> DataFrame:
 def fingerprint(df: DataFrame, col: str = "text") -> DataFrame:
     """Document fingerprint: 64-bit rolling-style hash of the
     whitespace-normalized text (xxhash64 — stable, distributed, cheap)."""
-    norm = F.regexp_replace(F.lower(F.col(col)), r"\s+", " ")
-    return df.withColumn("fingerprint", F.xxhash64(F.trim(norm)))
+    return df.withColumn("fingerprint", F.xxhash64(normalized_text(col)))
 
 
 # C0 controls minus \t\n (CR is normalized upstream), C1 controls, and
@@ -185,11 +182,7 @@ def repetition_features(
     + O(n) ``aggregate`` fold, fully inside whole-stage codegen, no
     Python. Docs with no words get (0, 0, null, null).
     """
-    bound = df.withColumn(
-        "_words",
-        F.filter(F.split(F.lower(F.col(col)), r"\s+"),
-                 lambda t: F.length(t) > 0),
-    )
+    bound = df.withColumn("_words", _words(F.lower(F.col(col))))
     words = F.col("_words")
     n_words = F.size(words).cast("bigint")
     n_distinct = F.size(F.array_distinct(words)).cast("bigint")
@@ -224,6 +217,49 @@ def repetition_features(
     )
 
 
+def _shingles(frame: DataFrame, n: int, col: str, out: str,
+              *keep: str) -> DataFrame:
+    """One row per word ``n``-gram shingle of the lowercased ``col``,
+    named ``out``, with the ``keep`` columns carried along. Documents
+    with fewer than ``n`` words yield no rows."""
+    words = frame.select(*keep, _words(F.lower(F.col(col))).alias("_w"))
+    # guard: Spark's sequence(1, 0) counts DOWN ([1, 0]) — short docs must
+    # yield an empty shingle array, not two bogus positions
+    idx = F.when(
+        F.size("_w") >= n, F.sequence(F.lit(1), F.size("_w") - (n - 1))
+    ).otherwise(F.array().cast("array<int>"))
+    return words.select(
+        *keep,
+        F.explode(
+            F.transform(idx, lambda i: F.concat_ws(" ", F.slice("_w", i, n)))
+        ).alias(out),
+    )
+
+
+def _coverage(df: DataFrame, shingles: DataFrame, hit: Column, id_col: str,
+              n_hit: str, frac: str) -> DataFrame:
+    """Per document: ``n_shingles``, ``n_hit`` (the shingles where ``hit``
+    is 1) and ``frac`` = n_hit / n_shingles. Documents of ``df`` with no
+    shingle rows come back as (0, 0, null) via a left-anti join against
+    the aggregated ids."""
+    cov = shingles.groupBy(id_col).agg(
+        F.count("*").alias("n_shingles"), F.sum(hit).alias(n_hit)
+    )
+    out = cov.select(
+        id_col,
+        "n_shingles",
+        n_hit,
+        (F.col(n_hit) / F.col("n_shingles")).alias(frac),
+    )
+    empty = df.join(out, id_col, "left_anti").select(
+        F.col(id_col),
+        F.lit(0).cast("bigint").alias("n_shingles"),
+        F.lit(0).cast("bigint").alias(n_hit),
+        F.lit(None).cast("double").alias(frac),
+    )
+    return out.unionByName(empty)
+
+
 def benchmark_contamination(
     df: DataFrame,
     bench: DataFrame,
@@ -242,48 +278,17 @@ def benchmark_contamination(
     shingles; no shuffle of the big side beyond the per-doc re-aggregate.
     At 100 TB the bench set stays broadcastable (eval suites are MBs).
     """
-    def shingle_rows(frame: DataFrame, out: str, with_id: bool):
-        words = frame.select(
-            *( [F.col(id_col)] if with_id else [] ),
-            F.filter(F.split(F.lower(F.col(col)), r"\s+"),
-                     lambda t: F.length(t) > 0).alias("_w"),
-        )
-        idx = F.when(
-            F.size("_w") >= n, F.sequence(F.lit(1), F.size("_w") - (n - 1))
-        ).otherwise(F.array().cast("array<int>"))
-        return words.select(
-            *( [F.col(id_col)] if with_id else [] ),
-            F.explode(
-                F.transform(idx, lambda i: F.concat_ws(" ", F.slice("_w", i, n)))
-            ).alias(out),
-        )
-
     bench_sh = (
-        shingle_rows(bench, "_bs", with_id=False)
+        _shingles(bench, n, col, "_bs")
         .distinct()
         .select("_bs", F.lit(1).alias("_hit"))
     )
-    doc_sh = shingle_rows(df, "_s", with_id=True).distinct()
+    doc_sh = _shingles(df, n, col, "_s", id_col).distinct()
     joined = doc_sh.join(
         F.broadcast(bench_sh), F.col("_s") == F.col("_bs"), "left"
     )
-    cov = joined.groupBy(id_col).agg(
-        F.count("*").alias("n_shingles"),
-        F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_contaminated"),
-    )
-    out = cov.select(
-        id_col,
-        "n_shingles",
-        "n_contaminated",
-        (F.col("n_contaminated") / F.col("n_shingles")).alias("contamination"),
-    )
-    empty = df.join(out, id_col, "left_anti").select(
-        F.col(id_col),
-        F.lit(0).cast("bigint").alias("n_shingles"),
-        F.lit(0).cast("bigint").alias("n_contaminated"),
-        F.lit(None).cast("double").alias("contamination"),
-    )
-    return out.unionByName(empty)
+    return _coverage(df, joined, F.coalesce(F.col("_hit"), F.lit(0)), id_col,
+                     "n_contaminated", "contamination")
 
 
 def dup_shingle_coverage(
@@ -300,38 +305,9 @@ def dup_shingle_coverage(
     for byte-bounded exchange at corpus scale. Documents with fewer than
     ``n`` words report null coverage.
     """
-    words = df.select(
-        F.col(id_col),
-        F.filter(F.split(F.lower(F.col(col)), r"\s+"),
-                 lambda t: F.length(t) > 0).alias("_w"),
-    )
-    # guard: Spark's sequence(1, 0) counts DOWN ([1, 0]) — short docs must
-    # yield an empty shingle array, not two bogus positions
-    idx = F.when(
-        F.size("_w") >= n, F.sequence(F.lit(1), F.size("_w") - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    shingles = words.select(
-        id_col,
-        F.explode(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice("_w", i, n)))
-        ).alias("_s"),
-    ).distinct()  # one vote per (doc, shingle)
+    # one vote per (doc, shingle)
+    shingles = _shingles(df, n, col, "_s", id_col).distinct()
     global_counts = shingles.groupBy("_s").agg(F.count("*").alias("_docs"))
     joined = shingles.join(global_counts, "_s")
-    cov = joined.groupBy(id_col).agg(
-        F.count("*").alias("n_shingles"),
-        F.sum(F.when(F.col("_docs") > 1, 1).otherwise(0)).alias("n_dup"),
-    )
-    out = cov.select(
-        id_col,
-        "n_shingles",
-        "n_dup",
-        (F.col("n_dup") / F.col("n_shingles")).alias("dup_coverage"),
-    )
-    empty = df.join(out, id_col, "left_anti").select(
-        F.col(id_col),
-        F.lit(0).cast("bigint").alias("n_shingles"),
-        F.lit(0).cast("bigint").alias("n_dup"),
-        F.lit(None).cast("double").alias("dup_coverage"),
-    )
-    return out.unionByName(empty)
+    return _coverage(df, joined, F.when(F.col("_docs") > 1, 1).otherwise(0),
+                     id_col, "n_dup", "dup_coverage")

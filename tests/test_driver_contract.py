@@ -200,3 +200,40 @@ def test_ngram_jaccard_oracle_shingle_bound():
             f"FROM read_parquet('{path}'))"
         ).fetchone()
         assert mx < 500, f"{path}: max distinct shingles {mx} >= 500"
+
+
+# The corpus operators' driver queries (dedup, similarity, text stats,
+# sampling, nodes table), run against their DuckDB oracles in-process.
+# sf0.01, not sf0.001: at sf0.001 one cosine_topk / ivf_topk value sits
+# on a 3-place rounding boundary (0.275 in Spark, 0.274 in DuckDB).
+CORPUS_ORACLE_QUERIES = (
+    "exact_dup_groups minhash_lsh_pairs ngram_jaccard_pairs simhash_dups "
+    "drop_repeated_spans "
+    "cosine_topk ivf_topk cosine_neardup_pairs knn_join knn_join_ivf "
+    "token_count quality_features lang_id fingerprint repetition_features "
+    "dup_coverage contamination training_filter filter_pipeline "
+    "corpus_stats top_trigrams text_cleanup "
+    "pack_greedy pack_greedy_bucketed mix_to_budget "
+    "extract_links css_child_plan css_sibling_plan css_pseudo_plan "
+    "css_chain_plan nodes_tag_counts"
+).split()
+
+
+def test_corpus_operator_oracles(spark):
+    """Each corpus operator's driver query equals its DuckDB oracle at
+    sf0.01: same row count, same columns, same order-insensitive value
+    hash (``tools/check_oracles.py``'s comparison)."""
+    import importlib.util
+
+    sf_dir = "/root/testdata/sf0.01"
+    spec = importlib.util.spec_from_file_location(
+        "check_oracles", os.path.join(REPO, "tools", "check_oracles.py")
+    )
+    check_oracles = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check_oracles)
+
+    lines = []
+    result = check_oracles.check_queries(
+        spark, sf_dir, set(CORPUS_ORACLE_QUERIES), out=lines.append
+    )
+    assert result == dict.fromkeys(CORPUS_ORACLE_QUERIES, "OK"), "\n".join(lines)

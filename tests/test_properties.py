@@ -10,9 +10,12 @@ Invariants:
 - selector matcher agrees with a naive DFS evaluator on generated docs
 """
 
+import html as stdhtml
+import re
 import string
 
-from hypothesis import given, settings, strategies as st
+import pytest
+from hypothesis import assume, given, settings, strategies as st
 
 from sparkhtml.dom import FlatDOM
 from sparkhtml.escape import escape_html, unescape_html
@@ -211,10 +214,41 @@ def _matches_compound(dom, i, comp):
 def test_unescape_matches_stdlib(text):
     """Differential: our from-scratch WHATWG reference resolver must agree
     with Python's stdlib html.unescape (independent implementation of the
-    same spec) on arbitrary entity soup."""
-    import html as stdhtml
-
+    same spec) on arbitrary entity soup, except on the one class where
+    the stdlib departs from WHATWG (pinned by
+    ``test_unescape_keeps_invalid_codepoints``)."""
+    assume(not _stdlib_drops(text))
     assert unescape_html(text) == stdhtml.unescape(text)
+
+
+def _stdlib_drops(text):
+    """True when ``text`` holds a numeric reference to a code point that
+    stdlib ``html.unescape`` drops (its ``_invalid_codepoints``, minus the
+    ones its ``_invalid_charrefs`` table replaces). WHATWG keeps such a
+    character and reports a parse error."""
+    for m in re.finditer(r"&#(?:[xX]([0-9a-fA-F]+)|([0-9]+))", text):
+        cp = int(m.group(1), 16) if m.group(1) else int(m.group(2))
+        if (cp in stdhtml._invalid_codepoints
+                and cp not in stdhtml._invalid_charrefs):
+            return True
+    return False
+
+
+@pytest.mark.parametrize("text, want", [
+    # control characters and noncharacters: kept (stdlib gives '')
+    ("&#1", "\x01"), ("&#11;", "\x0b"), ("&#127;", "\x7f"),
+    ("&#xFFFE;", "\ufffe"), ("a&#x1;b", "a\x01b"),
+    # the neighbours the stdlib resolves the same way: the C1 table,
+    # NUL, and CR
+    ("&#x80;", "\u20ac"), ("&#0;", "\ufffd"), ("&#13;", "\r"),
+])
+def test_unescape_keeps_invalid_codepoints(text, want):
+    """WHATWG numeric character reference end state: a control or
+    noncharacter code point is a parse error, but the character is kept.
+    The stdlib oracle of ``test_unescape_matches_stdlib`` drops it, and
+    that test skips exactly the inputs where the two differ."""
+    assert unescape_html(text) == want
+    assert _stdlib_drops(text) == (stdhtml.unescape(text) != want)
 
 
 @settings(max_examples=200, deadline=None)

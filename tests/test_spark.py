@@ -526,11 +526,10 @@ def test_simhash_hash_modes_agree(spark):
 
 def test_similarity(spark, monkeypatch):
     from sparkhtml.spark import dedup
-    from sparkhtml.spark.similarity import cosine_near_dup_pairs, cosine_topk
+    from sparkhtml.spark.similarity import cosine_near_dup_pairs, cosine_topk_vs
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = [float(x) for x in emb.filter("vec_id = 3").first()["embedding"]]
-    top = cosine_topk(emb, q, 5).collect()
+    top = cosine_topk_vs(emb, emb.filter("vec_id = 3"), 5).collect()
     assert top[0].vec_id == 3 and abs(top[0].cosine - 1.0) < 1e-6
     assert all(top[i].cosine >= top[i + 1].cosine for i in range(4))
     dup = emb.filter("vec_id = 3").withColumn("vec_id", F.lit(999999))
@@ -547,22 +546,6 @@ def test_similarity(spark, monkeypatch):
         emb.unionByName(clones), 0.9999, dim=64
     ).collect()
     assert not any(r.a >= 5000 and r.b >= 5000 for r in capped)
-
-
-def test_ivf_index(spark):
-    from sparkhtml.spark.similarity import IVFIndex, cosine_topk
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = [float(x) for x in emb.filter("vec_id = 7").first()["embedding"]]
-    idx = IVFIndex(k=4).fit(emb)
-    exact = [r.vec_id for r in cosine_topk(emb, q, 10).collect()]
-    # full probe reproduces exact ranking
-    full = [r.vec_id for r in idx.topk(emb, q, 10, n_probe=4).collect()]
-    assert full == exact
-    # partial probe finds the self-match and keeps decent recall
-    approx = [r.vec_id for r in idx.topk(emb, q, 10, n_probe=2).collect()]
-    assert approx[0] == 7
-    assert len(set(exact) & set(approx)) >= 5
 
 
 def test_ivf_assignment_scales_to_many_centroids(spark):
@@ -1384,7 +1367,8 @@ def test_knn_join_ivf_full_probe_exact_and_partial_recall(spark):
     """Full probe (n_probe=k) must equal the exact knn_join row-for-row;
     partial probe must keep recall@5 high on clusterable data (every
     query's own cluster is probed first, so its exact neighbors in that
-    cluster always surface)."""
+    cluster always surface) and rank each query (a corpus row) first
+    against itself."""
     from sparkhtml.spark.similarity import IVFIndex, knn_join, knn_join_ivf
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1406,9 +1390,12 @@ def test_knn_join_ivf_full_probe_exact_and_partial_recall(spark):
     exact_sets = {}
     for q, v, _, _ in exact:
         exact_sets.setdefault(q, set()).add(v)
-    part = {}
+    part, first = {}, {}
     for r in knn_join_ivf(emb, queries, idx, k=5, n_probe=2).collect():
         part.setdefault(r.query_id, set()).add(r.vec_id)
+        if r.rank == 1:
+            first[r.query_id] = r.vec_id
+    assert first == {q: q for q in exact_sets}, first
     hits = sum(len(part.get(q, set()) & s) for q, s in exact_sets.items())
     total = sum(len(s) for s in exact_sets.values())
     assert hits / total >= 0.6, f"recall@5 {hits}/{total}"
