@@ -2,9 +2,9 @@
 
 Times ``spark-submit --master local[K] --py-files dist/sparkhtml.zip
 scripts/run_extract.py`` at K = N and K = 4N, N = nproc // 4 (at least
-1), over two seeded perfbench inputs: HTML spans with the pathological
-stratum routed to the straggler pass (as in perfbench's ``html_job``),
-and PDF blobs. The job's own column switch picks the worker.
+1), over two seeded perfbench inputs: HTML spans with perfbench's
+``html_job`` pathological stratum, and PDF blobs. The job's own column
+switch picks the worker.
 
 Beside each Spark leg runs a control: a spawn ``multiprocessing`` pool of
 K processes applying the job's Arrow worker (``pipeline._extract_arrow``
@@ -16,10 +16,8 @@ Every leg runs in fresh processes; per round the four legs of a format
 (Spark N, Spark 4N, control N, control 4N) run back to back, in reversed
 order on odd rounds. A Spark leg's throughput is input docs ÷ the job's
 ``wall_s``; its serial part is ``wall_s`` minus the waves' ``wall_ms``
-from ``_manifest/chunk-*.json`` (projections and planning; the straggler
-pass runs beside the waves and adds only where it outlasts them).
-A leg whose ``rows + n_stragglers`` is not the input's doc count stops
-the run.
+from ``_manifest/chunk-*.json`` (projections and planning). A leg whose
+``rows`` is not the input's doc count stops the run.
 
 Overwrites BENCH/SCALING.json.
 
@@ -45,24 +43,20 @@ import pyarrow.parquet as pq
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from perfbench.inputs import (  # noqa: E402
-    FILES_PER_CORE, LONG_DOC_CHARS, prepare)
+from perfbench.inputs import FILES_PER_CORE, prepare  # noqa: E402
 
 BUILD = os.path.join(REPO, ".bench_build", "scaling")
 OUT = os.path.join(REPO, "BENCH", "SCALING.json")
 SEED = 1
 CHUNKS = 16
 # Docs per control task: small enough that a pool of 4N balances the
-# pathological docs dynamically, as the job's straggler split does.
+# pathological docs dynamically, as the job's many-task waves do.
 CONTROL_BATCH = 64
-# (docs, pathological rate, extra job args) per input kind. A pass
-# carries fixed costs that more cores do not shrink (cold-JVM planning,
-# Python worker start, the straggler pass); on one core these sizes make
-# the pass ~1 min, so they are a minority of it.
-FORMATS = {
-    "html": (24000, 0.005, ["--straggler-chars", str(LONG_DOC_CHARS)]),
-    "pdf": (4000, 0.0, []),
-}
+# (docs, pathological rate) per input kind. A pass carries fixed costs
+# that more cores do not shrink (cold-JVM planning, Python worker start);
+# on one core these sizes make the pass ~1 min, so they are a minority
+# of it.
+FORMATS = {"html": (24000, 0.005), "pdf": (4000, 0.0)}
 
 
 def efficiency(lo: float, hi: float) -> float:
@@ -122,8 +116,7 @@ def waves_ms(manifest: str) -> int:
     return sum(ms for ms, _ in itertools.groupby(entries))
 
 
-def spark_leg(name: str, inp, cores: int, job_args: list[str],
-              pyfiles: str) -> dict:
+def spark_leg(name: str, inp, cores: int, pyfiles: str) -> dict:
     """One fresh ``spark-submit`` of the job; checks it wrote every doc."""
     work = os.path.join(BUILD, name)
     shutil.rmtree(work, ignore_errors=True)
@@ -133,7 +126,7 @@ def spark_leg(name: str, inp, cores: int, job_args: list[str],
            "--py-files", pyfiles,
            os.path.join(REPO, "scripts", "run_extract.py"),
            "--input", inp.path, "--output", out, "--chunks", str(CHUNKS),
-           "--metrics-output", os.path.join(work, "metrics"), *job_args]
+           "--metrics-output", os.path.join(work, "metrics")]
     proc = subprocess.run(cmd, cwd=work, capture_output=True, text=True,
                           timeout=3600)
     lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
@@ -141,10 +134,9 @@ def spark_leg(name: str, inp, cores: int, job_args: list[str],
         raise RuntimeError(f"{name}: job failed (rc {proc.returncode}): "
                            f"{proc.stderr[-2000:]}")
     summary = json.loads(lines[-1])
-    written = summary["rows"] + summary["n_stragglers"]
-    if written != inp.n_docs:
-        raise RuntimeError(f"{name}: wrote {written} docs of {inp.n_docs} "
-                           f"({summary})")
+    if summary["rows"] != inp.n_docs:
+        raise RuntimeError(f"{name}: wrote {summary['rows']} docs of "
+                           f"{inp.n_docs} ({summary})")
     wall = summary["wall_s"]
     serial = wall - waves_ms(os.path.join(out, "_manifest")) / 1000
     return {"docs_per_s": round(inp.n_docs / wall, 1), "wall_s": wall,
@@ -168,7 +160,7 @@ def main() -> None:
     inputs = {
         fmt: prepare(os.path.join(REPO, ".bench_build", "inputs"), fmt,
                      SEED, docs, FILES_PER_CORE * nproc, rate)
-        for fmt, (docs, rate, _) in FORMATS.items()
+        for fmt, (docs, rate) in FORMATS.items()
     }
     legs = [(f"{side}_{k}", side, cores)
             for side in ("spark", "control") for k, cores in sizes.items()]
@@ -179,7 +171,7 @@ def main() -> None:
             for name, side, cores in legs[::-1] if r % 2 else legs:
                 if side == "spark":
                     rec[name] = spark_leg(f"{fmt}-{name}", inp, cores,
-                                          FORMATS[fmt][2], pyfiles)
+                                          pyfiles)
                 else:
                     rec[name] = control_leg(inp, cores)[0]
                 print(fmt, r, name, rec[name], flush=True)
@@ -203,8 +195,7 @@ def main() -> None:
         result["formats"][fmt] = {
             "input": {"kind": inp.kind, "seed": inp.seed, "docs": inp.n_docs,
                       "mb": round(inp.mb, 1),
-                      "long_share": round(inp.long_share, 4),
-                      "job_args": FORMATS[fmt][2]},
+                      "long_share": round(inp.long_share, 4)},
             **{key: spread([rec[key] for rec in recs])
                for key in ("raw_efficiency", "control_efficiency",
                            "relative_efficiency")},

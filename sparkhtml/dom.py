@@ -59,7 +59,13 @@ class FlatDOM:
     def from_tree(cls, root: Node) -> "FlatDOM":
         """Single post-parse flattening pass (SURVEY.md §7.3.1: ids are
         assigned by one final DFS, so mid-parse mutation never fights
-        columnar ids)."""
+        columnar ids). The tree is left as it is."""
+        return cls._flatten(root, False)
+
+    @classmethod
+    def _flatten(cls, root: Node, release: bool) -> "FlatDOM":
+        """:meth:`from_tree`'s walk; ``release`` clears each node's
+        ``parent`` as the walk visits it."""
         dom = cls()
         parent = dom.parent
         ap = parent.append
@@ -86,6 +92,8 @@ class FlatDOM:
             an(node.ns)
             aa(node.attrs)
             ax(node.text)
+            if release:
+                node.parent = None
             children = node.children
             if children:
                 d1 = depth + 1
@@ -105,7 +113,9 @@ class FlatDOM:
     @classmethod
     def from_html(cls, text: str, collect_errors: bool = False) -> "FlatDOM":
         tb = parse(text, collect_errors=collect_errors)
-        dom = cls.from_tree(tb.document)
+        # the parse is ours: the walk drops its parent pointers, so the
+        # tree is freed by reference counting, not by the cyclic collector
+        dom = cls._flatten(tb.document, True)
         dom.n_errors = len(tb.errors) + len(tb.tokenizer.errors)
         return dom
 

@@ -5,9 +5,8 @@ the north rule: partition-level idempotent writes + a completed-partitions
 manifest. The corpus is split into deterministic ``chunk`` ranges by
 doc_id hash; each chunk lands in its own ``chunk=<c>/`` output directory
 and gets a manifest entry on success. Resume = anti-join the chunk list
-against the manifest and process only the remainder. ``output_df`` is
-the one reader of the committed rows: the chunks plus the separate
-straggler pass's ``stragglers/`` (``scripts/run_extract.py``).
+against the manifest and process only the remainder. ``output_df``
+reads the committed rows back without a ``chunk`` column.
 
 Chunks are written in **waves**. A wave is one Spark action: one scan of
 the input filtered to the wave's chunks (no filter when the wave holds
@@ -93,8 +92,6 @@ class ChunkedRun:
         self.partitions = partitions or spark.sparkContext.defaultParallelism
         self.iceberg_table = iceberg_table
         self.manifest_path = os.path.join(out_dir, "_manifest")
-        # scripts/run_extract.py's straggler pass (manifest entry too)
-        self.stragglers_dir = os.path.join(out_dir, "stragglers")
         os.makedirs(self.manifest_path, exist_ok=True)
 
     # ------------------------------------------------------------ manifest
@@ -103,25 +100,18 @@ class ChunkedRun:
         done = set()
         for name in os.listdir(self.manifest_path):
             if name.startswith("chunk-") and name.endswith(".json"):
-                rec = self.entry(name[:-len(".json")])
+                with open(os.path.join(self.manifest_path, name)) as f:
+                    rec = json.load(f)
                 if rec.get("status") == "ok":
                     done.add(rec["chunk"])
         return done
 
-    def entry(self, name: str) -> dict | None:
-        """The manifest entry ``<name>.json``, or None if not recorded."""
-        path = os.path.join(self.manifest_path, f"{name}.json")
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
-
-    def record(self, name: str, **fields) -> None:
-        """Write the manifest entry ``<name>.json``."""
-        path = os.path.join(self.manifest_path, f"{name}.json")
+    def _record(self, chunk: int, **fields) -> None:
+        """Write chunk ``chunk``'s manifest entry."""
+        path = os.path.join(self.manifest_path, f"chunk-{chunk:05d}.json")
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(fields, f)
+            json.dump({"chunk": chunk, **fields}, f)
         os.replace(tmp, path)  # atomic → a crash never leaves a half manifest
 
     # ----------------------------------------------------------------- run
@@ -158,8 +148,8 @@ class ChunkedRun:
                 transform(self.deal(documents, wave, id_col)), wave, id_col)
             wall_ms = int((time.time() - t0) * 1000)
             for chunk in wave:
-                self.record(f"chunk-{chunk:05d}", chunk=chunk, status="ok",
-                            n_rows=counts[chunk], wall_ms=wall_ms)
+                self._record(chunk, status="ok", n_rows=counts[chunk],
+                             wall_ms=wall_ms)
             summary["processed"] += len(wave)
             summary["rows"] += sum(counts.values())
         return summary
@@ -224,15 +214,13 @@ class ChunkedRun:
         return {c: counts.get(c, 0) for c in chunks}
 
     def output_df(self, schema: StructType | None = None) -> DataFrame:
-        """Every committed row: ``chunk=<c>/`` plus a straggler pass's
-        ``stragglers/`` (reading the output directory as one table fails
-        once both exist). A ``schema`` — all or some of the written
-        columns — skips footer inference, and reads no files as empty."""
+        """Every committed row, from the ``chunk=<c>/`` directories and
+        without a ``chunk`` column. A ``schema`` — all or some of the
+        written columns — skips footer inference, and reads no files as
+        empty."""
         paths = [os.path.join(self.out_dir, name)
                  for name in sorted(os.listdir(self.out_dir))
                  if name.startswith("chunk=")]
-        if os.path.isdir(self.stragglers_dir):
-            paths.append(self.stragglers_dir)
         reader = self.spark.read if schema is None else \
             self.spark.read.schema(schema)
         return reader.parquet(*paths)

@@ -1,22 +1,20 @@
 """Partitioning & skew handling (SURVEY.md §4.2 'Partitioning / shuffle').
 
 The document-size distribution of a web corpus is heavy-tailed; hash
-partitioning by doc_id alone gives even *counts* but uneven *bytes* —
-one straggler task holds the 99.9th-percentile giants. The job handles
-the tail in two parts:
+partitioning by doc_id gives even *counts*, and the bytes even out once
+each task holds many documents. The job (``scripts/run_extract.py``)
+deals every document of a wave, giants included, by doc_id hash, whole
+chunks per task (``checkpoint.ChunkedRun.deal``): at the design point
+each task of a wave draws ~190 giants (SCALE.md §4.1), so a separate
+pass for them would have nothing left to even out.
 
-- ``straggler_split`` routes the giants (size in text chars, or PDF
-  payload bytes) to their own pass, dealt round-robin over its tasks
-  (``scripts/run_extract.py``);
-- the rest is dealt by doc_id hash, whole chunks per task
-  (``checkpoint.ChunkedRun.deal``): with the giants gone, even counts are
-  close to even bytes.
-
-``with_size_salt`` adds ``size_bucket = floor(log2(size))`` and a doc_id
-``salt``; the ``size_buckets`` query and perfbench's ``html_job`` warm-up
-use it. The job no longer partitions on it: its keys are a few size
-buckets × ``SALT_N`` salts, and hashing them into P tasks skewed the
-counts (2× at P = 8 on a 6,000-doc input).
+``straggler_split`` separates the giants (size in text chars, or PDF
+payload bytes) from the rest; no job calls it, and perfbench's traced
+run wraps it by name. ``with_size_salt`` adds ``size_bucket =
+floor(log2(size))`` and a doc_id ``salt``; the ``size_buckets`` query and
+perfbench's ``html_job`` warm-up use it. The job does not partition on
+it: its keys are a few size buckets × ``SALT_N`` salts, and hashing them
+into P tasks skewed the counts (2× at P = 8 on a 6,000-doc input).
 """
 
 from __future__ import annotations
@@ -136,10 +134,10 @@ def with_size_salt(documents: DataFrame, salt_n: int = SALT_N,
 
 def straggler_split(documents: DataFrame, char_threshold: int = 1_000_000,
                     size=None) -> tuple[DataFrame, DataFrame]:
-    """Route pathological giants (``size`` Column > threshold, default
-    :func:`doc_size_col`) to a dedicated set of tasks (SURVEY.md §4.3
-    'straggler partition set'). Returns (normal, stragglers); a null size
-    counts as 0, so every row lands in exactly one of them."""
+    """Split off pathological giants (``size`` Column > threshold, default
+    :func:`doc_size_col`; SURVEY.md §4.3 'straggler partition set').
+    Returns (normal, stragglers); a null size counts as 0, so every row
+    lands in exactly one of them."""
     size = doc_size_col() if size is None else size
     sized = documents.withColumn("_size", F.coalesce(size, F.lit(0)))
     normal = sized.filter(F.col("_size") <= char_threshold).drop("_size")

@@ -329,7 +329,6 @@ def css_select_df(
     selector: str,
     *,
     sort: str = "local",
-    materialize: str = "auto",
 ) -> DataFrame:
     """Compile ``selector`` and return matching node rows in tree order.
 
@@ -341,19 +340,17 @@ def css_select_df(
     global sort exchange; ``"global"`` is total tree order across the whole
     result; ``"none"`` skips ordering entirely.
 
-    ``materialize``: a multi-compound selector references ``nodes`` once per
-    compound (the reference scans its tree once per query,
-    HTMLSelector.m:925-952 — here each reference re-executes the input
-    plan). When the input is NOT a cheap re-scan (e.g. a live
-    ``parse_nodes_df`` MapInArrow re-parses the corpus per reference),
-    ``"auto"`` persists it for the duration of the query; the cache is
-    released when the caller's DataFrame is garbage collected.
-    ``"never"``/``"always"`` override.
+    A multi-compound selector references ``nodes`` once per compound (the
+    reference scans its tree once per query, HTMLSelector.m:925-952 —
+    here each reference re-executes the input plan). When the input is
+    NOT a cheap re-scan (e.g. a live ``parse_nodes_df`` MapInArrow
+    re-parses the corpus per reference), it is persisted for the duration
+    of the query; the cache is released when the caller's DataFrame is
+    garbage collected.
     """
     group = parse_selector(selector)
-    if materialize == "always" or (
-        materialize == "auto"
-        and _plan_refs(group) > 1
+    if (
+        _plan_refs(group) > 1
         and nodes.storageLevel.useMemory is False
         and nodes.storageLevel.useDisk is False
         and _is_expensive_scan(nodes)

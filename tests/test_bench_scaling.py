@@ -48,5 +48,4 @@ def test_waves_ms_sums_each_wave_once(tmp_path):
     for chunk, ms in enumerate([900, 900, 900, 400, 400]):
         with open(tmp_path / f"chunk-{chunk:05d}.json", "w") as f:
             json.dump({"chunk": chunk, "status": "ok", "wall_ms": ms}, f)
-    (tmp_path / "stragglers.json").write_text('{"n_stragglers": 0}')
     assert run_scaling.waves_ms(str(tmp_path)) == 1300

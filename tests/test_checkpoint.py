@@ -1,25 +1,23 @@
 """ChunkedRun waves and run_extract resume: job counts, on-disk layout,
 the wave's one exchange and its spread, crash atomicity of a multi-chunk
-wave, empty chunks, the straggler pass beside the waves and its manifest
-entry, a failure on either side, the metrics output as a projection of
-the files, null rows, and the job over a PDF corpus."""
+wave, empty chunks, one pass that reads the input once and commits the
+giants in their chunks, the refusal of a two-pass output, the metrics
+output as a projection of the files, null rows, and the job over a PDF
+corpus."""
 
 import importlib.util
 import json
 import os
 import re
-import threading
-import time
 from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
-from pyspark import InheritableThread
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 from datagen.interleaved import make_corpus
-from sparkhtml.spark import checkpoint, pipeline, schemas
+from sparkhtml.spark import checkpoint, schemas
 from sparkhtml.spark.checkpoint import ChunkedRun
 from sparkhtml.spark.partitioning import plan_size_bytes, straggler_split
 from sparkhtml.spark.pdf import build_pdf, pdf_extract_spans
@@ -215,40 +213,12 @@ def _run_extract():
     return module
 
 
-def test_resumed_job_skips_straggler_write(spark, tmp_path, monkeypatch,
-                                           capsys):
-    """A second main() on the same output does no straggler write and
-    reports the same straggler count from the manifest entry."""
-    inp = str(tmp_path / "in")
-    corpus = list(make_corpus(40, seed=3, pathological_rate=0.1))
-    spark.createDataFrame(corpus, schema=schemas.DOCUMENTS_INTERLEAVED) \
-        .write.parquet(inp)
-    out = str(tmp_path / "out")
-    argv = ["--input", inp, "--output", out, "--checkpoint", out,
-            "--chunks", "4", "--straggler-chars", "12000"]
-    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
-    main = _run_extract().main
-
-    assert main(argv) == 0
-    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert first["n_stragglers"] > 0
-    with open(os.path.join(out, "_manifest", "stragglers.json")) as f:
-        assert json.load(f)["n_stragglers"] == first["n_stragglers"]
-    written = _written_plans(monkeypatch)
-    assert main(argv) == 0
-    second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert written == []
-    assert second["n_stragglers"] == first["n_stragglers"]
-    assert {k: second[k] for k in ("resumed", "processed", "rows")} == \
-        {"resumed": 4, "processed": 0, "rows": 0}
-
-
 def test_job_metrics_are_a_projection_of_the_output(spark, tmp_path,
                                                     monkeypatch, capsys):
-    """Chunk and straggler files carry the metric columns, output_df
-    reads both, and --metrics-output holds one row per input doc. A
-    resumed run rewrites the metrics from the files, running no Python
-    worker."""
+    """The chunk files carry the metric columns, output_df reads every
+    doc, giants included, and --metrics-output holds one row per input
+    doc. A resumed run rewrites the metrics from the files, running no
+    Python worker."""
     inp = str(tmp_path / "in")
     corpus = list(make_corpus(40, seed=3, pathological_rate=0.1))
     spark.createDataFrame(corpus, schema=schemas.DOCUMENTS_INTERLEAVED) \
@@ -259,15 +229,14 @@ def test_job_metrics_are_a_projection_of_the_output(spark, tmp_path,
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)
     main = _run_extract().main
     ids = sorted(d["doc_id"] for d in corpus)
+    assert _has_giants(corpus)
 
     assert main(argv) == 0
-    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert first["n_stragglers"] > 0
-    strag = pq.read_table(os.path.join(out, "stragglers"))
-    assert strag.schema.names == schemas.EXTRACTED.fieldNames()
-    assert strag.num_rows == first["n_stragglers"]
-    assert pq.read_table(os.path.join(out, "chunk=0")).schema.names == \
-        schemas.EXTRACTED.fieldNames()
+    first = _summary(capsys)
+    assert first["rows"] == len(corpus) and first["n_stragglers"] == 0
+    for c in range(4):
+        assert pq.read_table(os.path.join(out, f"chunk={c}")).schema.names \
+            == schemas.EXTRACTED.fieldNames()
     rows = ChunkedRun(spark, out, n_chunks=4).output_df().collect()
     assert sorted(r["doc_id"] for r in rows) == ids
     assert all(r["n_spans_out"] == len(r["spans"]) for r in rows)
@@ -291,169 +260,153 @@ def _summary(capsys):
     return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
 
+def _has_giants(corpus):
+    """Whether a doc holds more than 12,000 text chars, the
+    --straggler-chars these tests pass."""
+    return any(sum(len(s["text"] or "") for s in d["spans"] or []) > 12000
+               for d in corpus)
+
+
+def _describe_writes(monkeypatch, sc):
+    """Each parquet write's jobs are described by its destination's
+    basename."""
+    parquet = DataFrameWriter.parquet
+
+    def described(self, path, *a, **k):
+        sc.setJobDescription(os.path.basename(path.rstrip("/")))
+        try:
+            return parquet(self, path, *a, **k)
+        finally:
+            sc.setJobDescription(None)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", described)
+
+
 def _group_jobs(sc, group):
-    """{description: [(submitted, completed or None) ms]} of a job
-    group's jobs, read once the listener bus has recorded every event."""
+    """{description: [job id]} of a job group's jobs, read once the
+    listener bus has recorded every event."""
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs: dict = {}
     for jid in sc.statusTracker().getJobIdsForGroup(group):
         job = sc._jsc.sc().statusStore().job(jid)
         desc = job.description().get() if job.description().isDefined() \
             else None
-        done = job.completionTime()
-        jobs.setdefault(desc, []).append(
-            (job.submissionTime().get().getTime(),
-             done.get().getTime() if done.isDefined() else None))
+        jobs.setdefault(desc, []).append(jid)
     return jobs
 
 
-def test_straggler_pass_is_one_write(spark, tmp_path, monkeypatch, capsys):
-    """The straggler pass runs beside the wave, on a thread that keeps
-    the caller's job group: at most 2 jobs (a shuffle-map job plus the
-    write job, no count(): its row count is read from the footers), and
-    they start before the wave's last job ends. With no stragglers it
-    still writes one schema-only file."""
+def _scanned_rows(sc, job_ids):
+    """Rows the stages of these jobs read from their data sources."""
+    store = sc._jsc.sc().statusStore()
+    stages = {s for j in job_ids
+              for s in sc.statusTracker().getJobInfo(j).stageIds}
+    return sum(store.lastStageAttempt(s).inputRecords() for s in stages)
+
+
+def test_one_pass_reads_each_input_row_once(spark, tmp_path, monkeypatch,
+                                             capsys):
+    """A one-wave main over an input with giants over --straggler-chars:
+    the scans emit each input row once, and every job belongs to the
+    wave's write or the metrics projection, beside at most one schema job
+    for the input."""
     sc = spark.sparkContext
-    parquet, chunked_run = DataFrameWriter.parquet, ChunkedRun.run
-    group = [None]
-
-    def described(self, path, *a, **k):
-        # tags the jobs of each write, in the thread that writes
-        sc.setJobDescription(
-            "stragglers" if path.endswith("stragglers") else "wave")
-        try:
-            return parquet(self, path, *a, **k)
-        finally:
-            sc.setJobDescription(None)
-
-    def run_once_stragglers_start(self, *a, **k):
-        # the pass's first job must be submitted, in the caller's group,
-        # before the wave is planned: a pass that ran after the waves, or
-        # outside the group, would time out here
-        deadline = time.time() + 60
-        while "stragglers" not in _group_jobs(sc, group[0]):
-            assert time.time() < deadline, "no straggler job in the group"
-            time.sleep(0.05)
-        return chunked_run(self, *a, **k)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", described)
-    monkeypatch.setattr(ChunkedRun, "run", run_once_stragglers_start)
-    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
     corpus = list(make_corpus(40, seed=3, pathological_rate=0.1))
+    assert _has_giants(corpus)
     inp = _corpus_input(spark, tmp_path, corpus,
                         schemas.DOCUMENTS_INTERLEAVED)
-    main = _run_extract().main
-    for chars in ("12000", "100000000"):
-        out, group[0] = str(tmp_path / chars), f"job-{chars}"
-        sc.setJobGroup(group[0], group[0])
-        try:
-            assert main(["--input", inp, "--output", out, "--chunks", "4",
-                         "--straggler-chars", chars]) == 0
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = _group_jobs(sc, group[0])
-        summary = _summary(capsys)
-        assert 1 <= len(jobs.get("stragglers", [])) <= 2, jobs
-        assert min(t0 for t0, _ in jobs["stragglers"]) < \
-            max(t1 for _, t1 in jobs["wave"]), jobs
-        if chars == "12000":
-            assert summary["n_stragglers"] > 0
-        strag = pq.read_table(os.path.join(out, "stragglers"))
-        assert strag.num_rows == summary["n_stragglers"]
-        assert summary["rows"] + summary["n_stragglers"] == len(corpus)
-    assert summary["n_stragglers"] == 0
-    assert strag.schema.names == schemas.EXTRACTED.fieldNames()
-
-
-@pytest.mark.parametrize("poisoned", ["stragglers", "wave"])
-def test_a_failed_side_commits_nothing_and_reruns_alone(
-        spark, tmp_path, monkeypatch, capsys, poisoned):
-    """The worker fails inside its Spark job on one side: the straggler
-    thread or the wave on the main thread. main waits for the other side,
-    then raises; no job is left running, the failed side has no manifest
-    entry, the other side committed, and a re-run writes only the failed
-    side's output."""
-    sc = spark.sparkContext
-    real = pipeline.extract_with_metrics_df
-
-    def boom(batches):
-        raise RuntimeError("poisoned")
-        yield  # pragma: no cover - makes this a generator
-
-    def worker(df):
-        out = real(df)
-        in_thread = threading.current_thread() is not threading.main_thread()
-        if in_thread == (poisoned == "stragglers"):
-            return out.mapInArrow(boom, out.schema)
-        return out
-
-    monkeypatch.setattr(pipeline, "extract_with_metrics_df", worker)
+    _describe_writes(monkeypatch, sc)
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)
-    if poisoned == "wave":
-        # the straggler pass ends 2 s after the wave has failed, so its
-        # thread is gone and its entry written only if main waited for it
-        chunked_run, footers = ChunkedRun.run, checkpoint.footer_rows
-        wave_over = threading.Event()
+    sc.setJobGroup("one-pass", "one-pass")
+    sc.setJobDescription(None)  # jobs outside a write stay undescribed
+    try:
+        assert _run_extract().main([
+            "--input", inp, "--output", str(tmp_path / "out"),
+            "--chunks", "4", "--straggler-chars", "12000",
+            "--metrics-output", str(tmp_path / "metrics")]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _summary(capsys)["processed"] == 4
+    jobs = _group_jobs(sc, "one-pass")
+    assert set(jobs) - {None} == {"out", "metrics"}, jobs
+    assert len(jobs.get(None, [])) <= 1, jobs
+    reads = jobs["out"] + jobs.get(None, [])
+    assert _scanned_rows(sc, reads) == len(corpus)
 
-        def run_then_signal(self, *a, **k):
-            try:
-                return chunked_run(self, *a, **k)
-            finally:
-                wave_over.set()
 
-        def footers_after_the_wave(directory):
-            assert wave_over.wait(60)
-            time.sleep(2)
-            return footers(directory)
-
-        monkeypatch.setattr(ChunkedRun, "run", run_then_signal)
-        monkeypatch.setattr(checkpoint, "footer_rows", footers_after_the_wave)
+def test_giants_commit_in_their_chunks(spark, tmp_path, monkeypatch,
+                                       capsys):
+    """Docs over --straggler-chars are committed in their chunk=<c>/
+    directories like every other doc: rows == docs, n_stragglers 0, and
+    the output reads as one table holding every doc once."""
     corpus = list(make_corpus(40, seed=3, pathological_rate=0.1))
+    assert _has_giants(corpus)
     inp = _corpus_input(spark, tmp_path, corpus,
                         schemas.DOCUMENTS_INTERLEAVED)
     out = str(tmp_path / "out")
-    argv = ["--input", inp, "--output", out, "--chunks", "4",
-            "--straggler-chars", "12000"]
-    main = _run_extract().main
-
-    with pytest.raises(Exception, match="poisoned"):
-        main(argv)
-    assert not any(isinstance(t, InheritableThread)
-                   for t in threading.enumerate())
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert sc.statusTracker().getActiveJobsIds() == []
-    run = ChunkedRun(spark, out, n_chunks=4)
-    if poisoned == "stragglers":
-        assert run.entry("stragglers") is None
-        assert run.completed_chunks() == {0, 1, 2, 3}
-    else:
-        assert run.entry("stragglers")["n_stragglers"] > 0
-        assert run.completed_chunks() == set()
-
-    monkeypatch.setattr(pipeline, "extract_with_metrics_df", real)
-    written = []
-    parquet = DataFrameWriter.parquet
-
-    def recording(self, path, *a, **k):
-        written.append(os.path.basename(path.rstrip("/")))
-        return parquet(self, path, *a, **k)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
-    capsys.readouterr()
-    assert main(argv) == 0
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    assert _run_extract().main(["--input", inp, "--output", out,
+                                "--chunks", "4",
+                                "--straggler-chars", "12000"]) == 0
     summary = _summary(capsys)
-    assert written == (["stragglers"] if poisoned == "stragglers"
-                       else ["out"])
-    assert summary["processed"] == (0 if poisoned == "stragglers" else 4)
-    assert summary["n_stragglers"] == \
-        run.entry("stragglers")["n_stragglers"] > 0
-    ids = [r.doc_id for r in run.output_df().select("doc_id").collect()]
+    assert summary["rows"] == len(corpus) and summary["n_stragglers"] == 0
+    ids = Counter(r.doc_id for r in spark.read.parquet(out)
+                  .select("doc_id").collect())
     assert sorted(ids) == sorted(d["doc_id"] for d in corpus)
+    assert set(ids.values()) == {1}
+
+
+def _tree(root):
+    """{relative path: file bytes, or None for a directory}."""
+    found = {}
+    for d, dirs, files in os.walk(root):
+        for name in dirs:
+            found[os.path.relpath(os.path.join(d, name), root)] = None
+        for name in files:
+            with open(os.path.join(d, name), "rb") as f:
+                found[os.path.relpath(os.path.join(d, name), root)] = f.read()
+    return found
+
+
+@pytest.mark.parametrize(
+    "old", ["stragglers", os.path.join("_manifest", "stragglers.json")],
+    ids=["dir", "manifest"])
+def test_two_pass_output_is_refused_untouched(spark, tmp_path, monkeypatch,
+                                              capsys, old):
+    """An output written by the two-pass job (``stragglers/`` or its
+    manifest entry) is refused before any Spark job, with a message
+    naming the path, and is left as it was: a resume would skip its
+    committed chunks and never read its giants again."""
+    sc = spark.sparkContext
+    corpus = list(make_corpus(20, seed=3))
+    inp = _corpus_input(spark, tmp_path, corpus,
+                        schemas.DOCUMENTS_INTERLEAVED)
+    out = tmp_path / "out"
+    (out / "_manifest").mkdir(parents=True)
+    (out / "_manifest" / "chunk-00000.json").write_text(
+        '{"chunk": 0, "status": "ok", "n_rows": 0, "wall_ms": 1}')
+    if old == "stragglers":
+        (out / "stragglers").mkdir()
+    else:
+        (out / old).write_text('{"status": "ok", "n_stragglers": 0}')
+    before = _tree(out)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    sc.setJobGroup("two-pass", "two-pass")
+    try:
+        with pytest.raises(SystemExit):
+            _run_extract().main(["--input", inp, "--output", str(out),
+                                 "--chunks", "2"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert str(out / old) in capsys.readouterr().err
+    assert _tree(out) == before
+    assert _group_jobs(sc, "two-pass") == {}
 
 
 def test_null_size_rows_come_out_once(spark, tmp_path, monkeypatch, capsys):
     """A null-spans row (and a null payload) has size 0: straggler_split
-    keeps it, and the job writes it once with empty spans and metrics."""
+    keeps it with the normal rows. The job writes every row once, with
+    empty spans and metrics for the null one, whatever --straggler-chars
+    says."""
     from pyspark.sql import functions as F
 
     rows = [("a", [{"kind": "text", "text": "<p>alpha beta gamma delta "
@@ -471,8 +424,10 @@ def test_null_size_rows_come_out_once(spark, tmp_path, monkeypatch, capsys):
     out, metrics = str(tmp_path / "out"), str(tmp_path / "metrics")
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)
     assert _run_extract().main(["--input", inp, "--output", out, "--chunks",
-                                "2", "--metrics-output", metrics]) == 0
-    assert _summary(capsys)["rows"] == 3
+                                "2", "--straggler-chars", "0",
+                                "--metrics-output", metrics]) == 0
+    summary = _summary(capsys)
+    assert summary["rows"] == 3 and summary["n_stragglers"] == 0
     got = ChunkedRun(spark, out, n_chunks=2).output_df().collect()
     assert sorted(r.doc_id for r in got) == ["a", "b", "c"]
     assert {r.doc_id: r.spans for r in got}["b"] == []
@@ -486,11 +441,12 @@ def _span_key(spans):
 
 def test_pdf_job_commits_the_parsed_spans(spark, tmp_path, monkeypatch,
                                           capsys):
-    """A (doc_id, payload) corpus runs the PDF worker in the wave and the
-    straggler pass: every doc's spans are pdf_extract_spans' (short runs,
-    literal "&amp;" and "<" kept as they are), bad blobs are rows with err
-    set, and the error and metrics tables are projections of the files,
-    so a resumed run executes no Python worker."""
+    """A (doc_id, payload) corpus runs the PDF worker in the wave, the
+    blob over --straggler-chars included: every doc's spans are
+    pdf_extract_spans' (short runs, literal "&amp;" and "<" kept as they
+    are), bad blobs are rows with err set, and the error and metrics
+    tables are projections of the files, so a resumed run executes no
+    Python worker."""
     blobs = {}
     for i in range(20):
         blobs[f"p{i:02d}"] = build_pdf([[
@@ -514,8 +470,8 @@ def test_pdf_job_commits_the_parsed_spans(spark, tmp_path, monkeypatch,
 
     assert main(argv) == 0
     summary = _summary(capsys)
-    assert summary["n_stragglers"] >= 1
-    assert summary["rows"] + summary["n_stragglers"] == len(rows)
+    assert summary["rows"] == len(rows) and summary["n_stragglers"] == 0
+    assert "big" in _doc_ids(out)
     got = ChunkedRun(spark, out, n_chunks=4).output_df().collect()
     assert sorted(r.doc_id for r in got) == sorted(k for k, _ in rows)
     by_id = {r.doc_id: r for r in got}

@@ -1363,6 +1363,54 @@ def test_knn_join(spark):
     assert all(len(v) == 2 for v in by_q.values())
 
 
+def test_cosine_operators_divide_by_both_norms(spark):
+    """Cosine is scale-free on both sides: with every corpus vector scaled
+    by its own factor in 0.5–3 and the queries by 7, cosine_topk_vs,
+    knn_join and knn_join_ivf at full probe return the same ids and
+    cosines as on the unit vectors."""
+    import numpy as np
+    from sparkhtml.spark.similarity import (
+        IVFIndex, cosine_topk_vs, knn_join, knn_join_ivf)
+
+    rng = np.random.default_rng(11)
+    unit = rng.normal(size=(40, 8))
+    unit /= np.linalg.norm(unit, axis=1, keepdims=True)
+    scale = rng.permutation(np.linspace(0.5, 3.0, len(unit)))
+    qs = unit[[3, 17, 29]] + rng.normal(scale=0.3, size=(3, 8))
+    qs /= np.linalg.norm(qs, axis=1, keepdims=True)
+
+    def frames(corpus_scale, query_scale):
+        emb = spark.createDataFrame(
+            [(i, (v * f).tolist()) for i, (v, f) in
+             enumerate(zip(unit, corpus_scale))], ["vec_id", "embedding"])
+        queries = spark.createDataFrame(
+            [(100 + i, (q * query_scale).tolist()) for i, q in enumerate(qs)],
+            ["query_id", "embedding"])
+        return emb, queries
+
+    def results(emb, queries, index):
+        one = queries.filter("query_id = 100").select("embedding")
+        return {
+            "topk": [(r.vec_id, r.cosine)
+                     for r in cosine_topk_vs(emb, one, 5).collect()],
+            "knn": sorted((r.query_id, r.rank, r.vec_id, r.cosine)
+                          for r in knn_join(emb, queries, k=5).collect()),
+            "ivf": sorted((r.query_id, r.rank, r.vec_id, r.cosine)
+                          for r in knn_join_ivf(emb, queries, index, k=5,
+                                                n_probe=index.k).collect()),
+        }
+
+    emb, queries = frames(np.ones(len(unit)), 1.0)
+    index = IVFIndex(k=4).fit(emb)
+    want = results(emb, queries, index)
+    got = results(*frames(scale, 7.0), index)
+    for name, rows in want.items():
+        assert len(rows) == len(got[name]) > 0, name
+        for w, g in zip(rows, got[name]):
+            assert w[:-1] == g[:-1], (name, w, g)
+            assert abs(w[-1] - g[-1]) <= 1e-6, (name, w, g)
+
+
 def test_knn_join_ivf_full_probe_exact_and_partial_recall(spark):
     """Full probe (n_probe=k) must equal the exact knn_join row-for-row;
     partial probe must keep recall@5 high on clusterable data (every

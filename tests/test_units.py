@@ -481,6 +481,41 @@ def test_folded_tree_has_no_reference_cycles():
     assert n == 19
 
 
+def test_full_parse_tree_has_no_reference_cycles(monkeypatch):
+    """``FlatDOM.from_html`` owns its parse: after it, no node of the
+    parsed document points to its parent, so the tree is freed by
+    reference counting. ``from_tree`` leaves a caller's tree as it is."""
+    from sparkhtml import dom
+
+    html = ("<!DOCTYPE html><nav><a href=x>home</a></nav><!--c-->"
+            "<p>one <b>two</b> &amp; three<table><tr><td>four</table>")
+    parsed = []
+
+    def captured(*args, **kwargs):
+        parsed.append(parse(*args, **kwargs))
+        return parsed[-1]
+
+    monkeypatch.setattr(dom, "parse", captured)
+    flat = FlatDOM.from_html(html)
+    (tb,) = parsed
+    assert tb.tokenizer.cdata_allowed is None
+    todo, n = [tb.document], 0
+    while todo:
+        node = todo.pop()
+        assert node.parent is None, node
+        todo.extend(node.children)
+        n += 1
+    assert n == len(flat) == 19
+
+    tree = parse(html).document
+    assert FlatDOM.from_tree(tree).parent == flat.parent
+    todo = [tree]
+    while todo:
+        node = todo.pop()
+        assert all(child.parent is node for child in node.children)
+        todo.extend(node.children)
+
+
 def test_extraction_parses_through_module_parse_fragment(monkeypatch):
     """Span extraction calls ``treebuilder.parse_fragment`` as looked up
     on the module at call time, so a wrapper there (perfbench's layer
